@@ -219,6 +219,10 @@ def main() -> int:
                 out["scaling_2to8_build_followup"] = fu.get("efficiency")
         except Exception:
             pass
+        # those scalars are copied from the file, not measured by this
+        # run — the same stdout line says where they come from
+        out["scaling_source"] = (f"BENCH/scaling.json (round {sc.get('round', '?')}, "
+                                 f"not measured by this run)")
     # round number = 1 + highest BENCH_r{N}.json already recorded (the
     # driver writes BENCH_r{N}.json after this run), fallback "latest"
     rounds = [int(m.group(1)) for f in os.listdir(repo_dir)

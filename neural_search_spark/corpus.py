@@ -42,7 +42,8 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 
 
 def _hash2(seed: int, a: np.ndarray, salt: int) -> np.ndarray:
-    h = _splitmix64(a.astype(np.uint64) ^ np.uint64(seed * 0x100000001B3 + salt))
+    # the seed mix wraps modulo 2**64, so any Python int seed works
+    h = _splitmix64(a.astype(np.uint64) ^ np.uint64((seed * 0x100000001B3 + salt) % 2**64))
     return _splitmix64(h ^ np.uint64(salt << 17))
 
 

@@ -145,6 +145,7 @@ def bool_topk_indexed(
         reader.spark,
         lambda n: bm25_topk_indexed(reader, scoring, k=n, mode="or", allowed=gate),
         k,
+        key=reader.meta["key_cols"][0],
     )
 
 
@@ -365,6 +366,7 @@ def bool_clauses_topk_indexed(
         reader.spark,
         lambda n: bm25_topk_indexed(reader, scoring, k=n, mode="or", allowed=gate),
         k,
+        key=reader.meta["key_cols"][0],
     )
 
 

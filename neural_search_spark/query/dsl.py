@@ -637,12 +637,12 @@ def _phrase_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     if not toks:
         raise DslError("[match_phrase] query analyzed to zero tokens")
     slop = int(params.get("slop", 0))
+    kw = dict(id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
+              tokenizer=ctx.analyzer)
     s = (
-        bm25_phrase_sloppy(ctx.docs, toks, slop=slop, id_col=ctx.id_col,
-                           text_col=ctx.text_col, round_to=None)
+        bm25_phrase_sloppy(ctx.docs, toks, slop=slop, **kw)
         if slop
-        else bm25_phrase(ctx.docs, toks, id_col=ctx.id_col,
-                         text_col=ctx.text_col, round_to=None)
+        else bm25_phrase(ctx.docs, toks, **kw)
     )
     return s.select("doc_id", "score")
 
@@ -1191,7 +1191,7 @@ def _matcher_const_frame(ctx: SearchContext, matcher: str) -> DataFrame:
             return ctx.docs.sparkSession.createDataFrame(
                 [], "doc_id long, score double")
         return bm25_scores_indexed(ctx.reader, exp).select(
-            "doc_id", F.lit(1.0).cast("double").alias("score"))
+            F.col(ctx.id_col).alias("doc_id"), F.lit(1.0).cast("double").alias("score"))
     from .exhaustive import tokenized
 
     toks = tokenized(ctx.docs, ctx.id_col, ctx.text_col)
@@ -1214,7 +1214,8 @@ def _term_clause_frame(ctx: SearchContext, terms: list[str],
 
         _require_doc_key(ctx)
         return bm25_scores_indexed(ctx.reader, terms,
-                                   mode="and" if conj else "or")
+                                   mode="and" if conj else "or").select(
+            F.col(ctx.id_col).alias("doc_id"), "score")
     from .exhaustive import bm25_conjunctive, bm25_scores
 
     fn = bm25_conjunctive if conj else bm25_scores
@@ -1232,13 +1233,14 @@ def _phrase_clause_frame(ctx: SearchContext, toks: list[str],
 
         _require_doc_key(ctx)
         return bm25_phrase_indexed(ctx.reader, toks, slop=slop).select(
-            "doc_id", "score")
+            F.col(ctx.id_col).alias("doc_id"), "score")
     from .exhaustive import bm25_phrase, bm25_phrase_sloppy
 
     fn = bm25_phrase_sloppy if slop else bm25_phrase
     kw = {"slop": slop} if slop else {}
     return fn(ctx.docs, toks, id_col=ctx.id_col, text_col=ctx.text_col,
-              round_to=None, **kw).select("doc_id", "score")
+              round_to=None, tokenizer=ctx.index_analyzer(),
+              **kw).select("doc_id", "score")
 
 
 def _query_string_scores(ctx: SearchContext, spec: Any) -> DataFrame:
@@ -1659,11 +1661,13 @@ def _script_scores(ctx: SearchContext, spec: Any) -> DataFrame:
 # --- top-level dispatch ---------------------------------------------------
 
 
-def _ranked(df: DataFrame) -> DataFrame:
+def _ranked(df: DataFrame, id_col: str) -> DataFrame:
     """(doc_id, score, rank) with the engine's standard tiebreak —
-    identical shaping to the exhaustive topk() output."""
+    identical shaping to the exhaustive topk() output. The index's key
+    column ``id_col`` becomes the output ``doc_id`` (a no-op for
+    kernels that already name it so)."""
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return df.select(
+    return df.withColumnRenamed(id_col, "doc_id").select(
         "doc_id", F.round("score", 4).alias("score"),
         F.row_number().over(w).cast("int").alias("rank"),
     )
@@ -1703,7 +1707,7 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
         try:
             # round_to=4 pre-rounds inside the kernel cut (round-then-
             # rank, matching the exhaustive span branch)
-            return _ranked(span_topk_indexed(r, plan, k=k, round_to=4))
+            return _ranked(span_topk_indexed(r, plan, k=k, round_to=4), ctx.id_col)
         except ValueError as e:
             raise DslError(f"[{typ}] {e}") from e
     if typ == "intervals":
@@ -1717,7 +1721,7 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
         plan = {"kind": "iv", "required": clauses, "max_gaps": max_gaps,
                 "ordered": ordered}
         try:
-            return _ranked(span_topk_indexed(r, plan, k=k, round_to=4))
+            return _ranked(span_topk_indexed(r, plan, k=k, round_to=4), ctx.id_col)
         except ValueError as e:
             raise DslError(f"[intervals] {e}") from e
     if typ == "match":
@@ -1740,13 +1744,14 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
             from .multiterm import multiterm_topk_indexed
 
             matcher = _fuzzy_match_matcher(ctx, params)
-            return _ranked(multiterm_topk_indexed(r, matcher=matcher, k=k))
+            return _ranked(multiterm_topk_indexed(r, matcher=matcher, k=k),
+                           ctx.id_col)
         msm = _msm_int(params.get("minimum_should_match", 0), "match")
         if msm > 0 and op == "or":
             # the kernel's msm mode gates on >= m distinct matched terms
             return _ranked(match_text_topk(r, params["query"], k=k,
-                                           mode=f"msm:{msm}"))
-        return _ranked(match_text_topk(r, params["query"], k=k, mode=op))
+                                           mode=f"msm:{msm}"), ctx.id_col)
+        return _ranked(match_text_topk(r, params["query"], k=k, mode=op), ctx.id_col)
     if typ == "match_phrase":
         from .phrase import bm25_phrase_indexed
 
@@ -1760,7 +1765,7 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
         if not terms:
             raise DslError("[match_phrase] query analyzed to zero tokens")
         top = bm25_phrase_indexed(r, terms, k=k, slop=int(params.get("slop", 0)))
-        return _ranked(top)
+        return _ranked(top, ctx.id_col)
     if typ == "match_phrase_prefix":
         from .multiterm import phrase_prefix_topk_indexed
 
@@ -1775,7 +1780,8 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
         if not toks:
             raise DslError("[match_phrase_prefix] query analyzed to zero tokens")
         kw = {"max_expansions": int(params["max_expansions"])} if "max_expansions" in params else {}
-        return _ranked(phrase_prefix_topk_indexed(r, toks[:-1], toks[-1], k=k, **kw))
+        return _ranked(phrase_prefix_topk_indexed(r, toks[:-1], toks[-1], k=k, **kw),
+                       ctx.id_col)
     if typ in ("prefix", "wildcard", "fuzzy", "regexp"):
         from .multiterm import (
             like_escape,
@@ -1806,7 +1812,7 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
             top = multiterm_topk_indexed(
                 r, fuzzy=(params["value"], int(params.get("fuzziness", 1)), 0), k=k, **kw
             )
-        return _ranked(top)
+        return _ranked(top, ctx.id_col)
     if typ == "bool":
         from .booleans import bool_clauses_topk_indexed
 
@@ -1834,7 +1840,8 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
             allowed = (
                 r.docmap().join(ctx.docs.where(pred), ctx.id_col).select("nss_doc_id")
             )
-            return _ranked(bm25_topk_indexed(r, terms, k=k, mode=op, allowed=allowed))
+            return _ranked(bm25_topk_indexed(r, terms, k=k, mode=op, allowed=allowed),
+                           ctx.id_col)
         # per-CLAUSE semantics (a multi-term must clause with the
         # default operator=or requires ONE of its terms, and
         # minimum_should_match counts clauses — BooleanQuery semantics,
@@ -1885,7 +1892,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
             if op not in ("or", "and"):
                 raise DslError(f"[multi_match] operator must be or|and, got [{op}]")
             top = match_text_topk(ctx.reader, params["query"], k=k, mode=op)
-            return _ranked(_boosted(top, boost))
+            return _ranked(_boosted(top, boost), ctx.id_col)
         from .exhaustive import bm25_conjunctive, bm25_scores
 
         terms, op = _match_clause(ctx, mspec, "multi_match")

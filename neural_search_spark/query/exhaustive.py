@@ -357,6 +357,7 @@ def bm25_phrase(
     id_col: str = "doc_id",
     text_col: str = "text",
     round_to: int | None = 4,
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """match_phrase semantics: docs whose analyzed token stream contains
     ``phrase_terms`` as a CONTIGUOUS subsequence, BM25-scored over the
@@ -369,9 +370,10 @@ def bm25_phrase(
 
     The corpus is tokenized ONCE: the same ``tokenized()`` frame feeds
     both the BM25 scoring subtree and the phrase gate (the round-1
-    conjunctive one-traversal shape)."""
+    conjunctive one-traversal shape). ``tokenizer`` must be the analyzer
+    that produced ``phrase_terms``."""
     needle = " " + " ".join(phrase_terms) + " "
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer=tokenizer)
     scored = bm25_scores(
         docs, sorted(set(phrase_terms)), id_col, text_col, round_to=None, tok=tok
     )
@@ -393,6 +395,7 @@ def bm25_phrase_sloppy(
     id_col: str = "doc_id",
     text_col: str = "text",
     round_to: int | None = 4,
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """Ordered proximity match (``match_phrase`` with ``slop``): docs
     with strictly-increasing positions p_0 < ... < p_{k-1} for the
@@ -411,7 +414,7 @@ def bm25_phrase_sloppy(
     if slop < 0:
         raise ValueError(f"slop must be >= 0, got {slop}")
     k = len(phrase_terms)
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer=tokenizer)
     scored = bm25_scores(
         docs, sorted(set(phrase_terms)), id_col, text_col, round_to=None, tok=tok
     )

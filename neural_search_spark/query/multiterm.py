@@ -349,12 +349,14 @@ def regexp_topk(
     return _scored_or(docs, terms, k, id_col, text_col)
 
 
-def rounded_topk_from_kernel(spark, fetch, k: int, n_cap: int = 65536) -> DataFrame:
+def rounded_topk_from_kernel(spark, fetch, k: int, n_cap: int = 65536,
+                             key: str = "doc_id") -> DataFrame:
     """Rank-with-ties-safe rounded top-k over a kernel that cuts on the
     UNROUNDED score.
 
-    ``fetch(n)`` returns the kernel's top-``n`` (doc_id, score) on the
-    raw float score; the final ranking is on ``round(score, 4)`` (ties
+    ``fetch(n)`` returns the kernel's top-``n`` (``key``, score) on the
+    raw float score — ``key`` is the index's key column, output as
+    ``doc_id``; the final ranking is on ``round(score, 4)`` (ties
     at the 4-decimal boundary are likely when expansions sum many small
     contributions). The kernel cut can only disturb the rounded top-k
     if the boundary (n-th) candidate's ROUNDED score ties the k-th
@@ -368,7 +370,7 @@ def rounded_topk_from_kernel(spark, fetch, k: int, n_cap: int = 65536) -> DataFr
     on tie plateaus."""
     n = max(4 * k, 40)
     while True:
-        rows = fetch(n).select("doc_id", "score").collect()
+        rows = fetch(n).select(F.col(key).alias("doc_id"), "score").collect()
         if len(rows) < n:
             break  # complete result set — no cut occurred
         rounded = sorted((round(r["score"], 4) for r in rows), reverse=True)
@@ -406,7 +408,8 @@ def multiterm_topk_indexed(
         spark = reader.spark
         return spark.createDataFrame([], "doc_id long, score double, rank int")
     return rounded_topk_from_kernel(
-        reader.spark, lambda n: bm25_topk_indexed(reader, terms, k=n, mode="or"), k
+        reader.spark, lambda n: bm25_topk_indexed(reader, terms, k=n, mode="or"), k,
+        key=reader.meta["key_cols"][0],
     )
 
 
@@ -511,4 +514,5 @@ def phrase_prefix_topk_indexed(
         reader.spark,
         lambda n: bm25_topk_indexed(reader, all_terms, k=n, mode="or", allowed=gate),
         k,
+        key=reader.meta["key_cols"][0],
     )

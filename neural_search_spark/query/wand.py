@@ -33,6 +33,8 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,6 +72,13 @@ class IndexReader:
     persists postings/docmap in memory — the single-JVM analog of a hot
     page cache on data nodes; leave it off when the index exceeds
     executor memory (queries then rely on partition/row-group pruning).
+
+    BM25 statistics (N, avgdl, df) never run a Spark job: the calling
+    process reads them with pyarrow from the manifest and postings
+    files, the way Lucene's searcher sums docFreq over its segments'
+    term dictionaries in-process. Each table's ``pyarrow.dataset`` is listed
+    once per reader, like the memoized frames, so a reader keeps one
+    file snapshot for its statistics across later appends.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str, cache_hot: bool = False):
@@ -83,6 +92,7 @@ class IndexReader:
         self._postings_pos: DataFrame | None = None
         self._docmap: DataFrame | None = None
         self._dfs: dict[str, int] | None = None
+        self._arrow: dict[str, ds.Dataset] = {}
         self.cache_hot = cache_hot
 
     def postings(self) -> DataFrame:
@@ -115,46 +125,56 @@ class IndexReader:
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(self.p["manifest"])
 
+    def _dataset(self, table: str):
+        """In-process ``pyarrow.dataset`` over one index table (hive
+        partition columns recovered from the directory names), listed
+        on first use and kept for the reader's lifetime."""
+        if table not in self._arrow:
+            self._arrow[table] = ds.dataset(self.p[table], format="parquet",
+                                            partitioning="hive")
+        return self._arrow[table]
+
     def global_stats(self) -> tuple[int, float]:
-        """(N, avgdl) from the per-segment manifest (tiny)."""
+        """(N, avgdl): the manifest's per-segment ``docs_tokenized`` and
+        ``total_tokens`` summed in-process (one row per segment)."""
         if self._stats is None:
-            row = self.manifest().agg(
-                F.sum("docs_tokenized").alias("N"), F.sum("total_tokens").alias("tok")
-            ).collect()[0]
-            n = int(row["N"])
-            self._stats = (n, (int(row["tok"]) / n) if n else 0.0)
+            man = self._dataset("manifest").to_table(
+                columns=["docs_tokenized", "total_tokens"])
+            n = pc.sum(man["docs_tokenized"]).as_py() or 0
+            tok = pc.sum(man["total_tokens"]).as_py() or 0
+            self._stats = (n, tok / n if n else 0.0)
         return self._stats
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global df per query term = Σ blocks' n (each posting is one doc).
+        """Global df per query term = Σ over segments of the postings
+        row's ``n`` (the segment df — the postings hold one row per
+        (segment, term), i.e. they ARE the per-segment term
+        dictionaries).
 
-        Computed by a *query-pruned* aggregate: the scan is filtered to
-        the query terms (and, when the index is term-bucketed, to their
-        bucket directories — partition pruning) BEFORE the groupBy, so
-        per-query work is O(|query terms| × segments) rows, independent
+        Read in-process: the postings dataset is projected to
+        ``term``/``n``, filtered to the query terms (parquet row-group
+        statistics skip row groups that cannot hold them) and, when the
+        index is term-bucketed, pruned to the terms' bucket directories.
+        Per-query work is O(|query terms| × segments) rows, independent
         of vocabulary size. Results memoize incrementally per reader —
-        repeat terms never re-scan; driver memory holds only terms ever
+        repeat terms never re-read; memory holds only terms ever
         queried, never the full vocabulary."""
         if self._dfs is None:
             self._dfs = {}
         missing = sorted(t for t in set(terms) if t not in self._dfs)
         if missing:
-            scan = self.postings()
+            cond = ds.field("term").isin(missing)
             n_buckets = int(self.meta.get("term_buckets", 0))
             if n_buckets > 1:
                 from ..pipeline.hashing import py_hash64
 
                 buckets = sorted({py_hash64(t) % n_buckets for t in missing})
-                scan = scan.where(F.col("term_bucket").isin(buckets))
-            rows = (
-                scan.where(F.col("term").isin(missing))
-                .groupBy("term")
-                .agg(F.sum("n").alias("df"))
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
+                cond = ds.field("term_bucket").isin(buckets) & cond
+            rows = self._dataset("postings").to_table(columns=["term", "n"], filter=cond)
+            sums = rows.group_by("term").aggregate([("n", "sum")])
+            found = dict(zip(sums["term"].to_pylist(), sums["n_sum"].to_pylist()))
             for t in missing:
-                # memoize absence too (df=0) so repeats don't re-scan
+                # memoize absence too (df=0) so repeats don't re-read
                 self._dfs[t] = found.get(t, 0)
         return {t: self._dfs[t] for t in terms if self._dfs.get(t, 0) > 0}
 

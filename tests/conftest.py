@@ -50,3 +50,37 @@ def positional_reader_ctx(spark, documents, tmp_path_factory):
                 store_positions=True)
     return SearchContext(docs=documents,
                          reader=IndexReader(spark, d, cache_hot=True))
+
+
+def spark_job_count(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs, counted through a job
+    group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def assert_stats_match_spark(spark, index_dir: str) -> None:
+    """A fresh reader's N, avgdl and df of EVERY term equal
+    Spark aggregates over the same manifest and postings files."""
+    from pyspark.sql import functions as F
+
+    from neural_search_spark.query.wand import IndexReader
+
+    post = spark.read.parquet(os.path.join(index_dir, "postings"))
+    exp = {r["term"]: int(r["df"])
+           for r in post.groupBy("term").agg(F.sum("n").alias("df")).collect()}
+    man = spark.read.parquet(os.path.join(index_dir, "manifest")).agg(
+        F.sum("docs_tokenized").alias("n"), F.sum("total_tokens").alias("tok")
+    ).collect()[0]
+    reader = IndexReader(spark, index_dir)
+    assert reader.global_stats() == (man["n"], man["tok"] / man["n"])
+    assert reader.term_dfs(sorted(exp)) == exp

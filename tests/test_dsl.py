@@ -1626,3 +1626,72 @@ def test_wrapper_and_match_none(ctx):
     hyb = search(ctx, {"query": {"hybrid": {"queries": [
         {"match": {"text": "spark"}}, {"match_none": {}}]}}, "size": 5})
     assert hyb.count() == 5
+
+
+CODE_TEXTS = [
+    "def load(): parse_json2 emit_v3 return",
+    "parse_json2 then emit_v3",
+    "emit_v3 parse_json2 parse_json2 emit_v3",
+    "parse json2 emit v3",
+    "x = parse_json2(data); emit_v3(x)",
+    "nothing here at all",
+    "parse_json2 a emit_v3 and value_2",
+    "value_2 parse_json2 emit_v3 value_2 parse",
+]
+
+
+@pytest.fixture(scope="module")
+def code_docs(spark):
+    return spark.createDataFrame(list(enumerate(CODE_TEXTS)), "doc_id long, text string")
+
+
+def _code_reader(spark, docs, tmp_path_factory, key):
+    from neural_search_spark.index.builder import build_index
+    from neural_search_spark.query.wand import IndexReader
+
+    d = str(tmp_path_factory.mktemp(f"code_idx_{key}"))
+    build_index(spark, docs, d, key_cols=[key], text_col="text", tokenizer="code",
+                num_segments=2, range_block=4, store_positions=True)
+    return IndexReader(spark, d)
+
+
+@pytest.fixture(scope="module")
+def code_reader(spark, code_docs, tmp_path_factory):
+    return _code_reader(spark, code_docs, tmp_path_factory, "doc_id")
+
+
+def test_exhaustive_phrase_uses_context_analyzer(code_docs, code_reader):
+    """A `code` context tokenizes the corpus with `code` on the
+    exhaustive phrase path too, so phrases whose tokens hold `_` or
+    digits answer as on the positional index."""
+    exhaustive = SearchContext(docs=code_docs, analyzer="code")
+    indexed = SearchContext(docs=code_docs, reader=code_reader, analyzer="code")
+    for phrase in [{"query": "parse_json2 emit_v3"},
+                   {"query": "parse_json2 emit_v3", "slop": 1},
+                   {"query": "value_2 parse_json2"}]:
+        body = {"query": {"match_phrase": {"text": phrase}}, "size": 10}
+        got = _rows(search(exhaustive, body))
+        assert got and got == _rows(search(indexed, body)), phrase
+
+
+def test_indexed_dsl_with_non_doc_id_key(spark, code_docs, code_reader,
+                                         tmp_path_factory):
+    """An index keyed by a column not named `doc_id` serves the indexed
+    DSL branches; hits come back as `doc_id` like every other path."""
+    id_docs = code_docs.withColumnRenamed("doc_id", "id")
+    by_id = SearchContext(docs=id_docs, analyzer="code", id_col="id",
+                          reader=_code_reader(spark, id_docs, tmp_path_factory, "id"))
+    by_doc_id = SearchContext(docs=code_docs, reader=code_reader, analyzer="code")
+    for q in [{"match": {"text": "parse_json2 value_2"}},
+              {"match": {"text": {"query": "parse_json2 value_2", "operator": "and"}}},
+              {"match_phrase": {"text": "parse_json2 emit_v3"}},
+              {"match_phrase_prefix": {"text": "parse_json2 emi"}},
+              {"prefix": {"text": "val"}},
+              {"bool": {"must": [{"match": {"text": "emit_v3"}}],
+                        "should": [{"match": {"text": "value_2"}}]}},
+              {"query_string": {"query": 'value_2 "parse_json2 emit_v3" emi*'}},
+              {"simple_query_string": {"query": 'value_2 "parse_json2 emit_v3"'}}]:
+        body = {"query": q, "size": 10}
+        got = search(by_id, body)
+        assert got.columns == ["doc_id", "score", "rank"]
+        assert _rows(got) == _rows(search(by_doc_id, body)), q

@@ -50,6 +50,16 @@ def test_merge_preserves_stats(spark, merged_pair):
         assert rb.term_dfs(terms) == rm.term_dfs(terms)
 
 
+def test_merge_reader_stats_match_spark(spark, merged_pair):
+    """The reader's pyarrow-read N/avgdl/df equal Spark's aggregates
+    over the files, both after the build and after the merge."""
+    from tests.conftest import assert_stats_match_spark
+
+    base, out, _ = merged_pair
+    assert_stats_match_spark(spark, base)
+    assert_stats_match_spark(spark, out)
+
+
 def test_merge_rank_and_score_identical(spark, merged_pair):
     base, out, _ = merged_pair
     rb, rm = IndexReader(spark, base), IndexReader(spark, out)

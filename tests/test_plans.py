@@ -113,3 +113,54 @@ def test_nested_rollup_partial_aggregates(spark, documents):
     # nothing falls back to a shuffled sort-merge join
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.fixture(scope="module", params=[0, 4], ids=["unbucketed", "bucketed"])
+def stats_index(spark, documents, tmp_path_factory, request):
+    from neural_search_spark.index.builder import build_index
+
+    d = str(tmp_path_factory.mktemp(f"stats_idx_{request.param}"))
+    build_index(spark, documents, d, key_cols=["doc_id"], text_col="text",
+                tokenizer="simple", num_segments=4, range_block=64,
+                term_buckets=request.param, store_positions=False)
+    return d
+
+
+def test_bm25_stats_launch_no_spark_job(spark, stats_index):
+    """IndexReader reads N, avgdl and df in-process from the index
+    files: a cold reader's stats and unseen terms' df cost 0 jobs, and
+    they equal the Spark aggregates over the same files."""
+    from tests.conftest import assert_stats_match_spark, spark_job_count
+
+    from neural_search_spark.query.wand import IndexReader
+
+    reader = IndexReader(spark, stats_index)
+    terms = ["spark", "window", "zz_absent_term"]
+    out = {}
+    jobs = spark_job_count(spark, lambda: out.update(
+        stats=reader.global_stats(), dfs=reader.term_dfs(terms)))
+    assert jobs == 0
+    assert out["stats"][0] > 0 and set(out["dfs"]) == {"spark", "window"}
+    assert_stats_match_spark(spark, stats_index)
+
+
+# Spark jobs of an indexed `match` search on a warm reader, for terms it
+# has not seen before, pinned as an upper bound. The BM25 statistics
+# (N, avgdl, df) add none.
+WARM_MATCH_JOBS = 3
+
+
+def test_warm_indexed_match_job_bound(spark, documents, stats_index):
+    from tests.conftest import spark_job_count
+
+    from neural_search_spark.query.dsl import SearchContext, search
+    from neural_search_spark.query.wand import IndexReader
+
+    ctx = SearchContext(docs=documents,
+                        reader=IndexReader(spark, stats_index, cache_hot=True))
+    search(ctx, {"query": {"match": {"text": "spark window"}}, "size": 10}).collect()
+    body = {"query": {"match": {"text": "merge join"}}, "size": 10}
+    rows = []
+    jobs = spark_job_count(spark, lambda: rows.extend(search(ctx, body).collect()))
+    assert jobs <= WARM_MATCH_JOBS, jobs
+    assert rows == search(SearchContext(docs=documents), body).collect()

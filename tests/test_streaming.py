@@ -144,3 +144,41 @@ def test_streaming_segment_append_equals_full_build(spark, tmp_path):
                for r in bm25_topk_indexed(ref, terms, k=10, mode=mode)
                .select("repo", "path", "score").collect()}
         assert got == exp
+
+
+def test_append_segment_stats_and_reader_snapshot(spark, tmp_path):
+    """After ``append_segment`` a fresh reader's pyarrow-read stats equal
+    Spark's aggregates over the grown index, while a reader that had
+    already answered keeps its snapshot: same N, same df (also for
+    terms it first looks up after the append) and same hits."""
+    from tests.conftest import assert_stats_match_spark
+
+    from neural_search_spark.corpus import corpus_df
+    from neural_search_spark.index.builder import build_index
+    from neural_search_spark.index.live import append_segment
+    from neural_search_spark.query.wand import IndexReader, bm25_topk_indexed
+
+    full = corpus_df(spark, 240, partitions=2).cache()
+    base = full.where("pmod(xxhash64(path), 3) < 2")
+    tail = full.subtract(base)
+    d = str(tmp_path / "idx")
+    build_index(spark, base, d, key_cols=["repo", "path", "commit"],
+                text_col="content", tokenizer="code", num_segments=2,
+                range_block=64, term_buckets=2)
+
+    def hits(reader):
+        return bm25_topk_indexed(reader, ["def", "return"], k=10).select(
+            "path", "score").collect()
+
+    old = IndexReader(spark, d)
+    before = hits(old)
+    ref = IndexReader(spark, d)
+    exp_stats = ref.global_stats()
+    exp_dfs = ref.term_dfs(["def", "return", "import", "class"])
+
+    append_segment(spark, tail, d, segment_id=2)
+    assert_stats_match_spark(spark, d)
+    assert IndexReader(spark, d).global_stats()[0] == 240 > exp_stats[0]
+    assert old.global_stats() == exp_stats
+    assert old.term_dfs(["def", "return", "import", "class"]) == exp_dfs
+    assert hits(old) == before
