@@ -61,15 +61,10 @@ SEG_SHIFT = 40  # doc_id = (segment_id << 40) | local_id
 # cached index dirs embed it in their path, so no code path opens or
 # appends into an index written by an incompatible layout
 # v4: per-posting position streams (block_pos_off + positions columns)
-# v5: position codec metadata (pos_pack_bits/block_pos_n/pos_exc_*) —
-#     readers handle per-term PFor-packed OR varint position streams.
-#     The build DEFAULT stays varint: the round-5 experiment measured
-#     only a 9.3% available byte cut on the code corpus (deltas are
-#     mostly sub-128 = already 1-byte varints, BENCH/r5_pos_bytes.json)
-#     for +43% position-encode CPU, with no 8->32 efficiency change
-#     (BENCH/r5_attrib.json) — pos_codec="auto" keeps the packed path
-#     opt-in for corpora whose position distributions reward it.
-FORMAT_VERSION = 5
+# v6: one varint position stream — the v5 per-term PFor position codec
+#     and its four columns are gone: it could save only 9.3% of position
+#     bytes on the code corpus for +43% encode CPU (BENCH/r5_pos_bytes.json)
+FORMAT_VERSION = 6
 
 # One row per (segment, term): per-block metadata travels as parallel
 # arrays and the three payload streams are single blobs with per-block
@@ -108,16 +103,6 @@ POSTINGS_SCHEMA = T.StructType(
         # Empty when the index was built with store_positions=False.
         T.StructField("block_pos_off", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("positions", T.BinaryType(), False),
-        # v5 position codec (mirrors the doc-delta PFor trio):
-        # pos_pack_bits < 0 -> the positions blob is varint;
-        # pos_pack_bits >= 0 -> b-bit packed low parts, byte-aligned per
-        # block (block_pos_n values each), exceptions patched from
-        # pos_exc_pos (term-level value index) / pos_exc_high. The
-        # builder picks per TERM whichever encoding is smaller.
-        T.StructField("block_pos_n", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("pos_pack_bits", T.IntegerType(), False),
-        T.StructField("pos_exc_pos", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("pos_exc_high", T.ArrayType(T.LongType(), False), False),
     ]
 )
 
@@ -129,8 +114,6 @@ _EMPTY_POSTINGS = {
     "pack_bits": np.int32, "exc_pos": object, "exc_high": object,
     "docs": object, "tfs": object, "norms": object,
     "block_pos_off": object, "positions": object,
-    "block_pos_n": object, "pos_pack_bits": np.int32,
-    "pos_exc_pos": object, "pos_exc_high": object,
 }
 
 
@@ -206,72 +189,23 @@ def chains_absolute(deltas: np.ndarray, chain_lens: np.ndarray) -> np.ndarray:
 
 
 def decode_block_positions(
-    pos_blob: bytes,
-    block_idx: int,
-    block_pos_off,
-    blob_end: int,
-    pos_pack_bits: int = -1,
-    block_pos_n=None,
-    pos_exc_pos=None,
-    pos_exc_high=None,
+    pos_blob: bytes, block_idx: int, block_pos_off, blob_end: int
 ) -> np.ndarray:
-    """One block's raw position-delta stream for any codec (chains
-    still packed — split them with the block's tf values via
-    :func:`chains_absolute`). Mirrors :func:`decode_block_deltas`:
-    ``pos_pack_bits < 0`` = varint slice, else b-bit PFor group with
-    term-level exceptions localized to the block."""
-    from ..functions.codecs import pfor_decode_group, varint_decode
+    """One block's raw position-delta stream (chains still packed —
+    split them with the block's tf values via :func:`chains_absolute`)."""
+    from ..functions.codecs import varint_decode
 
     offs = np.asarray(block_pos_off, dtype=np.int64)
     s = int(offs[block_idx])
-    if pos_pack_bits < 0:
-        e = int(offs[block_idx + 1]) if block_idx + 1 < len(offs) else blob_end
-        return varint_decode(pos_blob[s:e]).astype(np.int64)
-    pn = np.asarray(block_pos_n, dtype=np.int64)
-    n = int(pn[block_idx])
-    low = pfor_decode_group(
-        pos_blob[s:s + (n * pos_pack_bits + 7) // 8], n, pos_pack_bits
-    )
-    ep = np.asarray(pos_exc_pos, dtype=np.int64)
-    if len(ep):
-        p0 = int(pn[:block_idx].sum())
-        sel = (ep >= p0) & (ep < p0 + n)
-        if sel.any():
-            low[ep[sel] - p0] |= (
-                np.asarray(pos_exc_high, dtype=np.uint64)[sel]
-                << np.uint64(pos_pack_bits)
-            )
-    return low.astype(np.int64)
+    e = int(offs[block_idx + 1]) if block_idx + 1 < len(offs) else blob_end
+    return varint_decode(pos_blob[s:e]).astype(np.int64)
 
 
-def decode_term_positions(
-    pos_blob: bytes,
-    tfs: np.ndarray,
-    pos_pack_bits: int = -1,
-    block_pos_n=None,
-    block_pos_off=None,
-    pos_exc_pos=None,
-    pos_exc_high=None,
-) -> np.ndarray:
+def decode_term_positions(pos_blob: bytes, tfs: np.ndarray) -> np.ndarray:
     """Whole-term flat ABSOLUTE position stream (chains of len tfs[i])."""
-    from ..functions.codecs import pfor_decode_group, varint_decode
+    from ..functions.codecs import varint_decode
 
-    if pos_pack_bits < 0:
-        return chains_absolute(varint_decode(pos_blob).astype(np.int64), tfs)
-    pn = np.asarray(block_pos_n, dtype=np.int64)
-    offs = np.asarray(block_pos_off, dtype=np.int64)
-    parts = [
-        pfor_decode_group(
-            pos_blob[offs[j]:offs[j] + (int(pn[j]) * pos_pack_bits + 7) // 8],
-            int(pn[j]), pos_pack_bits,
-        )
-        for j in range(len(pn))
-    ]
-    low = np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64)
-    ep = np.asarray(pos_exc_pos, dtype=np.int64)
-    if len(ep):
-        low[ep] |= np.asarray(pos_exc_high, dtype=np.uint64) << np.uint64(pos_pack_bits)
-    return chains_absolute(low.astype(np.int64), tfs)
+    return chains_absolute(varint_decode(pos_blob).astype(np.int64), tfs)
 
 
 def empty_postings_frame() -> pd.DataFrame:
@@ -289,7 +223,6 @@ def postings_rows_from_flat(
     term_buckets: int,
     codec: str = "varint",
     pos_flat: np.ndarray | None = None,
-    pos_codec: str = "varint",
 ) -> pd.DataFrame:
     """Flat (term, doc_id, tf, norm_byte, dl_q) posting streams (any
     order) -> one POSTINGS_SCHEMA row per term. Shared by the build and
@@ -344,7 +277,6 @@ def postings_rows_from_flat(
         # per-posting position chains: first absolute, rest deltas
         tfl = tfv.astype(np.int64)
         chain_starts = np.r_[0, np.cumsum(tfl)][:-1]
-        post_val = np.r_[0, np.cumsum(tfl)]  # value index at posting boundaries
         pdl = np.empty(len(pos_flat), dtype=np.int64)
         pdl[1:] = pos_flat[1:] - pos_flat[:-1]
         pdl[chain_starts] = pos_flat[chain_starts]
@@ -352,7 +284,6 @@ def postings_rows_from_flat(
         pos_elem_off = np.r_[0, np.cumsum(varint_nbytes(pdl))]
         post_byte = pos_elem_off[chain_starts]  # byte start of posting i's chain
         pos_blob_end = int(pos_elem_off[-1])
-        from ..functions.codecs import bits_needed
 
     g_code = codes[starts]
     g_block = block[starts].astype(np.int32)
@@ -375,10 +306,9 @@ def postings_rows_from_flat(
     empty_l = np.empty(0, dtype=np.int64)
     block_ids, block_ns, block_maxtf, block_mindl = [], [], [], []
     bdoc_off, btf_off, docs_col, tfs_col, norms_col = [], [], [], [], []
-    bpos_off, pos_col, bpos_n = [], [], []
+    bpos_off, pos_col = [], []
     pack_col = np.full(n_terms, -1, dtype=np.int32)
-    pos_pack_col = np.full(n_terms, -1, dtype=np.int32)
-    excp_col, exch_col, pos_excp_col, pos_exch_col = [], [], [], []
+    excp_col, exch_col = [], []
     n_col = np.empty(n_terms, dtype=np.int32)
     for j in range(n_terms):
         a, b = t_bounds[j], t_bounds[j + 1]
@@ -386,54 +316,11 @@ def postings_rows_from_flat(
         if pos_flat is not None:
             t_start = int(post_byte[p0])
             t_end = int(post_byte[p1]) if p1 < len(post_byte) else pos_blob_end
-            v0, v1 = int(post_val[p0]), int(post_val[p1])
-            pn_t = g_sumtf[a:b].astype(np.int64)  # positions per block
-            bpos_n.append(pn_t.astype(np.int32))
-            # per-term codec choice: PFor the position deltas when the
-            # packed-low-bits + exceptions footprint beats the varint
-            # slice (deltas are token gaps, usually < 8 bits — varint's
-            # floor); exceptions absorb each chain's absolute first
-            # position. ~12 bytes/exception approximates the parquet
-            # cost of its (pos, high) pair. pos_codec="auto" probes
-            # terms with >= 1024 positions only (below that the
-            # per-term call overhead exceeds any saving). DEFAULT IS
-            # "varint": the round-5 experiment measured the available
-            # cut at just 9.3% on the code corpus (position deltas are
-            # mostly sub-128 = already 1-byte varints,
-            # BENCH/r5_pos_bytes.json) while PFor-encoding the big
-            # terms costs +43% position-encode CPU (the stream is
-            # varint-encoded once globally either way) and moved the
-            # 8->32 build efficiency not at all (0.306 vs v4's 0.305,
-            # BENCH/r5_attrib.json) — a bad trade kept opt-in, not
-            # default.
-            if pos_codec == "auto" and v1 - v0 >= 1024:
-                nb_t = bits_needed(pdl[v0:v1].astype(np.uint64))
-                bt = int(np.sort(nb_t)[min(v1 - v0 - 1, int(0.98 * (v1 - v0 - 1)))])
-                packed_bytes = int(((pn_t * bt + 7) // 8).sum())
-                n_exc = int((nb_t > bt).sum())
-            else:
-                bt, packed_bytes, n_exc = 0, 1 << 60, 0
-            if packed_bytes + 12 * n_exc < t_end - t_start:
-                blob, offs, ep, eh = pfor_encode_groups(
-                    pdl[v0:v1].astype(np.uint64),
-                    (post_val[bounds[a:b]] - v0).astype(np.int64), pn_t, bt,
-                )
-                pos_col.append(blob)
-                bpos_off.append(offs.astype(np.int32))
-                pos_pack_col[j] = bt
-                pos_excp_col.append(ep.astype(np.int32))
-                pos_exch_col.append(eh.astype(np.int64))
-            else:
-                pos_col.append(pos_b[t_start:t_end])
-                bpos_off.append((post_byte[bounds[a:b]] - t_start).astype(np.int32))
-                pos_excp_col.append(empty_i)
-                pos_exch_col.append(empty_l)
+            pos_col.append(pos_b[t_start:t_end])
+            bpos_off.append((post_byte[bounds[a:b]] - t_start).astype(np.int32))
         else:
             pos_col.append(b"")
             bpos_off.append(empty_i)
-            bpos_n.append(empty_i)
-            pos_excp_col.append(empty_i)
-            pos_exch_col.append(empty_l)
         block_ids.append(g_block[a:b])
         ns_t = n_per[a:b].astype(np.int32)
         block_ns.append(ns_t)
@@ -482,10 +369,6 @@ def postings_rows_from_flat(
             "norms": norms_col,
             "block_pos_off": bpos_off,
             "positions": pos_col,
-            "block_pos_n": bpos_n,
-            "pos_pack_bits": pos_pack_col,
-            "pos_exc_pos": pos_excp_col,
-            "pos_exc_high": pos_exch_col,
         }
     )
 
@@ -501,44 +384,21 @@ def paths(index_dir: str) -> dict[str, str]:
     }
 
 
-def _postings_have_v5_columns(index_dir: str) -> bool:
-    """Footer-only schema sniff of one postings parquet file — no Spark
-    job, no data read. Skips Spark work dirs (``_temporary``/hidden) and
-    any unreadable crash-orphaned file, so a killed write can neither
-    crash the classification nor decide it."""
-    import pyarrow.parquet as pq
-
-    pdir = paths(index_dir)["postings"]
-    for root, dirs, files in os.walk(pdir):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for f in sorted(files):
-            if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                continue
-            try:
-                names = pq.read_schema(os.path.join(root, f)).names
-            except Exception:
-                continue  # truncated leftover from a killed write
-            return "pos_pack_bits" in names
-    return True  # no readable data files — nothing a reader could mis-read
-
-
 def read_meta(index_dir: str) -> dict:
     """Load ``index_meta.json``, rejecting layouts this code can't
-    open (Lucene's SegmentInfos version check analog). A meta written
-    before the version was persisted is classified by the PHYSICAL
-    postings schema (the v5 layout added the position-codec columns)
-    rather than assumed current — a v4-era dir gets this error, not a
+    open (Lucene's SegmentInfos version check analog). Every v5+ writer
+    persists ``format_version`` (build writes it, merge and append copy
+    it), so a meta without it predates v6 and is rejected too — never a
     missing-column crash deep in a kernel."""
     with open(paths(index_dir)["meta"]) as fh:
         meta = json.load(fh)
     ver = meta.get("format_version")
-    if ver is None:
-        ver = FORMAT_VERSION if _postings_have_v5_columns(index_dir) else FORMAT_VERSION - 1
-    if int(ver) != FORMAT_VERSION:
+    if ver is None or int(ver) != FORMAT_VERSION:
         raise ValueError(
-            f"index at {index_dir} is format v{ver}; this build reads/writes "
-            f"v{FORMAT_VERSION} — rebuild the index (or open it with the "
-            f"matching release)"
+            f"index at {index_dir} is format "
+            f"{'unversioned' if ver is None else f'v{ver}'}; this build "
+            f"reads/writes v{FORMAT_VERSION} — rebuild the index (or open "
+            f"it with the matching release)"
         )
     return meta
 
@@ -563,7 +423,6 @@ def _term_buckets_of(terms: np.ndarray, term_buckets: int) -> np.ndarray:
 def _build_segment_kernel(
     tokenizer_name: str, text_col: str, key_cols: list[str], range_block: int,
     term_buckets: int = 0, codec: str = "varint", store_positions: bool = False,
-    pos_codec: str = "varint",
 ):
     # registry name, or a custom split regex — the same contract
     # index.mappings.validate_index_spec accepts (term_freq_frame resolves
@@ -600,7 +459,6 @@ def _build_segment_kernel(
             term_buckets,
             codec,
             pos_flat,
-            pos_codec=pos_codec,
         )
 
     return build
@@ -643,7 +501,6 @@ def build_index(
     term_buckets: int = 0,
     codec: str = "varint",
     store_positions: bool = True,
-    pos_codec: str = "varint",
 ) -> dict:
     """Build (or resume) the index; returns build metrics.
 
@@ -690,7 +547,7 @@ def build_index(
     phase_t: dict[str, float] = {}
     kernel = _build_segment_kernel(
         tokenizer, text_col, key_cols, range_block, term_buckets, codec,
-        store_positions, pos_codec=pos_codec,
+        store_positions,
     )
     postings = todo.select("segment_id", text_col, *key_cols).groupBy("segment_id").applyInPandas(
         kernel, schema=POSTINGS_SCHEMA
@@ -716,9 +573,8 @@ def build_index(
             (F.sum(F.length("docs")) + F.sum(F.length("tfs")) + F.sum(F.length("norms"))).alias(
                 "bytes_compressed"
             ),
-            # v5: the position stream reported separately — it was the
-            # v4 build's bandwidth cost (BENCH/r4_attrib.json), and the
-            # per-term PFor-vs-varint choice shows up here
+            # the position stream reported separately — it was the v4
+            # build's bandwidth cost (BENCH/r4_attrib.json)
             F.sum(F.length("positions")).alias("bytes_positions"),
         )
         .join(dm_read.groupBy("segment_id").agg(F.count(F.lit(1)).alias("docs_tokenized")), "segment_id", "outer")
@@ -743,7 +599,6 @@ def build_index(
         "text_col": text_col,
         "seg_shift": SEG_SHIFT,
         "store_positions": store_positions,
-        "pos_codec": pos_codec,
     }
     with open(p["meta"], "w") as fh:
         json.dump(meta, fh)

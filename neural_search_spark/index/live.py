@@ -72,7 +72,6 @@ def _append_segment_writes(spark, with_seg, meta, p, segment_id, key_cols, text_
         meta["tokenizer"], text_col, key_cols, int(meta["range_block"]),
         int(meta.get("term_buckets", 0)), meta.get("codec", "varint"),
         bool(meta.get("store_positions", False)),
-        pos_codec=meta.get("pos_codec", "varint"),
     )
     postings = (
         with_seg.select("segment_id", text_col, *key_cols)

@@ -32,8 +32,7 @@ from .builder import POSTINGS_SCHEMA, SEG_SHIFT, paths
 
 
 def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_buckets: int,
-                  codec: str = "varint", store_positions: bool = False,
-                  pos_codec: str = "varint"):
+                  codec: str = "varint", store_positions: bool = False):
     """Kernel over one NEW segment's postings rows (one row per old
     (segment, term)): decode each term's blob, re-base doc ids, then
     re-group through the same helper the builder uses — the merged
@@ -71,10 +70,7 @@ def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_
             tfs_l.append(tfs)
             norms_l.append(norms)
             if store_positions:
-                pos_l.append(decode_term_positions(
-                    r.positions, tfs, int(r.pos_pack_bits), r.block_pos_n,
-                    r.block_pos_off, r.pos_exc_pos, r.pos_exc_high,
-                ))
+                pos_l.append(decode_term_positions(r.positions, tfs))
         term = np.concatenate(terms_l)
         norm = np.concatenate(norms_l)
         return postings_rows_from_flat(
@@ -88,7 +84,6 @@ def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_
             term_buckets,
             codec,
             np.concatenate(pos_l) if store_positions else None,
-            pos_codec=pos_codec,
         )
 
     return merge
@@ -119,8 +114,7 @@ def merge_segments(
 
     kernel = _merge_kernel(range_block, shift_of, factor, int(meta.get("term_buckets", 0)),
                            meta.get("codec", "varint"),
-                           bool(meta.get("store_positions", False)),
-                           pos_codec=meta.get("pos_codec", "varint"))
+                           bool(meta.get("store_positions", False)))
     merged = (
         spark.read.parquet(p_in["postings"])
         .withColumn("merge_group", (F.col("segment_id") / factor).cast("int"))

@@ -173,6 +173,7 @@ def bool_clauses_topk(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """Per-CLAUSE ``bool`` semantics — the reference's BooleanQuery over
     *match clauses*, not over flattened terms (each clause is its own
@@ -214,7 +215,7 @@ def bool_clauses_topk(
     )
     scoring_terms = sorted({t for kind, terms, _ in clauses if kind != "must_not" for t in terms})
     all_terms = sorted({t for _, terms, _ in clauses for t in terms})
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer)
     stats = tok.agg(
         F.count(F.lit(1)).alias("N"),
         (F.sum("dl") * F.lit(1.0) / F.count(F.lit(1))).alias("avgdl"),
@@ -377,13 +378,15 @@ def dis_max_topk(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """``dis_max`` over BM25 term sub-queries: best sub-query score +
     ``tie_breaker`` × sum of the rest, per doc. All sub-queries score
     in ONE corpus traversal (`bm25_scores_by_group`)."""
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
-    per_group = bm25_scores_by_group(docs, term_groups, id_col, text_col)
+    per_group = bm25_scores_by_group(docs, term_groups, id_col, text_col,
+                                     tokenizer=tokenizer)
     combined = (
         per_group.groupBy("doc_id")
         .agg(F.max("score").alias("best"), F.sum("score").alias("total"))

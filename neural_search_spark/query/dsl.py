@@ -366,7 +366,8 @@ def _leaf_scores(ctx: SearchContext, typ: str, spec: Any) -> DataFrame | None:
                 raise DslError("[term] on the text column needs a non-empty "
                                "string value")
             return bm25_scores(ctx.docs, [val], id_col=ctx.id_col,
-                               text_col=ctx.text_col, round_to=None)
+                               text_col=ctx.text_col, round_to=None,
+                               tokenizer=ctx.analyzer)
         return _filter_frame(ctx, {"term": {col: val}})
     if typ == "rank_feature":
         # RankFeatureQueryBuilder: score = fn(feature value) × boost
@@ -756,7 +757,7 @@ def _span_clause_terms(ctx: SearchContext, q: Any, what: str) -> list[str]:
                    "supported: span_term, span_or, span_multi")
 
 
-def _span_int(val: Any, what: str, default: int | None = None) -> int:
+def _int_param(val: Any, what: str, default: int | None = None) -> int:
     if val is None and default is not None:
         return default
     if isinstance(val, bool) or not isinstance(val, int):
@@ -784,7 +785,7 @@ def _near_plan(ctx: SearchContext, nspec: Any,
     if not in_order and len(clauses) != 2:
         raise DslError("[span_near] unordered span_near supports "
                        "exactly 2 clauses")
-    slop = _span_int(nspec.get("slop"), "span_near.slop", default=0)
+    slop = _int_param(nspec.get("slop"), "span_near.slop", default=0)
     if slop < 0:
         raise DslError(f"[span_near] slop must be >= 0, got {slop}")
     sets = [_span_clause_terms(ctx, c, "span_near clause") for c in clauses]
@@ -842,7 +843,7 @@ def _span_plan(ctx: SearchContext, typ: str, spec: Any) -> dict | None:
         _reject_unknown(spec, {"match", "end"}, "span_first")
         if "match" not in spec or "end" not in spec:
             raise DslError("[span_first] needs [match] and [end]")
-        end = _span_int(spec["end"], "span_first.end")
+        end = _int_param(spec["end"], "span_first.end")
         if end < 0:
             raise DslError(f"[span_first] end must be >= 0, got {end}")
         ityp, ispec = _one(spec["match"], "span_first.match")
@@ -864,9 +865,9 @@ def _span_plan(ctx: SearchContext, typ: str, spec: Any) -> dict | None:
     if "dist" in spec and ("pre" in spec or "post" in spec):
         raise DslError("[span_not] dist is shorthand for pre+post; give "
                        "one or the other")
-    dist = _span_int(spec.get("dist"), "span_not.dist", default=0)
-    pre = _span_int(spec.get("pre"), "span_not.pre", default=dist)
-    post = _span_int(spec.get("post"), "span_not.post", default=dist)
+    dist = _int_param(spec.get("dist"), "span_not.dist", default=0)
+    pre = _int_param(spec.get("pre"), "span_not.pre", default=dist)
+    post = _int_param(spec.get("post"), "span_not.post", default=dist)
     if pre < 0 or post < 0:
         raise DslError(f"[span_not] pre/post must be >= 0, got {pre}/{post}")
     include = _span_clause_terms(ctx, spec["include"], "span_not.include")
@@ -928,8 +929,8 @@ def _intervals_plan(ctx: SearchContext, spec: Any,
         if not ordered and len(toks) > 2:
             raise DslError("[intervals.match] unordered supports at most "
                            f"2 terms, got {len(toks)}")
-        max_gaps = _span_int(sspec.get("max_gaps"), "intervals.match"
-                             ".max_gaps", default=-1)
+        max_gaps = _int_param(sspec.get("max_gaps"), "intervals.match"
+                              ".max_gaps", default=-1)
         if max_gaps < -1:
             raise DslError(f"[intervals.match] max_gaps must be >= -1, "
                            f"got {max_gaps}")
@@ -1107,7 +1108,8 @@ def _simple_query_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     tagged = None
     if or_groups:
         tagged = bm25_scores_by_group(
-            ctx.docs, or_groups, id_col=ctx.id_col, text_col=ctx.text_col
+            ctx.docs, or_groups, id_col=ctx.id_col, text_col=ctx.text_col,
+            tokenizer=analyzer,
         ).withColumnRenamed("subquery_idx", "cid")
     for j, frame in enumerate(frames):
         t = frame.select(F.lit(len(or_groups) + j).alias("cid"),
@@ -1194,7 +1196,7 @@ def _matcher_const_frame(ctx: SearchContext, matcher: str) -> DataFrame:
             F.col(ctx.id_col).alias("doc_id"), F.lit(1.0).cast("double").alias("score"))
     from .exhaustive import tokenized
 
-    toks = tokenized(ctx.docs, ctx.id_col, ctx.text_col)
+    toks = tokenized(ctx.docs, ctx.id_col, ctx.text_col, ctx.analyzer)
     return (
         toks.select("doc_id", F.explode("toks").alias("term"))
         .where(F.expr(matcher))
@@ -1220,7 +1222,7 @@ def _term_clause_frame(ctx: SearchContext, terms: list[str],
 
     fn = bm25_conjunctive if conj else bm25_scores
     return fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
-              round_to=None)
+              round_to=None, tokenizer=ctx.analyzer)
 
 
 def _phrase_clause_frame(ctx: SearchContext, toks: list[str],
@@ -1338,7 +1340,8 @@ def _query_string_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     tagged = None
     if or_groups:
         tagged = bm25_scores_by_group(
-            ctx.docs, or_groups, id_col=ctx.id_col, text_col=tc
+            ctx.docs, or_groups, id_col=ctx.id_col, text_col=tc,
+            tokenizer=analyzer,
         ).withColumnRenamed("subquery_idx", "cid")
     for j, frame in enumerate(frames):
         t = frame.select(F.lit(len(or_groups) + j).alias("cid"),
@@ -1407,7 +1410,7 @@ def _match_bool_prefix_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     elif terms:
         term_frames = bm25_scores_by_group(
             ctx.docs, [[t] for t in terms],
-            id_col=ctx.id_col, text_col=ctx.text_col,
+            id_col=ctx.id_col, text_col=ctx.text_col, tokenizer=ctx.analyzer,
         ).withColumnRenamed("subquery_idx", "cid")
         tagged = term_frames.unionByName(tagged)
     agg = tagged.groupBy("doc_id").agg(
@@ -1424,8 +1427,8 @@ def _sub_scores(ctx: SearchContext, q: dict, idx: int) -> DataFrame:
 
         terms, op = _match_clause(ctx, spec, "match")
         fn = bm25_conjunctive if op == "and" else bm25_scores
-        s = fn(ctx.docs, terms,
-               id_col=ctx.id_col, text_col=ctx.text_col, round_to=None)
+        s = fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
+               round_to=None, tokenizer=ctx.analyzer)
     elif typ == "multi_match":
         from .exhaustive import bm25_conjunctive, bm25_scores
 
@@ -1434,7 +1437,7 @@ def _sub_scores(ctx: SearchContext, q: dict, idx: int) -> DataFrame:
         fn = bm25_conjunctive if op == "and" else bm25_scores
         s = _boosted(
             fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
-               round_to=None),
+               round_to=None, tokenizer=ctx.analyzer),
             boost,
         )
     elif typ == "match_phrase":
@@ -1472,7 +1475,7 @@ def _sub_scores(ctx: SearchContext, q: dict, idx: int) -> DataFrame:
 
             s = sparse_topk_two_phase(
                 ctx.sparse_features, dict(params["query_tokens"]),
-                k=int(params["k"]), round_to=None,
+                k=_int_param(params["k"], "neural_sparse.k"), round_to=None,
             ).select("doc_id", "score")
         else:
             # no k → the sub-query scores its FULL match set, exactly
@@ -1518,7 +1521,8 @@ def _neural_topk(ctx: SearchContext, spec: Any) -> DataFrame:
     _reject_unknown(params, {"query_vector_id", "k", "ef"}, "neural")
     if ctx.embeddings is None:
         raise DslError("neural query needs ctx.embeddings")
-    qid, k = int(params["query_vector_id"]), int(params.get("k", 10))
+    qid = int(params["query_vector_id"])
+    k = _int_param(params.get("k"), "neural.k", 10)
     if ctx.graphs is not None:
         from ..pipeline.graph_ann import hnsw_topk
 
@@ -1553,7 +1557,7 @@ def _knn_topk(ctx: SearchContext, spec: Any) -> DataFrame:
             or not all(isinstance(x, (int, float)) and not isinstance(x, bool)
                        for x in vec)):
         raise DslError("[knn] needs a non-empty numeric [vector] list")
-    k = int(params.get("k", 10))
+    k = _int_param(params.get("k"), "knn.k", 10)
     pred = None
     if "filter" in params:
         if not isinstance(params["filter"], dict):
@@ -1897,7 +1901,8 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
 
         terms, op = _match_clause(ctx, mspec, "multi_match")
         fn = bm25_conjunctive if op == "and" else bm25_scores
-        s = fn(ctx.docs, terms, id_col=ic, text_col=tc, round_to=None)
+        s = fn(ctx.docs, terms, id_col=ic, text_col=tc, round_to=None,
+               tokenizer=ctx.analyzer)
         return topk(_boosted(s, boost), k=k)
 
     indexed = _indexed_topk(ctx, typ, spec, k)
@@ -1914,13 +1919,15 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
 
             matcher = _fuzzy_match_matcher(ctx, mparams)
             exp = expand_terms_corpus(ctx.docs, matcher=matcher,
-                                      id_col=ic, text_col=tc)
+                                      id_col=ic, text_col=tc,
+                                      tokenizer=ctx.analyzer)
             if not exp:
                 spark = ctx.docs.sparkSession
                 return spark.createDataFrame(
                     [], "doc_id long, score double, rank int")
             return topk(bm25_scores(ctx.docs, exp, id_col=ic, text_col=tc,
-                                    round_to=4), k=k, round_to=None)
+                                    round_to=4, tokenizer=ctx.analyzer),
+                        k=k, round_to=None)
         if "minimum_should_match" in mparams:
             from .exhaustive import bm25_msm
 
@@ -1934,17 +1941,18 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
                     spark = ctx.docs.sparkSession
                     return spark.createDataFrame(
                         [], "doc_id long, score double, rank int")
-                scored = bm25_msm(ctx.docs, terms, msm,
-                                  id_col=ic, text_col=tc, round_to=4)
+                scored = bm25_msm(ctx.docs, terms, msm, id_col=ic, text_col=tc,
+                                  round_to=4, tokenizer=ctx.analyzer)
                 return topk(scored, k=k, round_to=None)
             # operator=and makes every term required — msm is a no-op
             # on required clauses (the Lucene rule)
             fn = bm25_conjunctive if op == "and" else bm25_scores
             return topk(fn(ctx.docs, terms, id_col=ic, text_col=tc,
-                           round_to=None), k=k)
+                           round_to=None, tokenizer=ctx.analyzer), k=k)
         terms, op = _match_clause(ctx, spec, "match")
         fn = bm25_conjunctive if op == "and" else bm25_scores
-        return topk(fn(ctx.docs, terms, id_col=ic, text_col=tc, round_to=None), k=k)
+        return topk(fn(ctx.docs, terms, id_col=ic, text_col=tc, round_to=None,
+                       tokenizer=ctx.analyzer), k=k)
 
     if typ in ("term", "terms", "range", "exists", "ids", "match_all",
                "constant_score", "rank_feature", "match_none",
@@ -2024,7 +2032,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
             raise DslError("[knn] field spec must be an object")
         if "k" not in params:
             params = dict(params); params["k"] = max(k, 10)
-        elif int(params["k"]) < k:
+        elif _int_param(params["k"], "knn.k") < k:
             params = dict(params); params["k"] = k
         top = _knn_topk(ctx, {field: params})
         w = F.row_number().over(Window.orderBy(F.col("cos").desc(),
@@ -2079,7 +2087,8 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
                 out = bm25_msm(ctx.docs, tlist,
                                msm_col=_col_name(
                                    params["minimum_should_match_field"]),
-                               id_col=ic, text_col=tc, round_to=4)
+                               id_col=ic, text_col=tc, round_to=4,
+                               tokenizer=ctx.analyzer)
             else:
                 script = params["minimum_should_match_script"]
                 if (not isinstance(script, dict)
@@ -2095,7 +2104,8 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
                     return spark.createDataFrame(
                         [], "doc_id long, score double, rank int")
                 out = bm25_msm(ctx.docs, tlist, max(m, 1),
-                               id_col=ic, text_col=tc, round_to=4)
+                               id_col=ic, text_col=tc, round_to=4,
+                               tokenizer=ctx.analyzer)
         except ValueError as e:
             raise DslError(f"[terms_set] {e}") from e
         return topk(out, k=k, round_to=None)
@@ -2327,7 +2337,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
                     ctx, _one(scoring["must"][0], "bool.must")[1], "match")
                 fn = bm25_conjunctive if op == "and" else bm25_scores
                 scores = fn(ctx.docs, terms, id_col=ic, text_col=tc,
-                            round_to=None)
+                            round_to=None, tokenizer=ctx.analyzer)
                 return topk(filtered_scores(scores, ctx.docs, pred), k=k)
             raise DslError("[bool] filter context supports a single must "
                            "match clause (the FILTER-occur shape)")
@@ -2349,7 +2359,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
                 ctx.docs, must=clause_list("must"), should=clause_list("should"),
                 must_not=clause_list("must_not"),
                 minimum_should_match=int(spec.get("minimum_should_match", 0)),
-                k=k, id_col=ic, text_col=tc,
+                k=k, id_col=ic, text_col=tc, tokenizer=ctx.analyzer,
             )
         except ValueError as e:
             raise DslError(f"[bool] {e}") from e
@@ -2372,7 +2382,8 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
                 # corpus traversal (bm25_scores_by_group)
                 groups = [terms for terms, _ in clauses]
                 return dis_max_topk(ctx.docs, groups, tie_breaker=tb,
-                                    k=k, id_col=ic, text_col=tc)
+                                    k=k, id_col=ic, text_col=tc,
+                                    tokenizer=ctx.analyzer)
             # all-match with an AND sub: per-sub frames straight from
             # the already-parsed clauses (bm25_conjunctive for AND)
             from .exhaustive import bm25_conjunctive, bm25_scores
@@ -2381,7 +2392,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
             for i, (terms, op) in enumerate(clauses):
                 fn = bm25_conjunctive if op == "and" else bm25_scores
                 s = fn(ctx.docs, terms, id_col=ic, text_col=tc,
-                       round_to=None).select(
+                       round_to=None, tokenizer=ctx.analyzer).select(
                     F.lit(i).alias("subquery_idx"), "doc_id", "score")
                 tagged = s if tagged is None else tagged.unionByName(s)
         else:
@@ -2409,7 +2420,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
         params = _params(params, "query_vector_id")
         if "k" not in params:
             params = dict(params); params["k"] = max(k, 10)
-        elif int(params["k"]) < k:
+        elif _int_param(params["k"], "neural.k") < k:
             params = dict(params); params["k"] = k
         top = _neural_topk(ctx, {field: params})
         w = F.row_number().over(Window.orderBy(F.col("cos").desc(), F.col("vec_id").asc()))
@@ -2560,7 +2571,7 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
             if cspec.get("field", ctx.text_col) != ctx.text_col:
                 raise DslError(f"[suggest.{name}.completion] field must be "
                                f"[{ctx.text_col}]")
-            size_v = _span_int(cspec.get("size"),
+            size_v = _int_param(cspec.get("size"),
                                f"suggest.{name}.completion.size", default=5)
             try:
                 matcher = None
@@ -2733,7 +2744,8 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
             raise DslError("[search_after] expects [score, doc_id] — the "
                            "previous page's last sort tuple")
         scores = bm25_scores(ctx.docs, _match_terms(ctx, spec, "match"),
-                             id_col=ctx.id_col, text_col=ctx.text_col, round_to=4)
+                             id_col=ctx.id_col, text_col=ctx.text_col, round_to=4,
+                             tokenizer=ctx.analyzer)
         page = search_after(scores, float(sa[0]), int(sa[1]), k=size)
         w = Window.orderBy(F.col("score").desc(), F.col(ctx.id_col).asc())
         return page.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -2758,10 +2770,12 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
             raise DslError("[rescore_query] must be a match query")
         window = int(rs.get("window_size", 10))
         main = bm25_scores(ctx.docs, _match_terms(ctx, spec, "match"),
-                           id_col=ctx.id_col, text_col=ctx.text_col, round_to=None)
+                           id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
+                           tokenizer=ctx.analyzer)
         win = main.orderBy(F.col("score").desc(), F.col(ctx.id_col).asc()).limit(window)
         rsc = bm25_scores(ctx.docs, _match_terms(ctx, rspec, "match"),
-                          id_col=ctx.id_col, text_col=ctx.text_col, round_to=None)
+                          id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
+                          tokenizer=ctx.analyzer)
         out = _rescore(win, rsc,
                        weight_original=float(rq.get("query_weight", 1.0)),
                        weight_rescore=float(rq.get("rescore_query_weight", 1.0)),
@@ -2902,16 +2916,13 @@ def _matched_docs(ctx: SearchContext, q: dict) -> DataFrame:
             .select(ctx.id_col)
         )
         return ids.join(ctx.docs, ctx.id_col)
-    # corpus tokens: the index's own analyzer when a reader is set
-    # (matching the search() dispatch for these bodies); WITHOUT a
-    # reader the exhaustive scorers are simple-tokenized, so the hit
-    # set must be too — tokenizing with ctx.analyzer here would make
-    # search() and aggregate() disagree on one body. Built lazily:
-    # only the match/bool fallthroughs consume the token stream.
+    # corpus tokens: the index's own analyzer when a reader is set,
+    # the context analyzer otherwise — the analyzer the search()
+    # dispatch scores these bodies with. Built lazily: only the
+    # match/bool fallthroughs consume the token stream.
     def tok_frame():
         return tokenized(ctx.docs, ctx.id_col, ctx.text_col,
-                         tokenizer=ctx.index_analyzer()
-                         if ctx.reader is not None else "simple")
+                         tokenizer=ctx.index_analyzer())
 
     if typ == "match":
         tok = tok_frame()
@@ -3094,15 +3105,15 @@ def msearch(ctx: SearchContext, bodies: list[dict]) -> DataFrame:
             *[F.lit(x) for j, (i, _) in enumerate(grp) for x in (j, i)])
         frames.append(out.select(
             remap[F.col("query_idx")].cast("int").alias("query_idx"),
-            ctx.id_col, F.round("score", 4).alias("score"), "rank"))
+            F.col(ctx.id_col).alias("doc_id"), F.round("score", 4).alias("score"),
+            "rank"))
     for i, body in other_bodies:
         hits = search(ctx, body)
         if set(hits.columns) != {"doc_id", "score", "rank"}:
             raise DslError(  # pragma: no cover - the key gate rejects these
                 f"msearch body {i} did not produce a hit list")
         frames.append(hits.select(
-            F.lit(i).cast("int").alias("query_idx"),
-            F.col("doc_id").alias(ctx.id_col), "score", "rank"))
+            F.lit(i).cast("int").alias("query_idx"), "doc_id", "score", "rank"))
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)

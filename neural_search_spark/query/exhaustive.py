@@ -65,6 +65,7 @@ def bm25_scores(
     quantize: bool = True,
     round_to: int | None = 4,
     tok: DataFrame | None = None,
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """Score every matching doc for an OR query over ``terms``.
 
@@ -73,10 +74,11 @@ def bm25_scores(
     (query/bm25.py); ``quantize`` applies the SmallFloat length ladder.
     ``tok`` lets a caller that already tokenized the corpus (e.g.
     bm25_phrase's position gate) reuse that frame — one ``tokenized()``
-    subtree in the plan instead of two corpus scans.
+    subtree in the plan instead of two corpus scans. ``tokenizer`` is
+    the corpus analyzer (the one that analyzed ``terms``).
     """
     if tok is None:
-        tok = tokenized(docs, id_col, text_col)
+        tok = tokenized(docs, id_col, text_col, tokenizer)
     stats = tok.agg(
         F.count(F.lit(1)).alias("N"),
         (F.sum("dl") * F.lit(1.0) / F.count(F.lit(1))).alias("avgdl"),
@@ -110,6 +112,7 @@ def bm25_scores_by_group(
     k1: float = K1,
     b: float = B,
     quantize: bool = True,
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """(subquery_idx, doc_id, score): every hybrid sub-query scored in
     ONE corpus traversal — the DataFrame analog of HybridQueryScorer
@@ -122,7 +125,7 @@ def bm25_scores_by_group(
         [(i, t) for i, g in enumerate(term_groups) for t in sorted(set(g))],
         ["subquery_idx", "term"],
     )
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer)
     stats = tok.agg(
         F.count(F.lit(1)).alias("N"),
         (F.sum("dl") * F.lit(1.0) / F.count(F.lit(1))).alias("avgdl"),
@@ -152,6 +155,7 @@ def bm25_conjunctive(
     id_col: str = "doc_id",
     text_col: str = "text",
     round_to: int | None = 4,
+    tokenizer: str = "simple",
     **kw,
 ) -> DataFrame:
     """AND semantics: only docs containing *all* terms, BM25-scored.
@@ -165,7 +169,7 @@ def bm25_conjunctive(
     b = kw.pop("b", B)
     if kw:
         raise TypeError(f"bm25_conjunctive got unexpected keyword arguments: {sorted(kw)}")
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer)
     stats = tok.agg(
         F.count(F.lit(1)).alias("N"),
         (F.sum("dl") * F.lit(1.0) / F.count(F.lit(1))).alias("avgdl"),
@@ -201,6 +205,7 @@ def bm25_msm(
     text_col: str = "text",
     round_to: int | None = 4,
     msm_col: str | None = None,
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """minimum_should_match semantics (OpenSearch ``bool.should`` with
     ``minimum_should_match: m``): boolean OR scored with BM25, keeping
@@ -222,7 +227,7 @@ def bm25_msm(
         raise ValueError(
             f"min_should_match must be in [1, {len(uniq)}], got {min_should_match}"
         )
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer)
     stats = tok.agg(
         F.count(F.lit(1)).alias("N"),
         (F.sum("dl") * F.lit(1.0) / F.count(F.lit(1))).alias("avgdl"),

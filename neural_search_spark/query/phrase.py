@@ -44,8 +44,7 @@ from ..index.builder import SEG_SHIFT
 from .bm25 import B, K1
 from .wand import BULK_COLS, IndexReader
 
-PHRASE_COLS = [*BULK_COLS, "block_tf_off", "block_pos_off", "positions",
-               "block_pos_n", "pos_pack_bits", "pos_exc_pos", "pos_exc_high"]
+PHRASE_COLS = [*BULK_COLS, "block_tf_off", "block_pos_off", "positions"]
 
 # key = doc * 2^POS_SHIFT + position: positions must fit the low bits.
 # 2^24 = 16M tokens per doc — far beyond any real document; asserted.
@@ -99,10 +98,7 @@ def candidate_position_keys(r, ids, tfv, ns, cand: np.ndarray) -> np.ndarray:
     parts = []
     for j in needed:
         p0, p1 = int(noff[j]), int(noff[j + 1])
-        d = decode_block_positions(
-            r.positions, int(j), pos_off, len(r.positions),
-            int(r.pos_pack_bits), r.block_pos_n, r.pos_exc_pos,
-            r.pos_exc_high)
+        d = decode_block_positions(r.positions, int(j), pos_off, len(r.positions))
         pos_abs = chains_absolute(d, tfv[p0:p1])
         # explicit raise (not assert: stripped under python -O) —
         # a >=2^24-token doc would silently corrupt (doc<<24|pos)

@@ -102,8 +102,7 @@ class IndexReader:
         that never touch them (positions bytes ~ total token count)."""
         if self._postings is None:
             df = self.spark.read.parquet(self.p["postings"])
-            df = df.drop("positions", "block_pos_off", "block_pos_n",
-                         "pos_pack_bits", "pos_exc_pos", "pos_exc_high")  # no-op on v3 dirs
+            df = df.drop("positions", "block_pos_off")
             self._postings = df.cache() if self.cache_hot else df
         return self._postings
 

@@ -1486,6 +1486,29 @@ def test_knn_raw_vector(ctx, embeddings):
     assert hyb.count() == 5
 
 
+@pytest.mark.parametrize("site", ["neural", "knn", "hybrid_neural_sparse"])
+def test_non_integer_k_raises_dsl_error(spark, ctx, documents, site):
+    """A `k` that is not an integer is a DslError at every site that
+    reads one, never a bare ValueError/TypeError."""
+    feats = spark.createDataFrame([(0, "spark", 1.0)],
+                                  "doc_id long, token string, weight double")
+    sctx = SearchContext(docs=documents, embeddings=ctx.embeddings,
+                         sparse_features=feats)
+    for bad in ("ten", 1.5, None):
+        q = {"neural": {"embedding": {"query_vector_id": 0, "k": bad}}}
+        if site == "knn":
+            q = {"knn": {"embedding": {"vector": QV, "k": bad}}}
+        elif site == "hybrid_neural_sparse":
+            q = {"hybrid": {"queries": [
+                {"match": {"text": "spark"}},
+                {"neural_sparse": {"sparse": {"query_tokens": {"spark": 1.0},
+                                              "k": bad}}}]}}
+        with pytest.raises(DslError, match="k"):
+            search(sctx, {"query": q, "size": 3},
+                   pipeline={"normalization": "min_max",
+                             "combination": "arithmetic_mean"})
+
+
 def test_knn_rejections(ctx, documents):
     for bad in [
         {"knn": {"embedding": {"vector": [], "k": 3}}},
@@ -1695,3 +1718,48 @@ def test_indexed_dsl_with_non_doc_id_key(spark, code_docs, code_reader,
         got = search(by_id, body)
         assert got.columns == ["doc_id", "score", "rank"]
         assert _rows(got) == _rows(search(by_doc_id, body)), q
+    from neural_search_spark.query.dsl import msearch
+
+    bodies = [{"query": {"match": {"text": "parse_json2 value_2"}}, "size": 10},
+              {"query": {"match_phrase": {"text": "parse_json2 emit_v3"}}, "size": 10}]
+    got = msearch(by_id, bodies)
+    assert got.columns == ["query_idx", "doc_id", "score", "rank"]
+    assert _rows(got) == _rows(msearch(by_doc_id, bodies))
+
+
+def test_exhaustive_terms_use_context_analyzer(code_docs, code_reader):
+    """A `code` context tokenizes the corpus with `code` on every
+    exhaustive term path (match, multi_match, query_string and its
+    prefix clauses, simple_query_string, bool, term), so a token with
+    `_` and digits matches as it does on the index."""
+    exhaustive = SearchContext(docs=code_docs, analyzer="code")
+    indexed = SearchContext(docs=code_docs, reader=code_reader, analyzer="code")
+    match = {"query": {"match": {"text": "parse_json2"}}, "size": 10}
+    match_rows = _rows(search(exhaustive, match))
+    assert len(match_rows) == 6 and match_rows == _rows(search(indexed, match))
+    for q in [{"match": {"text": {"query": "parse_json2 value_2", "operator": "and"}}},
+              {"query_string": {"query": "parse_json2"}},
+              {"query_string": {"query": "value_2 AND parse_js*"}},
+              {"simple_query_string": {"query": "parse_json2 -value_2"}},
+              {"bool": {"must": [{"match": {"text": "emit_v3"}}],
+                        "should": [{"match": {"text": "value_2"}}]}}]:
+        body = {"query": q, "size": 10}
+        got = _rows(search(exhaustive, body))
+        assert got and got == _rows(search(indexed, body)), q
+    mm = {"multi_match": {"query": "parse_json2", "fields": ["text"]}}
+    assert _rows(search(exhaustive, {"query": mm, "size": 10})) == match_rows
+    term = {"term": {"text": "emit_v3"}}
+    assert {r[0] for r in _rows(search(exhaustive, {"query": term, "size": 10}))} \
+        == {r[0] for r in _rows(search(indexed, {"query": {"match": {"text": "emit_v3"}},
+                                                 "size": 10}))}
+    # a hybrid sub-query scores exhaustively: its hit set is the
+    # analyzer-consistent match set
+    hyb = {"hybrid": {"queries": [{"match": {"text": "value_2"}},
+                                  {"match": {"text": "emit_v3"}}]}}
+    got = {r["doc_id"] for r in search(
+        exhaustive, {"query": hyb, "size": 10},
+        pipeline={"normalization": "min_max", "combination": "arithmetic_mean",
+                  "weights": [0.5, 0.5]}).collect()}
+    exp = {r["doc_id"] for q in ("value_2", "emit_v3") for r in search(
+        indexed, {"query": {"match": {"text": q}}, "size": 10}).collect()}
+    assert got == exp and len(exp) == 6

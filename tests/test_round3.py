@@ -48,9 +48,7 @@ def test_positions_roundtrip(spark, documents, doc_index):
         carry = np.repeat(cs[starts] - deltas[starts], ns)
         local = np.repeat(bids * 64, ns) + cs - carry
         tfs = varint_decode(r["tfs"]).astype(np.int64)
-        pos = decode_term_positions(
-            r["positions"], tfs, int(r["pos_pack_bits"]), r["block_pos_n"],
-            r["block_pos_off"], r["pos_exc_pos"], r["pos_exc_high"])
+        pos = decode_term_positions(r["positions"], tfs)
         off = np.r_[0, np.cumsum(tfs)]
         seg = int(r["segment_id"])
         for i, lid in enumerate(local):

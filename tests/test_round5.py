@@ -184,9 +184,10 @@ def test_chunk_fixed_standard_nonascii(spark):
     assert total == len(spans)
 
 
-def test_v5_position_codec_both_branches(spark):
-    """Per-term codec choice: small-gap terms pick PFor, sparse terms
-    keep varint; decoded positions equal direct tokenization on BOTH."""
+def test_position_stream_roundtrip_every_term(spark):
+    """Every term's varint position stream decodes to the token
+    ordinals of direct tokenization — dense small-gap chains, one
+    far-offset occurrence per doc, and a single-occurrence term."""
     from neural_search_spark.functions.codecs import varint_decode
     from neural_search_spark.index.builder import (
         decode_term_deltas,
@@ -196,8 +197,8 @@ def test_v5_position_codec_both_branches(spark):
     from neural_search_spark.query.wand import IndexReader
     import tempfile
 
-    # `dense` appears every other token (tiny gaps -> PFor); `rare`
-    # appears once per doc at a large offset (varint-friendly chains)
+    # `dense` appears every other token (tiny gaps); `rare` appears
+    # once per doc at a large offset; `zzqunique` once in the corpus
     rows = []
     for d in range(60):
         toks = []
@@ -205,22 +206,16 @@ def test_v5_position_codec_both_branches(spark):
             toks.append("dense" if i % 2 == 0 else f"filler{i}_{d}")
         toks.append("rare")
         if d == 7:
-            # one single-occurrence term: 1 block, 1 small value ->
-            # PFor ties varint (1 byte) and the strict < keeps varint
             toks.append("zzqunique")
         rows.append((d, " ".join(toks)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     with tempfile.TemporaryDirectory() as td:
         d = os.path.join(td, "idx")
         build_index(spark, docs, d, key_cols=["doc_id"], text_col="text",
-                    tokenizer="simple", num_segments=1, range_block=8,
-                    pos_codec="auto")
+                    tokenizer="simple", num_segments=1, range_block=8)
         r = IndexReader(spark, d, cache_hot=False)
         pdf = r.postings_positional().toPandas().set_index("term")
-        assert int(pdf.loc["dense", "pos_pack_bits"]) >= 0  # PFor chosen
-        kinds = set(int(b) >= 0 for b in pdf["pos_pack_bits"])
-        assert kinds == {True, False}  # both branches exercised
-        # roundtrip every term against direct tokenization
+        assert {"dense", "rare", "zzqunique"} <= set(pdf.index)
         from neural_search_spark.query.exhaustive import tokenized
 
         toks_by_doc = {int(x["doc_id"]): list(x["toks"]) for x in
@@ -238,10 +233,7 @@ def test_v5_position_codec_both_branches(spark):
             carry = np.repeat(cs[starts] - deltas[starts], ns)
             local = np.repeat(bids * 8, ns) + cs - carry
             tfs = varint_decode(row["tfs"]).astype(np.int64)
-            pos = decode_term_positions(
-                row["positions"], tfs, int(row["pos_pack_bits"]),
-                row["block_pos_n"], row["block_pos_off"],
-                row["pos_exc_pos"], row["pos_exc_high"])
+            pos = decode_term_positions(row["positions"], tfs)
             off = np.r_[0, np.cumsum(tfs)]
             seg = int(row["segment_id"])
             for i, lid in enumerate(local):
@@ -330,14 +322,15 @@ def test_nested_conjunctive_hand_computed(spark):
 
 def test_format_version_guard(spark, tmp_path):
     """index_meta.json carries format_version and every open/append
-    path rejects a mismatch (SegmentInfos version check analog); a
-    legacy meta WITHOUT the key reads as current — the v5 era wrote
-    v5 postings before persisting the version."""
+    path rejects a mismatch (SegmentInfos version check analog) — an
+    older version and a meta without the key alike: every v5+ writer
+    persisted the version, so a version-less meta predates v6."""
     import json
 
     from neural_search_spark.index.builder import (
-        FORMAT_VERSION, build_index, paths, read_meta,
+        FORMAT_VERSION, build_index, paths,
     )
+    from neural_search_spark.index.live import append_segment
     from neural_search_spark.index.merge import merge_segments
     from neural_search_spark.query.wand import IndexReader
 
@@ -349,98 +342,24 @@ def test_format_version_guard(spark, tmp_path):
     mpath = paths(idx)["meta"]
     with open(mpath) as fh:
         meta = json.load(fh)
-    assert meta["format_version"] == FORMAT_VERSION
+    assert meta["format_version"] == FORMAT_VERSION == 6
+    assert "pos_codec" not in meta
 
-    # legacy meta (no key) still opens — classified CURRENT because the
-    # physical postings schema carries the v5 codec columns
-    legacy = {k: v for k, v in meta.items() if k != "format_version"}
-    with open(mpath, "w") as fh:
-        json.dump(legacy, fh)
-    assert read_meta(idx)["num_segments"] == 2
-    IndexReader(spark, idx)
-
-    # a version-less meta over a PRE-v5 physical layout (no
-    # pos_pack_bits column) is rejected by the schema sniff, not
-    # admitted to crash later on a missing column
-    import shutil
-
-    old_idx = str(tmp_path / "idx_v4era")
-    shutil.copytree(idx, old_idx)
-    pdir = os.path.join(old_idx, "postings")
-    stripped = spark.read.parquet(pdir).drop(
-        "pos_pack_bits", "block_pos_n", "pos_exc_pos", "pos_exc_high")
-    stripped.write.mode("overwrite").parquet(str(tmp_path / "stripped"))
-    shutil.rmtree(pdir)
-    shutil.copytree(str(tmp_path / "stripped"), pdir)
-    with pytest.raises(ValueError, match="format"):
-        read_meta(old_idx)
-
-    # a version this code does not write is rejected everywhere
-    with open(mpath, "w") as fh:
-        json.dump({**meta, "format_version": FORMAT_VERSION - 1}, fh)
-    with pytest.raises(ValueError, match="format"):
-        IndexReader(spark, idx)
-    with pytest.raises(ValueError, match="format"):
-        merge_segments(spark, idx, str(tmp_path / "merged"), factor=2)
-    with pytest.raises(ValueError, match="format"):
-        build_index(spark, docs, idx, key_cols=["doc_id"], text_col="text",
-                    tokenizer="simple", num_segments=2, range_block=64,
-                    resume=True)
-
-
-def test_pos_codec_survives_append_and_merge(spark, tmp_path):
-    """An index built with pos_codec='auto' must keep encoding packed
-    position streams through live appends and segment merges — the
-    stored meta, not the kernel default, decides the codec."""
-    from neural_search_spark.index.builder import build_index
-    from neural_search_spark.index.live import append_segment
-    from neural_search_spark.index.merge import merge_segments
-    from neural_search_spark.query.phrase import bm25_phrase_indexed
-    from neural_search_spark.query.wand import IndexReader
-
-    # 'needle' every other token: many tiny deltas, so packed bits beat
-    # per-position varint bytes — and enough docs that needle clears the
-    # auto probe's >=1024-positions-per-segment floor in the base
-    # segments AND in the appended segment on its own
-    rows = [(i, " ".join("needle" if j % 2 == 0 else f"f{j}_{i % 3}"
-                         for j in range(40)) + " needle tail")
-            for i in range(160)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    base, tail = docs.where("doc_id < 100"), docs.where("doc_id >= 100")
-
-    idx = str(tmp_path / "idx_auto")
-    build_index(spark, base, idx, key_cols=["doc_id"], text_col="text",
-                tokenizer="simple", num_segments=2, range_block=64,
-                pos_codec="auto")
-
-    def packed_rows(d, seg=None):
-        df = spark.read.parquet(os.path.join(d, "postings"))
-        if seg is not None:
-            df = df.where(F.col("segment_id") == seg)
-        return df.where(F.col("pos_pack_bits") >= 0).count()
-
-    assert packed_rows(idx) > 0  # the fresh build exercises packed
-
-    append_segment(spark, tail, idx, segment_id=2)
-    assert packed_rows(idx, seg=2) > 0  # append honors stored 'auto'
-
-    merged = str(tmp_path / "idx_merged")
-    merge_segments(spark, idx, merged, factor=4)
-    assert packed_rows(merged) > 0  # merge honors stored 'auto'
-
-    # and the positional queries still agree with a one-shot build
-    ref = str(tmp_path / "idx_ref")
-    build_index(spark, docs, ref, key_cols=["doc_id"], text_col="text",
-                tokenizer="simple", num_segments=2, range_block=64,
-                pos_codec="auto")
-    exp = {(r["doc_id"], round(r["score"], 9))
-           for r in bm25_phrase_indexed(IndexReader(spark, ref),
-                                        ["needle", "tail"]).collect()}
-    for d in (idx, merged):
-        got = {(r["doc_id"], round(r["score"], 9))
-               for r in bm25_phrase_indexed(IndexReader(spark, d),
-                                            ["needle", "tail"]).collect()}
-        assert got == exp, d
+    v5 = {**meta, "format_version": 5}
+    unversioned = {k: v for k, v in meta.items() if k != "format_version"}
+    for bad in (v5, unversioned):
+        with open(mpath, "w") as fh:
+            json.dump(bad, fh)
+        with pytest.raises(ValueError, match="format"):
+            IndexReader(spark, idx)
+        with pytest.raises(ValueError, match="format"):
+            merge_segments(spark, idx, str(tmp_path / "merged"), factor=2)
+        with pytest.raises(ValueError, match="format"):
+            append_segment(spark, docs, idx, segment_id=2)
+        with pytest.raises(ValueError, match="format"):
+            build_index(spark, docs, idx, key_cols=["doc_id"], text_col="text",
+                        tokenizer="simple", num_segments=2, range_block=64,
+                        resume=True)
 
 
 def test_rhp_band_key_impls_bit_identical(spark):
