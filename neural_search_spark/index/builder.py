@@ -144,6 +144,18 @@ def decode_term_deltas(
     return low.astype(np.int64)
 
 
+def decode_term_ids(r, range_block: int) -> np.ndarray:
+    """One postings row (``docs``, ``block_ids``, ``block_ns`` and the
+    codec columns) -> its absolute LOCAL doc ids: each block's delta
+    chain starts from the block's range base. THE doc-id decode of
+    every query kernel and of the merge."""
+    ns = np.asarray(r.block_ns, dtype=np.int64)
+    deltas = decode_term_deltas(r.docs, ns, r.block_doc_off, int(r.pack_bits),
+                                r.exc_pos, r.exc_high)
+    base = np.asarray(r.block_ids, dtype=np.int64) * range_block
+    return np.repeat(base, ns) + chains_absolute(deltas, ns)
+
+
 def decode_block_deltas(
     docs_blob: bytes,
     pack_bits: int,
@@ -178,7 +190,7 @@ def decode_block_deltas(
 
 def chains_absolute(deltas: np.ndarray, chain_lens: np.ndarray) -> np.ndarray:
     """Segmented cumsum: per-chain (first-absolute, then deltas) stream
-    -> absolute values. Shared by position decode and tests."""
+    -> absolute values. Shared by doc-id and position decode."""
     if len(deltas) == 0:
         return deltas.astype(np.int64)
     lens = np.asarray(chain_lens, dtype=np.int64)

@@ -47,24 +47,13 @@ def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_
         if len(pdf) == 0:
             return empty_postings_frame()
         new_seg = int(pdf["segment_id"].iloc[0]) // factor
-        from .builder import decode_term_deltas, decode_term_positions
+        from .builder import decode_term_ids, decode_term_positions
 
         terms_l, docs_l, tfs_l, norms_l, pos_l = [], [], [], [], []
         for r in pdf.itertuples():
-            deltas = decode_term_deltas(
-                r.docs, r.block_ns, r.block_doc_off, int(r.pack_bits), r.exc_pos, r.exc_high
-            )
             tfs = varint_decode(r.tfs).astype(np.int64)
             norms = np.frombuffer(r.norms, dtype=np.uint8)
-            ns = np.asarray(r.block_ns, dtype=np.int64)
-            bids = np.asarray(r.block_ids, dtype=np.int64)
-            starts = np.r_[0, np.cumsum(ns)[:-1]]
-            # segmented cumsum: delta[start] is relative to the block
-            # base, so subtract each block's carried-in prefix
-            cs = np.cumsum(deltas)
-            carry = np.repeat(cs[starts] - deltas[starts], ns)
-            local = np.repeat(bids * range_block, ns) + cs - carry
-            rebased = local + shift_of[int(r.segment_id)]
+            rebased = decode_term_ids(r, range_block) + shift_of[int(r.segment_id)]
             terms_l.append(np.full(len(rebased), r.term, dtype=object))
             docs_l.append(rebased)
             tfs_l.append(tfs)

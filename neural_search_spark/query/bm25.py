@@ -27,10 +27,17 @@ K1 = 1.2
 B = 0.75
 
 
-def idf(N: int, df: np.ndarray, dtype=np.float64) -> np.ndarray:
+def idf(N: int, df, dtype=np.float64):
+    """idf in ``dtype`` arithmetic throughout; ``df`` may be a scalar
+    (one term) or an array."""
     df = np.asarray(df, dtype=dtype)
     one = dtype(1.0)
     return np.log(one + (dtype(N) - df + dtype(0.5)) / (df + dtype(0.5))).astype(dtype)
+
+
+def idf_by_term(N: int, dfs: dict[str, int], terms, dtype=np.float64) -> dict[str, float]:
+    """Per-term idf of the index kernels, exact in ``dtype``."""
+    return {t: float(idf(N, dfs[t], dtype)) for t in terms}
 
 
 def tf_norm(
@@ -41,24 +48,13 @@ def tf_norm(
     b: float = B,
     dtype=np.float64,
 ) -> np.ndarray:
+    """The tf part, ``tf / (tf + k1 * (1 - b + b * dl_q / avgdl))``, in
+    ``dtype`` arithmetic — THE expression of every index kernel (and of
+    the block-max upper bound, with tf = max tf, dl_q = min dl_q)."""
     tf = np.asarray(tf, dtype=dtype)
     dl = np.asarray(dl_quantized, dtype=dtype)
     denom = tf + dtype(k1) * (dtype(1.0) - dtype(b) + dtype(b) * dl / dtype(avgdl))
-    return (tf / denom).astype(dtype)
-
-
-def bm25_contrib(
-    tf: np.ndarray,
-    dl_quantized: np.ndarray,
-    N: int,
-    df: np.ndarray,
-    avgdl: float,
-    k1: float = K1,
-    b: float = B,
-    dtype=np.float64,
-) -> np.ndarray:
-    """Per-(doc,term) score contribution."""
-    return (idf(N, df, dtype) * tf_norm(tf, dl_quantized, avgdl, k1, b, dtype)).astype(dtype)
+    return (tf / denom).astype(dtype, copy=False)
 
 
 def bm25_sql(

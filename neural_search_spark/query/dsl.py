@@ -50,7 +50,7 @@ parsers are likewise strict (fromXContent throws on unknown fields).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, Window
@@ -1704,7 +1704,9 @@ def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame 
             # span_multi clause's dictionary expansion runs once
             return None
         _require_doc_key(ctx)
-        plan = _span_plan(ctx, typ, spec)
+        # span_term values are checked against the index's own analyzer,
+        # as the intervals branch below analyzes with it
+        plan = _span_plan(replace(ctx, analyzer=ctx.index_analyzer()), typ, spec)
         if plan is None:
             return ctx.docs.sparkSession.createDataFrame(
                 [], "doc_id long, score double, rank int")
@@ -2293,7 +2295,7 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
             raise DslError("[match_phrase_prefix] query analyzed to zero tokens")
         kw = {"max_expansions": int(params["max_expansions"])} if "max_expansions" in params else {}
         return phrase_prefix_topk(ctx.docs, toks[:-1], toks[-1], k=k,
-                                  id_col=ic, text_col=tc, **kw)
+                                  id_col=ic, text_col=tc, tokenizer=ctx.analyzer, **kw)
 
     if typ in ("prefix", "wildcard", "fuzzy", "regexp"):
         from . import multiterm
@@ -2310,7 +2312,8 @@ def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
         fn = {"prefix": multiterm.prefix_topk, "wildcard": multiterm.wildcard_topk,
               "fuzzy": multiterm.fuzzy_topk, "regexp": multiterm.regexp_topk}[typ]
         try:
-            return fn(ctx.docs, params["value"], k=k, id_col=ic, text_col=tc, **kw)
+            return fn(ctx.docs, params["value"], k=k, id_col=ic, text_col=tc,
+                      tokenizer=ctx.analyzer, **kw)
         except ValueError as e:
             raise DslError(f"[{typ}] {e}") from e
 

@@ -266,7 +266,7 @@ def expand_terms_indexed(
     return _top_expansions(dictionary, matcher, max_expansions)
 
 
-def _scored_or(docs, terms, k, id_col, text_col):
+def _scored_or(docs, terms, k, id_col, text_col, tokenizer):
     if not terms:
         spark = docs.sparkSession
         return spark.createDataFrame([], "doc_id long, score double, rank int")
@@ -275,7 +275,8 @@ def _scored_or(docs, terms, k, id_col, text_col):
     # boundary are likely — both this path and the DuckDB oracle order
     # by (round(score,4) DESC, doc_id ASC), making ranks reproducible.
     return topk(
-        bm25_scores(docs, terms, id_col, text_col, round_to=4), k=k, round_to=None
+        bm25_scores(docs, terms, id_col, text_col, round_to=4, tokenizer=tokenizer),
+        k=k, round_to=None,
     )
 
 
@@ -286,13 +287,17 @@ def prefix_topk(
     max_expansions: int = MAX_EXPANSIONS,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
-    """``prefix`` query, scoring-boolean rewrite, exhaustive path."""
+    """``prefix`` query, scoring-boolean rewrite, exhaustive path.
+    ``tokenizer`` (here and in the wildcard/fuzzy/regexp/phrase-prefix
+    twins) analyzes the corpus for both the dictionary expansion and
+    the scoring — the context's analyzer, as on the indexed path."""
     terms = expand_terms_corpus(
         docs, like=like_escape(prefix) + "%", max_expansions=max_expansions,
-        id_col=id_col, text_col=text_col,
+        id_col=id_col, text_col=text_col, tokenizer=tokenizer,
     )
-    return _scored_or(docs, terms, k, id_col, text_col)
+    return _scored_or(docs, terms, k, id_col, text_col, tokenizer)
 
 
 def wildcard_topk(
@@ -302,13 +307,14 @@ def wildcard_topk(
     max_expansions: int = MAX_EXPANSIONS,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """``wildcard`` query (``*``/``?``), scoring-boolean rewrite."""
     terms = expand_terms_corpus(
         docs, like=wildcard_to_like(pattern), max_expansions=max_expansions,
-        id_col=id_col, text_col=text_col,
+        id_col=id_col, text_col=text_col, tokenizer=tokenizer,
     )
-    return _scored_or(docs, terms, k, id_col, text_col)
+    return _scored_or(docs, terms, k, id_col, text_col, tokenizer)
 
 
 def fuzzy_topk(
@@ -320,14 +326,16 @@ def fuzzy_topk(
     max_expansions: int = MAX_EXPANSIONS,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """``fuzzy`` query (Levenshtein ≤ max_edits), scoring-boolean
     rewrite, exhaustive path."""
     terms = expand_terms_corpus(
         docs, fuzzy=(term, max_edits, prefix_length),
         max_expansions=max_expansions, id_col=id_col, text_col=text_col,
+        tokenizer=tokenizer,
     )
-    return _scored_or(docs, terms, k, id_col, text_col)
+    return _scored_or(docs, terms, k, id_col, text_col, tokenizer)
 
 
 def regexp_topk(
@@ -337,6 +345,7 @@ def regexp_topk(
     max_expansions: int = MAX_EXPANSIONS,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """``regexp`` query (Lucene RegexpQuery: whole-term match),
     scoring-boolean rewrite, exhaustive path. The accepted pattern
@@ -344,9 +353,9 @@ def regexp_topk(
     ``regexp_matcher``."""
     terms = expand_terms_corpus(
         docs, matcher=regexp_matcher(pattern), max_expansions=max_expansions,
-        id_col=id_col, text_col=text_col,
+        id_col=id_col, text_col=text_col, tokenizer=tokenizer,
     )
-    return _scored_or(docs, terms, k, id_col, text_col)
+    return _scored_or(docs, terms, k, id_col, text_col, tokenizer)
 
 
 def rounded_topk_from_kernel(spark, fetch, k: int, n_cap: int = 65536,
@@ -421,6 +430,7 @@ def phrase_prefix_topk(
     max_expansions: int = MAX_EXPANSIONS,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """``match_phrase_prefix``: contiguous phrase whose LAST slot is a
     prefix. The last slot expands like a prefix query (top
@@ -441,13 +451,13 @@ def phrase_prefix_topk(
         )
     exp = expand_terms_corpus(
         docs, like=like_escape(prefix) + "%", max_expansions=max_expansions,
-        id_col=id_col, text_col=text_col,
+        id_col=id_col, text_col=text_col, tokenizer=tokenizer,
     )
     if not exp:
         spark = docs.sparkSession
         return spark.createDataFrame([], "doc_id long, score double, rank int")
     all_terms = sorted(set(fixed_terms) | set(exp))
-    tok = tokenized(docs, id_col, text_col)
+    tok = tokenized(docs, id_col, text_col, tokenizer)
     scored = bm25_scores(docs, all_terms, id_col, text_col, round_to=4, tok=tok)
     pos = tok.select("doc_id", F.posexplode("toks").alias("pos", "term"))
     witness = None

@@ -40,11 +40,11 @@ from pyspark.sql import types as T
 
 from ..functions.codecs import varint_decode
 from ..functions.norms import byte4_to_int
-from ..index.builder import SEG_SHIFT
-from .bm25 import B, K1
+from ..index.builder import SEG_SHIFT, decode_term_ids
+from .bm25 import B, K1, idf_by_term, tf_norm
 from .wand import BULK_COLS, IndexReader
 
-PHRASE_COLS = [*BULK_COLS, "block_tf_off", "block_pos_off", "positions"]
+PHRASE_COLS = [*BULK_COLS, "block_pos_off", "positions"]
 
 # key = doc * 2^POS_SHIFT + position: positions must fit the low bits.
 # 2^24 = 16M tokens per doc — far beyond any real document; asserted.
@@ -61,20 +61,10 @@ _RESULT_SCHEMA = T.StructType(
 
 def decode_doc_stream(r, range_block: int):
     """One positional-postings row -> (doc ids, tfs, quantized dls as
-    int64, per-block posting counts). The delta-carry reconstruction is
-    THE doc-id decode for every positional kernel (phrase and span) —
-    one copy, one set of tests."""
-    from ..index.builder import decode_term_deltas
-
-    deltas = decode_term_deltas(
-        r.docs, r.block_ns, r.block_doc_off, int(r.pack_bits), r.exc_pos,
-        r.exc_high)
+    int64, per-block posting counts), for every positional kernel
+    (phrase and span)."""
+    ids = decode_term_ids(r, range_block)
     ns = np.asarray(r.block_ns, dtype=np.int64)
-    bids = np.asarray(r.block_ids, dtype=np.int64)
-    starts = np.r_[0, np.cumsum(ns)[:-1]]
-    cs = np.cumsum(deltas)
-    carry = np.repeat(cs[starts] - deltas[starts], ns)
-    ids = np.repeat(bids * range_block, ns) + cs - carry
     tfv = varint_decode(r.tfs).astype(np.int64)
     dlq = byte4_to_int(np.frombuffer(r.norms, dtype=np.uint8))
     return ids, tfv, dlq, ns
@@ -140,17 +130,14 @@ def _phrase_kernel(
             return empty
         pdf = pdf.sort_values("term", kind="mergesort").reset_index(drop=True)
         seg = int(pdf["segment_id"].iloc[0])
-        k1f, bf, av = ft(k1), ft(b), ft(avgdl)
 
         # --- bulk decode doc/tf streams + conjunctive candidate set ----
         per_term: dict[str, tuple] = {}
         size = 0
         for r in pdf.itertuples():
             ids, tfv, dlq_int, ns = decode_doc_stream(r, range_block)
-            dlq = dlq_int.astype(ft)
-            idf = ft(idf_by_term[r.term])
             tff = tfv.astype(np.float64).astype(ft)
-            contrib = idf * (tff / (tff + k1f * (ft(1.0) - bf + bf * dlq / av)))
+            contrib = ft(idf_by_term[r.term]) * tf_norm(tff, dlq_int.astype(ft), avgdl, k1, b, ft)
             per_term[r.term] = (ids, tfv, contrib, ns, r)
             if len(ids):
                 size = max(size, int(ids[-1]) + 1)
@@ -251,34 +238,22 @@ def bm25_phrase_indexed(
     uniq = sorted(set(phrase_terms))
     N, avgdl = reader.global_stats()
     dfs = reader.term_dfs(uniq)
-    spark = reader.spark
     key_cols = reader.meta["key_cols"]
     if N == 0 or any(t not in dfs for t in uniq):
-        empty = spark.createDataFrame([], _RESULT_SCHEMA).drop("segment_id")
-        dm = reader.docmap().select("nss_doc_id", *key_cols)
-        return dm.join(F.broadcast(empty), "nss_doc_id")
-    ftype = np.float32 if dtype == "float32" else np.float64
-    idf_by_term = {
-        t: float(np.log(ftype(1.0) + (ftype(N) - ftype(dfs[t]) + ftype(0.5)) / (ftype(dfs[t]) + ftype(0.5))).astype(ftype))
-        for t in uniq
-    }
-    kernel = _phrase_kernel(
-        list(phrase_terms), idf_by_term, avgdl, int(reader.meta["range_block"]),
-        dtype, slop=slop,
-    )
-    scan = reader.postings_positional()
-    n_buckets = int(reader.meta.get("term_buckets", 0))
-    if n_buckets > 1:
-        from ..pipeline.hashing import py_hash64
-
-        buckets = sorted({py_hash64(t) % n_buckets for t in uniq})
-        scan = scan.where(F.col("term_bucket").isin(buckets))
-    per_seg = (
-        scan.where(F.col("term").isin(uniq))
-        .select(*PHRASE_COLS)
-        .groupBy("segment_id")
-        .applyInPandas(kernel, schema=_RESULT_SCHEMA)
-    )
+        # a phrase term absent from the index: an answer the optimizer
+        # proves empty (no Spark job), with the usual columns
+        per_seg = reader.spark.createDataFrame([], _RESULT_SCHEMA).limit(0)
+    else:
+        ftype = np.float32 if dtype == "float32" else np.float64
+        kernel = _phrase_kernel(
+            list(phrase_terms), idf_by_term(N, dfs, uniq, ftype), avgdl,
+            int(reader.meta["range_block"]), dtype, slop=slop,
+        )
+        per_seg = (
+            reader.scan_terms(uniq, PHRASE_COLS, positional=True)
+            .groupBy("segment_id")
+            .applyInPandas(kernel, schema=_RESULT_SCHEMA)
+        )
     dm = reader.docmap().select("nss_doc_id", *key_cols)
     out = dm.join(F.broadcast(per_seg.drop("segment_id")), "nss_doc_id")
     if k is not None:

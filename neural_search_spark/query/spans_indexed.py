@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..index.builder import SEG_SHIFT
-from .bm25 import B, K1
+from .bm25 import B, K1, idf_by_term, tf_norm
 from .phrase import (
     PHRASE_COLS,
     POS_SHIFT,
@@ -239,7 +239,7 @@ def _span_kernel(plan: dict, idf_total: float, avgdl: float,
         dlq_all = np.concatenate([decoded[t][2] for t in decoded])
         u_ids, first = np.unique(ids_all, return_index=True)
         dlq = dlq_all[first][np.searchsorted(u_ids, uniq_docs)]
-        score = idf_total * (freq / (freq + k1 * (1.0 - b + b * dlq / avgdl)))
+        score = idf_total * tf_norm(freq, dlq, avgdl, k1, b)
         gid = (np.int64(seg) << SEG_SHIFT) + uniq_docs
         return pd.DataFrame(
             {"segment_id": np.full(len(uniq_docs), seg, dtype=np.int32),
@@ -276,37 +276,25 @@ def span_topk_indexed(
     all_terms = sorted(set(idf_terms) | set(exclude))
     N, avgdl = reader.global_stats()
     dfs = reader.term_dfs(all_terms)
-    spark = reader.spark
     key_cols = reader.meta["key_cols"]
     dm = reader.docmap().select("nss_doc_id", *key_cols)
 
-    def empty() -> DataFrame:
-        e = spark.createDataFrame([], _RESULT_SCHEMA).drop("segment_id")
-        return dm.join(F.broadcast(e), "nss_doc_id")
-
     if N == 0 or any(all(t not in dfs for t in terms) for terms in required):
-        return empty()
-    # idf over the tree's index-present terms (absent terms carry no
-    # termStates in Lucene either); float64, matching the exhaustive sum
-    idf_total = float(sum(
-        np.log(1.0 + (float(N) - dfs[t] + 0.5) / (dfs[t] + 0.5))
-        for t in idf_terms if t in dfs))
-    kernel = _span_kernel(
-        {**plan, "required": required, "exclude": exclude},
-        idf_total, avgdl, int(reader.meta["range_block"]), k1=k1, b=b)
-    scan = reader.postings_positional()
-    n_buckets = int(reader.meta.get("term_buckets", 0))
-    if n_buckets > 1:
-        from ..pipeline.hashing import py_hash64
-
-        buckets = sorted({py_hash64(t) % n_buckets for t in all_terms})
-        scan = scan.where(F.col("term_bucket").isin(buckets))
-    per_seg = (
-        scan.where(F.col("term").isin(all_terms))
-        .select(*PHRASE_COLS)
-        .groupBy("segment_id")
-        .applyInPandas(kernel, schema=_RESULT_SCHEMA)
-    )
+        # a clause with no index-present term: an answer the optimizer
+        # proves empty (no Spark job), with the usual columns
+        per_seg = reader.spark.createDataFrame([], _RESULT_SCHEMA).limit(0)
+    else:
+        # idf over the tree's index-present terms (absent terms carry no
+        # termStates in Lucene either); float64, matching the exhaustive sum
+        idf_total = float(sum(idf_by_term(N, dfs, [t for t in idf_terms if t in dfs]).values()))
+        kernel = _span_kernel(
+            {**plan, "required": required, "exclude": exclude},
+            idf_total, avgdl, int(reader.meta["range_block"]), k1=k1, b=b)
+        per_seg = (
+            reader.scan_terms(all_terms, PHRASE_COLS, positional=True)
+            .groupBy("segment_id")
+            .applyInPandas(kernel, schema=_RESULT_SCHEMA)
+        )
     out = dm.join(F.broadcast(per_seg.drop("segment_id")), "nss_doc_id")
     if round_to is not None:
         out = out.withColumn("score", F.round("score", round_to))

@@ -127,19 +127,11 @@ def _sparse_seg_scores(reader, query: dict[str, float], restrict_df: DataFrame |
         pdf = pdf.sort_values("term", kind="mergesort")
         seg = int(pdf["segment_id"].iloc[0])
         base = np.int64(seg) << SEG_SHIFT
-        from ..index.builder import decode_term_deltas
+        from ..index.builder import decode_term_ids
 
         id_parts, c_parts = [], []
         for r in pdf.itertuples():
-            deltas = decode_term_deltas(
-                r.docs, r.block_ns, r.block_doc_off, int(r.pack_bits), r.exc_pos, r.exc_high
-            )
-            ns = np.asarray(r.block_ns, dtype=np.int64)
-            bids = np.asarray(r.block_ids, dtype=np.int64)
-            starts = np.r_[0, np.cumsum(ns)[:-1]]
-            cs = np.cumsum(deltas)
-            carry = np.repeat(cs[starts] - deltas[starts], ns)
-            ids = base + np.repeat(bids * range_block, ns) + cs - carry
+            ids = base + decode_term_ids(r, range_block)
             contrib = qw[r.term] * varint_decode(r.tfs).astype(np.float64)
             if allow_arr is not None:
                 keep = np.isin(ids, allow_arr)
@@ -155,16 +147,9 @@ def _sparse_seg_scores(reader, query: dict[str, float], restrict_df: DataFrame |
         np.add.at(acc, inv, all_c)  # array order = sorted-term order → deterministic
         return pd.DataFrame({"nss_doc_id": uniq, "score": acc})
 
-    scan = reader.postings()
-    n_buckets = int(reader.meta.get("term_buckets", 0))
-    if n_buckets > 1:
-        from ..pipeline.hashing import py_hash64
-
-        buckets = sorted({py_hash64(t) % n_buckets for t in tokens})
-        scan = scan.where(F.col("term_bucket").isin(buckets))
     from .wand import DECODE_COLS
 
-    scan = scan.where(F.col("term").isin(tokens)).select(*DECODE_COLS, "tfs")
+    scan = reader.scan_terms(tokens, [*DECODE_COLS, "tfs"])
     if restrict_df is None:
         return scan.groupBy("segment_id").applyInPandas(
             lambda pdf: score_rows(pdf, None), schema

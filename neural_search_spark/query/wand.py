@@ -1,25 +1,33 @@
-"""Block-max pruned BM25 top-k over the segmented index.
+"""BM25 top-k over the segmented index: one term scan, one bulk kernel.
 
-The role of the reference's block-max machinery
-(query/HybridScoreBlockBoundaryPropagator.java:25-99 — sort scorers by
-max score, advanceShallow to the next block boundary, drop clauses whose
-max can't beat the current min-competitive score) re-expressed for a
-vectorized executor:
+Every BM25 top-k over the index — single search, filtered search,
+hybrid sub-query score lists and msearch batches — is the same three
+steps, written once (``_per_segment_scores``):
 
-* postings blocks are **doc-range aligned across terms** (index/builder),
-  so a per-range upper bound is just the sum of the query terms'
-  per-block bounds: ub(range) = Σ_t idf_t · bound(max_tf_t, min_dl_q_t).
-* each segment's kernel sorts ranges by ub desc and scores them with a
-  dense numpy accumulator (np.add.at over local offsets); once k results
-  are held and the next range's ub < θ (the current k-th score), every
-  remaining range is provably non-competitive — the whole tail is
-  skipped. This is exact top-k (same guarantee as Block-Max WAND,
-  Ding & Suel 2011), not an approximation.
-* per-segment top-k partial results are tiny (k rows/segment); the
-  global merge is orderBy(score desc, doc_id asc).limit(k) —
-  TakeOrderedAndProject, no wide shuffle. Mirrors
-  HybridTopScoreDocCollector (one bounded heap per scorer) +
-  TopDocsMerger (reference search/collector, search/query).
+* query statistics (N, avgdl, df → idf) come from the index files on
+  the driver (``IndexReader.global_stats`` / ``term_dfs``), no Spark job;
+* the query terms' postings rows are read by ONE term scan
+  (``IndexReader.scan_terms``: term-bucket partition pruning, then
+  ``term IN (...)``, then the kernel's columns);
+* per segment, ONE bulk kernel (``_bulk_kernel_multi``) decodes each
+  term's postings once and scores a batch of queries — a single search
+  is a batch of one. It is a pure pandas/numpy function of (postings
+  rows, query specs, statistics), so it runs the same inside
+  ``applyInPandas`` and in-process. Per-segment top-k partial results
+  are tiny (k rows/segment); the global merge is
+  orderBy(score desc, key asc).limit(k) — TakeOrderedAndProject, no
+  wide shuffle. Mirrors HybridTopScoreDocCollector (one bounded heap per
+  scorer) + TopDocsMerger (reference search/collector, search/query).
+
+Production runs the bulk decode. ``strategy="wand"`` selects the
+block-max kernel (``_wand_kernel``), the role of the reference's
+HybridScoreBlockBoundaryPropagator.java:25-99: postings blocks are
+doc-range aligned across terms (index/builder), so a range's upper
+bound is the sum of the query terms' per-block bounds; ranges are
+scored in bound order and the tail below the current k-th score θ is
+skipped — exact top-k, as Block-Max WAND (Ding & Suel 2011). It is
+reached from tests only, until the vectorised block-max experiment of
+ROADMAP direction 3 either folds it into the bulk kernel or retires it.
 
 Float discipline: ``dtype="float32"`` gives Lucene-parity arithmetic
 (scores within DELTA_FOR_SCORE_ASSERTION=0.001 of the reference's,
@@ -28,21 +36,18 @@ ranks identical); ``"float64"`` bit-matches the SQL oracles.
 
 from __future__ import annotations
 
-import json
-import os
-
 import numpy as np
 import pandas as pd
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.codecs import varint_decode
 from ..functions.norms import byte4_to_int
-from ..index.builder import SEG_SHIFT, paths
-from .bm25 import B, K1
+from ..index.builder import SEG_SHIFT, _term_buckets_of, decode_term_ids, paths
+from .bm25 import B, K1, idf_by_term, tf_norm
 
 # column sets per kernel — pruning the applyInPandas input to what the
 # kernel touches shrinks the JVM→python Arrow transfer (ReadSchema
@@ -60,6 +65,9 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
         T.StructField("matched_terms", T.IntegerType(), False),
     ]
+)
+MULTI_SCHEMA = T.StructType(
+    [T.StructField("query_idx", T.IntegerType(), False), *RESULT_SCHEMA.fields]
 )
 
 
@@ -133,6 +141,28 @@ class IndexReader:
                                             partitioning="hive")
         return self._arrow[table]
 
+    def _term_buckets(self, terms: list[str]) -> list[int] | None:
+        """The ``term_bucket`` directories that can hold ``terms`` (the
+        builder's own bucket function), or None on an unbucketed index."""
+        n_buckets = int(self.meta.get("term_buckets", 0))
+        if n_buckets <= 1:
+            return None
+        return sorted(set(_term_buckets_of(np.asarray(terms, dtype=object), n_buckets).tolist()))
+
+    def scan_terms(self, terms: list[str], cols: list[str],
+                   positional: bool = False) -> DataFrame:
+        """THE term scan of every query kernel: the postings rows of
+        ``terms`` (one per (segment, term)) projected to ``cols``. On a
+        term-bucketed index only the terms' bucket directories are
+        listed and read (PartitionFilters in the scan node), so
+        per-query I/O ∝ query terms, not index size. ``positional``
+        reads the handle that carries the position streams."""
+        scan = self.postings_positional() if positional else self.postings()
+        buckets = self._term_buckets(terms)
+        if buckets is not None:
+            scan = scan.where(F.col("term_bucket").isin(buckets))
+        return scan.where(F.col("term").isin(list(terms))).select(*cols)
+
     def global_stats(self) -> tuple[int, float]:
         """(N, avgdl): the manifest's per-segment ``docs_tokenized`` and
         ``total_tokens`` summed in-process (one row per segment)."""
@@ -152,8 +182,8 @@ class IndexReader:
 
         Read in-process: the postings dataset is projected to
         ``term``/``n``, filtered to the query terms (parquet row-group
-        statistics skip row groups that cannot hold them) and, when the
-        index is term-bucketed, pruned to the terms' bucket directories.
+        statistics skip row groups that cannot hold them) and pruned to
+        the terms' bucket directories like ``scan_terms``.
         Per-query work is O(|query terms| × segments) rows, independent
         of vocabulary size. Results memoize incrementally per reader —
         repeat terms never re-read; memory holds only terms ever
@@ -163,11 +193,8 @@ class IndexReader:
         missing = sorted(t for t in set(terms) if t not in self._dfs)
         if missing:
             cond = ds.field("term").isin(missing)
-            n_buckets = int(self.meta.get("term_buckets", 0))
-            if n_buckets > 1:
-                from ..pipeline.hashing import py_hash64
-
-                buckets = sorted({py_hash64(t) % n_buckets for t in missing})
+            buckets = self._term_buckets(missing)
+            if buckets is not None:
                 cond = ds.field("term_bucket").isin(buckets) & cond
             rows = self._dataset("postings").to_table(columns=["term", "n"], filter=cond)
             sums = rows.group_by("term").aggregate([("n", "sum")])
@@ -192,6 +219,21 @@ def _min_matched(mode: str, n_terms: int) -> int:
     return 1
 
 
+_NO_IDS = np.empty(0, dtype=np.int64)
+
+
+def _result_frame(seg: int, local: np.ndarray, scores: np.ndarray, counts: np.ndarray,
+                  query_idx: np.ndarray | None = None) -> pd.DataFrame:
+    """Kernel output rows of one segment: RESULT_SCHEMA, or MULTI_SCHEMA
+    when ``query_idx`` is given. Empty arrays give the typed empty frame."""
+    out = {} if query_idx is None else {"query_idx": query_idx.astype(np.int32, copy=False)}
+    out.update(segment_id=np.full(len(local), seg, dtype=np.int32),
+               nss_doc_id=(np.int64(seg) << SEG_SHIFT) + local,
+               score=scores.astype(np.float64, copy=False),
+               matched_terms=counts.astype(np.int32, copy=False))
+    return pd.DataFrame(out)
+
+
 def _wand_kernel(
     terms: list[str],
     idf_by_term: dict[str, float],
@@ -212,20 +254,15 @@ def _wand_kernel(
     pruning stays exact)."""
     ft = np.float32 if dtype == "float32" else np.float64
     n_terms = len(terms)
-    term_order = {t: i for i, t in enumerate(sorted(terms))}
 
     def kernel(pdf: pd.DataFrame, allow: np.ndarray | None = None) -> pd.DataFrame:
         if len(pdf) == 0:
-            return pd.DataFrame(
-                {"segment_id": pd.Series(dtype=np.int32), "nss_doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64), "matched_terms": pd.Series(dtype=np.int32)}
-            )
+            return _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS)
         # one row per (segment, term): <= |query terms| rows here. Rows
         # are processed in sorted-term order so per-doc float sums are
         # deterministic regardless of storage order.
         pdf = pdf.sort_values("term", kind="mergesort").reset_index(drop=True)
         seg = int(pdf["segment_id"].iloc[0])
-        k1f, bf, av = ft(k1), ft(b), ft(avgdl)
         idf = np.array([idf_by_term[t] for t in pdf["term"]], dtype=ft)
 
         # flatten per-term block arrays → per-(term, block) upper bounds
@@ -241,7 +278,7 @@ def _wand_kernel(
         flat_bid = np.concatenate(r_bids)
         flat_max = np.concatenate(r_bmax).astype(ft)
         flat_min = np.concatenate(r_bmin).astype(ft)
-        ub_entry = idf[row_of] * (flat_max / (flat_max + k1f * (ft(1.0) - bf + bf * flat_min / av)))
+        ub_entry = idf[row_of] * tf_norm(flat_max, flat_min, avgdl, k1, b, ft)
 
         uniq_blocks, inv = np.unique(flat_bid, return_inverse=True)
         block_ub = np.zeros(len(uniq_blocks), dtype=np.float64)
@@ -266,9 +303,9 @@ def _wand_kernel(
         tf_ends = [len(x) for x in tfs_blobs]
         from ..index.builder import decode_block_deltas
 
-        top_docs = np.empty(0, dtype=np.int64)
+        top_docs = _NO_IDS
         top_scores = np.empty(0, dtype=np.float64)
-        top_counts = np.empty(0, dtype=np.int64)
+        top_counts = _NO_IDS
         theta = -np.inf
 
         for bi in order:
@@ -295,8 +332,7 @@ def _wand_kernel(
                 dlq = byte4_to_int(
                     np.frombuffer(norm_blobs[r][ns:ne], dtype=np.uint8)
                 ).astype(ft)
-                contrib = idf[r] * (tfv / (tfv + k1f * (ft(1.0) - bf + bf * dlq / av)))
-                acc[local] += contrib
+                acc[local] += idf[r] * tf_norm(tfv, dlq, avgdl, k1, b, ft)
                 cnt[local] += 1
             hit = np.flatnonzero(cnt > 0) if mode != "and" else np.flatnonzero(cnt == n_terms)
             if len(hit) == 0:
@@ -319,108 +355,161 @@ def _wand_kernel(
             if len(top_docs) >= k:
                 theta = top_scores.min()
 
-        if len(top_docs) == 0:
-            return pd.DataFrame(
-                {"segment_id": pd.Series(dtype=np.int32), "nss_doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64), "matched_terms": pd.Series(dtype=np.int32)}
-            )
-        gid = (np.int64(seg) << SEG_SHIFT) + top_docs
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(len(gid), seg, dtype=np.int32),
-                "nss_doc_id": gid,
-                "score": top_scores,
-                "matched_terms": top_counts.astype(np.int32),
-            }
-        )
+        return _result_frame(seg, top_docs, top_scores, top_counts)
 
     return kernel
 
 
-def _bulk_kernel(
-    terms: list[str],
+def _bulk_kernel_multi(
+    query_specs: list[tuple[list[str], int, int]],
     idf_by_term: dict[str, float],
     avgdl: float,
-    k: int,
     range_block: int,
-    mode: str,
     dtype: str,
     k1: float = K1,
     b: float = B,
 ):
-    """Per-segment exact top-k by bulk decode: each term's posting blob
-    decodes in ONE varint pass (segmented cumsum over the block offsets
-    recovers absolute ids), contributions accumulate into a dense local
-    array. ~10 numpy calls per term instead of one per (term, block) —
-    wins whenever most ranges would survive pruning anyway (head terms,
-    OR queries). Scores are bit-identical to the WAND kernel: per-doc
-    sums happen in the same sorted-term order. ``allow`` (optional int64
-    array of local doc ids) restricts hits — FILTER-occur semantics."""
+    """THE BM25 top-k kernel: scores a batch of queries over one
+    postings pass. ``query_specs`` are (sorted unique terms, min_match,
+    k): a doc is a hit of a query when at least ``min_match`` of its
+    terms occur in it (1 = OR, |terms| = AND, m = minimum_should_match).
+    A single search is a batch of one.
+
+    Each term's postings row decodes ONCE (``decode_term_ids`` + one
+    varint pass over tfs) and its per-doc BM25 contribution (idf ·
+    tf-part — identical whichever query references the term) is kept;
+    each query then accumulates its own terms' contributions into a
+    dense local array in sorted-term order, so per-doc float sums are
+    deterministic. The DataFrame analog of the reference's multi-search
+    + HybridQueryScorer sub-query iteration
+    (query/HybridQueryScorer.java:190-208).
+
+    ``kernel(pdf, allow)``: ``pdf`` holds BULK_COLS rows of one or more
+    segments (rows grouped by pmod(segment_id, G) arrive together; each
+    segment is scored independently, so results do not depend on the
+    grouping). ``allow`` (optional int64 LOCAL doc ids of the one
+    segment in ``pdf``) restricts hits without touching scores —
+    FILTER-occur semantics. Pure pandas/numpy: no Spark in the body, so
+    the same kernel runs inside ``applyInPandas`` or in-process over
+    pyarrow reads. Returns MULTI_SCHEMA rows, at most k per query."""
     ft = np.float32 if dtype == "float32" else np.float64
-    n_terms = len(terms)
 
     def kernel(pdf: pd.DataFrame, allow: np.ndarray | None = None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {"segment_id": pd.Series(dtype=np.int32), "nss_doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64), "matched_terms": pd.Series(dtype=np.int32)}
-            )
-        pdf = pdf.sort_values("term", kind="mergesort").reset_index(drop=True)
-        seg = int(pdf["segment_id"].iloc[0])
-        k1f, bf, av = ft(k1), ft(b), ft(avgdl)
-        from ..index.builder import decode_term_deltas
-
-        min_match = _min_matched(mode, n_terms)
+        segs = pdf["segment_id"].to_numpy()
+        if len(segs) == 0:
+            return _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS, _NO_IDS)
+        if (segs != segs[0]).any():
+            outs = [kernel(sub) for _, sub in pdf.groupby("segment_id", sort=True)]
+            outs = [o for o in outs if len(o)]
+            return (pd.concat(outs, ignore_index=True) if outs
+                    else _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS, _NO_IDS))
+        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         size = 0
-        decoded = []
-        for r in pdf.itertuples():
-            deltas = decode_term_deltas(
-                r.docs, r.block_ns, r.block_doc_off, int(r.pack_bits), r.exc_pos, r.exc_high
-            )
-            ns = np.asarray(r.block_ns, dtype=np.int64)
-            bids = np.asarray(r.block_ids, dtype=np.int64)
-            starts = np.r_[0, np.cumsum(ns)[:-1]]
-            cs = np.cumsum(deltas)
-            carry = np.repeat(cs[starts] - deltas[starts], ns)
-            ids = np.repeat(bids * range_block, ns) + cs - carry
+        for r in pdf.sort_values("term", kind="mergesort").itertuples():
+            ids = decode_term_ids(r, range_block)
             tfv = varint_decode(r.tfs).astype(np.float64).astype(ft)
             dlq = byte4_to_int(np.frombuffer(r.norms, dtype=np.uint8)).astype(ft)
-            idf = ft(idf_by_term[r.term])
-            contrib = idf * (tfv / (tfv + k1f * (ft(1.0) - bf + bf * dlq / av)))
-            decoded.append((ids, contrib))
+            decoded[r.term] = (ids, ft(idf_by_term[r.term]) * tf_norm(tfv, dlq, avgdl, k1, b, ft))
             if len(ids):
                 size = max(size, int(ids[-1]) + 1)
-        acc = np.zeros(size, dtype=ft)
-        cnt = np.zeros(size, dtype=np.int32)
-        for ids, contrib in decoded:  # sorted-term order → deterministic
-            acc[ids] += contrib
-            cnt[ids] += 1
-        hit = np.flatnonzero(cnt >= min_match)
-        if allow is not None and len(hit):
-            mask = np.zeros(size, dtype=bool)
-            in_range = allow[(allow >= 0) & (allow < size)]
-            mask[in_range] = True
-            hit = hit[mask[hit]]
-        if len(hit) == 0:
-            return pd.DataFrame(
-                {"segment_id": pd.Series(dtype=np.int32), "nss_doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64), "matched_terms": pd.Series(dtype=np.int32)}
-            )
-        scores = acc[hit].astype(np.float64)
-        if len(hit) > k:
-            sel = np.lexsort((hit, -scores))[:k]
-            hit, scores = hit[sel], scores[sel]
-        gid = (np.int64(seg) << SEG_SHIFT) + hit
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(len(gid), seg, dtype=np.int32),
-                "nss_doc_id": gid,
-                "score": scores,
-                "matched_terms": cnt[hit].astype(np.int32),
-            }
-        )
+        allowed = None
+        if allow is not None:
+            allowed = np.zeros(size, dtype=bool)
+            allowed[allow[(allow >= 0) & (allow < size)]] = True
+        out_q, out_ids, out_scores, out_counts = [], [], [], []
+        for qi, (terms, min_match, k) in enumerate(query_specs):
+            live = [t for t in terms if t in decoded]
+            if not live or len(live) < min_match:
+                continue
+            acc = np.zeros(size, dtype=ft)
+            cnt = np.zeros(size, dtype=np.int32)
+            for t in live:  # sorted-term order → deterministic sums
+                ids, contrib = decoded[t]
+                acc[ids] += contrib
+                cnt[ids] += 1
+            hit = np.flatnonzero(cnt >= min_match)
+            if allowed is not None:
+                hit = hit[allowed[hit]]
+            if len(hit) == 0:
+                continue
+            scores = acc[hit].astype(np.float64)
+            if len(hit) > k:
+                sel = np.lexsort((hit, -scores))[:k]
+                hit, scores = hit[sel], scores[sel]
+            out_q.append(np.full(len(hit), qi, dtype=np.int32))
+            out_ids.append(hit)
+            out_scores.append(scores)
+            out_counts.append(cnt[hit])
+        if not out_ids:
+            return _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS, _NO_IDS)
+        return _result_frame(int(segs[0]), np.concatenate(out_ids), np.concatenate(out_scores),
+                             np.concatenate(out_counts), np.concatenate(out_q))
 
     return kernel
+
+
+def _per_segment_scores(
+    reader: IndexReader,
+    queries: list[tuple[list[str], str, int]],
+    dtype: str = "float64",
+    strategy: str = "bulk",
+    allowed: DataFrame | None = None,
+    segment_groups: int | None = None,
+) -> DataFrame:
+    """Shared assembly of every BM25 top-k over the index: query
+    statistics on the driver → one term scan → per-segment (co)grouped
+    kernel. ``queries`` are (sorted unique terms, mode, k); rows come
+    out as MULTI_SCHEMA (RESULT_SCHEMA under the single-query WAND
+    kernel — callers drop ``query_idx`` either way). When no query can
+    match (no live term, or fewer live terms than a query needs), the
+    frame is one the optimizer proves empty, so it costs no Spark job.
+
+    ``allowed`` (a frame with an ``nss_doc_id`` column) is delivered per
+    segment through a cogrouped applyInPandas, so each task sees only
+    its segment's slice of the allow-list. ``segment_groups=G`` groups
+    the kernel input by pmod(segment_id, G) instead of by segment."""
+    N, avgdl = reader.global_stats()
+    union = sorted({t for terms, _, _ in queries for t in terms})
+    dfs = reader.term_dfs(union)
+    live = [t for t in union if t in dfs]
+    specs = [(terms, _min_matched(mode, len(terms)), k) for terms, mode, k in queries]
+    n_live = [sum(t in dfs for t in terms) for terms, _, _ in queries]
+    if N == 0 or not any(n and n >= m for n, (_, m, _) in zip(n_live, specs)):
+        return reader.spark.createDataFrame([], MULTI_SCHEMA).limit(0)
+
+    ftype = np.float32 if dtype == "float32" else np.float64
+    idf = idf_by_term(N, dfs, live, ftype)
+    range_block = int(reader.meta["range_block"])
+    if strategy == "bulk":
+        kernel = _bulk_kernel_multi(specs, idf, avgdl, range_block, dtype)
+        schema, cols = MULTI_SCHEMA, BULK_COLS
+    else:
+        [(_, mode, k)] = queries
+        kernel = _wand_kernel(live, idf, avgdl, k, range_block, mode, dtype)
+        schema, cols = RESULT_SCHEMA, WAND_COLS
+    scan = reader.scan_terms(live, cols)
+    if allowed is not None:
+        local_mask = (1 << SEG_SHIFT) - 1
+        allow_df = allowed.select(
+            (F.col("nss_doc_id").bitwiseAND(F.lit(local_mask))).alias("local_id"),
+            F.shiftright("nss_doc_id", SEG_SHIFT).cast("int").alias("segment_id"),
+        )
+
+        def cokernel(post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
+            return kernel(post_pdf, allow_pdf["local_id"].to_numpy(dtype=np.int64))
+
+        return (
+            scan.groupby("segment_id")
+            .cogroup(allow_df.groupby("segment_id"))
+            .applyInPandas(cokernel, schema=schema)
+        )
+    if segment_groups and segment_groups > 0:
+        return scan.groupBy(F.pmod("segment_id", F.lit(segment_groups)).alias("_sg")).applyInPandas(
+            lambda pdf: kernel(pdf.drop(columns=["_sg"], errors="ignore")), schema=schema
+        )
+    # NB: single-arg wrapper — applyInPandas dispatches 2-arg callables
+    # as (key, pdf), which would swallow the allow param
+    return scan.groupBy("segment_id").applyInPandas(lambda pdf: kernel(pdf), schema=schema)
 
 
 def bm25_topk_indexed(
@@ -433,27 +522,23 @@ def bm25_topk_indexed(
     strategy: str = "bulk",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k BM25 via the index: broadcast query stats → per-segment
-    block-max kernel → global TakeOrderedAndProject merge.
+    """Top-k BM25 via the index: the bulk kernel as a batch of one →
+    global TakeOrderedAndProject merge.
 
     ``allowed`` (a frame with an ``nss_doc_id`` column, e.g. docmap
     joined against a filtered attribute table) restricts results to
     those docs without touching the scoring — the reference's
     FILTER-occur semantics (HybridQuery.java:48-59: filters AND-ed into
-    every sub-query, non-scoring). Delivered per-segment via a cogrouped
-    applyInPandas, so each task sees only its segment's slice of the
-    allow-list; global stats (N, avgdl, df) stay UNfiltered, matching
-    Lucene (filters don't alter index statistics)."""
+    every sub-query, non-scoring). Global stats (N, avgdl, df) stay
+    UNfiltered, matching Lucene (filters don't alter index statistics)."""
     terms = sorted(set(terms))
     if mode.startswith("msm:") and strategy != "bulk":
         # WAND's block-max pruning bounds the OR top-k; under an msm
         # cut a pruned range could hide a qualifying lower-scored doc,
         # so minimum_should_match requires the exact bulk decode.
         raise ValueError("minimum_should_match requires strategy='bulk'")
-    per_seg = _per_segment_scores(reader, terms, k, mode, dtype, strategy, allowed)
-    if per_seg is None:
-        empty = reader.spark.createDataFrame([], RESULT_SCHEMA)
-        return _attach_keys(reader, empty, k) if with_keys else empty
+    per_seg = _per_segment_scores(
+        reader, [(terms, mode, k)], dtype, strategy, allowed).drop("query_idx")
     if not with_keys:
         return per_seg.orderBy(F.col("score").desc(), F.col("nss_doc_id").asc()).limit(k)
     # keys must be attached BEFORE the final cut: score ties at the k
@@ -462,77 +547,13 @@ def bm25_topk_indexed(
     return _attach_keys(reader, per_seg, k)
 
 
-def _per_segment_scores(
-    reader: IndexReader,
-    terms: list[str],
-    k: int,
-    mode: str,
-    dtype: str,
-    strategy: str,
-    allowed: DataFrame | None,
-) -> DataFrame | None:
-    """Shared assembly for the per-segment scoring kernels: broadcast
-    query stats → term-bucket-pruned postings scan → per-segment
-    (co)grouped kernel. Returns None when no query term is live (the
-    caller emits its own empty frame)."""
-    N, avgdl = reader.global_stats()
-    dfs = reader.term_dfs(terms)
-    live = [t for t in terms if t in dfs]
-    if not live or N == 0 or len(live) < _min_matched(mode, len(terms)):
-        return None
-
-    ftype = np.float32 if dtype == "float32" else np.float64
-    idf_by_term = {
-        t: float(np.log(ftype(1.0) + (ftype(N) - ftype(dfs[t]) + ftype(0.5)) / (ftype(dfs[t]) + ftype(0.5))).astype(ftype))
-        for t in live
-    }
-    make = _bulk_kernel if strategy == "bulk" else _wand_kernel
-    kernel = make(live, idf_by_term, avgdl, k, int(reader.meta["range_block"]), mode, dtype)
-    scan = reader.postings()
-    n_buckets = int(reader.meta.get("term_buckets", 0))
-    if n_buckets > 1:
-        # partition pruning: only the term_bucket directories that can
-        # contain the query terms are listed/read (PartitionFilters in
-        # the scan node) — per-query I/O ∝ query terms, not index size.
-        from ..pipeline.hashing import py_hash64
-
-        buckets = sorted({py_hash64(t) % n_buckets for t in live})
-        scan = scan.where(F.col("term_bucket").isin(buckets))
-    scan = scan.where(F.col("term").isin(live)).select(
-        *(BULK_COLS if strategy == "bulk" else WAND_COLS)
-    )
-    if allowed is None:
-        # NB: single-arg wrapper — applyInPandas dispatches 2-arg
-        # callables as (key, pdf), which would swallow the allow param
-        per_seg = scan.groupBy("segment_id").applyInPandas(
-            lambda pdf: kernel(pdf), schema=RESULT_SCHEMA
-        )
-    else:
-        local_mask = (1 << SEG_SHIFT) - 1
-        allow_df = allowed.select(
-            (F.col("nss_doc_id").bitwiseAND(F.lit(local_mask))).alias("local_id"),
-            F.shiftright("nss_doc_id", SEG_SHIFT).cast("int").alias("segment_id"),
-        )
-
-        def cokernel(post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
-            allow = allow_pdf["local_id"].to_numpy(dtype=np.int64)
-            return kernel(post_pdf, allow)
-
-        per_seg = (
-            scan.groupby("segment_id")
-            .cogroup(allow_df.groupby("segment_id"))
-            .applyInPandas(cokernel, schema=RESULT_SCHEMA)
-        )
-    return per_seg
-
-
 def match_text_topk(
     reader: IndexReader, query_text: str, k: int = 10, mode: str = "or"
 ) -> DataFrame:
     """``match`` over a RAW query string: analyze the string with the
     INDEX'S OWN tokenizer spec (reader.meta['tokenizer']) — driver-side,
     deterministic, query metadata only — then dispatch the term list to
-    the block-max kernel. This closes the term-list-in vs query-DSL-in
+    the bulk kernel. This closes the term-list-in vs query-DSL-in
     gap: the reference's match runs the field analyzer over the query
     text (Lucene QueryBuilder.createBooleanQuery) before scoring.
     Duplicate analyzed terms dedup (the kernel scores a term set, as
@@ -540,9 +561,6 @@ def match_text_topk(
     from ..functions.tokenize import analyze_query
 
     terms = analyze_query(query_text, reader.meta.get("tokenizer", "simple"))
-    if not terms:
-        empty = reader.spark.createDataFrame([], RESULT_SCHEMA)
-        return _attach_keys(reader, empty, k)
     return bm25_topk_indexed(reader, terms, k=k, mode=mode)
 
 
@@ -552,22 +570,15 @@ def bm25_scores_indexed(reader: IndexReader, terms: list[str], mode: str = "or")
     Feeds consumers that need a sub-query's complete score LIST — e.g.
     hybrid min_max/L2 normalization, which normalizes over the whole
     retrieved list (processor/normalization min_max uses the list's own
-    min/max). The per-segment kernel runs with k = N so its heap never
-    cuts; the docmap key join is a plain equi-join on the uniform
+    min/max). The bulk kernel runs with k = N so its cut never bites;
+    the docmap key join is a plain equi-join on the uniform
     internal id (the matched set is unbounded, so no broadcast hint —
     at 100-TB scale this is one shuffle at match-set cardinality, and a
     production deployment would cap the sub-query at its rescore
     window instead). Returns (<key cols>, score), score unrounded."""
-    terms = sorted(set(terms))
     N, _ = reader.global_stats()
-    per_seg = _per_segment_scores(
-        reader, terms, k=max(N, 1), mode=mode, dtype="float64",
-        strategy="bulk", allowed=None,
-    )
+    per_seg = _per_segment_scores(reader, [(sorted(set(terms)), mode, max(N, 1))])
     key_cols = reader.meta["key_cols"]
-    if per_seg is None:
-        fields = ", ".join(f"{c} long" for c in key_cols)
-        return reader.spark.createDataFrame([], f"{fields}, score double")
     dm = reader.docmap().select("nss_doc_id", *key_cols)
     return dm.join(per_seg.select("nss_doc_id", "score"), "nss_doc_id").select(
         *key_cols, "score"
@@ -586,60 +597,26 @@ def matched_ids_indexed(reader: IndexReader, terms: list[str], mode: str = "or")
     terms = sorted(set(terms))
     dfs = reader.term_dfs(terms)
     live = [t for t in terms if t in dfs]
-    spark = reader.spark
-    out_schema = T.StructType(
-        [
-            T.StructField("segment_id", T.IntegerType(), False),
-            T.StructField("nss_doc_id", T.LongType(), False),
-        ]
-    )
+    out_schema = T.StructType(RESULT_SCHEMA.fields[:2])
     if not live or (mode == "and" and len(live) < len(terms)):
-        return spark.createDataFrame([], out_schema)
+        return reader.spark.createDataFrame([], out_schema).limit(0)
     n_terms = len(live)
     range_block = int(reader.meta["range_block"])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"segment_id": pd.Series(dtype=np.int32),
-                                 "nss_doc_id": pd.Series(dtype=np.int64)})
-        seg = int(pdf["segment_id"].iloc[0])
-        from ..index.builder import decode_term_deltas
-
-        parts = []
-        for r in pdf.itertuples():
-            deltas = decode_term_deltas(
-                r.docs, r.block_ns, r.block_doc_off, int(r.pack_bits), r.exc_pos, r.exc_high
-            )
-            ns = np.asarray(r.block_ns, dtype=np.int64)
-            bids = np.asarray(r.block_ids, dtype=np.int64)
-            starts = np.r_[0, np.cumsum(ns)[:-1]]
-            cs = np.cumsum(deltas)
-            carry = np.repeat(cs[starts] - deltas[starts], ns)
-            parts.append(np.repeat(bids * range_block, ns) + cs - carry)
-        if not parts:
-            return pd.DataFrame({"segment_id": pd.Series(dtype=np.int32),
-                                 "nss_doc_id": pd.Series(dtype=np.int64)})
-        all_ids = np.concatenate(parts)
+        seg = int(pdf["segment_id"].iloc[0]) if len(pdf) else 0
+        all_ids = np.concatenate(
+            [_NO_IDS, *(decode_term_ids(r, range_block) for r in pdf.itertuples())])
         if mode == "and":
             uniq, counts = np.unique(all_ids, return_counts=True)
             ids = uniq[counts == n_terms]
         else:
             ids = np.unique(all_ids)
-        gid = (np.int64(seg) << SEG_SHIFT) + ids
-        return pd.DataFrame(
-            {"segment_id": np.full(len(gid), seg, dtype=np.int32), "nss_doc_id": gid}
-        )
+        return pd.DataFrame({"segment_id": np.full(len(ids), seg, dtype=np.int32),
+                             "nss_doc_id": (np.int64(seg) << SEG_SHIFT) + ids})
 
-    scan = reader.postings()
-    n_buckets = int(reader.meta.get("term_buckets", 0))
-    if n_buckets > 1:
-        from ..pipeline.hashing import py_hash64
-
-        buckets = sorted({py_hash64(t) % n_buckets for t in live})
-        scan = scan.where(F.col("term_bucket").isin(buckets))
     return (
-        scan.where(F.col("term").isin(live))
-        .select(*DECODE_COLS)
+        reader.scan_terms(live, DECODE_COLS)
         .groupBy("segment_id")
         .applyInPandas(kernel, schema=out_schema)
     )
@@ -657,120 +634,6 @@ def _attach_keys(reader: IndexReader, top: DataFrame, k: int) -> DataFrame:
     return out.orderBy(F.col("score").desc(), *[F.col(c).asc() for c in key_cols]).limit(k)
 
 
-# --- multi-query (msearch-style) batch execution -----------------------
-
-MULTI_SCHEMA = T.StructType(
-    [
-        T.StructField("query_idx", T.IntegerType(), False),
-        T.StructField("segment_id", T.IntegerType(), False),
-        T.StructField("nss_doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-        T.StructField("matched_terms", T.IntegerType(), False),
-    ]
-)
-
-
-def _bulk_kernel_multi(
-    query_specs: list[tuple[list[str], str, int]],
-    idf_by_term: dict[str, float],
-    avgdl: float,
-    range_block: int,
-    dtype: str,
-    k1: float = K1,
-    b: float = B,
-):
-    """Per-segment kernel scoring ALL queries of a batch in one postings
-    pass: each term's posting blob decodes ONCE and its per-doc BM25
-    contribution (idf · tf-part — identical whichever query references
-    the term) is cached, then each query accumulates its own terms'
-    contributions in sorted-term order — bit-identical to running the
-    single-query bulk kernel per query, at 1/Q the decode work for
-    shared terms and 1/Q the job-scheduling overhead. The DataFrame
-    analog of the reference's multi-search + HybridQueryScorer
-    sub-query iteration (query/HybridQueryScorer.java:190-208).
-
-    The kernel accepts MULTI-SEGMENT input (rows of several segments in
-    one Arrow batch, grouped by pmod(segment_id, G)) and loops segments
-    internally — fewer, larger Arrow transfers and python-worker
-    dispatches per batch; results are bit-identical to per-segment
-    grouping because every (query, segment) sub-result is computed
-    independently either way."""
-    ft = np.float32 if dtype == "float32" else np.float64
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_idx": pd.Series(dtype=np.int32),
-             "segment_id": pd.Series(dtype=np.int32),
-             "nss_doc_id": pd.Series(dtype=np.int64),
-             "score": pd.Series(dtype=np.float64),
-             "matched_terms": pd.Series(dtype=np.int32)}
-        )
-        if len(pdf) == 0:
-            return empty
-        segs = pdf["segment_id"].unique()
-        if len(segs) > 1:
-            outs = [kernel(sub) for _, sub in pdf.groupby("segment_id", sort=True)]
-            outs = [o for o in outs if len(o)]
-            return pd.concat(outs, ignore_index=True) if outs else empty
-        pdf = pdf.sort_values("term", kind="mergesort").reset_index(drop=True)
-        seg = int(pdf["segment_id"].iloc[0])
-        k1f, bf, av = ft(k1), ft(b), ft(avgdl)
-        from ..index.builder import decode_term_deltas
-
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        size = 0
-        for r in pdf.itertuples():
-            deltas = decode_term_deltas(
-                r.docs, r.block_ns, r.block_doc_off, int(r.pack_bits), r.exc_pos, r.exc_high
-            )
-            ns = np.asarray(r.block_ns, dtype=np.int64)
-            bids = np.asarray(r.block_ids, dtype=np.int64)
-            starts = np.r_[0, np.cumsum(ns)[:-1]]
-            cs = np.cumsum(deltas)
-            carry = np.repeat(cs[starts] - deltas[starts], ns)
-            ids = np.repeat(bids * range_block, ns) + cs - carry
-            tfv = varint_decode(r.tfs).astype(np.float64).astype(ft)
-            dlq = byte4_to_int(np.frombuffer(r.norms, dtype=np.uint8)).astype(ft)
-            idf = ft(idf_by_term[r.term])
-            contrib = idf * (tfv / (tfv + k1f * (ft(1.0) - bf + bf * dlq / av)))
-            decoded[r.term] = (ids, contrib)
-            if len(ids):
-                size = max(size, int(ids[-1]) + 1)
-        if size == 0:
-            return empty
-        frames = []
-        acc = np.zeros(size, dtype=ft)
-        cnt = np.zeros(size, dtype=np.int32)
-        for qi, (terms, mode, k) in enumerate(query_specs):
-            live = [t for t in terms if t in decoded]
-            if not live or (mode == "and" and len(live) < len(terms)):
-                continue
-            acc[:] = 0
-            cnt[:] = 0
-            for t in live:  # sorted-term order → deterministic sums
-                ids, contrib = decoded[t]
-                acc[ids] += contrib
-                cnt[ids] += 1
-            hit = np.flatnonzero(cnt > 0) if mode != "and" else np.flatnonzero(cnt == len(terms))
-            if len(hit) == 0:
-                continue
-            scores = acc[hit].astype(np.float64)
-            if len(hit) > k:
-                sel = np.lexsort((hit, -scores))[:k]
-                hit, scores = hit[sel], scores[sel]
-            gid = (np.int64(seg) << SEG_SHIFT) + hit
-            frames.append(pd.DataFrame(
-                {"query_idx": np.full(len(gid), qi, dtype=np.int32),
-                 "segment_id": np.full(len(gid), seg, dtype=np.int32),
-                 "nss_doc_id": gid,
-                 "score": scores,
-                 "matched_terms": cnt[hit].astype(np.int32)}
-            ))
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    return kernel
-
-
 def bm25_topk_indexed_multi(
     reader: IndexReader,
     queries: list[tuple[list[str], str]],
@@ -779,12 +642,13 @@ def bm25_topk_indexed_multi(
     segment_groups: int | None = None,
 ) -> DataFrame:
     """Execute a BATCH of (terms, mode) queries through the index in
-    one pass: union-of-terms pruned scan → multi-query kernel → one
-    docmap join → per-query top-k cut. 2 Spark jobs for the whole batch
-    instead of ~2 per query — the driver-orchestration floor (the
-    measured ~0.2 s/query serial cost) amortizes across the batch.
-    Results are bit-identical per query to ``bm25_topk_indexed``
-    (asserted in tests). Returns (query_idx, <key_cols>, score, rank).
+    one pass: union-of-terms pruned scan → the bulk kernel over the
+    whole batch → one docmap join → per-query top-k cut. 2 Spark jobs
+    for the whole batch instead of ~2 per query — the
+    driver-orchestration floor (the measured ~0.2 s/query serial cost)
+    amortizes across the batch. Results are bit-identical per query to
+    ``bm25_topk_indexed`` (asserted in tests). Returns (query_idx,
+    <key_cols>, score, rank).
 
     ``segment_groups=G`` coarsens the kernel grouping from one Arrow
     batch per segment to one per pmod(segment_id, G) — G ≈ the core
@@ -793,47 +657,12 @@ def bm25_topk_indexed_multi(
     dispatch overhead (the serving-path scaling residual measured by
     the round-2 control probe). Segments are uniform by construction,
     so the G groups are balanced. None = per-segment (unchanged)."""
-    specs = [(sorted(set(terms)), mode, k) for terms, mode in queries]
-    union_terms = sorted({t for terms, _, _ in specs for t in terms})
-    N, avgdl = reader.global_stats()
-    dfs = reader.term_dfs(union_terms)
-    spark = reader.spark
+    per_seg = _per_segment_scores(
+        reader, [(sorted(set(terms)), mode, k) for terms, mode in queries], dtype,
+        segment_groups=segment_groups)
     key_cols = reader.meta["key_cols"]
-    live_union = [t for t in union_terms if t in dfs]
-    ftype = np.float32 if dtype == "float32" else np.float64
-    idf_by_term = {
-        t: float(np.log(ftype(1.0) + (ftype(N) - ftype(dfs[t]) + ftype(0.5)) / (ftype(dfs[t]) + ftype(0.5))).astype(ftype))
-        for t in live_union
-    }
-    live_specs = [([t for t in terms if t in dfs] if mode != "and" else terms, mode, k)
-                  for terms, mode, k in specs]
-    kernel = _bulk_kernel_multi(
-        live_specs, idf_by_term, avgdl, int(reader.meta["range_block"]), dtype
-    )
-    scan = reader.postings()
-    n_buckets = int(reader.meta.get("term_buckets", 0))
-    if n_buckets > 1:
-        from ..pipeline.hashing import py_hash64
-
-        buckets = sorted({py_hash64(t) % n_buckets for t in live_union})
-        scan = scan.where(F.col("term_bucket").isin(buckets))
-    pruned = scan.where(F.col("term").isin(live_union)).select(*BULK_COLS)
-    if segment_groups and segment_groups > 0:
-        per_seg = (
-            pruned.groupBy(F.pmod("segment_id", F.lit(segment_groups)).alias("_sg"))
-            .applyInPandas(
-                lambda pdf: kernel(pdf.drop(columns=["_sg"], errors="ignore")),
-                schema=MULTI_SCHEMA,
-            )
-        )
-    else:
-        per_seg = pruned.groupBy("segment_id").applyInPandas(
-            lambda pdf: kernel(pdf), schema=MULTI_SCHEMA
-        )
     dm = reader.docmap().select("nss_doc_id", *key_cols)
     joined = dm.join(F.broadcast(per_seg), "nss_doc_id")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_idx").orderBy(
         F.col("score").desc(), *[F.col(c).asc() for c in key_cols]
     )

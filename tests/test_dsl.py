@@ -1763,3 +1763,36 @@ def test_exhaustive_terms_use_context_analyzer(code_docs, code_reader):
     exp = {r["doc_id"] for q in ("value_2", "emit_v3") for r in search(
         indexed, {"query": {"match": {"text": q}}, "size": 10}).collect()}
     assert got == exp and len(exp) == 6
+
+
+def test_exhaustive_multiterm_uses_context_analyzer(code_docs, code_reader):
+    """A `code` context expands and scores prefix, wildcard and
+    match_phrase_prefix over the `code` token stream on the exhaustive
+    path, so they answer as the index does."""
+    exhaustive = SearchContext(docs=code_docs, analyzer="code")
+    indexed = SearchContext(docs=code_docs, reader=code_reader, analyzer="code")
+    for q, n in [({"prefix": {"text": "parse_js"}}, 6),
+                 ({"wildcard": {"text": "emit_v*"}}, 6),
+                 ({"match_phrase_prefix": {"text": "parse_json2 emit_v"}}, 3)]:
+        body = {"query": q, "size": 10}
+        got = _rows(search(exhaustive, body))
+        assert len(got) == n and got == _rows(search(indexed, body)), q
+
+
+def test_indexed_span_term_uses_index_analyzer(code_docs, code_reader):
+    """Under a context analyzer that differs from the index's, the
+    indexed span_term accepts exactly the values the index analyzer
+    keeps as one token, as intervals (which analyze with the index's
+    analyzer) do, and matches the same docs."""
+    from neural_search_spark.functions.tokenize import analyze_query
+
+    ctx = SearchContext(docs=code_docs, reader=code_reader, analyzer="simple")
+    for v in ["parse_json2", "value_2", "parse", "Parse_JSON2", "parse json2"]:
+        span = {"query": {"span_term": {"text": v}}, "size": 10}
+        if analyze_query(v, "code") != [v]:
+            with pytest.raises(DslError):
+                search(ctx, span).collect()
+            continue
+        iv = {"query": {"intervals": {"text": {"match": {"query": v}}}}, "size": 10}
+        got = {r["doc_id"] for r in search(ctx, span).collect()}
+        assert got and got == {r["doc_id"] for r in search(ctx, iv).collect()}, v

@@ -209,3 +209,38 @@ def test_indexed_sparse_two_phase_equals_single(spark, doc_index):
         (r.doc_id, round(r.score, 9)) for r in one
     ]
     assert len(two) == 10
+
+
+def test_bulk_kernel_in_process_equals_spark_path(spark, code_index):
+    """The one bulk kernel is a pure function of (postings rows, query
+    specs, statistics): run in-process over one segment's postings rows
+    read with pyarrow, an OR, AND and msm:2 batch returns that segment's
+    rows of the Spark path bit for bit."""
+    import pyarrow.dataset as ds
+
+    from neural_search_spark.query.bm25 import idf_by_term
+    from neural_search_spark.query.wand import (
+        BULK_COLS,
+        _bulk_kernel_multi,
+        _min_matched,
+        _per_segment_scores,
+    )
+
+    queries = [(["def", "import", "return"], "or", 10), (["def", "import"], "and", 10),
+               (["def", "import", "return"], "msm:2", 25)]
+    terms = sorted({t for q, _, _ in queries for t in q})
+    N, avgdl = code_index.global_stats()
+    kernel = _bulk_kernel_multi(
+        [(q, _min_matched(m, len(q)), k) for q, m, k in queries],
+        idf_by_term(N, code_index.term_dfs(terms), terms), avgdl,
+        int(code_index.meta["range_block"]), "float64")
+    by_spark = _per_segment_scores(code_index, queries).toPandas()
+    key = ["query_idx", "nss_doc_id"]
+    for seg in (0, 3):
+        rows = code_index._dataset("postings").to_table(
+            columns=BULK_COLS,
+            filter=(ds.field("segment_id") == seg) & ds.field("term").isin(terms)).to_pandas()
+        got = kernel(rows).sort_values(key).reset_index(drop=True)
+        exp = by_spark[by_spark["segment_id"] == seg].sort_values(key).reset_index(drop=True)
+        assert set(got["query_idx"]) == {0, 1, 2}
+        pd.testing.assert_frame_equal(got, exp, check_exact=True)

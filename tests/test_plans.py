@@ -164,3 +164,32 @@ def test_warm_indexed_match_job_bound(spark, documents, stats_index):
     jobs = spark_job_count(spark, lambda: rows.extend(search(ctx, body).collect()))
     assert jobs <= WARM_MATCH_JOBS, jobs
     assert rows == search(SearchContext(docs=documents), body).collect()
+
+
+def test_empty_indexed_answer_runs_no_job(spark, documents, tmp_path_factory):
+    """An indexed `match` with no live term (OR or AND) and a
+    `match_phrase` with a term absent from the index answer from a plan
+    the optimizer proves empty: 0 Spark jobs, the usual columns."""
+    from tests.conftest import spark_job_count
+
+    from neural_search_spark.index.builder import build_index
+    from neural_search_spark.query.dsl import SearchContext, search
+    from neural_search_spark.query.wand import IndexReader, bm25_topk_indexed
+
+    d = str(tmp_path_factory.mktemp("empty_answer_idx"))
+    build_index(spark, documents, d, key_cols=["doc_id"], text_col="text",
+                tokenizer="simple", num_segments=2, range_block=64,
+                store_positions=True)
+    reader = IndexReader(spark, d)
+    ctx = SearchContext(docs=documents, reader=reader)
+    warm = {"query": {"match_phrase": {"text": "spark window"}}, "size": 10}
+    search(ctx, warm).collect()
+    for q in [{"match": {"text": "zzabsent qqabsent"}},
+              {"match": {"text": {"query": "spark zzabsent", "operator": "and"}}},
+              {"match_phrase": {"text": "spark zzabsent"}}]:
+        body = {"query": q, "size": 10}
+        rows = []
+        jobs = spark_job_count(spark, lambda: rows.extend(search(ctx, body).collect()))
+        assert jobs == 0 and rows == [], (q, jobs)
+    assert (bm25_topk_indexed(reader, ["zzabsent"]).schema
+            == bm25_topk_indexed(reader, ["spark"]).schema)
