@@ -591,8 +591,9 @@ def build_index(
         )
         .join(dm_read.groupBy("segment_id").agg(F.count(F.lit(1)).alias("docs_tokenized")), "segment_id", "outer")
         .na.fill(0)
-        .withColumn("build_id", F.lit(build_id or f"build-{int(t0)}"))
-        .withColumn("built_at_unix", F.lit(int(t0)))
+        # no wall-clock value in any parquet file: identical builds write
+        # identical bytes (the build time lives in index_meta.json)
+        .withColumn("build_id", F.lit(build_id or "build"))
         .withColumn("tokenizer", F.lit(tokenizer))
         .withColumn("range_block", F.lit(range_block))
     )
@@ -611,6 +612,7 @@ def build_index(
         "text_col": text_col,
         "seg_shift": SEG_SHIFT,
         "store_positions": store_positions,
+        "built_at_unix": int(t0),
     }
     with open(p["meta"], "w") as fh:
         json.dump(meta, fh)

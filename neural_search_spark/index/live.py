@@ -63,6 +63,7 @@ def append_segment(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
     meta["num_segments"] = max(int(meta["num_segments"]), segment_id + 1)
+    meta["appended_at_unix"] = int(time.time())
     with open(p["meta"], "w") as fh:
         json.dump(meta, fh)
 
@@ -114,7 +115,6 @@ def _append_segment_writes(spark, with_seg, meta, p, segment_id, key_cols, text_
         )
         .na.fill(0)
         .withColumn("build_id", F.lit(f"stream-seg-{segment_id}"))
-        .withColumn("built_at_unix", F.lit(int(time.time())))
         .withColumn("tokenizer", F.lit(meta["tokenizer"]))
         .withColumn("range_block", F.lit(int(meta["range_block"])))
     )
@@ -129,7 +129,10 @@ def _append_segment_writes(spark, with_seg, meta, p, segment_id, key_cols, text_
     # old or the new manifest readable and the retried micro-batch
     # (exactly-once contract, tests/test_streaming.py) can proceed.
     man_path = p["manifest"]
-    old = spark.read.parquet(man_path).where(F.col("segment_id") != segment_id)
+    # an older manifest's built_at_unix wall clock (now kept in
+    # index_meta.json) is dropped on its next append
+    old = (spark.read.parquet(man_path).where(F.col("segment_id") != segment_id)
+           .drop("built_at_unix"))
     merged = old.unionByName(seg_stats.select(*old.columns))
     tmp = man_path + f"_tmp_{segment_id}"
     merged.write.mode("overwrite").parquet(tmp)

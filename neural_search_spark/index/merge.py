@@ -149,8 +149,7 @@ def merge_segments(
         )
         .join(layout, "segment_id", "left")
         .na.fill(0, ["blocks", "bytes_compressed", "bytes_positions"])
-        .withColumn("build_id", F.lit(f"merge-{int(t0)}"))
-        .withColumn("built_at_unix", F.lit(int(t0)))
+        .withColumn("build_id", F.lit("merge"))
         .withColumn("tokenizer", F.lit(meta["tokenizer"]))
         .withColumn("range_block", F.lit(range_block))
     )
@@ -158,6 +157,7 @@ def merge_segments(
 
     new_meta = dict(meta)
     new_meta["num_segments"] = (int(meta["num_segments"]) + factor - 1) // factor
+    new_meta["built_at_unix"] = int(t0)
     os.makedirs(out_dir, exist_ok=True)
     with open(p_out["meta"], "w") as fh:
         json.dump(new_meta, fh)

@@ -1669,11 +1669,15 @@ def _ranked(df: DataFrame, id_col: str) -> DataFrame:
     """(doc_id, score, rank) with the engine's standard tiebreak —
     identical shaping to the exhaustive topk() output. The index's key
     column ``id_col`` becomes the output ``doc_id`` (a no-op for
-    kernels that already name it so)."""
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    kernels that already name it so). A cut that carries its own
+    ``rank`` (the indexed top-k answers) keeps it: re-ranking a
+    driver-served local frame would cost a Window's two Spark jobs."""
+    if "rank" in df.columns:
+        rank = F.col("rank")
+    else:
+        rank = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
     return df.withColumnRenamed(id_col, "doc_id").select(
-        "doc_id", F.round("score", 4).alias("score"),
-        F.row_number().over(w).cast("int").alias("rank"),
+        "doc_id", F.round("score", 4).alias("score"), rank.cast("int").alias("rank"),
     )
 
 
@@ -3066,9 +3070,10 @@ def msearch(ctx: SearchContext, bodies: list[dict]) -> DataFrame:
     """Batch API (the reference's ``_msearch``): a list of search
     bodies executed together. With ``ctx.reader``, the plain match
     bodies of the batch compile into ONE multi-query kernel pass + ONE
-    docmap join per shared size (``bm25_topk_indexed_multi`` — 2 Spark
-    jobs for the whole group, bit-identical per query to individual
-    execution); every other hit-returning body (match_phrase, bool,
+    key lookup per shared size (``bm25_topk_indexed_multi`` — one
+    local frame and 0 Spark jobs for a group under the driver
+    executor's postings bound, 2 jobs above it; bit-identical per query
+    to individual execution); every other hit-returning body (match_phrase, bool,
     dis_max, prefix/wildcard/fuzzy, nested, the constant-score leaf
     family, ...) dispatches through ``search()`` — its own indexed
     branches included — with the body's batch position tagged. Bodies

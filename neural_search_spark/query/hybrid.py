@@ -55,6 +55,17 @@ MIN_SCORE = 0.001
 SINGLE_RESULT_SCORE = 1.0
 
 
+def _n_subqueries(tagged: DataFrame, weights: list[float] | None,
+                  n_subqueries: int | None) -> int:
+    """The sub-query count: given, else one per weight, else counted
+    from the frame (the only case that runs a Spark job)."""
+    if n_subqueries is not None:
+        return n_subqueries
+    if weights is not None:
+        return len(weights)
+    return tagged.agg(F.max("subquery_idx")).collect()[0][0] + 1
+
+
 def normalize(scores: DataFrame, technique: str = "min_max") -> DataFrame:
     """Add ``nscore`` per (subquery_idx, doc_id); stats are global per
     sub-query (broadcast-joined back — tiny: one row per sub-query)."""
@@ -105,8 +116,7 @@ def rrf_combine(
     sensitivity beyond the final bounded sum)."""
     from pyspark.sql import Window
 
-    if n_subqueries is None:
-        n_subqueries = tagged.agg(F.max("subquery_idx")).collect()[0][0] + 1
+    n_subqueries = _n_subqueries(tagged, weights, n_subqueries)
     w = weights if weights is not None else [1.0] * n_subqueries
     wmap = F.element_at(
         F.array(*[F.lit(float(x)) for x in w]), F.col("subquery_idx").cast("int") + 1
@@ -132,8 +142,7 @@ def combine(
     ``keep_negative`` retains nscore<0 rows in the arithmetic mean —
     required for z_score normalization, whose negative values are real
     scores, not the reference's -1 missing-slot marker."""
-    if n_subqueries is None:
-        n_subqueries = normalized.agg(F.max("subquery_idx")).collect()[0][0] + 1
+    n_subqueries = _n_subqueries(normalized, weights, n_subqueries)
     w = weights if weights is not None else [1.0] * n_subqueries
     wmap = F.element_at(
         F.array(*[F.lit(float(x)) for x in w]), F.col("subquery_idx").cast("int") + 1
@@ -174,8 +183,7 @@ def explain_scores(
     Columns: doc_id, subquery_idx, raw_score, norm_score, weight,
     combined_score. Scale shape: two broadcast joins (per-sub-query
     stats, per-doc combined) over the retained-hits frame."""
-    if n_subqueries is None:
-        n_subqueries = tagged.agg(F.max("subquery_idx")).collect()[0][0] + 1
+    n_subqueries = _n_subqueries(tagged, weights, n_subqueries)
     w = weights if weights is not None else [1.0] * n_subqueries
     normed = normalize(tagged, normalization)
     combined = combine(

@@ -23,6 +23,14 @@ segmented index (index/builder.py v4 format):
   exhaustive ``bm25_phrase`` (query/exhaustive.py) computes, so the two
   paths are score- and rank-identical (pinned in tests/test_round3.py).
 
+Executors (query/wand.py's rule, ``wand.on_driver``): when the phrase's
+unique terms hold at most ``wand.DRIVER_MAX_POSTINGS`` postings, in at
+most ``wand.DRIVER_MAX_READ_BYTES`` postings file bytes, the kernel
+runs segment by segment in the calling process over the reader's
+pyarrow snapshot (``IndexReader.read_terms``) and the answer is a
+local frame (0 Spark jobs); above either, it runs per segment in
+``applyInPandas`` with a broadcast docmap join. Same kernel, same rows.
+
 Scale shape: the only shuffle key is segment_id (uniform); per-query
 I/O is the phrase terms' postings rows (term/bucket-pruned scan) and
 the candidate blocks' position bytes; per-segment output is the
@@ -42,7 +50,7 @@ from ..functions.codecs import varint_decode
 from ..functions.norms import byte4_to_int
 from ..index.builder import SEG_SHIFT, decode_term_ids
 from .bm25 import B, K1, idf_by_term, tf_norm
-from .wand import BULK_COLS, IndexReader
+from .wand import BULK_COLS, IndexReader, _driver_answer, _spark_cut, on_driver
 
 PHRASE_COLS = [*BULK_COLS, "block_pos_off", "positions"]
 
@@ -227,7 +235,8 @@ def bm25_phrase_indexed(
     budget restricted to in-order matches), BM25-scored over the
     phrase's unique terms (global, unfiltered stats — Lucene
     semantics). Returns (nss_doc_id, <key_cols>, score);
-    ``k`` adds a deterministic top-k cut (score desc, key asc)."""
+    ``k`` adds a deterministic top-k cut (score desc, key asc) and its
+    1-based ``rank`` column."""
     if slop < 0:
         raise ValueError(f"slop must be >= 0, got {slop}")
     if not bool(reader.meta.get("store_positions", False)):
@@ -249,6 +258,12 @@ def bm25_phrase_indexed(
             list(phrase_terms), idf_by_term(N, dfs, uniq, ftype), avgdl,
             int(reader.meta["range_block"]), dtype, slop=slop,
         )
+        if on_driver(reader, dfs, uniq):
+            rows = reader.read_terms(uniq, PHRASE_COLS)
+            hits = pd.concat([kernel(seg) for _, seg in rows.groupby("segment_id", sort=True)],
+                             ignore_index=True)
+            cols = ["nss_doc_id", *key_cols, "score", *(["rank"] if k is not None else [])]
+            return _driver_answer(reader, hits, cols, k)
         per_seg = (
             reader.scan_terms(uniq, PHRASE_COLS, positional=True)
             .groupBy("segment_id")
@@ -257,5 +272,5 @@ def bm25_phrase_indexed(
     dm = reader.docmap().select("nss_doc_id", *key_cols)
     out = dm.join(F.broadcast(per_seg.drop("segment_id")), "nss_doc_id")
     if k is not None:
-        out = out.orderBy(F.col("score").desc(), *[F.col(c).asc() for c in key_cols]).limit(k)
+        out = _spark_cut(out, key_cols, k)
     return out

@@ -2,22 +2,39 @@
 
 Every BM25 top-k over the index — single search, filtered search,
 hybrid sub-query score lists and msearch batches — is the same three
-steps, written once (``_per_segment_scores``):
+steps, written once:
 
 * query statistics (N, avgdl, df → idf) come from the index files on
   the driver (``IndexReader.global_stats`` / ``term_dfs``), no Spark job;
 * the query terms' postings rows are read by ONE term scan
-  (``IndexReader.scan_terms``: term-bucket partition pruning, then
-  ``term IN (...)``, then the kernel's columns);
+  (term-bucket partition pruning, then ``term IN (...)``, then the
+  kernel's columns);
 * per segment, ONE bulk kernel (``_bulk_kernel_multi``) decodes each
   term's postings once and scores a batch of queries — a single search
   is a batch of one. It is a pure pandas/numpy function of (postings
-  rows, query specs, statistics), so it runs the same inside
-  ``applyInPandas`` and in-process. Per-segment top-k partial results
-  are tiny (k rows/segment); the global merge is
-  orderBy(score desc, key asc).limit(k) — TakeOrderedAndProject, no
-  wide shuffle. Mirrors HybridTopScoreDocCollector (one bounded heap per
-  scorer) + TopDocsMerger (reference search/collector, search/query).
+  rows, query specs, statistics). Per-segment top-k partial results
+  are tiny (k rows/segment); the global merge is the cut on
+  (score desc, key asc). Mirrors HybridTopScoreDocCollector (one
+  bounded heap per scorer) + TopDocsMerger (reference search/collector,
+  search/query).
+
+Two executors run those steps, chosen per query by one rule
+(``on_driver``): when the query's live terms hold at most
+``DRIVER_MAX_POSTINGS`` postings (Σ df) and the postings files their
+read opens hold at most ``DRIVER_MAX_READ_BYTES`` bytes, the driver
+executor scores it in the calling process, as Lucene scores a query
+over its segments in-process: the scan is ``IndexReader.read_terms``
+over the reader's pyarrow snapshot, the kernel runs per segment, the
+keys come from the docmap snapshot filtered to the hits, the cut and
+``rank`` are pandas, and the answer is a local Spark frame (a
+LocalRelation: collecting it, or a projection, filter or limit over
+it, runs 0 Spark jobs). Above either bound — and whenever the call carries an ``allowed`` frame or
+``strategy="wand"`` — the Spark executor runs: ``IndexReader.scan_terms``
+→ (co)grouped ``applyInPandas`` kernel → broadcast docmap join →
+orderBy(score desc, key asc).limit(k), TakeOrderedAndProject, no wide
+shuffle (``_per_segment_scores``). It is the path that scales; both
+return the same rows, columns and types. Keyed top-k answers carry
+their 1-based ``rank`` under both, so callers never re-rank.
 
 Production runs the bulk decode. ``strategy="wand"`` selects the
 block-max kernel (``_wand_kernel``), the role of the reference's
@@ -49,6 +66,30 @@ from ..functions.norms import byte4_to_int
 from ..index.builder import SEG_SHIFT, _term_buckets_of, decode_term_ids, paths
 from .bm25 import B, K1, idf_by_term, tf_norm
 
+# The executor rule's two bounds (``on_driver``), both measured on a
+# 4-core box (local[4]) over a 200k-doc / 8-segment index and the
+# 1.2M-doc / 256-segment scaling corpus (BENCH/driver_threshold.json,
+# scripts/driver_threshold.py). A query (or msearch batch) is scored on
+# the driver when both hold:
+# * its live terms hold at most DRIVER_MAX_POSTINGS postings (Σ df): the
+#   largest Σ df below which the driver's median beat Spark's in every
+#   one-client case (ORs, phrases, 256-body msearch). The first loss is
+#   a head-term phrase at Σ df 396,616, whose position decode is
+#   single-threaded here and 4-way on Spark. This is a latency bound:
+#   under 8 and 32 concurrent clients on the 200k-doc index the driver
+#   served 17% fewer to 41% more requests per second than Spark, about
+#   the spread of a repeated run (up to 20%).
+# * the postings files its terms' read opens hold at most
+#   DRIVER_MAX_READ_BYTES bytes: the 200k-doc index's postings. Each
+#   segment file is one row group, so every driver read decodes whole
+#   files' columns, a cost that grows with the index, not with Σ df,
+#   while a hot Spark reader scans its in-memory copy. On the 1.2M-doc
+#   index (1,177,726,670 B) the driver still won one client at a time,
+#   but under 8 and 32 clients it served 26–60% fewer requests per
+#   second than Spark, so an index of that size goes to Spark.
+DRIVER_MAX_POSTINGS = 296_704
+DRIVER_MAX_READ_BYTES = 179_339_520
+
 # column sets per kernel — pruning the applyInPandas input to what the
 # kernel touches shrinks the JVM→python Arrow transfer (ReadSchema
 # minimality: the block-max metadata only feeds the WAND kernel; the
@@ -69,6 +110,7 @@ RESULT_SCHEMA = T.StructType(
 MULTI_SCHEMA = T.StructType(
     [T.StructField("query_idx", T.IntegerType(), False), *RESULT_SCHEMA.fields]
 )
+RANK_FIELD = T.StructField("rank", T.IntegerType(), False)
 
 
 class IndexReader:
@@ -87,6 +129,14 @@ class IndexReader:
     term dictionaries in-process. Each table's ``pyarrow.dataset`` is listed
     once per reader, like the memoized frames, so a reader keeps one
     file snapshot for its statistics across later appends.
+
+    Which executor serves a query (module docstring): at most
+    ``DRIVER_MAX_POSTINGS`` postings in at most ``DRIVER_MAX_READ_BYTES``
+    file bytes (``read_bytes``) → the driver, whose scan (``read_terms``)
+    and key lookup read that same pyarrow snapshot, so statistics,
+    postings and keys always come from one set of files; above either →
+    Spark (``scan_terms``, ``docmap``). ``cache_hot`` serves only the
+    Spark executor.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str, cache_hot: bool = False):
@@ -101,6 +151,7 @@ class IndexReader:
         self._docmap: DataFrame | None = None
         self._dfs: dict[str, int] | None = None
         self._arrow: dict[str, ds.Dataset] = {}
+        self._file_bytes: dict[str, int] | None = None
         self.cache_hot = cache_hot
 
     def postings(self) -> DataFrame:
@@ -163,6 +214,38 @@ class IndexReader:
             scan = scan.where(F.col("term_bucket").isin(buckets))
         return scan.where(F.col("term").isin(list(terms))).select(*cols)
 
+    def _terms_filter(self, terms: list[str]) -> ds.Expression:
+        """pyarrow filter of ``terms``' postings rows: their bucket
+        directories (as ``scan_terms``), then ``term IN``. ``terms``
+        must be non-empty (``isin([])`` raises in pyarrow)."""
+        cond = ds.field("term").isin(list(terms))
+        buckets = self._term_buckets(terms)
+        if buckets is not None:
+            cond = ds.field("term_bucket").isin(buckets) & cond
+        return cond
+
+    def read_terms(self, terms: list[str], cols: list[str]) -> pd.DataFrame:
+        """The driver executor's term scan: the rows ``scan_terms``
+        returns, read in-process with pyarrow from this reader's file
+        snapshot. ``terms`` must be non-empty."""
+        return self._dataset("postings").to_table(
+            columns=cols, filter=self._terms_filter(terms)).to_pandas()
+
+    def read_bytes(self, terms: list[str]) -> int:
+        """Bytes of the postings files a read of ``terms`` opens: every
+        file in their term-bucket directories (all files on an
+        unbucketed index). Sizes come from this reader's snapshot
+        listing, once per reader; no file is opened."""
+        dset = self._dataset("postings")
+        if self._file_bytes is None:
+            infos = dset.filesystem.get_file_info(dset.files)
+            self._file_bytes = {i.path: i.size for i in infos}
+        buckets = self._term_buckets(terms)
+        if buckets is None:
+            return sum(self._file_bytes.values())
+        frags = dset.get_fragments(filter=ds.field("term_bucket").isin(buckets))
+        return sum(self._file_bytes[f.path] for f in frags)
+
     def global_stats(self) -> tuple[int, float]:
         """(N, avgdl): the manifest's per-segment ``docs_tokenized`` and
         ``total_tokens`` summed in-process (one row per segment)."""
@@ -192,11 +275,8 @@ class IndexReader:
             self._dfs = {}
         missing = sorted(t for t in set(terms) if t not in self._dfs)
         if missing:
-            cond = ds.field("term").isin(missing)
-            buckets = self._term_buckets(missing)
-            if buckets is not None:
-                cond = ds.field("term_bucket").isin(buckets) & cond
-            rows = self._dataset("postings").to_table(columns=["term", "n"], filter=cond)
+            rows = self._dataset("postings").to_table(
+                columns=["term", "n"], filter=self._terms_filter(missing))
             sums = rows.group_by("term").aggregate([("n", "sum")])
             found = dict(zip(sums["term"].to_pylist(), sums["n_sum"].to_pylist()))
             for t in missing:
@@ -448,6 +528,48 @@ def _bulk_kernel_multi(
     return kernel
 
 
+def _batch_plan(reader: IndexReader, queries: list[tuple[list[str], str, int]],
+                dtype: str):
+    """Driver-side statistics of a batch of (sorted unique terms, mode,
+    k) queries: (live terms, kernel specs, idf per live term, avgdl,
+    df per live term), or None when no query can match (no live term,
+    or fewer live terms than a query needs)."""
+    N, avgdl = reader.global_stats()
+    union = sorted({t for terms, _, _ in queries for t in terms})
+    dfs = reader.term_dfs(union)
+    live = [t for t in union if t in dfs]
+    specs = [(terms, _min_matched(mode, len(terms)), k) for terms, mode, k in queries]
+    n_live = [sum(t in dfs for t in terms) for terms, _, _ in queries]
+    if N == 0 or not any(n and n >= m for n, (_, m, _) in zip(n_live, specs)):
+        return None
+    ftype = np.float32 if dtype == "float32" else np.float64
+    return live, specs, idf_by_term(N, dfs, live, ftype), avgdl, dfs
+
+
+def on_driver(reader: IndexReader, dfs: dict[str, int], terms: list[str]) -> bool:
+    """The executor rule: a query whose ``terms`` hold at most
+    ``DRIVER_MAX_POSTINGS`` postings (Σ df), in postings files of at
+    most ``DRIVER_MAX_READ_BYTES`` bytes, is scored on the driver."""
+    return (sum(dfs.get(t, 0) for t in terms) <= DRIVER_MAX_POSTINGS
+            and reader.read_bytes(terms) <= DRIVER_MAX_READ_BYTES)
+
+
+def _driver_scores(reader: IndexReader, queries: list[tuple[list[str], str, int]],
+                   dtype: str = "float64") -> pd.DataFrame | None:
+    """The driver executor's kernel rows (MULTI_SCHEMA columns) of a
+    batch: ``read_terms`` over the batch's live terms, then the bulk
+    kernel segment by segment — or None when ``on_driver`` sends the
+    batch to the Spark executor."""
+    plan = _batch_plan(reader, queries, dtype)
+    if plan is None:
+        return _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS, _NO_IDS)
+    live, specs, idf, avgdl, dfs = plan
+    if not on_driver(reader, dfs, live):
+        return None
+    kernel = _bulk_kernel_multi(specs, idf, avgdl, int(reader.meta["range_block"]), dtype)
+    return kernel(reader.read_terms(live, BULK_COLS))
+
+
 def _per_segment_scores(
     reader: IndexReader,
     queries: list[tuple[list[str], str, int]],
@@ -456,29 +578,22 @@ def _per_segment_scores(
     allowed: DataFrame | None = None,
     segment_groups: int | None = None,
 ) -> DataFrame:
-    """Shared assembly of every BM25 top-k over the index: query
-    statistics on the driver → one term scan → per-segment (co)grouped
-    kernel. ``queries`` are (sorted unique terms, mode, k); rows come
-    out as MULTI_SCHEMA (RESULT_SCHEMA under the single-query WAND
-    kernel — callers drop ``query_idx`` either way). When no query can
-    match (no live term, or fewer live terms than a query needs), the
-    frame is one the optimizer proves empty, so it costs no Spark job.
+    """The Spark executor's kernel rows of a batch: query statistics on
+    the driver → one term scan → per-segment (co)grouped kernel.
+    ``queries`` are (sorted unique terms, mode, k); rows come out as
+    MULTI_SCHEMA (RESULT_SCHEMA under the single-query WAND kernel —
+    callers drop ``query_idx`` either way). When no query can match,
+    the frame is one the optimizer proves empty, so it costs no Spark
+    job.
 
     ``allowed`` (a frame with an ``nss_doc_id`` column) is delivered per
     segment through a cogrouped applyInPandas, so each task sees only
     its segment's slice of the allow-list. ``segment_groups=G`` groups
     the kernel input by pmod(segment_id, G) instead of by segment."""
-    N, avgdl = reader.global_stats()
-    union = sorted({t for terms, _, _ in queries for t in terms})
-    dfs = reader.term_dfs(union)
-    live = [t for t in union if t in dfs]
-    specs = [(terms, _min_matched(mode, len(terms)), k) for terms, mode, k in queries]
-    n_live = [sum(t in dfs for t in terms) for terms, _, _ in queries]
-    if N == 0 or not any(n and n >= m for n, (_, m, _) in zip(n_live, specs)):
+    plan = _batch_plan(reader, queries, dtype)
+    if plan is None:
         return reader.spark.createDataFrame([], MULTI_SCHEMA).limit(0)
-
-    ftype = np.float32 if dtype == "float32" else np.float64
-    idf = idf_by_term(N, dfs, live, ftype)
+    live, specs, idf, avgdl, _ = plan
     range_block = int(reader.meta["range_block"])
     if strategy == "bulk":
         kernel = _bulk_kernel_multi(specs, idf, avgdl, range_block, dtype)
@@ -512,6 +627,67 @@ def _per_segment_scores(
     return scan.groupBy("segment_id").applyInPandas(lambda pdf: kernel(pdf), schema=schema)
 
 
+def _with_keys(reader: IndexReader, hits: pd.DataFrame) -> pd.DataFrame:
+    """The driver executor's key lookup: ``hits`` (an ``nss_doc_id``
+    column) inner-joined to their docmap rows, read from the reader's
+    docmap snapshot — only the hits' segment directories, filtered to
+    the hits' ids."""
+    key_cols = reader.meta["key_cols"]
+    if len(hits) == 0:
+        return hits.assign(**{c: pd.Series(dtype=object) for c in key_cols})
+    ids = hits["nss_doc_id"].unique()
+    segs = np.unique(ids >> SEG_SHIFT).tolist()
+    cond = ds.field("segment_id").isin(segs) & ds.field("nss_doc_id").isin(ids)
+    dm = reader._dataset("docmap").to_table(
+        columns=["nss_doc_id", *key_cols], filter=cond).to_pandas()
+    return dm.merge(hits, on="nss_doc_id")
+
+
+def _cut(hits: pd.DataFrame, keys: list[str], k: int) -> pd.DataFrame:
+    """The final cut in pandas: per ``query_idx`` (when present), the k
+    best rows under (score desc, ``keys`` asc) with their 1-based
+    ``rank`` — the order of the Spark executor's orderBy/row_number
+    (strings compare by code point, as UTF-8 bytes do; nulls first)."""
+    by = [c for c in ("query_idx",) if c in hits]
+    out = hits.sort_values([*by, "score", *keys],
+                           ascending=[True] * len(by) + [False] + [True] * len(keys),
+                           kind="mergesort", na_position="first")
+    rank = (out.groupby(by).cumcount() + 1 if by
+            else pd.Series(np.arange(1, len(out) + 1), index=out.index))
+    out = out.assign(rank=rank.to_numpy(dtype=np.int32))
+    return out[out["rank"] <= k]
+
+
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
+    """A driver-served answer as a Spark frame with ``schema``: a
+    LocalRelation. An empty answer is the plan the optimizer proves
+    empty instead — an empty pandas frame would plan as an RDD scan and
+    cost a job."""
+    if len(pdf) == 0:
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame(pdf[schema.names], schema)
+
+
+def _driver_answer(reader: IndexReader, hits: pd.DataFrame, cols: list[str],
+                   k: int | None = None) -> DataFrame:
+    """The driver executor's answer: kernel ``hits`` with their docmap
+    keys (when ``cols`` names a key column), cut to the k best per query
+    with their ``rank`` (when ``k`` is given), as a local frame of
+    ``cols`` typed as the Spark executor's answer — keyed columns as
+    Spark reads them from the docmap, the rest as the kernel's."""
+    key_cols = reader.meta["key_cols"]
+    keyed = any(c in key_cols for c in cols)
+    if keyed:
+        hits = _with_keys(reader, hits)
+    if k is not None:
+        hits = _cut(hits, key_cols if keyed else ["nss_doc_id"], k)
+    fields = {f.name: f for f in (*MULTI_SCHEMA.fields, RANK_FIELD)}
+    if keyed:
+        dm = reader.docmap().schema
+        fields.update((c, dm[c]) for c in ("nss_doc_id", *key_cols))
+    return _local_frame(reader.spark, hits, T.StructType([fields[c] for c in cols]))
+
+
 def bm25_topk_indexed(
     reader: IndexReader,
     terms: list[str],
@@ -523,7 +699,10 @@ def bm25_topk_indexed(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 via the index: the bulk kernel as a batch of one →
-    global TakeOrderedAndProject merge.
+    the global cut on (score desc, key asc). With keys the answer is
+    (nss_doc_id, <key cols>, segment_id, score, matched_terms, rank);
+    ``with_keys=False`` gives the kernel's columns ordered by
+    (score desc, nss_doc_id asc).
 
     ``allowed`` (a frame with an ``nss_doc_id`` column, e.g. docmap
     joined against a filtered attribute table) restricts results to
@@ -537,8 +716,14 @@ def bm25_topk_indexed(
         # cut a pruned range could hide a qualifying lower-scored doc,
         # so minimum_should_match requires the exact bulk decode.
         raise ValueError("minimum_should_match requires strategy='bulk'")
-    per_seg = _per_segment_scores(
-        reader, [(terms, mode, k)], dtype, strategy, allowed).drop("query_idx")
+    queries = [(terms, mode, k)]
+    hits = (_driver_scores(reader, queries, dtype)
+            if strategy == "bulk" and allowed is None else None)
+    if hits is not None:
+        cols = (["nss_doc_id", *reader.meta["key_cols"], "segment_id", "score",
+                 "matched_terms", "rank"] if with_keys else RESULT_SCHEMA.names)
+        return _driver_answer(reader, hits, cols, k)
+    per_seg = _per_segment_scores(reader, queries, dtype, strategy, allowed).drop("query_idx")
     if not with_keys:
         return per_seg.orderBy(F.col("score").desc(), F.col("nss_doc_id").asc()).limit(k)
     # keys must be attached BEFORE the final cut: score ties at the k
@@ -570,15 +755,21 @@ def bm25_scores_indexed(reader: IndexReader, terms: list[str], mode: str = "or")
     Feeds consumers that need a sub-query's complete score LIST — e.g.
     hybrid min_max/L2 normalization, which normalizes over the whole
     retrieved list (processor/normalization min_max uses the list's own
-    min/max). The bulk kernel runs with k = N so its cut never bites;
-    the docmap key join is a plain equi-join on the uniform
-    internal id (the matched set is unbounded, so no broadcast hint —
-    at 100-TB scale this is one shuffle at match-set cardinality, and a
-    production deployment would cap the sub-query at its rescore
-    window instead). Returns (<key cols>, score), score unrounded."""
+    min/max). The bulk kernel runs with k = N so its cut never bites.
+    On the driver executor the list holds at most Σ df ≤
+    ``DRIVER_MAX_POSTINGS`` rows; on the Spark executor the docmap key
+    join is a plain equi-join on the uniform internal id (the matched
+    set is unbounded, so no broadcast hint — at 100-TB scale this is one
+    shuffle at match-set cardinality, and a production deployment would
+    cap the sub-query at its rescore window instead). Returns
+    (<key cols>, score), score unrounded."""
     N, _ = reader.global_stats()
-    per_seg = _per_segment_scores(reader, [(sorted(set(terms)), mode, max(N, 1))])
+    queries = [(sorted(set(terms)), mode, max(N, 1))]
     key_cols = reader.meta["key_cols"]
+    hits = _driver_scores(reader, queries)
+    if hits is not None:
+        return _driver_answer(reader, hits, [*key_cols, "score"])
+    per_seg = _per_segment_scores(reader, queries)
     dm = reader.docmap().select("nss_doc_id", *key_cols)
     return dm.join(per_seg.select("nss_doc_id", "score"), "nss_doc_id").select(
         *key_cols, "score"
@@ -622,6 +813,16 @@ def matched_ids_indexed(reader: IndexReader, terms: list[str], mode: str = "or")
     )
 
 
+def _spark_cut(keyed: DataFrame, key_cols: list[str], k: int) -> DataFrame:
+    """The Spark executor's final cut: orderBy(score desc, keys
+    asc).limit(k) — TakeOrderedAndProject — with its 1-based ``rank``, a
+    row_number over the cut's own order, which the cut's single output
+    partition already satisfies (no extra job)."""
+    order = [F.col("score").desc(), *[F.col(c).asc() for c in key_cols]]
+    return keyed.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("int"))
+
+
 def _attach_keys(reader: IndexReader, top: DataFrame, k: int) -> DataFrame:
     """Join the (tiny) top-k against docmap to recover source keys; ties
     re-resolved on the external key so results are partition-invariant."""
@@ -630,8 +831,7 @@ def _attach_keys(reader: IndexReader, top: DataFrame, k: int) -> DataFrame:
     # top is <= segments x k rows but its size is opaque to Catalyst
     # (applyInPandas output) — hint the broadcast explicitly so the join
     # is a map-side hash probe of docmap, never a sort-merge shuffle.
-    out = dm.join(F.broadcast(top), "nss_doc_id")
-    return out.orderBy(F.col("score").desc(), *[F.col(c).asc() for c in key_cols]).limit(k)
+    return _spark_cut(dm.join(F.broadcast(top), "nss_doc_id"), key_cols, k)
 
 
 def bm25_topk_indexed_multi(
@@ -643,24 +843,28 @@ def bm25_topk_indexed_multi(
 ) -> DataFrame:
     """Execute a BATCH of (terms, mode) queries through the index in
     one pass: union-of-terms pruned scan → the bulk kernel over the
-    whole batch → one docmap join → per-query top-k cut. 2 Spark jobs
-    for the whole batch instead of ~2 per query — the
-    driver-orchestration floor (the measured ~0.2 s/query serial cost)
-    amortizes across the batch. Results are bit-identical per query to
-    ``bm25_topk_indexed`` (asserted in tests). Returns (query_idx,
-    <key_cols>, score, rank).
+    whole batch → one key lookup → per-query top-k cut. The executor
+    rule applies to the batch's Σ df: on the driver the batch runs no
+    Spark job; on Spark it is 2 jobs for the whole batch instead of ~2
+    per query — the driver-orchestration floor (the measured ~0.2 s/query
+    serial cost) amortizes across the batch. Results are bit-identical
+    per query to ``bm25_topk_indexed`` (asserted in tests). Returns
+    (query_idx, <key_cols>, score, rank).
 
-    ``segment_groups=G`` coarsens the kernel grouping from one Arrow
-    batch per segment to one per pmod(segment_id, G) — G ≈ the core
-    count gives each python worker ONE large batch per job instead of
-    segments/cores small ones, cutting per-group Arrow framing +
-    dispatch overhead (the serving-path scaling residual measured by
-    the round-2 control probe). Segments are uniform by construction,
-    so the G groups are balanced. None = per-segment (unchanged)."""
-    per_seg = _per_segment_scores(
-        reader, [(sorted(set(terms)), mode, k) for terms, mode in queries], dtype,
-        segment_groups=segment_groups)
+    ``segment_groups=G`` coarsens the Spark executor's kernel grouping
+    from one Arrow batch per segment to one per pmod(segment_id, G) —
+    G ≈ the core count gives each python worker ONE large batch per job
+    instead of segments/cores small ones, cutting per-group Arrow
+    framing + dispatch overhead (the serving-path scaling residual
+    measured by the round-2 control probe). Segments are uniform by
+    construction, so the G groups are balanced. None = per-segment
+    (unchanged)."""
+    queries = [(sorted(set(terms)), mode, k) for terms, mode in queries]
     key_cols = reader.meta["key_cols"]
+    hits = _driver_scores(reader, queries, dtype)
+    if hits is not None:
+        return _driver_answer(reader, hits, ["query_idx", *key_cols, "score", "rank"], k)
+    per_seg = _per_segment_scores(reader, queries, dtype, segment_groups=segment_groups)
     dm = reader.docmap().select("nss_doc_id", *key_cols)
     joined = dm.join(F.broadcast(per_seg), "nss_doc_id")
     w = Window.partitionBy("query_idx").orderBy(

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -50,6 +51,37 @@ def positional_reader_ctx(spark, documents, tmp_path_factory):
                 store_positions=True)
     return SearchContext(docs=documents,
                          reader=IndexReader(spark, d, cache_hot=True))
+
+
+# The indexed BM25 entry points' two executors, selected through
+# query/wand.py's rule bounds: 0 postings sends every query with a live
+# term to Spark; unreachable bounds send every query to the driver.
+EXECUTORS = {"spark": (0, 0), "driver": (1 << 62, 1 << 62)}
+
+
+@contextlib.contextmanager
+def executor(name: str):
+    """Frames built inside run on executor ``name``."""
+    from neural_search_spark.query import wand
+
+    prev = wand.DRIVER_MAX_POSTINGS, wand.DRIVER_MAX_READ_BYTES
+    wand.DRIVER_MAX_POSTINGS, wand.DRIVER_MAX_READ_BYTES = EXECUTORS[name]
+    try:
+        yield
+    finally:
+        wand.DRIVER_MAX_POSTINGS, wand.DRIVER_MAX_READ_BYTES = prev
+
+
+def under_both(fn):
+    """``fn()`` (which builds and collects its frames) under each
+    executor; the answers must be identical, unrounded scores included.
+    Returns the answer."""
+    out = {}
+    for name in EXECUTORS:
+        with executor(name):
+            out[name] = fn()
+    assert out["spark"] == out["driver"]
+    return out["spark"]
 
 
 def spark_job_count(spark, fn) -> int:

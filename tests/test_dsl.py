@@ -1705,6 +1705,8 @@ def test_indexed_dsl_with_non_doc_id_key(spark, code_docs, code_reader,
     by_id = SearchContext(docs=id_docs, analyzer="code", id_col="id",
                           reader=_code_reader(spark, id_docs, tmp_path_factory, "id"))
     by_doc_id = SearchContext(docs=code_docs, reader=code_reader, analyzer="code")
+    from tests.conftest import under_both
+
     for q in [{"match": {"text": "parse_json2 value_2"}},
               {"match": {"text": {"query": "parse_json2 value_2", "operator": "and"}}},
               {"match_phrase": {"text": "parse_json2 emit_v3"}},
@@ -1715,16 +1717,28 @@ def test_indexed_dsl_with_non_doc_id_key(spark, code_docs, code_reader,
               {"query_string": {"query": 'value_2 "parse_json2 emit_v3" emi*'}},
               {"simple_query_string": {"query": 'value_2 "parse_json2 emit_v3"'}}]:
         body = {"query": q, "size": 10}
-        got = search(by_id, body)
-        assert got.columns == ["doc_id", "score", "rank"]
-        assert _rows(got) == _rows(search(by_doc_id, body)), q
+
+        def answer():
+            got = search(by_id, body)
+            assert got.columns == ["doc_id", "score", "rank"]
+            rows = _rows(got)
+            assert rows == _rows(search(by_doc_id, body)), q
+            return rows
+
+        under_both(answer)
     from neural_search_spark.query.dsl import msearch
 
     bodies = [{"query": {"match": {"text": "parse_json2 value_2"}}, "size": 10},
               {"query": {"match_phrase": {"text": "parse_json2 emit_v3"}}, "size": 10}]
-    got = msearch(by_id, bodies)
-    assert got.columns == ["query_idx", "doc_id", "score", "rank"]
-    assert _rows(got) == _rows(msearch(by_doc_id, bodies))
+
+    def batch():
+        got = msearch(by_id, bodies)
+        assert got.columns == ["query_idx", "doc_id", "score", "rank"]
+        rows = _rows(got)
+        assert rows == _rows(msearch(by_doc_id, bodies))
+        return rows
+
+    under_both(batch)
 
 
 def test_exhaustive_terms_use_context_analyzer(code_docs, code_reader):

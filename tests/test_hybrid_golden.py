@@ -7,7 +7,13 @@ import math
 import numpy as np
 import pytest
 
-from neural_search_spark.query.hybrid import combine, hybrid_search, normalize
+from neural_search_spark.query.hybrid import (
+    combine,
+    explain_scores,
+    hybrid_search,
+    normalize,
+    rrf_combine,
+)
 from neural_search_spark.query.spec import HybridSpec, HybridSpecError
 from neural_search_spark.query.sparse import (
     sparse_topk_single_phase,
@@ -18,6 +24,24 @@ from neural_search_spark.query.sparse import (
 
 def _scores_df(spark, rows):
     return spark.createDataFrame(rows, "subquery_idx int, doc_id long, score double")
+
+
+def test_weights_give_subquery_count_without_job(spark):
+    """Given weights, combine, rrf_combine and explain_scores take the
+    sub-query count from them: building the frame runs no Spark job,
+    as with an explicit ``n_subqueries``, and the answers agree."""
+    from tests.conftest import spark_job_count
+
+    tagged = _scores_df(spark, [(0, 1, 0.5), (0, 2, 0.2), (1, 2, 0.9), (1, 3, 0.4)])
+    calls = [lambda **kw: combine(normalize(tagged, "min_max"), "arithmetic_mean",
+                                  [0.5, 0.5], **kw),
+             lambda **kw: rrf_combine(tagged, 60, [0.5, 0.5], **kw),
+             lambda **kw: explain_scores(tagged, weights=[0.5, 0.5], **kw)]
+    for call in calls:
+        out = {}
+        jobs = spark_job_count(spark, lambda: out.update(w=call()))
+        assert jobs == spark_job_count(spark, lambda: out.update(n=call(n_subqueries=2))) == 0
+        assert sorted(out["w"].collect()) == sorted(out["n"].collect())
 
 
 # --- §3.1 min-max (MinMaxScoreNormalizationTechniqueTests.java:21-98) ---

@@ -219,9 +219,12 @@ def test_bulk_kernel_in_process_equals_spark_path(spark, code_index):
     import pyarrow.dataset as ds
 
     from neural_search_spark.query.bm25 import idf_by_term
+    from tests.conftest import executor
+
     from neural_search_spark.query.wand import (
         BULK_COLS,
         _bulk_kernel_multi,
+        _driver_scores,
         _min_matched,
         _per_segment_scores,
     )
@@ -244,3 +247,9 @@ def test_bulk_kernel_in_process_equals_spark_path(spark, code_index):
         exp = by_spark[by_spark["segment_id"] == seg].sort_values(key).reset_index(drop=True)
         assert set(got["query_idx"]) == {0, 1, 2}
         pd.testing.assert_frame_equal(got, exp, check_exact=True)
+    # the driver executor (every segment in-process) == the Spark executor
+    with executor("driver"):
+        by_driver = _driver_scores(code_index, queries)
+    pd.testing.assert_frame_equal(by_driver.sort_values(key).reset_index(drop=True),
+                                  by_spark.sort_values(key).reset_index(drop=True),
+                                  check_exact=True)

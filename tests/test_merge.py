@@ -2,6 +2,10 @@
 score-identically to the unmerged index (BM25 stats are untouched by
 merging — N, avgdl, df, norms all survive doc-id rebasing)."""
 
+import hashlib
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,6 +37,41 @@ def merged_pair(spark, corpus, tmp_path_factory):
     )
     metrics = merge_segments(spark, base, out, factor=4)
     return base, out, metrics
+
+
+def _table_digests(index_dir: str) -> dict[str, list[str]]:
+    """Sorted sha256 digests of each index table's parquet files (file
+    names carry a random id; their bytes must not)."""
+    out = {}
+    for table in ("postings", "docmap", "manifest"):
+        root_dir = os.path.join(index_dir, table)
+        out[table] = sorted(
+            hashlib.sha256(open(os.path.join(root, f), "rb").read()).hexdigest()
+            for root, _, files in os.walk(root_dir) for f in files if f.endswith(".parquet"))
+    return out
+
+
+def test_identical_builds_write_identical_bytes(spark, corpus, tmp_path):
+    """No wall-clock value reaches a parquet file: two builds of one
+    corpus, over a second apart, and their merges write the same bytes
+    per table; the build time is in index_meta.json."""
+    from neural_search_spark.index.builder import read_meta
+
+    digests = []
+    for i in range(2):
+        if i:
+            time.sleep(1.1)
+        d, m = str(tmp_path / f"b{i}"), str(tmp_path / f"m{i}")
+        build_index(spark, corpus, d, key_cols=["repo", "path", "commit"],
+                    text_col="content", tokenizer="code", num_segments=4, range_block=64)
+        merge_segments(spark, d, m, factor=2)
+        digests.append((_table_digests(d), _table_digests(m)))
+        assert read_meta(d)["built_at_unix"] > 0
+        for index_dir, build_id in ((d, "build"), (m, "merge")):
+            man = spark.read.parquet(os.path.join(index_dir, "manifest"))
+            assert "built_at_unix" not in man.columns
+            assert {r["build_id"] for r in man.select("build_id").collect()} == {build_id}
+    assert digests[0] == digests[1]
 
 
 def test_merge_reduces_segments(spark, merged_pair):

@@ -145,25 +145,95 @@ def test_bm25_stats_launch_no_spark_job(spark, stats_index):
 
 
 # Spark jobs of an indexed `match` search on a warm reader, for terms it
-# has not seen before, pinned as an upper bound. The BM25 statistics
-# (N, avgdl, df) add none.
-WARM_MATCH_JOBS = 3
+# has not seen before, pinned as upper bounds. The BM25 statistics
+# (N, avgdl, df) add none; under the driver executor's postings bound
+# the kernel, key lookup and cut add none either.
+WARM_MATCH_JOBS = 0
+# above the bound: scan + kernel, the docmap broadcast, the final cut
+SPARK_MATCH_JOBS = 3
 
 
-def test_warm_indexed_match_job_bound(spark, documents, stats_index):
-    from tests.conftest import spark_job_count
+def _warm_match_jobs(spark, documents, index_dir, executor_name):
+    """(jobs, rows) of a warm indexed `match` on ``executor_name``."""
+    from tests.conftest import executor, spark_job_count
 
     from neural_search_spark.query.dsl import SearchContext, search
     from neural_search_spark.query.wand import IndexReader
 
     ctx = SearchContext(docs=documents,
-                        reader=IndexReader(spark, stats_index, cache_hot=True))
-    search(ctx, {"query": {"match": {"text": "spark window"}}, "size": 10}).collect()
+                        reader=IndexReader(spark, index_dir, cache_hot=True))
     body = {"query": {"match": {"text": "merge join"}}, "size": 10}
     rows = []
-    jobs = spark_job_count(spark, lambda: rows.extend(search(ctx, body).collect()))
-    assert jobs <= WARM_MATCH_JOBS, jobs
+    with executor(executor_name):
+        search(ctx, {"query": {"match": {"text": "spark window"}}, "size": 10}).collect()
+        jobs = spark_job_count(spark, lambda: rows.extend(search(ctx, body).collect()))
     assert rows == search(SearchContext(docs=documents), body).collect()
+    return jobs
+
+
+def test_warm_indexed_match_job_bound(spark, documents, stats_index):
+    jobs = _warm_match_jobs(spark, documents, stats_index, "driver")
+    assert jobs <= WARM_MATCH_JOBS, jobs
+
+
+def test_match_above_driver_bound_job_bound(spark, documents, stats_index):
+    """A `match` whose terms hold more postings than the driver bound
+    (patched to 0) runs on Spark, within its own job bound."""
+    jobs = _warm_match_jobs(spark, documents, stats_index, "spark")
+    assert jobs <= SPARK_MATCH_JOBS, jobs
+
+
+def test_driver_read_bound_sends_large_reads_to_spark(spark, stats_index, monkeypatch):
+    """The rule's second bound: a query whose read opens more postings
+    file bytes than DRIVER_MAX_READ_BYTES runs on Spark whatever its
+    Σ df. The bytes are the files of the terms' bucket directories
+    (every file on an unbucketed index)."""
+    from tests.conftest import EXECUTORS, executor, spark_job_count
+
+    from neural_search_spark.index.builder import read_meta
+    from neural_search_spark.query import wand
+
+    reader = wand.IndexReader(spark, stats_index)
+    for name in EXECUTORS:  # warm: the reader's frames and file listings
+        with executor(name):
+            wand.bm25_topk_indexed(reader, ["spark", "window"], k=10).collect()
+    terms = ["merge", "join"]
+    total = sum(os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(os.path.join(stats_index, "postings"))
+                for f in files if f.endswith(".parquet"))
+    need = reader.read_bytes(terms)
+    if int(read_meta(stats_index)["term_buckets"]) > 1:
+        assert 0 < need < total
+    else:
+        assert need == total
+    for bound, on_spark in ((need, False), (need - 1, True)):
+        monkeypatch.setattr(wand, "DRIVER_MAX_READ_BYTES", bound)
+        rows = []
+        jobs = spark_job_count(spark, lambda: rows.extend(
+            wand.bm25_topk_indexed(reader, terms, k=10).collect()))
+        assert (1 <= jobs <= SPARK_MATCH_JOBS) if on_spark else jobs == 0, (bound, jobs)
+        assert rows
+
+
+def test_small_indexed_phrase_and_msearch_run_no_job(spark, positional_reader_ctx):
+    """A small indexed `match_phrase` and a 64-body `msearch` answer
+    from a local frame: 0 Spark jobs, the Spark executor's rows."""
+    from tests.conftest import executor, spark_job_count
+
+    from neural_search_spark.query.dsl import msearch, search
+
+    ctx = positional_reader_ctx
+    phrase = {"query": {"match_phrase": {"text": "spark window"}}, "size": 10}
+    words = ["spark", "window", "data", "merge", "join", "query", "index", "stream"]
+    bodies = [{"query": {"match": {"text": f"{words[i % 8]} {words[(i * 3 + 1) % 8]}"}},
+               "size": 10} for i in range(64)]
+    for run in (lambda: search(ctx, phrase).collect(), lambda: msearch(ctx, bodies).collect()):
+        run()
+        rows = []
+        jobs = spark_job_count(spark, lambda: rows.extend(run()))
+        assert jobs == 0 and rows, jobs
+        with executor("spark"):
+            assert sorted(rows) == sorted(run())
 
 
 def test_empty_indexed_answer_runs_no_job(spark, documents, tmp_path_factory):
@@ -191,5 +261,9 @@ def test_empty_indexed_answer_runs_no_job(spark, documents, tmp_path_factory):
         rows = []
         jobs = spark_job_count(spark, lambda: rows.extend(search(ctx, body).collect()))
         assert jobs == 0 and rows == [], (q, jobs)
+    # names, types and nullability: one schema for empty and non-empty
+    # answers under either executor
+    from tests.conftest import under_both
+
     assert (bm25_topk_indexed(reader, ["zzabsent"]).schema
-            == bm25_topk_indexed(reader, ["spark"]).schema)
+            == under_both(lambda: bm25_topk_indexed(reader, ["spark"]).schema))

@@ -12,6 +12,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import under_both
+
 # corpus: dl 3 / 2 / 4, avgdl 3.0, N 3 — all dls quantize exactly
 TINY = [
     (1, "apple banana apple"),
@@ -61,10 +63,10 @@ def test_bm25_hand_fixture_indexed(tiny_docs, tmp_path):
                 tokenizer="simple", num_segments=2, range_block=4)
     reader = IndexReader(spark, idx)
     for strategy in ("bulk", "wand"):
-        got = _scores(
+        got = under_both(lambda: _scores(
             bm25_topk_indexed(reader, ["apple", "cherry"], k=3, strategy=strategy)
             .select("doc_id", "score")
-        )
+        ))
         assert got[3] == pytest.approx(APPLE_CHERRY_D3, abs=1e-12)
         assert got[2] == pytest.approx(CHERRY_D2, abs=1e-12)
         assert got[1] == pytest.approx(APPLE_D1, abs=1e-12)
@@ -239,17 +241,16 @@ def test_multi_query_matches_single(tiny_docs, tmp_path):
     batch = [(["apple"], "or"), (["apple", "cherry"], "or"),
              (["apple", "cherry"], "and"), (["zzz_absent"], "or"),
              (["banana", "zzz_absent"], "and")]
-    multi = bm25_topk_indexed_multi(reader, batch, k=3)
-    rows = multi.collect()
+    rows = under_both(lambda: bm25_topk_indexed_multi(reader, batch, k=3).collect())
     by_q = {}
     for r in rows:
         by_q.setdefault(r["query_idx"], {})[r["doc_id"]] = r["score"]
     for qi, (terms, mode) in enumerate(batch):
-        single = {
+        single = under_both(lambda: {
             r["doc_id"]: r["score"]
             for r in bm25_topk_indexed(reader, terms, k=3, mode=mode)
             .select("doc_id", "score").collect()
-        }
+        })
         assert by_q.get(qi, {}) == single, (qi, terms, mode)
 
 

@@ -151,7 +151,7 @@ def test_append_segment_stats_and_reader_snapshot(spark, tmp_path):
     Spark's aggregates over the grown index, while a reader that had
     already answered keeps its snapshot: same N, same df (also for
     terms it first looks up after the append) and same hits."""
-    from tests.conftest import assert_stats_match_spark
+    from tests.conftest import assert_stats_match_spark, under_both
 
     from neural_search_spark.corpus import corpus_df
     from neural_search_spark.index.builder import build_index
@@ -167,8 +167,8 @@ def test_append_segment_stats_and_reader_snapshot(spark, tmp_path):
                 range_block=64, term_buckets=2)
 
     def hits(reader):
-        return bm25_topk_indexed(reader, ["def", "return"], k=10).select(
-            "path", "score").collect()
+        return under_both(lambda: bm25_topk_indexed(reader, ["def", "return"], k=10).select(
+            "path", "score").collect())
 
     old = IndexReader(spark, d)
     before = hits(old)
@@ -182,3 +182,34 @@ def test_append_segment_stats_and_reader_snapshot(spark, tmp_path):
     assert old.global_stats() == exp_stats
     assert old.term_dfs(["def", "return", "import", "class"]) == exp_dfs
     assert hits(old) == before
+
+
+def test_append_drops_old_manifest_wall_clock(spark, tmp_path):
+    """An index whose manifest still carries the ``built_at_unix`` wall
+    clock (written before the build time moved to index_meta.json)
+    takes appends: the append drops that column and keeps the others."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from neural_search_spark.corpus import corpus_df
+    from neural_search_spark.index.builder import build_index
+    from neural_search_spark.index.live import append_segment
+
+    full = corpus_df(spark, 120, partitions=2).cache()
+    base = full.where("pmod(xxhash64(path), 3) < 2")
+    d = str(tmp_path / "idx")
+    build_index(spark, base, d, key_cols=["repo", "path", "commit"],
+                text_col="content", tokenizer="code", num_segments=2, range_block=64)
+    man = os.path.join(d, "manifest")
+    cols = spark.read.parquet(man).columns
+    spark.read.parquet(man).withColumn("built_at_unix", F.lit(1_700_000_000)).write.parquet(
+        man + "_old")
+    shutil.rmtree(man)
+    os.rename(man + "_old", man)
+
+    append_segment(spark, full.subtract(base), d, segment_id=2)
+    grown = spark.read.parquet(man)
+    assert sorted(grown.columns) == sorted(cols)
+    assert sorted(r["segment_id"] for r in grown.select("segment_id").collect()) == [0, 1, 2]
