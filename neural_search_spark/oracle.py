@@ -128,17 +128,19 @@ def pinned_topk_sql(
     pinned_base: float = 1.0e9,
 ) -> str:
     """``pinned`` oracle: the listed ids (those present in the corpus)
-    rank first in list order at PINNED_BASE + (n − position), organic
-    BM25 hits follow with pinned ids excluded — the translator's exact
-    score assignment, so the hash compares real values, not just
-    order."""
+    rank first in list order whatever the organic scores, at
+    PINNED_BASE + (n − position); organic BM25 hits follow with pinned
+    ids excluded. The cut orders by (pinned position, score desc,
+    doc_id asc) — the translator's exact order and score assignment, so
+    the hash compares real values, not just order."""
     dl_expr = quantized_dl_sql("dl")
     contrib = bm25_sql(tf="tf", dl_q=f"({dl_expr})", N="N", df="df", avgdl="avgdl")
     n = len(ids)
     rows = ", ".join(
-        f"({int(v)}, {float(pinned_base + (n - i))!r})" for i, v in enumerate(ids)
+        f"({int(v)}, {float(pinned_base + (n - i))!r}, {i})" for i, v in enumerate(ids)
     )
     id_list = ", ".join(str(int(v)) for v in ids)
+    order = "unioned.pos ASC, unioned.score DESC, unioned.doc_id ASC"
     return f"""{bm25_base_ctes(terms, table)},
 scored AS (
   SELECT tf.doc_id AS doc_id, sum({contrib}) AS score
@@ -146,17 +148,17 @@ scored AS (
   GROUP BY tf.doc_id
 ),
 pinned AS (
-  SELECT p.doc_id, p.s AS score FROM (VALUES {rows}) p(doc_id, s)
+  SELECT p.doc_id, p.s AS score, p.pos FROM (VALUES {rows}) p(doc_id, s, pos)
   WHERE p.doc_id IN (SELECT doc_id FROM {table})
 ),
 unioned AS (
-  SELECT doc_id, score FROM pinned
+  SELECT doc_id, score, pos FROM pinned
   UNION ALL
-  SELECT doc_id, score FROM scored WHERE doc_id NOT IN ({id_list})
+  SELECT doc_id, score, {n} AS pos FROM scored WHERE doc_id NOT IN ({id_list})
 )
 SELECT doc_id, round(unioned.score, 4) AS score,
-       CAST(row_number() OVER (ORDER BY unioned.score DESC, unioned.doc_id ASC) AS INT) AS rank
-FROM unioned ORDER BY unioned.score DESC, unioned.doc_id ASC LIMIT {k}"""
+       CAST(row_number() OVER (ORDER BY {order}) AS INT) AS rank
+FROM unioned ORDER BY {order} LIMIT {k}"""
 
 
 def bm25_explain_sql(

@@ -7,20 +7,35 @@ package, so the translator adds NO new scoring semantics: a green DSL
 gate row proves the dict → builder mapping, and the builders' own
 oracles pin the math.
 
+One handler per query type, as each of the reference's query builders
+owns its ``fromXContent``: ``_HANDLERS`` maps every type to a
+``_Handler`` that parses the type once and exposes its paths (raw
+scores, exhaustive and indexed top-k, aggs/sort hit set, explain and
+highlight terms). Every entry point dispatches through that table and
+``_QUERY_TYPES`` and each "supported: …" message are read from it, so
+**adding a query type means adding one handler entry**. Shared rules
+live in one place each: the analyzer choice in ``_analyzer`` (the only
+reader of ``ctx.analyzer`` and ``ctx.index_analyzer()``), the match and
+bool clause parses in ``_match_params`` / ``_bool_spec``, number
+coercion in ``_int_param`` / ``_float_param``, boost in ``_boosted``,
+round-then-rank in ``_rank``, and builder ValueErrors become a
+``DslError`` naming the query type in ``_rejects``.
+
 Supported query types (each names its dispatch target):
 
 * ``match`` (operator or|and; the raw string is analyzed with the
   context analyzer) → exhaustive.bm25_scores / bm25_conjunctive
 * ``match_phrase`` (+ ``slop``) → exhaustive.bm25_phrase[_sloppy]
 * ``match_phrase_prefix`` (``max_expansions``) → multiterm.phrase_prefix_topk
-* ``prefix`` / ``wildcard`` / ``fuzzy`` → multiterm.*_topk
+* ``prefix`` / ``wildcard`` / ``fuzzy`` / ``regexp`` → one dictionary
+  matcher, expanded and scored as a rewritten boolean
 * ``bool`` (must/should/must_not of match clauses +
-  ``minimum_should_match``) → booleans.bool_topk
-* ``dis_max`` (match sub-queries + ``tie_breaker``) → booleans.dis_max_topk
-* ``hybrid`` (≤5 match/neural/neural_sparse sub-queries; the
-  normalization/combination config arrives via ``pipeline=`` exactly
-  like the plugin's search-pipeline processor, validated by
-  spec.HybridSpec) → hybrid.normalize/combine/rrf_combine
+  ``minimum_should_match``) → booleans.bool_clauses_topk
+* ``dis_max`` (sub-queries + ``tie_breaker``) → booleans.dis_max_topk
+* ``hybrid`` (≤5 scoring sub-queries; the normalization/combination
+  config arrives via ``pipeline=`` exactly like the plugin's
+  search-pipeline processor, validated by spec.HybridSpec) →
+  hybrid.normalize/combine/rrf_combine
 * ``neural`` (``query_vector_id``, ``k``; serves from ``ctx.graphs``
   when present, exact otherwise) → similarity.cosine_topk /
   graph_ann.hnsw_topk
@@ -39,6 +54,10 @@ Supported query types (each names its dispatch target):
   score), constant_score applies its boost, term on the TEXT column
   scores single-term BM25 (terms on it is rejected: unanalyzed
   equality there would silently diverge from per-token match)
+* the rest of the table — multi_match, boosting, function_score,
+  script_score, pinned, wrapper, more_like_this, terms_set, the parser
+  families, the span family and intervals — each documented on its
+  handler below.
 
 Body keys: ``query`` (required), ``size``, ``from`` (hybrid rejects
 from≠0, mirroring HybridQueryPhaseSearcher.java:123-148), ``post_filter``
@@ -50,7 +69,10 @@ parsers are likewise strict (fromXContent throws on unknown fields).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, replace
+from collections.abc import Callable
+from contextlib import contextmanager
+from dataclasses import dataclass
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, Window
@@ -67,11 +89,10 @@ class DslError(ValueError):
 @dataclass
 class SearchContext:
     """The data surfaces a search body can address. With ``reader``
-    (an index.IndexReader) the translator dispatches match /
-    match_phrase / match_phrase_prefix / prefix / wildcard / fuzzy /
-    bool onto the INDEXED kernels (the production path; the query
-    string is then analyzed with the index's OWN analyzer, as Lucene's
-    QueryBuilder does); dis_max and hybrid sub-queries score
+    (an index.IndexReader) the translator dispatches every type with an
+    indexed handler path onto the INDEXED kernels (the production path;
+    the query string is then analyzed with the index's OWN analyzer, as
+    Lucene's QueryBuilder does); dis_max and hybrid sub-queries score
     exhaustively over ``docs`` (their indexed compositions are separate
     registry entries: indexed_hybrid_neural, indexed_hybrid_rrf)."""
 
@@ -95,16 +116,33 @@ class SearchContext:
 
 _BODY_KEYS = {"query", "size", "from", "post_filter", "sort", "collapse",
               "highlight", "explain", "rescore", "search_after"}
-_QUERY_TYPES = (
-    "match match_phrase match_phrase_prefix prefix wildcard fuzzy regexp "
-    "bool dis_max hybrid neural neural_sparse nested "
-    "term terms range exists ids match_all constant_score "
-    "multi_match boosting function_score simple_query_string "
-    "more_like_this rank_feature match_bool_prefix query_string terms_set "
-    "knn script_score pinned wrapper match_none distance_feature "
-    "span_term span_near span_or span_first span_not span_multi "
-    "span_containing span_within intervals"
-).split()
+
+
+# --- shared rules -----------------------------------------------------------
+
+
+def _analyzer(ctx: SearchContext, indexed: bool) -> str:
+    """The one analyzer rule. ``indexed`` paths — the index kernels, and
+    whatever must agree with them under a reader (aggs/sort hit sets,
+    explain, highlight, msearch, the parser families' clause frames) —
+    analyze with the index's own analyzer, as Lucene's QueryBuilder
+    analyzes with the field's; exhaustive scorers analyze with
+    ``ctx.analyzer``, so query and corpus tokens agree. Without a
+    reader both are ``ctx.analyzer``."""
+    return ctx.index_analyzer() if indexed else ctx.analyzer
+
+
+@contextmanager
+def _rejects(what: str):
+    """A builder's ValueError on a body it cannot serve (zero analyzed
+    terms, a bad pattern, an unmet bool gate, ...) surfaces as the
+    DslError naming the query type."""
+    try:
+        yield
+    except DslError:
+        raise
+    except ValueError as e:
+        raise DslError(f"[{what}] {e}") from e
 
 
 def _one(d: Any, what: str) -> tuple[str, Any]:
@@ -119,54 +157,158 @@ def _params(spec: Any, value_key: str) -> dict:
     return dict(spec) if isinstance(spec, dict) else {value_key: spec}
 
 
-def _reject_unknown(params: dict, allowed: set[str], what: str) -> None:
+def _reject_unknown(params: Any, allowed: set[str], what: str) -> None:
+    if not isinstance(params, dict):
+        raise DslError(f"[{what}] must be an object, got {params!r}")
     if unknown := set(params) - allowed:
         raise DslError(f"[{what}] does not support {sorted(unknown)}; "
                        f"supported: {sorted(allowed)}")
 
 
-def _terms(ctx: SearchContext, text: Any, what: str) -> list[str]:
+def _int_param(val: Any, what: str, lo: int | None = None) -> int:
+    """An integer parameter or a DslError: bools, strings and floats
+    never coerce. Callers pass ``d.get(key, default)``, so an absent key
+    takes its default and an explicit null is rejected."""
+    if isinstance(val, bool) or not isinstance(val, int):
+        raise DslError(f"[{what}] must be an integer, got {val!r}")
+    if lo is not None and val < lo:
+        raise DslError(f"[{what}] must be >= {lo}, got {val}")
+    return val
+
+
+def _float_param(val: Any, what: str) -> float:
+    """A finite number parameter or a DslError (same rules as
+    ``_int_param``; ints widen to float)."""
+    if (isinstance(val, bool) or not isinstance(val, (int, float))
+            or not math.isfinite(val)):
+        raise DslError(f"[{what}] must be a number, got {val!r}")
+    return float(val)
+
+
+def _field_params(ctx: SearchContext, spec: Any, what: str, value_key: str,
+                  allowed: set[str], field: str | None = None) -> dict:
+    """The field-keyed shape every text query shares — ``{field: value}``
+    or ``{field: {value_key: ..., ...}}`` — on the corpus text column
+    (or ``field``), with params limited to ``allowed``."""
+    fld, params = _one(spec, what)
+    want = ctx.text_col if field is None else field
+    if fld != want:
+        raise DslError(f"[{what}] field [{fld}] is not the corpus text "
+                       f"column [{want}]")
+    params = _params(params, value_key)
+    _reject_unknown(params, allowed, what)
+    return params
+
+
+def _query_text(params: dict, what: str) -> str:
+    text = params.get("query")
     if not isinstance(text, str) or not text.strip():
         raise DslError(f"[{what}] needs a non-empty query string")
-    return sorted(set(analyze_query(text, ctx.analyzer)))
+    return text
 
 
-def _match_clause(
-    ctx: SearchContext, spec: Any, what: str, analyzer: str | None = None
-) -> tuple[list[str], str]:
+def _match_params(ctx: SearchContext, spec: Any, what: str,
+                  extra: tuple[str, ...] = (),
+                  field: str | None = None) -> tuple[dict, str]:
+    """The one match-clause parse: field, params (``query``,
+    ``operator`` + ``extra``), operator or|and, a non-empty query
+    string."""
+    params = _field_params(ctx, spec, what, "query",
+                           {"query", "operator", *extra}, field)
+    op = params.get("operator", "or")
+    if op not in ("or", "and"):
+        raise DslError(f"[{what}] operator must be or|and, got [{op}]")
+    _query_text(params, what)
+    return params, op
+
+
+def _match_clause(ctx: SearchContext, spec: Any, what: str,
+                  analyzer: str) -> tuple[list[str], str]:
     """A match clause as (analyzed terms, operator). Every caller must
     HONOR the operator — paths that only implement OR semantics go
     through `_match_terms`, which rejects operator=and explicitly
     instead of silently scoring with the wrong semantics."""
-    field, params = _one(spec, what)
-    params = _params(params, "query")
-    _reject_unknown(params, {"query", "operator"}, what)
-    if field != ctx.text_col:
-        raise DslError(f"[{what}] field [{field}] is not the corpus text "
-                       f"column [{ctx.text_col}]")
-    op = params.get("operator", "or")
-    if op not in ("or", "and"):
-        raise DslError(f"[{what}] operator must be or|and, got [{op}]")
-    text = params["query"]
-    if not isinstance(text, str) or not text.strip():
-        raise DslError(f"[{what}] needs a non-empty query string")
-    return sorted(set(analyze_query(text, analyzer or ctx.analyzer))), op
+    params, op = _match_params(ctx, spec, what)
+    return sorted(set(analyze_query(params["query"], analyzer))), op
 
 
 def _match_terms(ctx: SearchContext, spec: Any, what: str) -> list[str]:
-    terms, op = _match_clause(ctx, spec, what)
+    terms, op = _match_clause(ctx, spec, what, _analyzer(ctx, False))
     if op != "or":
         raise DslError(f"[{what}] operator=and is not supported in this "
                        "position (only OR semantics are implemented here)")
     return terms
 
 
+def _nonempty_list(spec: dict, key: str, what: str) -> list:
+    val = spec.get(key)
+    if not isinstance(val, list) or not val:
+        raise DslError(f"[{what}] needs a non-empty [{key}] list")
+    return val
+
+
+_BOOL_KEYS = {"must", "should", "must_not", "minimum_should_match", "filter"}
+
+
+def _bool_spec(ctx: SearchContext, spec: Any, indexed: bool,
+               allowed: set[str] = _BOOL_KEYS) -> tuple[dict, int]:
+    """The one bool parse: per-occur lists of match clauses as
+    (analyzed terms, operator) — per-CLAUSE semantics (a multi-term
+    must clause with the default operator=or requires ONE of its terms)
+    — and the clause-counting ``minimum_should_match`` (BooleanQuery
+    semantics, shared by the top-k, hit-set and explain paths)."""
+    _reject_unknown(spec, allowed, "bool")
+    an = _analyzer(ctx, indexed)
+    clauses = {}
+    for key in ("must", "should", "must_not"):
+        clauses[key] = []
+        if not isinstance(spec.get(key) or [], list):
+            raise DslError(f"[bool] [{key}] must be a list of queries")
+        for c in spec.get(key) or []:
+            ct, cs = _one(c, f"bool.{key}")
+            if ct != "match":
+                raise DslError(f"bool [{key}] clauses must be match queries")
+            clauses[key].append(_match_clause(ctx, cs, "match", an))
+    msm = _int_param(spec.get("minimum_should_match", 0),
+                     "bool.minimum_should_match")
+    return clauses, msm
+
+
+def _filter_must(spec: dict, clauses: dict) -> tuple[list[str], str]:
+    """The FILTER-occur shape (HybridQuery.java:48-59 semantics): one
+    must match clause whose MATCH SET the filter predicates restrict;
+    scores and stats stay global — never re-scored, never affecting
+    IDF."""
+    if set(spec) - {"filter"} != {"must"} or len(clauses["must"]) != 1:
+        raise DslError("[bool] filter context supports a single must "
+                       "match clause (the FILTER-occur shape)")
+    return clauses["must"][0]
+
+
 _IDENT_RE = __import__("re").compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double",
+            "decimal")
 
 
-def _col_name(col: str) -> str:
+def _schema(df: DataFrame) -> dict[str, str]:
+    """Column name (lower-cased: Spark resolves names case-insensitively)
+    → Spark type name."""
+    return {f.name.lower(): f.dataType.simpleString() for f in df.schema.fields}
+
+
+def _field(col: Any, schema: dict[str, str], what: str,
+           numeric: bool = False) -> str:
+    """A column a body names: a plain identifier (never interpolated
+    otherwise) that exists in ``schema`` — numeric when the body does
+    arithmetic on it."""
     if not isinstance(col, str) or not _IDENT_RE.match(col):
         raise DslError(f"invalid field name {col!r}")
+    typ = schema.get(col.lower())
+    if typ is None:
+        raise DslError(f"[{what}] unknown field [{col}]; fields: "
+                       f"{sorted(schema)}")
+    if numeric and not typ.startswith(_NUMERIC):
+        raise DslError(f"[{what}] field [{col}] is {typ}, not numeric")
     return col
 
 
@@ -252,213 +394,438 @@ def rank_feature_sql(kind: str, field: str, pivot: float | None = None,
     return fn
 
 
-def _scalar_lit(val: Any, what: str) -> str:
-    """Quote one scalar as a SQL literal; anything non-scalar is
-    rejected, never interpolated."""
-    if isinstance(val, str):
+def _scalar_lit(val: Any, col_type: str, what: str) -> str:
+    """Quote one scalar as a SQL literal of a column of Spark type
+    ``col_type``; a value of another kind (which ANSI SQL would fail to cast
+    at run time) or anything non-scalar is rejected, never
+    interpolated."""
+    if isinstance(val, str) and col_type == "string":
         return "'" + val.replace("'", "''") + "'"
-    if isinstance(val, bool):
+    if isinstance(val, bool) and col_type == "boolean":
         return "true" if val else "false"
-    if isinstance(val, (int, float)):
+    if (isinstance(val, (int, float)) and not isinstance(val, bool)
+            and math.isfinite(val) and col_type.startswith(_NUMERIC)):
         return repr(val)
-    raise DslError(f"[{what}] value must be a scalar, got {val!r}")
+    raise DslError(f"[{what}] value {val!r} does not fit a {col_type} field")
 
 
-def _predicate_sql(q: dict) -> str:
-    """term/terms/range/exists filter → SQL over corpus columns (the
-    filter context never scores, exactly as in the reference). Field
-    names must be plain identifiers and values plain scalars —
-    anything else is rejected, never interpolated."""
-    typ, spec = _one(q, "filter")
-    if typ == "term":
-        col, val = _one(spec, "term")
-        col = _col_name(col)
-        return f"{col} = {_scalar_lit(val, 'term')}"
-    if typ == "terms":
-        col, vals = _one(spec, "terms")
-        col = _col_name(col)
-        if not isinstance(vals, list):
-            raise DslError(f"[terms] expects a list of values, got {vals!r}")
-        if not vals:
-            # TermsQueryBuilder with an empty list rewrites to
-            # MatchNoDocsQuery — the filter matches nothing
-            return "false"
-        return f"{col} IN (" + ", ".join(_scalar_lit(v, "terms") for v in vals) + ")"
-    if typ == "exists":
-        if not isinstance(spec, dict) or set(spec) != {"field"}:
-            raise DslError(f"[exists] expects {{'field': name}}, got {spec!r}")
-        return f"{_col_name(spec['field'])} IS NOT NULL"
-    if typ == "range":
-        col, bounds = _one(spec, "range")
-        col = _col_name(col)
-        ops = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
-        _reject_unknown(bounds, set(ops), "range")
-        for v in bounds.values():
-            if not isinstance(v, (int, float)) or isinstance(v, bool):
-                raise DslError(f"[range] bounds must be numeric, got {v!r}")
-        parts = [f"{col} {ops[op]} {float(v)}" for op, v in sorted(bounds.items())]
-        return " AND ".join(parts)
-    raise DslError(f"unsupported filter type [{typ}]; "
-                   "supported: term, terms, range, exists")
+def _predicate_sql(q: dict, schema: dict[str, str]) -> str:
+    """term/terms/range/exists filter → SQL over the columns of
+    ``schema`` (the filter context never scores, exactly as in the
+    reference). Field names must be existing plain identifiers and
+    values plain scalars of the column's kind — anything else is
+    rejected, never interpolated."""
+    kind, spec = _one(q, "filter")
+    preds = {"term": _term_pred, "terms": _terms_pred,
+             "range": _range_pred, "exists": _exists_pred}
+    if kind not in preds:
+        raise DslError(f"unsupported filter type [{kind}]; "
+                       f"supported: {', '.join(preds)}")
+    return preds[kind](spec, schema)
 
 
-# --- constant-score leaf family -------------------------------------------
+def _term_pred(spec: Any, schema: dict[str, str]) -> str:
+    col, val = _one(spec, "term")
+    col = _field(col, schema, "term")
+    return f"{col} = {_scalar_lit(val, schema[col.lower()], 'term')}"
+
+
+def _terms_pred(spec: Any, schema: dict[str, str]) -> str:
+    col, vals = _one(spec, "terms")
+    col = _field(col, schema, "terms")
+    if not isinstance(vals, list):
+        raise DslError(f"[terms] expects a list of values, got {vals!r}")
+    if not vals:
+        # TermsQueryBuilder with an empty list rewrites to
+        # MatchNoDocsQuery — the filter matches nothing
+        return "false"
+    typ = schema[col.lower()]
+    return f"{col} IN (" + ", ".join(_scalar_lit(v, typ, "terms") for v in vals) + ")"
+
+
+def _exists_pred(spec: Any, schema: dict[str, str]) -> str:
+    if not isinstance(spec, dict) or set(spec) != {"field"}:
+        raise DslError(f"[exists] expects {{'field': name}}, got {spec!r}")
+    return f"{_field(spec['field'], schema, 'exists')} IS NOT NULL"
+
+
+def _range_pred(spec: Any, schema: dict[str, str]) -> str:
+    col, bounds = _one(spec, "range")
+    col = _field(col, schema, "range", numeric=True)
+    ops = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
+    _reject_unknown(bounds, set(ops), "range")
+    if not bounds:
+        raise DslError("[range] needs at least one bound")
+    parts = [f"{col} {ops[op]} {_float_param(v, f'range.{op}')}"
+             for op, v in sorted(bounds.items())]
+    return " AND ".join(parts)
+
+
+def _numeric_field(ctx: SearchContext, spec: dict, what: str) -> str:
+    """``spec``'s required [field]: a numeric corpus column (the analyzed
+    text column never is)."""
+    if "field" not in spec:
+        raise DslError(f"[{what}] needs a [field]")
+    return _field(spec["field"], _schema(ctx.docs), what, numeric=True)
+
+
+def _filter_pred(ctx: SearchContext, filters: Any):
+    if not isinstance(filters, list):
+        raise DslError("[bool] [filter] must be a list of queries")
+    schema = _schema(ctx.docs)
+    return F.expr(" AND ".join(f"({_predicate_sql(c, schema)})" for c in filters))
+
+
+# --- scored frames and ranking ----------------------------------------------
+
+
+def _const(ctx: SearchContext, df: DataFrame, score: float = 1.0) -> DataFrame:
+    """(doc_id, score) at one constant score — Lucene's ConstantScore
+    shape for every non-scoring match set."""
+    return df.select(F.col(ctx.id_col).alias("doc_id"),
+                     F.lit(score).cast("double").alias("score"))
+
+
+def _no_hits(ctx: SearchContext) -> DataFrame:
+    return ctx.docs.sparkSession.createDataFrame(
+        [], "doc_id long, score double, rank int")
+
+
+def _bm25(ctx: SearchContext, terms: list[str], op: str,
+          analyzer: str) -> DataFrame:
+    """Full raw BM25 (doc_id, score) over the corpus: OR over ``terms``,
+    or all-terms with op=and."""
+    from .exhaustive import bm25_conjunctive, bm25_scores
+
+    fn = bm25_conjunctive if op == "and" else bm25_scores
+    return fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
+              round_to=None, tokenizer=analyzer)
+
+
+def _boosted(s: DataFrame, boost: float) -> DataFrame:
+    if boost == 1.0:
+        return s
+    return s.select("doc_id", (F.col("score") * F.lit(boost)).alias("score"))
+
+
+def _rank(scores: DataFrame, k: int, round_first: bool = False) -> DataFrame:
+    """The exhaustive top-k: (score desc, doc_id asc), scores rounded to
+    4 places. ``round_first`` is the round-then-rank convention of
+    dictionary-expansion and span/interval scores: their sums are
+    ULP-prone across engines, so they round BEFORE ranking and ties
+    break by doc_id identically everywhere."""
+    from .exhaustive import topk
+
+    if round_first:
+        return topk(scores.withColumn("score", F.round("score", 4)), k=k,
+                    round_to=None)
+    return topk(scores, k=k)
+
+
+def _ranked(df: DataFrame, id_col: str) -> DataFrame:
+    """(doc_id, score, rank) with the engine's standard tiebreak —
+    identical shaping to the exhaustive topk() output. The index's key
+    column ``id_col`` becomes the output ``doc_id`` (a no-op for
+    kernels that already name it so). A cut that carries its own
+    ``rank`` (the indexed top-k answers) keeps it: re-ranking a
+    driver-served local frame would cost a Window's two Spark jobs."""
+    if "rank" in df.columns:
+        rank = F.col("rank")
+    else:
+        rank = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
+    return df.withColumnRenamed(id_col, "doc_id").select(
+        "doc_id", F.round("score", 4).alias("score"), rank.cast("int").alias("rank"),
+    )
+
+
+def _ids(ctx: SearchContext, scores: DataFrame) -> DataFrame:
+    return scores.select(F.col("doc_id").alias(ctx.id_col)).distinct()
+
+
+def _tag(frames: list[DataFrame]) -> DataFrame:
+    """Per-sub-query (doc_id, score) frames → one (subquery_idx, doc_id,
+    score) frame."""
+    tagged = None
+    for i, s in enumerate(frames):
+        s = s.select(F.lit(i).alias("subquery_idx"), "doc_id", "score")
+        tagged = s if tagged is None else tagged.unionByName(s)
+    return tagged
+
+
+def _require_doc_key(ctx: SearchContext) -> None:
+    keys = list(ctx.reader.meta.get("key_cols", []))
+    if keys != [ctx.id_col]:
+        raise DslError(
+            f"indexed DSL dispatch needs the index keyed by [{ctx.id_col}], "
+            f"got {keys}"
+        )
+
+
+# --- constant-score leaf family ---------------------------------------------
+#
+# Scoring frames for the leaf types the reference composes inside hybrid
+# queries (HybridQueryIT.java:71-82 mixes term/range clauses;
+# RangeQueryBuilder import :35). Lucene rewrites range to
+# ConstantScore(1.0); match_all scores 1.0; constant_score wraps any
+# filter with a boost.
 
 
 def _filter_frame(ctx: SearchContext, q: dict) -> DataFrame:
     """(doc_id, 1.0) for a term/range filter — the non-scoring match
     set at Lucene's ConstantScore 1.0."""
-    return ctx.docs.where(F.expr(_predicate_sql(q))).select(
-        F.col(ctx.id_col).alias("doc_id"), F.lit(1.0).cast("double").alias("score")
+    return _const(ctx, ctx.docs.where(F.expr(_predicate_sql(q, _schema(ctx.docs)))))
+
+
+def _empty_object(spec: Any, what: str) -> None:
+    if not isinstance(spec, dict) or spec:
+        raise DslError(f"[{what}] takes an empty object")
+
+
+def _match_all_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    _empty_object(spec, "match_all")
+    return _const(ctx, ctx.docs)
+
+
+def _match_none_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # MatchNoneQueryBuilder: matches nothing (Lucene MatchNoDocsQuery) —
+    # an empty frame with the standard shape
+    _empty_object(spec, "match_none")
+    return _const(ctx, ctx.docs.where(F.lit(False)))
+
+
+def _terms_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # TermInSetQuery scores constant 1.0 on ANY field; on the analyzed
+    # text column exact-value equality would silently diverge from the
+    # reference's per-token match, so reject
+    col, _ = _one(spec, "terms")
+    if col == ctx.text_col:
+        raise DslError(f"[terms] on the analyzed text column "
+                       f"[{ctx.text_col}] is not supported; use match")
+    return _filter_frame(ctx, {"terms": spec})
+
+
+def _term_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    """A ``term`` query on the analyzed text column scores single-term
+    BM25 (TermQuery on a text field, value used VERBATIM — term queries
+    are never analyzed); on any other corpus column it is the
+    keyword-field shape: non-analyzed equality at constant score 1.0."""
+    col, params = _one(spec, "term")
+    params = _params(params, "value")
+    _reject_unknown(params, {"value"}, "term")
+    val = params.get("value")
+    if col == ctx.text_col:
+        if not isinstance(val, str) or not val.strip():
+            raise DslError("[term] on the text column needs a non-empty "
+                           "string value")
+        return _bm25(ctx, [val], "or", _analyzer(ctx, False))
+    return _filter_frame(ctx, {"term": {col: val}})
+
+
+def _ids_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # IdsQueryBuilder: constant-score 1.0 over the listed doc ids
+    # (Lucene rewrites to a ConstantScore TermInSetQuery on _id)
+    _reject_unknown(spec, {"values"}, "ids")
+    vals = [_int_param(v, "ids.values") for v in _nonempty_list(spec, "values", "ids")]
+    return _const(ctx, ctx.docs.where(F.col(ctx.id_col).isin(vals)))
+
+
+def _rank_feature_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # RankFeatureQueryBuilder: score = fn(feature value) × boost over
+    # docs where the feature is present and positive (rank_feature
+    # fields are positive by construction in the reference; absent
+    # feature -> no match)
+    fns = ("saturation", "log", "sigmoid", "linear")
+    _reject_unknown(spec, {"field", "boost", *fns}, "rank_feature")
+    fld = _numeric_field(ctx, spec, "rank_feature")
+    given = [kk for kk in fns if kk in spec]
+    if len(given) > 1:
+        raise DslError("[rank_feature] takes at most one function")
+    kind = given[0] if given else "saturation"
+    params = spec.get(kind, {})
+    _reject_unknown(params, {"pivot", "scaling_factor", "exponent"}, kind)
+    num = {kk: _float_param(v, f"rank_feature.{kind}.{kk}")
+           for kk, v in params.items()}
+    try:
+        fexpr = rank_feature_sql(
+            kind, fld, pivot=num.get("pivot"),
+            scaling_factor=num.get("scaling_factor"),
+            exponent=num.get("exponent"),
+            boost=_float_param(spec.get("boost", 1.0), "rank_feature.boost"),
+        )
+    except ValueError as e:
+        raise DslError(f"[rank_feature] {e}") from e
+    return ctx.docs.where(
+        F.col(fld).isNotNull() & (F.col(fld).cast("double") > 0)
+    ).select(F.col(ctx.id_col).alias("doc_id"), F.expr(fexpr).alias("score"))
+
+
+def _distance_feature_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # DistanceFeatureQueryBuilder on a numeric field:
+    # score = boost × pivot / (pivot + |value − origin|), matching every
+    # doc where the field is present (Lucene
+    # LongField.newDistanceFeatureQuery semantics). One shared SQL
+    # expression — abs/arithmetic coincide in Spark SQL and DuckDB, so
+    # the oracle provably evaluates the same math.
+    _reject_unknown(spec, {"field", "origin", "pivot", "boost"},
+                    "distance_feature")
+    for req in ("origin", "pivot"):
+        if req not in spec:
+            raise DslError(f"[distance_feature] needs [{req}]")
+    fld = _numeric_field(ctx, spec, "distance_feature")
+    origin = _float_param(spec["origin"], "distance_feature.origin")
+    pivot = _float_param(spec["pivot"], "distance_feature.pivot")
+    boost = _float_param(spec.get("boost", 1.0), "distance_feature.boost")
+    if pivot <= 0:
+        raise DslError(f"[distance_feature] pivot must be > 0, got {pivot}")
+    if boost < 0:
+        raise DslError(f"[distance_feature] boost must be >= 0, got {boost}")
+    fexpr = (f"{boost!r} * ({pivot!r} / ({pivot!r} + "
+             f"abs(CAST({fld} AS DOUBLE) - {origin!r})))")
+    return ctx.docs.where(F.col(fld).isNotNull()).select(
+        F.col(ctx.id_col).alias("doc_id"), F.expr(fexpr).alias("score"))
+
+
+def _constant_score_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    _reject_unknown(spec, {"filter", "boost"}, "constant_score")
+    if "filter" not in spec:
+        raise DslError("[constant_score] needs a [filter]")
+    boost = _float_param(spec.get("boost", 1.0), "constant_score.boost")
+    return _boosted(_filter_frame(ctx, spec["filter"]), boost)
+
+
+# --- match family -------------------------------------------------------------
+
+_MATCH_TOP = ("minimum_should_match", "fuzziness")
+
+
+def _match_scores(ctx: SearchContext, spec: Any, what: str = "match") -> DataFrame:
+    an = _analyzer(ctx, False)
+    terms, op = _match_clause(ctx, spec, what, an)
+    return _bm25(ctx, terms, op, an)
+
+
+def _fuzzy_match_matcher(params: dict, op: str, analyzer: str) -> str:
+    """``match`` with ``fuzziness``: a shared-SQL dictionary matcher
+    OR-ing each analyzed token's fuzzy window (Levenshtein <= e with
+    e per token — an int 1|2, or the documented AUTO rule: 0 edits
+    under 3 chars, 1 for 3-5, 2 from 6). The expansion is then ONE
+    rewritten boolean with a global top-terms cap — the engine's
+    convention (Lucene caps per FuzzyQuery clause; one global cut is
+    the same total order both engines apply, documented). fuzziness
+    composes with neither operator=and nor minimum_should_match —
+    rejected loudly, not approximated."""
+    from .multiterm import _matcher_sql
+
+    if op == "and":
+        raise DslError("[match] fuzziness with operator=and is not "
+                       "supported")
+    if "minimum_should_match" in params:
+        raise DslError("[match] fuzziness with minimum_should_match is "
+                       "not supported")
+    fz = params["fuzziness"]
+    if isinstance(fz, str) and fz.upper() == "AUTO":
+        edits = None
+    elif isinstance(fz, int) and not isinstance(fz, bool) and fz in (1, 2):
+        edits = fz
+    else:
+        raise DslError(f"[match] fuzziness must be 1, 2 or 'AUTO', "
+                       f"got {fz!r}")
+    toks = analyze_query(params["query"], analyzer)
+    if not toks:
+        raise DslError("[match] query analyzed to zero tokens")
+    parts = []
+    for t in sorted(set(toks)):
+        e = edits
+        if e is None:  # AUTO:3,6
+            e = 0 if len(t) < 3 else (1 if len(t) < 6 else 2)
+        if e == 0:
+            parts.append(f"term = '{t.replace(chr(39), chr(39) * 2)}'")
+        else:
+            parts.append(_matcher_sql(fuzzy=(t, e, 0)))
+    return " OR ".join(f"({p})" for p in parts)
+
+
+def _match_topk(ctx: SearchContext, spec: Any, k: int,
+                indexed: bool = False) -> DataFrame:
+    from .exhaustive import bm25_msm
+    from .wand import match_text_topk
+
+    an = _analyzer(ctx, indexed)
+    params, op = _match_params(ctx, spec, "match", _MATCH_TOP)
+    if "fuzziness" in params:
+        # fuzzy match: the analyzed tokens' fuzzy expansions as ONE
+        # rewritten boolean with a global top-terms cap (documented
+        # convention — Lucene caps per FuzzyQuery clause)
+        expand = _expansion_indexed if indexed else _expansion_topk
+        return expand(ctx, _fuzzy_match_matcher(params, op, an), k, {})
+    msm = _int_param(params.get("minimum_should_match", 0),
+                     "match.minimum_should_match")
+    if indexed:
+        # the kernel's msm mode gates on >= m distinct matched terms
+        mode = f"msm:{msm}" if msm > 0 and op == "or" else op
+        return _ranked(match_text_topk(ctx.reader, params["query"], k=k, mode=mode),
+                       ctx.id_col)
+    terms = sorted(set(analyze_query(params["query"], an)))
+    if msm > 0 and op == "or":
+        if msm > len(terms):
+            # a doc cannot match more distinct terms than queried
+            return _no_hits(ctx)
+        return _rank(bm25_msm(ctx.docs, terms, msm, id_col=ctx.id_col,
+                              text_col=ctx.text_col, round_to=None,
+                              tokenizer=an), k, round_first=True)
+    # operator=and makes every term required — msm is a no-op on
+    # required clauses (the Lucene rule)
+    return _rank(_bm25(ctx, terms, op, an), k)
+
+
+def _tokens(ctx: SearchContext) -> DataFrame:
+    """The corpus token stream under the index analyzer — the analyzer
+    the search() dispatch scores hit-set bodies with."""
+    from .exhaustive import tokenized
+
+    return tokenized(ctx.docs, ctx.id_col, ctx.text_col,
+                     tokenizer=_analyzer(ctx, True))
+
+
+def _clause_ids(ctx: SearchContext, tok: DataFrame, terms: list[str],
+                op: str) -> DataFrame:
+    """Doc-id set matching one match clause (OR over its terms by
+    default, all-terms with operator=and — same per-clause semantics
+    as the search() bool path, so hits and aggs agree on one body)."""
+    m = (
+        tok.select(ctx.id_col, F.explode("toks").alias("term"))
+        .where(F.col("term").isin(terms))
     )
+    if op == "and":
+        return (
+            m.groupBy(ctx.id_col)
+            .agg(F.count_distinct("term").alias("_nt"))
+            .where(F.col("_nt") == len(terms))
+            .select(ctx.id_col)
+        )
+    return m.select(ctx.id_col).distinct()
 
 
-def _leaf_scores(ctx: SearchContext, typ: str, spec: Any) -> DataFrame | None:
-    """Scoring frames for the leaf types the reference composes inside
-    hybrid queries (HybridQueryIT.java:71-82 mixes term/range clauses;
-    RangeQueryBuilder import :35). Lucene rewrites range to
-    ConstantScore(1.0); match_all scores 1.0; constant_score wraps any
-    filter with a boost. A ``term`` query on the analyzed text column
-    scores single-term BM25 (TermQuery on a text field, value used
-    VERBATIM — term queries are never analyzed); on any other corpus
-    column it is the keyword-field shape: non-analyzed equality at
-    constant score 1.0. Returns None for non-leaf types."""
-    if typ == "match_all":
-        if not isinstance(spec, dict) or spec:
-            raise DslError("[match_all] takes an empty object")
-        return ctx.docs.select(F.col(ctx.id_col).alias("doc_id"),
-                               F.lit(1.0).cast("double").alias("score"))
-    if typ == "range":
-        return _filter_frame(ctx, {"range": spec})
-    if typ == "terms":
-        # TermInSetQuery scores constant 1.0 on ANY field; on the
-        # analyzed text column exact-value equality would silently
-        # diverge from the reference's per-token match, so reject
-        col, _ = _one(spec, "terms")
-        if col == ctx.text_col:
-            raise DslError(f"[terms] on the analyzed text column "
-                           f"[{ctx.text_col}] is not supported; use match")
-        return _filter_frame(ctx, {"terms": spec})
-    if typ == "exists":
-        return _filter_frame(ctx, {"exists": spec})
-    if typ == "ids":
-        # IdsQueryBuilder: constant-score 1.0 over the listed doc ids
-        # (Lucene rewrites to a ConstantScore TermInSetQuery on _id)
-        _reject_unknown(spec, {"values"}, "ids")
-        vals = spec.get("values")
-        if (not isinstance(vals, list) or not vals
-                or not all(isinstance(v, int) and not isinstance(v, bool)
-                           for v in vals)):
-            raise DslError("[ids] needs a non-empty integer [values] list")
-        return ctx.docs.where(F.col(ctx.id_col).isin(vals)).select(
-            F.col(ctx.id_col).alias("doc_id"),
-            F.lit(1.0).cast("double").alias("score"),
-        )
-    if typ == "term":
-        col, params = _one(spec, "term")
-        params = _params(params, "value")
-        _reject_unknown(params, {"value"}, "term")
-        val = params["value"]
-        if col == ctx.text_col:
-            from .exhaustive import bm25_scores
+def _docmap_ids(ctx: SearchContext, hits: DataFrame) -> DataFrame:
+    return (ctx.reader.docmap().join(hits.select("nss_doc_id"), "nss_doc_id")
+            .select(ctx.id_col))
 
-            if not isinstance(val, str) or not val.strip():
-                raise DslError("[term] on the text column needs a non-empty "
-                               "string value")
-            return bm25_scores(ctx.docs, [val], id_col=ctx.id_col,
-                               text_col=ctx.text_col, round_to=None,
-                               tokenizer=ctx.analyzer)
-        return _filter_frame(ctx, {"term": {col: val}})
-    if typ == "rank_feature":
-        # RankFeatureQueryBuilder: score = fn(feature value) × boost
-        # over docs where the feature is present and positive
-        # (rank_feature fields are positive by construction in the
-        # reference; absent feature -> no match)
-        _reject_unknown(spec, {"field", "boost", "saturation", "log",
-                               "sigmoid", "linear"}, "rank_feature")
-        if "field" not in spec:
-            raise DslError("[rank_feature] needs a [field]")
-        fld = _col_name(spec["field"])
-        if fld == ctx.text_col:
-            raise DslError(f"[rank_feature] field [{fld}] is the analyzed "
-                           "text column; it needs a numeric feature field")
-        fns = [kk for kk in ("saturation", "log", "sigmoid", "linear")
-               if kk in spec]
-        if len(fns) > 1:
-            raise DslError("[rank_feature] takes at most one function")
-        kind = fns[0] if fns else "saturation"
-        params = spec.get(kind, {}) if fns else {}
-        if not isinstance(params, dict):
-            raise DslError(f"[rank_feature.{kind}] must be an object")
-        _reject_unknown(params, {"pivot", "scaling_factor", "exponent"}, kind)
-        try:
-            fexpr = rank_feature_sql(
-                kind, fld,
-                pivot=params.get("pivot"),
-                scaling_factor=params.get("scaling_factor"),
-                exponent=params.get("exponent"),
-                boost=float(spec.get("boost", 1.0)),
-            )
-        except (TypeError, ValueError) as e:
-            raise DslError(f"[rank_feature] {e}") from e
-        return ctx.docs.where(
-            F.col(fld).isNotNull() & (F.col(fld).cast("double") > 0)
-        ).select(
-            F.col(ctx.id_col).alias("doc_id"),
-            F.expr(fexpr).alias("score"),
-        )
-    if typ == "match_none":
-        # MatchNoneQueryBuilder: matches nothing (Lucene
-        # MatchNoDocsQuery) — an empty frame with the standard shape
-        if not isinstance(spec, dict) or spec:
-            raise DslError("[match_none] takes an empty object")
-        return ctx.docs.where(F.lit(False)).select(
-            F.col(ctx.id_col).alias("doc_id"),
-            F.lit(1.0).cast("double").alias("score"),
-        )
-    if typ == "distance_feature":
-        # DistanceFeatureQueryBuilder on a numeric field:
-        # score = boost × pivot / (pivot + |value − origin|), matching
-        # every doc where the field is present (Lucene
-        # LongField.newDistanceFeatureQuery semantics). One shared SQL
-        # expression — abs/arithmetic coincide in Spark SQL and DuckDB,
-        # so the oracle provably evaluates the same math.
-        _reject_unknown(spec, {"field", "origin", "pivot", "boost"},
-                        "distance_feature")
-        for req in ("field", "origin", "pivot"):
-            if req not in spec:
-                raise DslError(f"[distance_feature] needs [{req}]")
-        fld = _col_name(spec["field"])
-        if fld == ctx.text_col:
-            raise DslError(f"[distance_feature] field [{fld}] is the "
-                           "analyzed text column; it needs a numeric field")
-        try:
-            origin = float(spec["origin"])
-            pivot = float(spec["pivot"])
-            boost = float(spec.get("boost", 1.0))
-        except (TypeError, ValueError) as e:
-            raise DslError("[distance_feature] origin/pivot/boost must be "
-                           "numeric") from e
-        if pivot <= 0:
-            raise DslError(f"[distance_feature] pivot must be > 0, got {pivot}")
-        if boost < 0:
-            raise DslError(f"[distance_feature] boost must be >= 0, got {boost}")
-        fexpr = (f"{boost!r} * ({pivot!r} / ({pivot!r} + "
-                 f"abs(CAST({fld} AS DOUBLE) - {origin!r})))")
-        return ctx.docs.where(F.col(fld).isNotNull()).select(
-            F.col(ctx.id_col).alias("doc_id"),
-            F.expr(fexpr).alias("score"),
-        )
-    if typ == "constant_score":
-        _reject_unknown(spec, {"filter", "boost"}, "constant_score")
-        if "filter" not in spec:
-            raise DslError("[constant_score] needs a [filter]")
-        boost = float(spec.get("boost", 1.0))
-        out = _filter_frame(ctx, spec["filter"])
-        if boost != 1.0:
-            out = out.select("doc_id", (F.col("score") * F.lit(boost)).alias("score"))
-        return out
-    return None
+
+def _match_matched(ctx: SearchContext, spec: Any) -> DataFrame:
+    terms, op = _match_clause(ctx, spec, "match", _analyzer(ctx, True))
+    if ctx.reader is not None:
+        # indexed hit set: the kernel's match stream through docmap —
+        # no corpus re-tokenize for an aggs/sort body when an index
+        # exists (same dispatch rule as the top-k path)
+        from .wand import matched_ids_indexed
+
+        _require_doc_key(ctx)
+        return _docmap_ids(ctx, matched_ids_indexed(ctx.reader, terms, mode=op))
+    return _clause_ids(ctx, _tokens(ctx), terms, op)
+
+
+def _match_terms_of(ctx: SearchContext, spec: Any, what: str) -> list[str]:
+    return _match_clause(ctx, spec, "match", _analyzer(ctx, True))[0]
 
 
 def _multi_match_spec(ctx: SearchContext, spec: Any) -> tuple[dict, float]:
@@ -476,9 +843,7 @@ def _multi_match_spec(ctx: SearchContext, spec: Any) -> tuple[dict, float]:
     if mm_type not in ("best_fields", "most_fields"):
         raise DslError(f"[multi_match] type must be best_fields|most_fields "
                        f"(single-text-field corpus), got [{mm_type}]")
-    fields = spec.get("fields")
-    if not isinstance(fields, list) or not fields:
-        raise DslError("[multi_match] needs a non-empty [fields] list")
+    fields = _nonempty_list(spec, "fields", "multi_match")
     if len(fields) != 1:
         raise DslError(f"[multi_match] this corpus maps a single analyzed "
                        f"text field [{ctx.text_col}]; got {fields!r}")
@@ -490,35 +855,465 @@ def _multi_match_spec(ctx: SearchContext, spec: Any) -> tuple[dict, float]:
             boost = float(braw)
         except ValueError:
             raise DslError(f"[multi_match] bad field boost {braw!r}") from None
-        if not boost > 0:
+        if not boost > 0 or not math.isfinite(boost):
             raise DslError(f"[multi_match] field boost must be > 0, got {boost}")
     if fspec != ctx.text_col:
         raise DslError(f"[multi_match] field [{fspec}] is not [{ctx.text_col}]")
     params: dict = {"query": spec.get("query")}
     if "operator" in spec:
         params["operator"] = spec["operator"]
-    return {ctx.text_col: params}, boost
+    mspec = {ctx.text_col: params}
+    _match_params(ctx, mspec, "multi_match")
+    return mspec, boost
 
 
-def _boosted(s: DataFrame, boost: float) -> DataFrame:
+def _multi_match_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    mspec, boost = _multi_match_spec(ctx, spec)
+    return _boosted(_match_scores(ctx, mspec, "multi_match"), boost)
+
+
+def _multi_match_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    mspec, boost = _multi_match_spec(ctx, spec)
     if boost == 1.0:
-        return s
-    return s.select("doc_id", (F.col("score") * F.lit(boost)).alias("score"))
+        # boost-free multi_match IS the match query (single mapped text
+        # field) — reuse every match path, indexed included
+        return _topk_frame(ctx, {"match": mspec}, k)
+    if ctx.reader is not None:
+        from .wand import match_text_topk
+
+        _require_doc_key(ctx)
+        params = mspec[ctx.text_col]
+        top = match_text_topk(ctx.reader, params["query"], k=k,
+                              mode=params.get("operator", "or"))
+        return _ranked(_boosted(top, boost), ctx.id_col)
+    return _rank(_boosted(_match_scores(ctx, mspec, "multi_match"), boost), k)
 
 
-def _scores_frame(ctx: SearchContext, q: Any, what: str) -> DataFrame:
-    """Full raw (doc_id, score) frame for one scoring query — the
-    compound wrappers (``boosting``, ``function_score``) compose over
-    exactly the sub-query family the hybrid translator scores."""
-    if not isinstance(q, dict):
-        raise DslError(f"[{what}] expects a query object, got {q!r}")
-    try:
-        return _sub_scores(ctx, q, 0).drop("subquery_idx")
-    except DslError as e:
-        raise DslError(f"[{what}] {e}") from e
+# --- phrase family ------------------------------------------------------------
 
 
-# --- sub-query scorers (hybrid) ------------------------------------------
+def _phrase_tokens(ctx: SearchContext, spec: Any, what: str, analyzer: str,
+                   extra: str) -> tuple[dict, list[str]]:
+    """A phrase-shaped clause as (params, analyzed tokens IN ORDER)."""
+    params = _field_params(ctx, spec, what, "query", {"query", extra})
+    toks = analyze_query(_query_text(params, what), analyzer)  # order matters
+    if not toks:
+        raise DslError(f"[{what}] query analyzed to zero tokens")
+    return params, toks
+
+
+def _slop(params: dict, what: str) -> int:
+    return _int_param(params.get("slop", 0), f"{what}.slop", lo=0)
+
+
+def _expansions(params: dict, what: str) -> dict:
+    if "max_expansions" not in params:
+        return {}
+    return {"max_expansions": _int_param(params["max_expansions"],
+                                         f"{what}.max_expansions", lo=0)}
+
+
+def _phrase_frame(ctx: SearchContext, toks: list[str], slop: int,
+                  analyzer: str) -> DataFrame:
+    """Full raw (doc_id, score) for one (sloppy) phrase over the corpus:
+    PhraseQuery scores by term statistics; positions only gate
+    matching."""
+    from .exhaustive import bm25_phrase, bm25_phrase_sloppy
+
+    fn = bm25_phrase_sloppy if slop else bm25_phrase
+    kw = {"slop": slop} if slop else {}
+    return fn(ctx.docs, toks, id_col=ctx.id_col, text_col=ctx.text_col,
+              round_to=None, tokenizer=analyzer, **kw).select("doc_id", "score")
+
+
+def _phrase_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    """One ``match_phrase`` spec (slop included) — shared by the
+    exhaustive top-level body and hybrid sub-queries, which score their
+    FULL match set, raw, so the normalization statistics see every
+    phrase hit."""
+    an = _analyzer(ctx, False)
+    params, toks = _phrase_tokens(ctx, spec, "match_phrase", an, "slop")
+    return _phrase_frame(ctx, toks, _slop(params, "match_phrase"), an)
+
+
+def _phrase_indexed(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    from .phrase import bm25_phrase_indexed
+
+    params, toks = _phrase_tokens(ctx, spec, "match_phrase",
+                                  _analyzer(ctx, True), "slop")
+    top = bm25_phrase_indexed(ctx.reader, toks, k=k,
+                              slop=_slop(params, "match_phrase"))
+    return _ranked(top, ctx.id_col)
+
+
+def _phrase_terms(ctx: SearchContext, spec: Any, what: str) -> list[str]:
+    _, toks = _phrase_tokens(ctx, spec, "match_phrase", _analyzer(ctx, True),
+                             "slop")
+    return sorted(set(toks))
+
+
+def _phrase_prefix_topk(ctx: SearchContext, spec: Any, k: int,
+                        indexed: bool = False) -> DataFrame:
+    from .multiterm import phrase_prefix_topk, phrase_prefix_topk_indexed
+
+    an = _analyzer(ctx, indexed)
+    params, toks = _phrase_tokens(ctx, spec, "match_phrase_prefix", an,
+                                  "max_expansions")
+    kw = _expansions(params, "match_phrase_prefix")
+    if indexed:
+        return _ranked(phrase_prefix_topk_indexed(
+            ctx.reader, toks[:-1], toks[-1], k=k, **kw), ctx.id_col)
+    return phrase_prefix_topk(ctx.docs, toks[:-1], toks[-1], k=k, id_col=ctx.id_col,
+                              text_col=ctx.text_col, tokenizer=an, **kw)
+
+
+# --- multi-term family (prefix / wildcard / fuzzy / regexp) --------------------
+#
+# Each kind is one shared-SQL dictionary matcher (query/multiterm.py);
+# the exhaustive path expands it against the corpus dictionary, the
+# indexed path against the postings, and both score the expansion as
+# one rewritten boolean, round-then-rank. span_multi and the
+# query_string multi-term clauses build the same matchers.
+
+_MULTITERM_KINDS = ("prefix", "wildcard", "fuzzy", "regexp")
+_MULTITERM_EXTRA = {"fuzzy": {"fuzziness"}}
+
+
+def _multiterm_matcher(kind: str, value: str, edits: int) -> str:
+    from .multiterm import _matcher_sql, like_escape, regexp_matcher, wildcard_to_like
+
+    return {
+        "prefix": lambda: _matcher_sql(like=like_escape(value) + "%"),
+        "wildcard": lambda: _matcher_sql(like=wildcard_to_like(value)),
+        # the standalone fuzzy default is max_edits=1 on every path
+        "fuzzy": lambda: _matcher_sql(fuzzy=(value, edits, 0)),
+        "regexp": lambda: regexp_matcher(value),
+    }[kind]()
+
+
+def _multiterm_spec(ctx: SearchContext, kind: str, spec: Any,
+                    extra: set[str]) -> tuple[dict, str]:
+    """One multi-term clause → (params, matcher)."""
+    allowed = {"value"} | extra | _MULTITERM_EXTRA.get(kind, set())
+    params = _field_params(ctx, spec, kind, "value", allowed)
+    val = params.get("value")
+    if not isinstance(val, str):
+        raise DslError(f"[{kind}] needs a string [value]")
+    edits = _int_param(params.get("fuzziness", 1), f"{kind}.fuzziness")
+    with _rejects(kind):
+        return params, _multiterm_matcher(kind, val, edits)
+
+
+def _expansion_topk(ctx: SearchContext, matcher: str, k: int, kw: dict) -> DataFrame:
+    from .multiterm import expand_terms_corpus
+
+    an = _analyzer(ctx, False)
+    exp = expand_terms_corpus(ctx.docs, matcher=matcher, id_col=ctx.id_col,
+                              text_col=ctx.text_col, tokenizer=an, **kw)
+    if not exp:
+        return _no_hits(ctx)
+    return _rank(_bm25(ctx, exp, "or", an), k, round_first=True)
+
+
+def _expansion_indexed(ctx: SearchContext, matcher: str, k: int, kw: dict) -> DataFrame:
+    from .multiterm import multiterm_topk_indexed
+
+    return _ranked(multiterm_topk_indexed(ctx.reader, matcher=matcher, k=k, **kw),
+                   ctx.id_col)
+
+
+def _multiterm_topk(kind: str, expand: Callable, ctx: SearchContext, spec: Any,
+                    k: int) -> DataFrame:
+    """``expand`` is ``_expansion_topk`` or ``_expansion_indexed``."""
+    params, matcher = _multiterm_spec(ctx, kind, spec, {"max_expansions"})
+    return expand(ctx, matcher, k, _expansions(params, kind))
+
+
+# --- bool / dis_max / hybrid --------------------------------------------------
+
+
+def _bool_topk(ctx: SearchContext, spec: Any, k: int,
+               indexed: bool = False) -> DataFrame:
+    from .booleans import bool_clauses_topk, bool_clauses_topk_indexed
+
+    clauses, msm = _bool_spec(ctx, spec, indexed)
+    an = _analyzer(ctx, indexed)
+    if spec.get("filter"):
+        terms, op = _filter_must(spec, clauses)
+        pred = _filter_pred(ctx, spec["filter"])
+        if indexed:
+            # indexed FILTER occur: predicate pushed into the docs scan,
+            # mapped to per-segment allow-lists through docmap, AND-ed
+            # into the kernel — non-scoring, stats global
+            from .wand import bm25_topk_indexed
+
+            allowed = (ctx.reader.docmap().join(ctx.docs.where(pred), ctx.id_col)
+                       .select("nss_doc_id"))
+            return _ranked(bm25_topk_indexed(ctx.reader, terms, k=k, mode=op,
+                                             allowed=allowed), ctx.id_col)
+        from .filters import filtered_scores
+
+        return _rank(filtered_scores(_bm25(ctx, terms, op, an), ctx.docs, pred), k)
+    # per-CLAUSE semantics: each match clause is its own scorer (OR
+    # over its terms by default, AND with operator=and);
+    # minimum_should_match counts clauses, not terms
+    if indexed:
+        return bool_clauses_topk_indexed(ctx.reader, **clauses,
+                                         minimum_should_match=msm, k=k)
+    return bool_clauses_topk(ctx.docs, **clauses, minimum_should_match=msm, k=k,
+                             id_col=ctx.id_col, text_col=ctx.text_col, tokenizer=an)
+
+
+def _bool_matched(ctx: SearchContext, spec: Any) -> DataFrame:
+    clauses, msm = _bool_spec(ctx, spec, indexed=True,
+                              allowed=_BOOL_KEYS - {"filter"})
+    must, should, must_not = (clauses[key] for key in ("must", "should", "must_not"))
+    if not must and not should:
+        raise DslError("bool query needs at least one scoring clause")
+    if ctx.reader is not None:
+        # indexed bool hit set: per-clause kernel match streams through
+        # the SHARED gate builder (booleans.bool_gate_indexed — the same
+        # gate the indexed bool top-k uses, so search() and aggregate()
+        # match sets cannot drift), then docmap — no corpus re-tokenize
+        from .booleans import bool_gate_indexed
+
+        _require_doc_key(ctx)
+        gate = bool_gate_indexed(ctx.reader, must, should, must_not,
+                                 minimum_should_match=msm)
+        return _docmap_ids(ctx, gate)
+    tok = _tokens(ctx)
+    m = None
+    for terms, op in must:
+        f = _clause_ids(ctx, tok, terms, op)
+        m = f if m is None else m.join(f, ctx.id_col)
+    if should:
+        # count how many should clauses each doc matches
+        tagged = None
+        for i, (terms, op) in enumerate(should):
+            t = _clause_ids(ctx, tok, terms, op).select(ctx.id_col, F.lit(i).alias("_c"))
+            tagged = t if tagged is None else tagged.unionByName(t)
+        counts = tagged.groupBy(ctx.id_col).agg(F.count(F.lit(1)).alias("_ns"))
+        need = msm if msm > 0 else (0 if must else 1)
+        ok = counts.where(F.col("_ns") >= need).select(ctx.id_col)
+        # should is purely optional when must exists and msm=0
+        m = ok if m is None else (m.join(ok, ctx.id_col) if msm > 0 else m)
+    for terms, op in must_not:
+        m = m.join(_clause_ids(ctx, tok, terms, op), ctx.id_col, "left_anti")
+    return m.select(ctx.id_col)
+
+
+def _bool_terms(ctx: SearchContext, spec: Any, what: str) -> list[str]:
+    """The scoring terms of a bool body. For explain the per-term
+    contributions must sum EXACTLY to each hit's score, so every
+    scoring clause must be operator=or with no term repeated across
+    clauses (an AND clause can match partially without scoring; a
+    repeated term scores once per clause). must_not/filter clauses are
+    non-scoring — they shape the hit list (which comes from the
+    dispatched bool kernel) but never enter the breakdown."""
+    clauses, _ = _bool_spec(ctx, spec, indexed=True)
+    seen: set[str] = set()
+    for terms, op in clauses["must"] + clauses["should"]:
+        if what == "explain":
+            if op != "or":
+                raise DslError("[explain] bool clauses must be operator=or "
+                               "(a partially-matched AND clause breaks the "
+                               "contribution-sum invariant)")
+            if dup := seen & set(terms):
+                raise DslError(f"[explain] terms repeated across clauses "
+                               f"{sorted(dup)} would double-count")
+        seen |= set(terms)
+    if not seen:
+        raise DslError("bool query needs at least one scoring clause")
+    return sorted(seen)
+
+
+def _dis_max_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    from .booleans import dis_max_topk
+
+    _reject_unknown(spec, {"queries", "tie_breaker"}, "dis_max")
+    tb = _float_param(spec.get("tie_breaker", 0.0), "dis_max.tie_breaker")
+    if not 0.0 <= tb <= 1.0:
+        raise DslError(f"[dis_max] tie_breaker must be in [0, 1], got {tb}")
+    subs = _nonempty_list(spec, "queries", "dis_max")
+    parsed = [_one(sq, "dis_max sub-query") for sq in subs]
+    an = _analyzer(ctx, False)
+    if all(t == "match" for t, _ in parsed):
+        clauses = [_match_clause(ctx, s, "match", an) for _, s in parsed]
+        if all(op == "or" for _, op in clauses):
+            # all-OR fast path: every sub-query scores in ONE corpus
+            # traversal (bm25_scores_by_group)
+            return dis_max_topk(ctx.docs, [terms for terms, _ in clauses],
+                                tie_breaker=tb, k=k, id_col=ctx.id_col,
+                                text_col=ctx.text_col, tokenizer=an)
+        # all-match with an AND sub: per-sub frames straight from the
+        # already-parsed clauses (bm25_conjunctive for AND)
+        tagged = _tag([_bm25(ctx, terms, op, an) for terms, op in clauses])
+    else:
+        # heterogeneous sub-queries — the reference's own two-phase IT
+        # composes DisMax over neural_sparse + match_all
+        # (NeuralSparseTwoPhaseProcessorIT.java:427-430); per-sub score
+        # frames reduce by Lucene's DisjunctionMaxQuery rule:
+        # max + tie_breaker * (sum of the rest)
+        tagged = _tag([_scores(ctx, sq) for sq in subs])
+    scored = tagged.groupBy("doc_id").agg(
+        (F.max("score")
+         + F.lit(tb) * (F.sum("score") - F.max("score"))).alias("score"))
+    return _rank(scored, k)
+
+
+def _hybrid_tagged(ctx: SearchContext, spec: Any, pipeline: dict | None,
+                   k: int, from_: int) -> tuple[HybridSpec, DataFrame]:
+    """Validate one hybrid spec + pipeline config and score every
+    sub-query into one tagged (subquery_idx, doc_id, score) frame —
+    shared by the top-k and explain hybrid branches (one parse, one
+    dispatch). Hybrid cannot contain hybrid: only types whose handler
+    scores a full match set are sub-queries, which enforces the
+    top-level-only placement rule by construction (a `nested` sub-query
+    is a leaf here — its inner query scores child docs, never another
+    compound)."""
+    subs = _hybrid_subs(ctx, spec)
+    p = dict(pipeline or {})
+    _reject_unknown(p, {"normalization", "combination", "weights"}, "pipeline")
+    hs = HybridSpec(
+        n_subqueries=len(subs),
+        normalization=p.get("normalization", "min_max"),
+        combination=p.get("combination", "arithmetic_mean"),
+        weights=p.get("weights"), k=k, from_=from_,
+    ).validate()
+    return hs, _tag(subs)
+
+
+def _hybrid_subs(ctx: SearchContext, spec: Any) -> list[DataFrame]:
+    _reject_unknown(spec, {"queries"}, "hybrid")
+    return [_scores(ctx, sq) for sq in _nonempty_list(spec, "queries", "hybrid")]
+
+
+def _hybrid_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    raise DslError("[hybrid] is only valid as the top-level query of a "
+                   "search body")
+
+
+def _hybrid_matched(ctx: SearchContext, spec: Any) -> DataFrame:
+    # a hybrid's hit set is the UNION of its sub-queries' matches
+    # (HybridQueryScorer iterates all sub-scorers; totalHits counts
+    # any-match docs) — aggs then run over every matched doc
+    return _ids(ctx, _tag(_hybrid_subs(ctx, spec)))
+
+
+# --- vectors --------------------------------------------------------------------
+
+
+def _pool(params: dict, what: str, size: int | None) -> int:
+    """The vector query's own k is the ANN candidate pool (default 10);
+    as a top-level query the BODY ``size`` bounds the returned hits. One
+    rule for that case: the pool is never smaller than the size — a
+    missing k defaults to max(size, 10), an explicit k < size is
+    widened to size (so size hits always come back)."""
+    if size is None:
+        return _int_param(params.get("k", 10), f"{what}.k", lo=0)
+    if "k" not in params:
+        return max(size, 10)
+    return max(_int_param(params["k"], f"{what}.k", lo=0), size)
+
+
+def _neural_hits(ctx: SearchContext, spec: Any, size: int | None) -> DataFrame:
+    _, params = _one(spec, "neural")
+    params = _params(params, "query_vector_id")
+    _reject_unknown(params, {"query_vector_id", "k", "ef"}, "neural")
+    if ctx.embeddings is None:
+        raise DslError("neural query needs ctx.embeddings")
+    qid = _int_param(params.get("query_vector_id"), "neural.query_vector_id")
+    k = _pool(params, "neural", size)
+    kw = {"ef": _int_param(params["ef"], "neural.ef", lo=1)} if "ef" in params else {}
+    if ctx.graphs is not None:
+        from ..pipeline.graph_ann import hnsw_topk
+
+        return hnsw_topk(ctx.embeddings, qid, k=k, graphs=ctx.graphs, **kw)
+    from ..pipeline.similarity import cosine_topk
+
+    return cosine_topk(ctx.embeddings, qid, k=k)
+
+
+def _vector_param(val: Any, what: str) -> list[float]:
+    if not isinstance(val, list) or not val:
+        raise DslError(f"[{what}] needs a non-empty numeric vector")
+    return [_float_param(x, what) for x in val]
+
+
+def _knn_hits(ctx: SearchContext, spec: Any, size: int | None) -> DataFrame:
+    """Raw ``knn`` query — the builder NeuralQueryBuilder.doRewrite
+    actually produces (KNNQueryBuilder: field + literal vector + k +
+    optional filter, NeuralQueryBuilder.java:300-325). The vector is
+    carried in the body, so scoring is exact brute force against the
+    literal; ``filter`` restricts candidates pre-scoring (the k-NN
+    engine's efficient-filter slot), a term/terms/range/exists DSL
+    object over the embedding table's columns."""
+    from ..pipeline.similarity import cosine_topk_vector
+
+    field, params = _one(spec, "knn")
+    if ctx.embeddings is None:
+        raise DslError("knn query needs ctx.embeddings")
+    _reject_unknown(params, {"vector", "k", "filter"}, "knn")
+    if field not in ctx.embeddings.columns or field == "vec_id":
+        raise DslError(f"[knn] field [{field}] is not a vector column of "
+                       "the embedding table")
+    vec = _vector_param(params.get("vector"), "knn.vector")
+    k = _pool(params, "knn", size)
+    pred = None
+    if "filter" in params:
+        if not isinstance(params["filter"], dict):
+            raise DslError("[knn] filter must be a query object")
+        pred = _predicate_sql(params["filter"], _schema(ctx.embeddings))
+    return cosine_topk_vector(ctx.embeddings, vec, k=k,
+                              vec_col=field, predicate=pred)
+
+
+def _vector_handler(hits: Callable[[SearchContext, Any, int | None], DataFrame]) -> _Handler:
+    """(vec_id, cos) hits → a handler: as a sub-query the candidate pool
+    enters normalization raw; at top level the pool is cut to size."""
+    def scores(ctx: SearchContext, spec: Any) -> DataFrame:
+        return hits(ctx, spec, None).select(F.col("vec_id").alias("doc_id"),
+                                            F.col("cos").alias("score"))
+
+    def topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+        w = F.row_number().over(Window.orderBy(F.col("cos").desc(), F.col("vec_id").asc()))
+        return hits(ctx, spec, k).select(
+            F.col("vec_id").alias("doc_id"), F.round("cos", 4).alias("score"),
+            w.cast("int").alias("rank")).where(F.col("rank") <= k)
+
+    return _Handler(scores=scores, topk=topk)
+
+
+def _query_tokens(params: dict, what: str) -> dict:
+    qt = params.get("query_tokens")
+    if not isinstance(qt, dict) or not all(
+            isinstance(t, str) and isinstance(w, (int, float))
+            and not isinstance(w, bool) and math.isfinite(w)
+            for t, w in qt.items()):
+        raise DslError(f"[{what}] needs a {{token: number}} query_tokens object")
+    return qt
+
+
+def _sparse_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    _, params = _one(spec, "neural_sparse")
+    params = _params(params, "query_tokens")
+    _reject_unknown(params, {"query_tokens", "k"}, "neural_sparse")
+    if ctx.sparse_features is None:
+        raise DslError("neural_sparse needs ctx.sparse_features")
+    qt = dict(_query_tokens(params, "neural_sparse"))
+    if "k" in params:
+        from .sparse import sparse_topk_two_phase
+
+        return sparse_topk_two_phase(
+            ctx.sparse_features, qt,
+            k=_int_param(params["k"], "neural_sparse.k", lo=0), round_to=None,
+        ).select("doc_id", "score")
+    # no k → the sub-query scores its FULL match set, exactly like the
+    # engine's exhaustive hybrid twins (normalization statistics then
+    # see every matched doc, not a cut)
+    from .sparse import sparse_scores
+
+    return sparse_scores(ctx.sparse_features, qt).select("doc_id", "score")
 
 
 def _nested_scores(ctx: SearchContext, spec: Any) -> DataFrame:
@@ -531,8 +1326,6 @@ def _nested_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     every matched doc."""
     from ..operators.nested import NESTED_SCORE_MODES, nested_chunk_scores
 
-    if not isinstance(spec, dict):
-        raise DslError(f"[nested] expects an object, got {spec!r}")
     _reject_unknown(spec, {"path", "query", "score_mode"}, "nested")
     if ctx.nested_path is None or ctx.nested_delimiter is None:
         raise DslError("nested query needs ctx.nested_path + "
@@ -542,7 +1335,7 @@ def _nested_scores(ctx: SearchContext, spec: Any) -> DataFrame:
         raise DslError(f"[nested] unknown path [{spec.get('path')}]; the "
                        f"corpus defines [{ctx.nested_path}]")
     mode = spec.get("score_mode", "avg")
-    if mode not in NESTED_SCORE_MODES:
+    if not isinstance(mode, str) or mode not in NESTED_SCORE_MODES:
         raise DslError(f"[nested] score_mode must be one of "
                        f"{sorted(NESTED_SCORE_MODES)}, got [{mode}]")
     ityp, ispec = _one(spec.get("query"), "nested inner query")
@@ -553,41 +1346,23 @@ def _nested_scores(ctx: SearchContext, spec: Any) -> DataFrame:
         # the deterministic ingest encodings (nested_chunk_encode)
         from ..operators.nested import nested_sparse_scores
 
-        field, params = _one(ispec, "neural_sparse")
-        expected = f"{ctx.nested_path}.sparse"
-        if field != expected:
-            raise DslError(f"[nested] neural_sparse field [{field}] must "
-                           f"address the nested encoding [{expected}]")
-        params = _params(params, "query_tokens")
-        _reject_unknown(params, {"query_tokens"}, "neural_sparse")
-        qt = params["query_tokens"]
-        if not isinstance(qt, dict) or not qt or not all(
-                isinstance(k, str) and isinstance(v, (int, float))
-                and not isinstance(v, bool) for k, v in qt.items()):
+        params = _field_params(ctx, ispec, "nested.neural_sparse", "query_tokens",
+                               {"query_tokens"}, field=f"{ctx.nested_path}.sparse")
+        qt = _query_tokens(params, "nested.neural_sparse")
+        if not qt:
             raise DslError("[nested] neural_sparse needs a non-empty "
                            "{token: number} query_tokens object")
         return nested_sparse_scores(
-            ctx.docs, {k: float(v) for k, v in qt.items()},
+            ctx.docs, {t: float(w) for t, w in qt.items()},
             ctx.nested_delimiter, score_mode=mode,
             id_col=ctx.id_col, text_col=ctx.text_col,
         )
     if ityp != "match":
         raise DslError(f"[nested] inner query type [{ityp}] unsupported; "
                        "supported: match, neural_sparse")
-    field, params = _one(ispec, "match")
-    params = _params(params, "query")
-    _reject_unknown(params, {"query", "operator"}, "match")
-    expected = f"{ctx.nested_path}.{ctx.text_col}"
-    if field != expected:
-        raise DslError(f"[nested] match field [{field}] must address the "
-                       f"nested text field [{expected}]")
-    op = params.get("operator", "or")
-    if op not in ("or", "and"):
-        raise DslError(f"[nested] match operator must be or|and, got [{op}]")
-    text = params["query"]
-    if not isinstance(text, str) or not text.strip():
-        raise DslError("[nested] match needs a non-empty query string")
-    terms = sorted(set(analyze_query(text, ctx.analyzer)))
+    params, op = _match_params(ctx, ispec, "nested.match",
+                               field=f"{ctx.nested_path}.{ctx.text_col}")
+    terms = sorted(set(analyze_query(params["query"], _analyzer(ctx, False))))
     if not terms:
         raise DslError("[nested] match query analyzed to zero tokens")
     return nested_chunk_scores(
@@ -596,583 +1371,7 @@ def _nested_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     )
 
 
-def _hybrid_tagged(ctx: SearchContext, spec: Any, pipeline: dict | None,
-                   k: int, from_: int) -> tuple[HybridSpec, DataFrame]:
-    """Validate one hybrid spec + pipeline config and score every
-    sub-query into one tagged (subquery_idx, doc_id, score) frame —
-    shared by the top-k and explain hybrid branches (one parse, one
-    dispatch; malformed bodies raise DslError, never KeyError)."""
-    _reject_unknown(spec, {"queries"}, "hybrid")
-    subs = spec.get("queries")
-    if not isinstance(subs, list) or not subs:
-        raise DslError("[hybrid] needs a non-empty [queries] list")
-    p = dict(pipeline or {})
-    _reject_unknown(p, {"normalization", "combination", "weights"}, "pipeline")
-    hs = HybridSpec(
-        n_subqueries=len(subs),
-        normalization=p.get("normalization", "min_max"),
-        combination=p.get("combination", "arithmetic_mean"),
-        weights=p.get("weights"), k=k, from_=from_,
-    ).validate()
-    tagged = None
-    for i, sq in enumerate(subs):
-        s = _sub_scores(ctx, sq, i)
-        tagged = s if tagged is None else tagged.unionByName(s)
-    return hs, tagged
-
-
-def _phrase_scores(ctx: SearchContext, spec: Any) -> DataFrame:
-    """Full-frame raw scores for one ``match_phrase`` spec (slop
-    included) — shared by the exhaustive top-level body and hybrid
-    sub-queries (PhraseQuery scores by term statistics; positions only
-    gate matching)."""
-    from .exhaustive import bm25_phrase, bm25_phrase_sloppy
-
-    field, params = _one(spec, "match_phrase")
-    params = _params(params, "query")
-    _reject_unknown(params, {"query", "slop"}, "match_phrase")
-    if field != ctx.text_col:
-        raise DslError(f"[match_phrase] field [{field}] is not "
-                       f"[{ctx.text_col}]")
-    toks = analyze_query(params["query"], ctx.analyzer)  # order matters
-    if not toks:
-        raise DslError("[match_phrase] query analyzed to zero tokens")
-    slop = int(params.get("slop", 0))
-    kw = dict(id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
-              tokenizer=ctx.analyzer)
-    s = (
-        bm25_phrase_sloppy(ctx.docs, toks, slop=slop, **kw)
-        if slop
-        else bm25_phrase(ctx.docs, toks, **kw)
-    )
-    return s.select("doc_id", "score")
-
-
-_SPAN_CLAUSE_TYPES = ("span_term", "span_or", "span_multi")
-
-
-def _span_term_value(ctx: SearchContext, spec: Any) -> str:
-    """SpanTermQuery takes the term VERBATIM (no query-time analysis,
-    like Lucene); a value that is not already one analyzed token would
-    silently match nothing, so it is rejected loudly instead."""
-    field, params = _one(spec, "span_term")
-    if field != ctx.text_col:
-        raise DslError(f"[span_term] field [{field}] is not the corpus "
-                       f"text column [{ctx.text_col}]")
-    params = _params(params, "value")
-    _reject_unknown(params, {"value"}, "span_term")
-    val = params.get("value")
-    if not isinstance(val, str) or not val:
-        raise DslError("[span_term] needs a non-empty string [value]")
-    if analyze_query(val, ctx.analyzer) != [val]:
-        raise DslError(f"[span_term] takes one already-analyzed term; "
-                       f"[{val}] is not a single normalized token under "
-                       f"the [{ctx.analyzer}] analyzer")
-    return val
-
-
-def _span_multi_matcher(ctx: SearchContext, spec: Any) -> str:
-    """span_multi: a prefix / wildcard / fuzzy / regexp query wrapped
-    for position-level matching (SpanMultiTermQueryWrapper). Returns
-    the shared Spark/DuckDB dictionary matcher; the wrapped builder's
-    own validation rules apply unchanged."""
-    from .multiterm import (
-        _matcher_sql,
-        like_escape,
-        regexp_matcher,
-        wildcard_to_like,
-    )
-
-    _reject_unknown(spec, {"match"}, "span_multi")
-    if "match" not in spec:
-        raise DslError("[span_multi] needs a [match] query")
-    ityp, ispec = _one(spec["match"], "span_multi.match")
-    if ityp not in ("prefix", "wildcard", "fuzzy", "regexp"):
-        raise DslError(f"[span_multi] match type [{ityp}] unsupported; "
-                       "supported: prefix, wildcard, fuzzy, regexp")
-    field, params = _one(ispec, ityp)
-    if field != ctx.text_col:
-        raise DslError(f"[span_multi.{ityp}] field [{field}] is not the "
-                       f"corpus text column [{ctx.text_col}]")
-    params = _params(params, "value")
-    allowed = {"value"} | ({"fuzziness"} if ityp == "fuzzy" else set())
-    _reject_unknown(params, allowed, f"span_multi.{ityp}")
-    val = params.get("value")
-    if not isinstance(val, str) or not val:
-        raise DslError(f"[span_multi.{ityp}] needs a non-empty [value]")
-    try:
-        if ityp == "prefix":
-            return _matcher_sql(like=like_escape(val) + "%")
-        if ityp == "wildcard":
-            return _matcher_sql(like=wildcard_to_like(val))
-        if ityp == "regexp":
-            return regexp_matcher(val)
-        # same default max_edits as the standalone fuzzy query (the
-        # exhaustive fuzzy_topk and the indexed dispatch both use 1)
-        return _matcher_sql(fuzzy=(val, int(params.get("fuzziness", 1)), 0))
-    except (TypeError, ValueError) as e:
-        raise DslError(f"[span_multi.{ityp}] {e}") from e
-
-
-def _span_clause_terms(ctx: SearchContext, q: Any, what: str) -> list[str]:
-    """A span clause as its position SET: the corpus terms whose
-    occurrences the clause's iterator would enumerate. span_multi
-    expands against the corpus dictionary under the same
-    max_expansions=50 top-terms cut as the standalone multi-term
-    rewrites; an empty list means the clause matches nothing."""
-    from .multiterm import expand_terms_corpus
-
-    typ, spec = _one(q, what)
-    if typ == "span_term":
-        return [_span_term_value(ctx, spec)]
-    if typ == "span_multi":
-        if not isinstance(spec, dict):
-            raise DslError("[span_multi] must be an object")
-        matcher = _span_multi_matcher(ctx, spec)
-        if ctx.reader is not None:
-            # index-backed dictionary — identical term set by
-            # construction (same corpus, same df ordering)
-            from .multiterm import expand_terms_indexed
-
-            return expand_terms_indexed(ctx.reader, matcher=matcher)
-        return expand_terms_corpus(ctx.docs, matcher=matcher,
-                                   id_col=ctx.id_col, text_col=ctx.text_col,
-                                   tokenizer=ctx.analyzer)
-    if typ == "span_or":
-        if not isinstance(spec, dict):
-            raise DslError("[span_or] must be an object")
-        _reject_unknown(spec, {"clauses"}, "span_or")
-        clauses = spec.get("clauses")
-        if not isinstance(clauses, list) or not clauses:
-            raise DslError("[span_or] needs a non-empty [clauses] list")
-        out: set[str] = set()
-        for c in clauses:
-            sub_typ, _ = _one(c, "span_or clause")
-            if sub_typ == "span_or":
-                raise DslError("[span_or] nested span_or is unsupported; "
-                               "flatten the clauses")
-            out.update(_span_clause_terms(ctx, c, "span_or clause"))
-        return sorted(out)
-    raise DslError(f"[{what}] span clause type [{typ}] unsupported; "
-                   "supported: span_term, span_or, span_multi")
-
-
-def _int_param(val: Any, what: str, default: int | None = None) -> int:
-    if val is None and default is not None:
-        return default
-    if isinstance(val, bool) or not isinstance(val, int):
-        raise DslError(f"[{what}] must be an integer, got {val!r}")
-    return val
-
-
-def _near_plan(ctx: SearchContext, nspec: Any,
-               max_end: int | None = None) -> dict | None:
-    from .spans import MAX_ORDERED_CLAUSES, _clause_map
-
-    if not isinstance(nspec, dict):
-        raise DslError("[span_near] must be an object")
-    _reject_unknown(nspec, {"clauses", "slop", "in_order"}, "span_near")
-    clauses = nspec.get("clauses")
-    if not isinstance(clauses, list) or len(clauses) < 2:
-        raise DslError("[span_near] needs a [clauses] list of >= 2 "
-                       "span queries")
-    in_order = nspec.get("in_order", True)
-    if not isinstance(in_order, bool):
-        raise DslError("[span_near] in_order must be a boolean")
-    if in_order and len(clauses) > MAX_ORDERED_CLAUSES:
-        raise DslError(f"[span_near] ordered span_near supports at most "
-                       f"{MAX_ORDERED_CLAUSES} clauses, got {len(clauses)}")
-    if not in_order and len(clauses) != 2:
-        raise DslError("[span_near] unordered span_near supports "
-                       "exactly 2 clauses")
-    slop = _int_param(nspec.get("slop"), "span_near.slop", default=0)
-    if slop < 0:
-        raise DslError(f"[span_near] slop must be >= 0, got {slop}")
-    sets = [_span_clause_terms(ctx, c, "span_near clause") for c in clauses]
-    try:
-        # disjointness; empty expansions get unique placeholders so the
-        # provably-empty case still returns None below instead of raising
-        _clause_map([s or [f"__missing_{i}__"] for i, s in enumerate(sets)])
-    except ValueError as e:
-        raise DslError(f"[span_near] {e}") from e
-    if any(not s for s in sets):
-        return None
-    return {"kind": "near", "required": sets, "slop": slop,
-            "in_order": in_order, "max_end": max_end}
-
-
-def _span_plan(ctx: SearchContext, typ: str, spec: Any) -> dict | None:
-    """Parse a span query into the normalized plan both executors
-    consume (query/spans.py exhaustively; query/spans_indexed.py over
-    the positional index). None = provably empty (a clause's dictionary
-    expansion matched no term)."""
-    if not isinstance(spec, dict):
-        raise DslError(f"[{typ}] must be an object")
-    if typ in _SPAN_CLAUSE_TYPES:
-        terms = _span_clause_terms(ctx, {typ: spec}, typ)
-        return {"kind": "set", "required": [terms]} if terms else None
-    if typ == "span_near":
-        return _near_plan(ctx, spec)
-    if typ in ("span_containing", "span_within"):
-        # SpanContainingQuery / SpanWithinQuery: BIG spans that contain
-        # a little occurrence survive (containing scores the big spans,
-        # within the little ones). big = an ordered span_near; little =
-        # a single-token span clause
-        _reject_unknown(spec, {"big", "little"}, typ)
-        if "big" not in spec or "little" not in spec:
-            raise DslError(f"[{typ}] needs [big] and [little]")
-        btyp, bspec = _one(spec["big"], f"{typ}.big")
-        if btyp != "span_near":
-            raise DslError(f"[{typ}] big must be a span_near, got [{btyp}]")
-        # structural check BEFORE expansion — an empty dictionary
-        # expansion must not data-dependently accept an invalid shape
-        if isinstance(bspec, dict) and bspec.get("in_order", True) is not True:
-            raise DslError(f"[{typ}] big span_near must be in_order")
-        bplan = _near_plan(ctx, bspec)
-        little = _span_clause_terms(ctx, spec["little"], f"{typ}.little")
-        if bplan is None or not little:
-            return None
-        big_terms = {t for terms in bplan["required"] for t in terms}
-        if big_terms & set(little):
-            raise DslError(f"[{typ}] big/little term sets overlap: "
-                           f"{sorted(big_terms & set(little))}")
-        return {"kind": "contain", "required": bplan["required"],
-                "little": little, "slop": bplan["slop"],
-                "within": typ == "span_within"}
-    if typ == "span_first":
-        _reject_unknown(spec, {"match", "end"}, "span_first")
-        if "match" not in spec or "end" not in spec:
-            raise DslError("[span_first] needs [match] and [end]")
-        end = _int_param(spec["end"], "span_first.end")
-        if end < 0:
-            raise DslError(f"[span_first] end must be >= 0, got {end}")
-        ityp, ispec = _one(spec["match"], "span_first.match")
-        if ityp == "span_near":
-            return _near_plan(ctx, ispec, max_end=end)
-        if ityp in _SPAN_CLAUSE_TYPES:
-            terms = _span_clause_terms(ctx, spec["match"], "span_first.match")
-            if not terms:
-                return None
-            return {"kind": "set", "required": [terms], "max_end": end}
-        raise DslError(f"[span_first] match type [{ityp}] unsupported; "
-                       "supported: span_term, span_or, span_multi, "
-                       "span_near")
-    # span_not
-    _reject_unknown(spec, {"include", "exclude", "pre", "post", "dist"},
-                    "span_not")
-    if "include" not in spec or "exclude" not in spec:
-        raise DslError("[span_not] needs [include] and [exclude]")
-    if "dist" in spec and ("pre" in spec or "post" in spec):
-        raise DslError("[span_not] dist is shorthand for pre+post; give "
-                       "one or the other")
-    dist = _int_param(spec.get("dist"), "span_not.dist", default=0)
-    pre = _int_param(spec.get("pre"), "span_not.pre", default=dist)
-    post = _int_param(spec.get("post"), "span_not.post", default=dist)
-    if pre < 0 or post < 0:
-        raise DslError(f"[span_not] pre/post must be >= 0, got {pre}/{post}")
-    include = _span_clause_terms(ctx, spec["include"], "span_not.include")
-    exclude = _span_clause_terms(ctx, spec["exclude"], "span_not.exclude")
-    if set(include) & set(exclude):
-        raise DslError("[span_not] include/exclude term sets overlap: "
-                       f"{sorted(set(include) & set(exclude))}")
-    if not include:
-        return None
-    if not exclude:
-        # nothing to exclude: plain span over the include set
-        return {"kind": "set", "required": [include]}
-    return {"kind": "not", "required": [include], "exclude": exclude,
-            "pre": pre, "post": post}
-
-
-def _intervals_plan(ctx: SearchContext, spec: Any,
-                    analyzer: str | None = None) -> tuple:
-    """Parse an ``intervals`` body into (clause term sets, max_gaps,
-    ordered). Supported sources: ``match`` (one single-term clause per
-    analyzed token, position order preserved) and ``any_of`` over
-    single-term matches (one union clause — every occurrence is a
-    length-1 minimal interval). The filter algebra (all_of, prefix,
-    before/after/containing, ...) is rejected by name. ``analyzer``
-    lets the indexed dispatch analyze with the index's OWN analyzer
-    (the reader-path convention); the exhaustive executor passes
-    ctx.analyzer so query and corpus tokenize identically."""
-    analyzer = analyzer or ctx.analyzer
-    if not isinstance(spec, dict):
-        raise DslError("[intervals] must be an object")
-    field, src = _one(spec, "intervals")
-    if field != ctx.text_col:
-        raise DslError(f"[intervals] field [{field}] is not the corpus "
-                       f"text column [{ctx.text_col}]")
-    styp, sspec = _one(src, "intervals source")
-    if styp == "match":
-        if not isinstance(sspec, dict):
-            raise DslError("[intervals.match] must be an object")
-        _reject_unknown(sspec, {"query", "max_gaps", "ordered"},
-                        "intervals.match")
-        query = sspec.get("query")
-        if not isinstance(query, str) or not query.strip():
-            raise DslError("[intervals.match] needs a non-empty [query]")
-        toks = analyze_query(query, analyzer)  # order matters
-        if not toks:
-            raise DslError("[intervals.match] query analyzed to zero tokens")
-        if len(set(toks)) != len(toks):
-            raise DslError("[intervals.match] repeated terms are "
-                           "unsupported (the position tagging would be "
-                           "ambiguous)")
-        ordered = sspec.get("ordered", False)
-        if not isinstance(ordered, bool):
-            raise DslError("[intervals.match] ordered must be a boolean")
-        from .spans import MAX_ORDERED_CLAUSES
-
-        if ordered and len(toks) > MAX_ORDERED_CLAUSES:
-            raise DslError(f"[intervals.match] ordered supports at most "
-                           f"{MAX_ORDERED_CLAUSES} terms, got {len(toks)}")
-        if not ordered and len(toks) > 2:
-            raise DslError("[intervals.match] unordered supports at most "
-                           f"2 terms, got {len(toks)}")
-        max_gaps = _int_param(sspec.get("max_gaps"), "intervals.match"
-                              ".max_gaps", default=-1)
-        if max_gaps < -1:
-            raise DslError(f"[intervals.match] max_gaps must be >= -1, "
-                           f"got {max_gaps}")
-        return [[t] for t in toks], max_gaps, ordered
-    if styp == "any_of":
-        if not isinstance(sspec, dict):
-            raise DslError("[intervals.any_of] must be an object")
-        _reject_unknown(sspec, {"intervals"}, "intervals.any_of")
-        subs = sspec.get("intervals")
-        if not isinstance(subs, list) or not subs:
-            raise DslError("[intervals.any_of] needs a non-empty "
-                           "[intervals] list")
-        terms: set[str] = set()
-        for sub in subs:
-            sub_typ, sub_spec = _one(sub, "intervals.any_of entry")
-            if sub_typ != "match":
-                raise DslError("[intervals.any_of] entries must be "
-                               "single-term [match] sources")
-            if not isinstance(sub_spec, dict):
-                raise DslError("[intervals.any_of.match] must be an object")
-            _reject_unknown(sub_spec, {"query"}, "intervals.any_of.match")
-            sub_q = sub_spec.get("query")
-            if not isinstance(sub_q, str) or not sub_q.strip():
-                raise DslError("[intervals.any_of.match] needs a non-empty "
-                               "string [query]")
-            sub_toks = analyze_query(sub_q, analyzer)
-            if len(sub_toks) != 1:
-                raise DslError("[intervals.any_of] entries must analyze "
-                               "to exactly one term")
-            terms.add(sub_toks[0])
-        return [sorted(terms)], -1, False
-    raise DslError(f"[intervals] source [{styp}] unsupported; supported: "
-                   "match, any_of")
-
-
-def _intervals_scores(ctx: SearchContext, spec: Any,
-                      round_to: int | None = None) -> DataFrame:
-    from .intervals import interval_scores
-
-    clauses, max_gaps, ordered = _intervals_plan(ctx, spec)
-    try:
-        return interval_scores(
-            ctx.docs, clauses, max_gaps=max_gaps, ordered=ordered,
-            analyzer=ctx.analyzer, id_col=ctx.id_col, text_col=ctx.text_col,
-            round_to=round_to,
-        ).select("doc_id", "score")
-    except ValueError as e:
-        raise DslError(f"[intervals] {e}") from e
-
-
-def _span_scores(ctx: SearchContext, typ: str, spec: Any,
-                 round_to: int | None = None) -> DataFrame:
-    """Full-frame (doc_id, score) for any span query — the shape
-    hybrid normalization (raw, round_to=None) and the exhaustive top-k
-    (round_to=4: the dictionary-expansion convention — pre-round the
-    cross-engine-ULP-prone sums BEFORE ranking) both consume.
-    Semantics and scoring: query/spans.py module docstring."""
-    from .spans import span_near_scores, span_not_scores, span_set_scores
-
-    plan = _span_plan(ctx, typ, spec)
-    if plan is None:
-        return ctx.docs.where(F.lit(False)).select(
-            F.col(ctx.id_col).alias("doc_id"),
-            F.lit(0.0).cast("double").alias("score"),
-        )
-
-    def call(fn, *args, **kwargs):
-        kwargs.update(analyzer=ctx.analyzer, id_col=ctx.id_col,
-                      text_col=ctx.text_col, round_to=round_to)
-        try:
-            return fn(ctx.docs, *args, **kwargs).select("doc_id", "score")
-        except ValueError as e:
-            raise DslError(f"[{typ}] {e}") from e
-
-    if plan["kind"] == "set":
-        return call(span_set_scores, plan["required"][0],
-                    max_end=plan.get("max_end"))
-    if plan["kind"] == "not":
-        return call(span_not_scores, plan["required"][0], plan["exclude"],
-                    pre=plan["pre"], post=plan["post"])
-    if plan["kind"] == "contain":
-        from .spans import span_contain_scores
-
-        return call(span_contain_scores, plan["required"], plan["little"],
-                    slop=plan["slop"], within=plan["within"])
-    return call(span_near_scores, plan["required"], slop=plan["slop"],
-                in_order=plan["in_order"], max_end=plan.get("max_end"))
-
-
-def _prefix_matcher_sql(prefix: str) -> str:
-    from .multiterm import _matcher_sql, like_escape
-
-    return _matcher_sql(like=like_escape(prefix) + "%")
-
-
-def _prefix_const_frame(ctx: SearchContext, prefix: str) -> DataFrame:
-    """Constant-score prefix clause: docs with ≥1 analyzed token
-    starting with the normalized prefix score 1.0 — Lucene PrefixQuery
-    under SimpleQueryParser's constant-score rewrite. Routed through
-    the shared matcher frame (index kernel when ctx.reader is set)."""
-    return _matcher_const_frame(ctx, _prefix_matcher_sql(prefix))
-
-
-def _simple_query_scores(ctx: SearchContext, spec: Any) -> DataFrame:
-    """``simple_query_string`` body → full raw (doc_id, score) frame.
-    The parsed clauses score like BooleanQuery: each matched scoring
-    clause contributes its BM25 (phrases their phrase-gated BM25,
-    prefixes constant 1.0), summed per doc; AND mode gates on every
-    clause, OR mode on max(minimum_should_match, 1) clauses; ``-``
-    clauses exclude their match set. All positive term chunks batch
-    into ONE corpus traversal (bm25_scores_by_group — the msearch
-    membership-table shape), so clause count never multiplies corpus
-    passes; phrase / prefix / negated / conjunctive-chunk clauses get
-    one frame each. ``minimum_should_match`` is ignored in AND mode
-    (every clause is already MUST — the reference's msm applies to
-    optional clauses only)."""
-    from ..functions.tokenize import resolve_analyzer
-    from .exhaustive import bm25_scores_by_group
-    from .simpleq import parse_simple_query
-
-    if not isinstance(spec, dict):
-        raise DslError(f"[simple_query_string] expects an object, got {spec!r}")
-    _reject_unknown(spec, {"query", "fields", "default_operator",
-                           "minimum_should_match"}, "simple_query_string")
-    fields = spec.get("fields", [ctx.text_col])
-    if fields != [ctx.text_col]:
-        raise DslError(
-            f"[simple_query_string] fields must be [{ctx.text_col!r}] — the "
-            f"corpus's one analyzed text field — got {fields!r}")
-    default_op = spec.get("default_operator", "or")
-    mode, leaves = parse_simple_query(spec.get("query"), default_op)
-    # with an index: the index's analyzer + kernel dispatch per clause
-    # (no corpus re-tokenize) — same routing as query_string
-    indexed = ctx.reader is not None
-    analyzer = ctx.index_analyzer() if indexed else ctx.analyzer
-    lower = resolve_analyzer(analyzer)[2]
-
-    or_groups: list[list[str]] = []
-    frames: list[DataFrame] = []
-    neg: list[DataFrame] = []
-    n_pos = 0
-    for leaf in leaves:
-        if leaf.kind == "chunk":
-            terms = analyze_query(leaf.text, analyzer)
-            if not terms:
-                continue  # an all-delimiter chunk analyzes away (Lucene drops it)
-            conj = default_op == "and" and len(terms) > 1
-            if not indexed and not leaf.negated and not conj:
-                or_groups.append(terms)
-                n_pos += 1
-                continue
-            frame = _term_clause_frame(ctx, terms, conj)
-        elif leaf.kind == "phrase":
-            toks = analyze_query(leaf.text, analyzer)
-            if not toks:
-                continue
-            frame = _phrase_clause_frame(ctx, toks, 0)
-        else:  # prefix
-            pfx = leaf.text.lower() if lower else leaf.text
-            frame = _matcher_const_frame(ctx, _prefix_matcher_sql(pfx))
-        if leaf.negated:
-            neg.append(frame.select("doc_id"))
-        else:
-            frames.append(frame)
-            n_pos += 1
-    if n_pos == 0:
-        raise DslError("[simple_query_string] needs at least one positive "
-                       "clause (all clauses were negated or analyzed away)")
-    msm = _msm_int(spec.get("minimum_should_match", 0),
-                   "simple_query_string")
-    need = n_pos if mode == "and" else max(msm, 1)
-    if need > n_pos:
-        raise DslError(f"[simple_query_string] minimum_should_match={msm} "
-                       f"exceeds the {n_pos} positive clauses")
-    tagged = None
-    if or_groups:
-        tagged = bm25_scores_by_group(
-            ctx.docs, or_groups, id_col=ctx.id_col, text_col=ctx.text_col,
-            tokenizer=analyzer,
-        ).withColumnRenamed("subquery_idx", "cid")
-    for j, frame in enumerate(frames):
-        t = frame.select(F.lit(len(or_groups) + j).alias("cid"),
-                         "doc_id", "score")
-        tagged = t if tagged is None else tagged.unionByName(t)
-    agg = tagged.groupBy("doc_id").agg(
-        F.sum("score").alias("score"),
-        F.countDistinct("cid").alias("nss_n"),
-    )
-    out = agg.where(F.col("nss_n") >= F.lit(need)).select("doc_id", "score")
-    for nf in neg:
-        out = out.join(nf.distinct(), "doc_id", "left_anti")
-    return out
-
-
-def _fuzzy_match_matcher(ctx: SearchContext, params: dict) -> str:
-    """``match`` with ``fuzziness``: a shared-SQL dictionary matcher
-    OR-ing each analyzed token's fuzzy window (Levenshtein <= e with
-    e per token — an int 1|2, or the documented AUTO rule: 0 edits
-    under 3 chars, 1 for 3-5, 2 from 6). The expansion is then ONE
-    rewritten boolean with a global top-terms cap — the engine's
-    convention (Lucene caps per FuzzyQuery clause; one global cut is
-    the same total order both engines apply, documented). fuzziness
-    composes with neither operator=and nor minimum_should_match —
-    rejected loudly, not approximated."""
-    from .multiterm import _matcher_sql
-
-    if params.get("operator", "or") == "and":
-        raise DslError("[match] fuzziness with operator=and is not "
-                       "supported")
-    if "minimum_should_match" in params:
-        raise DslError("[match] fuzziness with minimum_should_match is "
-                       "not supported")
-    fz = params["fuzziness"]
-    if isinstance(fz, str) and fz.upper() == "AUTO":
-        edits = None
-    elif isinstance(fz, int) and not isinstance(fz, bool) and fz in (1, 2):
-        edits = fz
-    else:
-        raise DslError(f"[match] fuzziness must be 1, 2 or 'AUTO', "
-                       f"got {fz!r}")
-    toks = analyze_query(params.get("query") or "", ctx.analyzer)
-    if not toks:
-        raise DslError("[match] query analyzed to zero tokens")
-    parts = []
-    for t in sorted(set(toks)):
-        e = edits
-        if e is None:  # AUTO:3,6
-            e = 0 if len(t) < 3 else (1 if len(t) < 6 else 2)
-        if e == 0:
-            parts.append(f"term = '{t.replace(chr(39), chr(39) * 2)}'")
-        else:
-            parts.append(_matcher_sql(fuzzy=(t, e, 0)))
-    return " OR ".join(f"({p})" for p in parts)
-
-
-def _msm_int(val: Any, what: str) -> int:
-    """Integer minimum_should_match or a loud DslError (these surfaces
-    count CLAUSES; the 'P%' form belongs to more_like_this only)."""
-    if isinstance(val, bool) or not isinstance(val, int):
-        raise DslError(f"[{what}] minimum_should_match must be an integer, "
-                       f"got {val!r}")
-    return val
+# --- parser families (simple_query_string, query_string, match_bool_prefix) ----
 
 
 def _matcher_const_frame(ctx: SearchContext, matcher: str) -> DataFrame:
@@ -1192,11 +1391,10 @@ def _matcher_const_frame(ctx: SearchContext, matcher: str) -> DataFrame:
         if not exp:
             return ctx.docs.sparkSession.createDataFrame(
                 [], "doc_id long, score double")
-        return bm25_scores_indexed(ctx.reader, exp).select(
-            F.col(ctx.id_col).alias("doc_id"), F.lit(1.0).cast("double").alias("score"))
+        return _const(ctx, bm25_scores_indexed(ctx.reader, exp))
     from .exhaustive import tokenized
 
-    toks = tokenized(ctx.docs, ctx.id_col, ctx.text_col, ctx.analyzer)
+    toks = tokenized(ctx.docs, ctx.id_col, ctx.text_col, _analyzer(ctx, True))
     return (
         toks.select("doc_id", F.explode("toks").alias("term"))
         .where(F.expr(matcher))
@@ -1211,18 +1409,14 @@ def _term_clause_frame(ctx: SearchContext, terms: list[str],
     kernel when ``ctx.reader`` is set (partition-pruned term buckets,
     never a corpus re-tokenize), the one-traversal exhaustive scorer
     otherwise."""
+    op = "and" if conj else "or"
     if ctx.reader is not None:
         from .wand import bm25_scores_indexed
 
         _require_doc_key(ctx)
-        return bm25_scores_indexed(ctx.reader, terms,
-                                   mode="and" if conj else "or").select(
+        return bm25_scores_indexed(ctx.reader, terms, mode=op).select(
             F.col(ctx.id_col).alias("doc_id"), "score")
-    from .exhaustive import bm25_conjunctive, bm25_scores
-
-    fn = bm25_conjunctive if conj else bm25_scores
-    return fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
-              round_to=None, tokenizer=ctx.analyzer)
+    return _bm25(ctx, terms, op, _analyzer(ctx, True))
 
 
 def _phrase_clause_frame(ctx: SearchContext, toks: list[str],
@@ -1236,33 +1430,131 @@ def _phrase_clause_frame(ctx: SearchContext, toks: list[str],
         _require_doc_key(ctx)
         return bm25_phrase_indexed(ctx.reader, toks, slop=slop).select(
             F.col(ctx.id_col).alias("doc_id"), "score")
-    from .exhaustive import bm25_phrase, bm25_phrase_sloppy
+    return _phrase_frame(ctx, toks, slop, _analyzer(ctx, True))
 
-    fn = bm25_phrase_sloppy if slop else bm25_phrase
-    kw = {"slop": slop} if slop else {}
-    return fn(ctx.docs, toks, id_col=ctx.id_col, text_col=ctx.text_col,
-              round_to=None, tokenizer=ctx.index_analyzer(),
-              **kw).select("doc_id", "score")
+
+def _combine_clauses(ctx: SearchContext, what: str, mode: str, msm: int,
+                     or_groups: list[list[str]], frames: list[DataFrame],
+                     neg: list[DataFrame], analyzer: str) -> DataFrame:
+    """The parser families' BooleanQuery: each matched positive clause
+    contributes its score, summed per doc; AND mode gates on every
+    positive clause, OR mode on max(minimum_should_match, 1) clauses;
+    ``neg`` frames exclude their match set. The plain OR term groups
+    batch into ONE corpus traversal (bm25_scores_by_group — the msearch
+    membership-table shape), so clause count never multiplies corpus
+    passes; every other clause brings its own frame."""
+    from .exhaustive import bm25_scores_by_group
+
+    n_pos = len(or_groups) + len(frames)
+    if n_pos == 0:
+        raise DslError(f"[{what}] needs at least one positive clause "
+                       "(all clauses were negated or analyzed away)")
+    need = n_pos if mode == "and" else max(msm, 1)
+    if need > n_pos:
+        raise DslError(f"[{what}] minimum_should_match={msm} exceeds the "
+                       f"{n_pos} positive clauses")
+    tagged = None
+    if or_groups:
+        tagged = bm25_scores_by_group(
+            ctx.docs, or_groups, id_col=ctx.id_col, text_col=ctx.text_col,
+            tokenizer=analyzer,
+        ).withColumnRenamed("subquery_idx", "cid")
+    for j, frame in enumerate(frames):
+        t = frame.select(F.lit(len(or_groups) + j).alias("cid"), "doc_id", "score")
+        tagged = t if tagged is None else tagged.unionByName(t)
+    agg = tagged.groupBy("doc_id").agg(
+        F.sum("score").alias("score"),
+        F.countDistinct("cid").alias("nss_n"),
+    )
+    out = agg.where(F.col("nss_n") >= F.lit(need)).select("doc_id", "score")
+    for nf in neg:
+        out = out.join(nf.select("doc_id").distinct(), "doc_id", "left_anti")
+    return out
+
+
+def _leaf_clauses(ctx: SearchContext, what: str, mode: str, conj_op: str,
+                  leaves: list, msm: int) -> DataFrame:
+    """Parsed query-string leaves (querystring.QsLeaf) → the full raw
+    (doc_id, score) frame: term clauses score BM25 (a clause whose text
+    analyzes to several tokens applies ``conj_op`` INSIDE the clause —
+    Lucene QueryBuilder.createBooleanQuery with MUST under AND),
+    (sloppy) phrases their phrase-gated BM25, prefix/wildcard/fuzzy
+    constant 1.0 (QueryParser's default multi-term CONSTANT_SCORE
+    rewrite); a clause's ``^boost`` multiplies its contribution. With
+    an index every clause runs on the kernels with the index's analyzer
+    — the corpus text is never re-tokenized."""
+    from ..functions.tokenize import resolve_analyzer
+
+    indexed = ctx.reader is not None
+    an = _analyzer(ctx, True)
+    lower = resolve_analyzer(an)[2]
+    or_groups: list[list[str]] = []
+    frames: list[DataFrame] = []
+    neg: list[DataFrame] = []
+    for leaf in leaves:
+        if leaf.field is not None and leaf.field != ctx.text_col:
+            raise DslError(f"[{what}] field [{leaf.field}] is not "
+                           f"[{ctx.text_col}] (one analyzed text field)")
+        if leaf.kind == "term":
+            terms = analyze_query(leaf.text, an)
+            if not terms:
+                continue  # an all-delimiter clause analyzes away (Lucene drops it)
+            conj = conj_op == "and" and len(terms) > 1
+            if not indexed and not leaf.negated and leaf.boost == 1.0 and not conj:
+                or_groups.append(terms)
+                continue
+            frame = _term_clause_frame(ctx, terms, conj)
+        elif leaf.kind == "phrase":
+            toks = analyze_query(leaf.text, an)
+            if not toks:
+                continue
+            frame = _phrase_clause_frame(ctx, toks, leaf.slop)
+        else:
+            text = leaf.text.lower() if lower else leaf.text
+            with _rejects(what):
+                matcher = _multiterm_matcher(leaf.kind, text, leaf.slop)
+            frame = _matcher_const_frame(ctx, matcher)
+        frame = _boosted(frame, leaf.boost)
+        (neg if leaf.negated else frames).append(frame)
+    return _combine_clauses(ctx, what, mode, msm, or_groups, frames, neg, an)
+
+
+def _simple_query_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    """``simple_query_string`` body → full raw (doc_id, score) frame.
+    The parsed chunks, phrases and trailing-* prefixes score like
+    BooleanQuery (``_leaf_clauses``); a chunk that analyzes to several
+    tokens combines them with ``default_operator``; ``-`` clauses
+    exclude their match set. ``minimum_should_match`` is ignored in AND
+    mode (every clause is already MUST — the reference's msm applies to
+    optional clauses only)."""
+    from .querystring import QsLeaf
+    from .simpleq import parse_simple_query
+
+    _reject_unknown(spec, {"query", "fields", "default_operator",
+                           "minimum_should_match"}, "simple_query_string")
+    fields = spec.get("fields", [ctx.text_col])
+    if fields != [ctx.text_col]:
+        raise DslError(
+            f"[simple_query_string] fields must be [{ctx.text_col!r}] — the "
+            f"corpus's one analyzed text field — got {fields!r}")
+    default_op = spec.get("default_operator", "or")
+    mode, leaves = parse_simple_query(spec.get("query"), default_op)
+    kinds = {"chunk": "term", "phrase": "phrase", "prefix": "prefix"}
+    leaves = [QsLeaf(kinds[leaf.kind], leaf.text, None, leaf.negated, 1.0, 0)
+              for leaf in leaves]
+    msm = _int_param(spec.get("minimum_should_match", 0),
+                     "simple_query_string.minimum_should_match")
+    return _leaf_clauses(ctx, "simple_query_string", mode, default_op, leaves, msm)
 
 
 def _query_string_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     """``query_string`` body → full raw (doc_id, score) frame. The
     parsed clauses (query/querystring.py — the documented QueryParser
-    subset) score like BooleanQuery: term clauses their BM25 (batched
-    into ONE corpus traversal), (sloppy) phrases their phrase-gated
-    BM25, prefix/wildcard/fuzzy constant 1.0 (QueryParser's default
-    multi-term CONSTANT_SCORE rewrite); a clause's ``^boost``
-    multiplies its contribution; AND mode gates on every positive
-    clause, OR mode on max(minimum_should_match, 1); NOT/- clauses
+    subset) score like BooleanQuery (``_leaf_clauses``); NOT/- clauses
     exclude their match set (the engine's shared negation convention
     with simple_query_string)."""
-    from ..functions.tokenize import resolve_analyzer
-    from .exhaustive import bm25_scores_by_group
-    from .multiterm import _matcher_sql, like_escape, wildcard_to_like
     from .querystring import QueryStringError, parse_query_string
 
-    if not isinstance(spec, dict):
-        raise DslError(f"[query_string] expects an object, got {spec!r}")
     _reject_unknown(spec, {"query", "default_field", "fields",
                            "default_operator", "minimum_should_match"},
                     "query_string")
@@ -1277,84 +1569,9 @@ def _query_string_scores(ctx: SearchContext, spec: Any) -> DataFrame:
                                           spec.get("default_operator", "or"))
     except QueryStringError as e:
         raise DslError(f"[query_string] {e}") from e
-    # with an index: analyze with ITS analyzer and dispatch every
-    # clause onto the kernels — the corpus text is never re-tokenized
-    # (partition-pruned term buckets instead of a full scan)
-    indexed = ctx.reader is not None
-    analyzer = ctx.index_analyzer() if indexed else ctx.analyzer
-    lower = resolve_analyzer(analyzer)[2]
-
-    or_groups: list[list[str]] = []
-    frames: list[DataFrame] = []
-    neg: list[DataFrame] = []
-    n_pos = 0
-    for leaf in leaves:
-        if leaf.field is not None and leaf.field != tc:
-            raise DslError(f"[query_string] field [{leaf.field}] is not "
-                           f"[{tc}] (one analyzed text field)")
-        if leaf.kind == "term":
-            terms = analyze_query(leaf.text, analyzer)
-            if not terms:
-                continue  # an all-delimiter clause analyzes away
-            # a clause whose text analyzes to several tokens applies the
-            # default operator INSIDE the clause (Lucene QueryBuilder.
-            # createBooleanQuery with MUST under AND) — the same rule
-            # simple_query_string's chunks follow
-            conj = mode == "and" and len(terms) > 1
-            if (not indexed and not leaf.negated and leaf.boost == 1.0
-                    and not conj):
-                or_groups.append(terms)
-                n_pos += 1
-                continue
-            frame = _term_clause_frame(ctx, terms, conj)
-        elif leaf.kind == "phrase":
-            toks = analyze_query(leaf.text, analyzer)
-            if not toks:
-                continue
-            frame = _phrase_clause_frame(ctx, toks, leaf.slop)
-        else:
-            text = leaf.text.lower() if lower else leaf.text
-            if leaf.kind == "prefix":
-                matcher = _matcher_sql(like=like_escape(text) + "%")
-            elif leaf.kind == "wildcard":
-                matcher = _matcher_sql(like=wildcard_to_like(text))
-            else:  # fuzzy
-                matcher = _matcher_sql(fuzzy=(text, leaf.slop, 0))
-            frame = _matcher_const_frame(ctx, matcher)
-        if leaf.boost != 1.0:
-            frame = frame.select(
-                "doc_id", (F.col("score") * F.lit(leaf.boost)).alias("score"))
-        if leaf.negated:
-            neg.append(frame.select("doc_id"))
-        else:
-            frames.append(frame)
-            n_pos += 1
-    if n_pos == 0:
-        raise DslError("[query_string] needs at least one positive clause "
-                       "(all clauses were negated or analyzed away)")
-    msm = _msm_int(spec.get("minimum_should_match", 0), "query_string")
-    need = n_pos if mode == "and" else max(msm, 1)
-    if need > n_pos:
-        raise DslError(f"[query_string] minimum_should_match={msm} exceeds "
-                       f"the {n_pos} positive clauses")
-    tagged = None
-    if or_groups:
-        tagged = bm25_scores_by_group(
-            ctx.docs, or_groups, id_col=ctx.id_col, text_col=tc,
-            tokenizer=analyzer,
-        ).withColumnRenamed("subquery_idx", "cid")
-    for j, frame in enumerate(frames):
-        t = frame.select(F.lit(len(or_groups) + j).alias("cid"),
-                         "doc_id", "score")
-        tagged = t if tagged is None else tagged.unionByName(t)
-    agg = tagged.groupBy("doc_id").agg(
-        F.sum("score").alias("score"),
-        F.countDistinct("cid").alias("nss_n"),
-    )
-    out = agg.where(F.col("nss_n") >= F.lit(need)).select("doc_id", "score")
-    for nf in neg:
-        out = out.join(nf.distinct(), "doc_id", "left_anti")
-    return out
+    msm = _int_param(spec.get("minimum_should_match", 0),
+                     "query_string.minimum_should_match")
+    return _leaf_clauses(ctx, "query_string", mode, mode, leaves, msm)
 
 
 def _match_bool_prefix_scores(ctx: SearchContext, spec: Any) -> DataFrame:
@@ -1365,207 +1582,28 @@ def _match_bool_prefix_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     with ``operator``/``minimum_should_match`` counting CLAUSES
     (MatchBoolPrefixQueryBuilder constructs exactly this BooleanQuery).
     Duplicate tokens collapse to one clause each, the match-path
-    convention. All term clauses batch into ONE corpus traversal."""
-    from .exhaustive import bm25_scores_by_group
-
-    field, params = _one(spec, "match_bool_prefix")
-    params = _params(params, "query")
-    _reject_unknown(params, {"query", "operator", "minimum_should_match"},
-                    "match_bool_prefix")
-    if field != ctx.text_col:
-        raise DslError(f"[match_bool_prefix] field [{field}] is not "
-                       f"[{ctx.text_col}]")
-    op = params.get("operator", "or")
-    if op not in ("or", "and"):
-        raise DslError(f"[match_bool_prefix] operator must be or|and, "
-                       f"got [{op}]")
-    if not isinstance(params.get("query"), str):
-        raise DslError("[match_bool_prefix] query must be a string")
-    toks = analyze_query(
-        params["query"],
-        ctx.index_analyzer() if ctx.reader is not None else ctx.analyzer)
+    convention. Without an index all term clauses batch into ONE
+    corpus traversal; with one, each is a kernel frame
+    (partition-pruned buckets)."""
+    what = "match_bool_prefix"
+    params, op = _match_params(ctx, spec, what, ("minimum_should_match",))
+    an = _analyzer(ctx, True)
+    toks = analyze_query(params["query"], an)
     if not toks:
         raise DslError("[match_bool_prefix] query analyzed to zero tokens")
-    pfx = toks[-1]
     seen: set[str] = set()
     terms = [t for t in toks[:-1] if not (t in seen or seen.add(t))]
-    n_pos = len(terms) + 1
-    msm = _msm_int(params.get("minimum_should_match", 0),
-                   "match_bool_prefix")
-    need = n_pos if op == "and" else max(msm, 1)
-    if need > n_pos:
-        raise DslError(f"[match_bool_prefix] minimum_should_match={msm} "
-                       f"exceeds the {n_pos} clauses")
+    msm = _int_param(params.get("minimum_should_match", 0),
+                     "match_bool_prefix.minimum_should_match")
     # toks are post-analysis (already normalized) — no extra lowering
-    tagged = _prefix_const_frame(ctx, pfx).select(
-        F.lit(len(terms)).alias("cid"), "doc_id", "score")
-    if terms and ctx.reader is not None:
-        # indexed: per-term kernel frames (partition-pruned buckets)
-        term_frames = None
-        for i, t in enumerate(terms):
-            f2 = _term_clause_frame(ctx, [t], False).select(
-                F.lit(i).alias("cid"), "doc_id", "score")
-            term_frames = f2 if term_frames is None else term_frames.unionByName(f2)
-        tagged = term_frames.unionByName(tagged)
-    elif terms:
-        term_frames = bm25_scores_by_group(
-            ctx.docs, [[t] for t in terms],
-            id_col=ctx.id_col, text_col=ctx.text_col, tokenizer=ctx.analyzer,
-        ).withColumnRenamed("subquery_idx", "cid")
-        tagged = term_frames.unionByName(tagged)
-    agg = tagged.groupBy("doc_id").agg(
-        F.sum("score").alias("score"),
-        F.countDistinct("cid").alias("nss_n"),
-    )
-    return agg.where(F.col("nss_n") >= F.lit(need)).select("doc_id", "score")
+    prefix = _matcher_const_frame(ctx, _multiterm_matcher("prefix", toks[-1], 0))
+    if ctx.reader is not None:
+        frames = [_term_clause_frame(ctx, [t], False) for t in terms]
+        return _combine_clauses(ctx, what, op, msm, [], frames + [prefix], [], an)
+    return _combine_clauses(ctx, what, op, msm, [[t] for t in terms], [prefix], [], an)
 
 
-def _sub_scores(ctx: SearchContext, q: dict, idx: int) -> DataFrame:
-    typ, spec = _one(q, "hybrid sub-query")
-    if typ == "match":
-        from .exhaustive import bm25_conjunctive, bm25_scores
-
-        terms, op = _match_clause(ctx, spec, "match")
-        fn = bm25_conjunctive if op == "and" else bm25_scores
-        s = fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
-               round_to=None, tokenizer=ctx.analyzer)
-    elif typ == "multi_match":
-        from .exhaustive import bm25_conjunctive, bm25_scores
-
-        mspec, boost = _multi_match_spec(ctx, spec)
-        terms, op = _match_clause(ctx, mspec, "multi_match")
-        fn = bm25_conjunctive if op == "and" else bm25_scores
-        s = _boosted(
-            fn(ctx.docs, terms, id_col=ctx.id_col, text_col=ctx.text_col,
-               round_to=None, tokenizer=ctx.analyzer),
-            boost,
-        )
-    elif typ == "match_phrase":
-        # phrase sub-queries score their FULL match set, raw — the
-        # normalization statistics then see every phrase hit, exactly
-        # like the other full-frame sub-queries
-        s = _phrase_scores(ctx, spec)
-    elif typ == "neural":
-        s = _neural_topk(ctx, spec).select(
-            F.col("vec_id").alias("doc_id"), F.col("cos").alias("score")
-        )
-    elif typ == "knn":
-        # raw-vector kNN sub-query: the candidate pool is its own k
-        # (KNNQueryBuilder semantics), scores enter normalization raw
-        s = _knn_topk(ctx, spec).select(
-            F.col("vec_id").alias("doc_id"), F.col("cos").alias("score")
-        )
-    elif typ == "script_score":
-        # full match-set frame, like the other full-frame sub-queries —
-        # normalization statistics see every matched doc
-        s = _script_scores(ctx, spec)
-    elif typ.startswith("span_") and typ in _QUERY_TYPES:
-        # span queries enter normalization as full match-set frames
-        s = _span_scores(ctx, typ, spec)
-    elif typ == "intervals":
-        s = _intervals_scores(ctx, spec)
-    elif typ == "neural_sparse":
-        field, params = _one(spec, "neural_sparse")
-        params = _params(params, "query_tokens")
-        _reject_unknown(params, {"query_tokens", "k"}, "neural_sparse")
-        if ctx.sparse_features is None:
-            raise DslError("neural_sparse needs ctx.sparse_features")
-        if "k" in params:
-            from .sparse import sparse_topk_two_phase
-
-            s = sparse_topk_two_phase(
-                ctx.sparse_features, dict(params["query_tokens"]),
-                k=_int_param(params["k"], "neural_sparse.k"), round_to=None,
-            ).select("doc_id", "score")
-        else:
-            # no k → the sub-query scores its FULL match set, exactly
-            # like the engine's exhaustive hybrid twins (normalization
-            # statistics then see every matched doc, not a cut)
-            from .sparse import sparse_scores
-
-            s = sparse_scores(
-                ctx.sparse_features, dict(params["query_tokens"])
-            ).select("doc_id", "score")
-    elif typ == "nested":
-        # the reference composes hybrid over term + nested sub-queries
-        # (HybridQueryIT.java:436-449); full match set, like match
-        s = _nested_scores(ctx, spec)
-    elif typ == "simple_query_string":
-        # the parser families score their FULL match set raw, like the
-        # other full-frame sub-queries — the normalization statistics
-        # then see every matched doc
-        s = _simple_query_scores(ctx, spec)
-    elif typ == "query_string":
-        s = _query_string_scores(ctx, spec)
-    elif typ == "match_bool_prefix":
-        s = _match_bool_prefix_scores(ctx, spec)
-    else:
-        s = _leaf_scores(ctx, typ, spec)
-        if s is None:
-            raise DslError(f"hybrid sub-query type [{typ}] unsupported; "
-                           "supported: match, multi_match, match_phrase, "
-                           "match_bool_prefix, simple_query_string, "
-                           "query_string, neural, knn, script_score, "
-                           "neural_sparse, nested, term, terms, range, "
-                           "exists, ids, match_all, constant_score, "
-                           "rank_feature, match_none, distance_feature, "
-                           "span_term, span_near, span_or, span_first, "
-                           "span_not, span_multi, span_containing, "
-                           "span_within, intervals")
-    return s.select(F.lit(idx).alias("subquery_idx"), "doc_id", "score")
-
-
-def _neural_topk(ctx: SearchContext, spec: Any) -> DataFrame:
-    field, params = _one(spec, "neural")
-    params = _params(params, "query_vector_id")
-    _reject_unknown(params, {"query_vector_id", "k", "ef"}, "neural")
-    if ctx.embeddings is None:
-        raise DslError("neural query needs ctx.embeddings")
-    qid = int(params["query_vector_id"])
-    k = _int_param(params.get("k"), "neural.k", 10)
-    if ctx.graphs is not None:
-        from ..pipeline.graph_ann import hnsw_topk
-
-        kw = {"ef": int(params["ef"])} if "ef" in params else {}
-        return hnsw_topk(ctx.embeddings, qid, k=k, graphs=ctx.graphs, **kw)
-    from ..pipeline.similarity import cosine_topk
-
-    return cosine_topk(ctx.embeddings, qid, k=k)
-
-
-def _knn_topk(ctx: SearchContext, spec: Any) -> DataFrame:
-    """Raw ``knn`` query — the builder NeuralQueryBuilder.doRewrite
-    actually produces (KNNQueryBuilder: field + literal vector + k +
-    optional filter, NeuralQueryBuilder.java:300-325). The vector is
-    carried in the body, so scoring is exact brute force against the
-    literal; ``filter`` restricts candidates pre-scoring (the k-NN
-    engine's efficient-filter slot), a term/terms/range/exists DSL
-    object over the embedding table's columns."""
-    from ..pipeline.similarity import cosine_topk_vector
-
-    field, params = _one(spec, "knn")
-    if ctx.embeddings is None:
-        raise DslError("knn query needs ctx.embeddings")
-    if not isinstance(params, dict):
-        raise DslError("[knn] field spec must be an object")
-    _reject_unknown(params, {"vector", "k", "filter"}, "knn")
-    if field not in ctx.embeddings.columns or field == "vec_id":
-        raise DslError(f"[knn] field [{field}] is not a vector column of "
-                       "the embedding table")
-    vec = params.get("vector")
-    if (not isinstance(vec, list) or not vec
-            or not all(isinstance(x, (int, float)) and not isinstance(x, bool)
-                       for x in vec)):
-        raise DslError("[knn] needs a non-empty numeric [vector] list")
-    k = _int_param(params.get("k"), "knn.k", 10)
-    pred = None
-    if "filter" in params:
-        if not isinstance(params["filter"], dict):
-            raise DslError("[knn] filter must be a query object")
-        pred = _predicate_sql(params["filter"])
-    return cosine_topk_vector(ctx.embeddings, [float(x) for x in vec], k=k,
-                              vec_col=field, predicate=pred)
-
+# --- compound and function queries ----------------------------------------------
 
 _SCRIPT_VEC_RE = __import__("re").compile(
     r"^\s*(cosineSimilarity|dotProduct)\(\s*params\.(\w+)\s*,\s*"
@@ -1587,15 +1625,12 @@ def _script_scores(ctx: SearchContext, spec: Any) -> DataFrame:
     errors per-doc on a missing vector field; the inner join keeps the
     pipeline total — documented boundary). Cosine/dot round at 6 like
     every other vector kernel, so the oracle's list_dot_product math
-    provably coincides."""
-    if not isinstance(spec, dict):
-        raise DslError("[script_score] expects an object")
+    provably coincides. Sub-queries see the full match set, like the
+    other full-frame sub-queries."""
     _reject_unknown(spec, {"query", "script", "min_score"}, "script_score")
     if "query" not in spec or "script" not in spec:
         raise DslError("[script_score] needs [query] and [script]")
     script = spec["script"]
-    if not isinstance(script, dict):
-        raise DslError("[script_score] script must be an object")
     _reject_unknown(script, {"source", "params"}, "script")
     source = script.get("source")
     if not isinstance(source, str):
@@ -1610,15 +1645,14 @@ def _script_scores(ctx: SearchContext, spec: Any) -> DataFrame:
         if pname is not None:
             if pname not in sparams:
                 raise DslError(f"[script_score] params.{pname} is not bound")
-            factor = sparams[pname]
+            factor = _float_param(sparams[pname], f"script_score.params.{pname}")
         else:
             factor = float(lit)
-        if (not isinstance(factor, (int, float)) or isinstance(factor, bool)
-                or float(factor) < 0):
+        if factor < 0:
             raise DslError("[script_score] _score factor must be a "
                            "non-negative number")
         out = inner.select(
-            "doc_id", (F.col("score") * F.lit(float(factor))).alias("score"))
+            "doc_id", (F.col("score") * F.lit(factor)).alias("score"))
     elif m := _SCRIPT_VEC_RE.match(source):
         from ..pipeline.similarity import DOT, NORM, _as_double
 
@@ -1629,14 +1663,9 @@ def _script_scores(ctx: SearchContext, spec: Any) -> DataFrame:
         if fld not in ctx.embeddings.columns or fld == "vec_id":
             raise DslError(f"[script_score] doc['{fld}'] is not a vector "
                            "column of the embedding table")
-        qv = sparams.get(pname)
-        if (not isinstance(qv, list) or not qv
-                or not all(isinstance(x, (int, float))
-                           and not isinstance(x, bool) for x in qv)):
-            raise DslError(f"[script_score] params.{pname} must be a "
-                           "non-empty numeric vector")
+        qv = _vector_param(sparams.get(pname), f"script_score.params.{pname}")
         vecs = _as_double(ctx.embeddings, "vec_id", fld, "doc_id", "v")
-        qlit = F.array(*[F.lit(float(x)).cast("double") for x in qv])
+        qlit = F.array(*[F.lit(x).cast("double") for x in qv])
         dot = F.expr(DOT.format(a="v", b="qv"))
         if fn == "cosineSimilarity":
             val = dot / (F.expr(NORM.format(a="v")) * F.expr(NORM.format(a="qv")))
@@ -1655,1037 +1684,806 @@ def _script_scores(ctx: SearchContext, spec: Any) -> DataFrame:
             "supported shapes: cosineSimilarity(params.V, doc['F']) [+ C], "
             "dotProduct(params.V, doc['F']) [+ C], _score * factor")
     if "min_score" in spec:
-        ms = spec["min_score"]
-        if not isinstance(ms, (int, float)) or isinstance(ms, bool):
-            raise DslError("[script_score] min_score must be numeric")
-        out = out.where(F.col("score") >= F.lit(float(ms)))
+        ms = _float_param(spec["min_score"], "script_score.min_score")
+        out = out.where(F.col("score") >= F.lit(ms))
     return out
 
 
-# --- top-level dispatch ---------------------------------------------------
-
-
-def _ranked(df: DataFrame, id_col: str) -> DataFrame:
-    """(doc_id, score, rank) with the engine's standard tiebreak —
-    identical shaping to the exhaustive topk() output. The index's key
-    column ``id_col`` becomes the output ``doc_id`` (a no-op for
-    kernels that already name it so). A cut that carries its own
-    ``rank`` (the indexed top-k answers) keeps it: re-ranking a
-    driver-served local frame would cost a Window's two Spark jobs."""
-    if "rank" in df.columns:
-        rank = F.col("rank")
-    else:
-        rank = F.row_number().over(Window.orderBy(F.col("score").desc(), F.col("doc_id").asc()))
-    return df.withColumnRenamed(id_col, "doc_id").select(
-        "doc_id", F.round("score", 4).alias("score"), rank.cast("int").alias("rank"),
+def _boosting_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # BoostingQueryBuilder: hits = the positive query's match set; docs
+    # also matched by the negative query keep their positive score
+    # DEMOTED by negative_boost (the negative score itself is never
+    # used — Lucene FunctionScoreQuery.boostByQuery)
+    _reject_unknown(spec, {"positive", "negative", "negative_boost"},
+                    "boosting")
+    for req in ("positive", "negative", "negative_boost"):
+        if req not in spec:
+            raise DslError(f"[boosting] needs [{req}]")
+    nb = _float_param(spec["negative_boost"], "boosting.negative_boost")
+    if not 0.0 <= nb <= 1.0:
+        raise DslError(f"[boosting] negative_boost must be a float in "
+                       f"[0, 1], got {nb!r}")
+    pos = _scores_frame(ctx, spec["positive"], "boosting.positive")
+    neg = (_scores_frame(ctx, spec["negative"], "boosting.negative")
+           .select("doc_id").distinct().withColumn("nss_neg", F.lit(True)))
+    return pos.join(neg, "doc_id", "left").select(
+        "doc_id",
+        F.when(F.col("nss_neg"), F.col("score") * F.lit(nb))
+        .otherwise(F.col("score")).alias("score"),
     )
 
 
-def _require_doc_key(ctx: SearchContext) -> None:
-    keys = list(ctx.reader.meta.get("key_cols", []))
-    if keys != [ctx.id_col]:
-        raise DslError(
-            f"indexed DSL dispatch needs the index keyed by [{ctx.id_col}], "
-            f"got {keys}"
-        )
+_FVF_MODIFIERS = {
+    "none": lambda c: c,
+    "log1p": lambda c: F.log10(c + F.lit(1.0)),
+    "log2p": lambda c: F.log10(c + F.lit(2.0)),
+    "ln1p": lambda c: F.log(c + F.lit(1.0)),
+    "ln2p": lambda c: F.log(c + F.lit(2.0)),
+    "sqrt": F.sqrt,
+    "square": lambda c: c * c,
+    "reciprocal": lambda c: F.lit(1.0) / c,
+}
 
 
-def _indexed_topk(ctx: SearchContext, typ: str, spec: Any, k: int) -> DataFrame | None:
-    """Dispatch onto the index kernels; None = this type has no indexed
-    path (caller falls through to the exhaustive builders)."""
-    if ctx.reader is None:
-        return None
-    r = ctx.reader
-    if typ.startswith("span_") and typ in _QUERY_TYPES:
-        # span queries serve from the POSITIONAL index: candidate-block
-        # position decode + vectorized searchsorted span iterators —
-        # no corpus re-tokenize (query/spans_indexed.py)
-        from .spans_indexed import span_topk_indexed
-
-        if typ in ("span_containing", "span_within"):
-            # containment probes have no kernel mode yet — fall through
-            # to the exhaustive branch BEFORE building the plan, so a
-            # span_multi clause's dictionary expansion runs once
-            return None
-        _require_doc_key(ctx)
-        # span_term values are checked against the index's own analyzer,
-        # as the intervals branch below analyzes with it
-        plan = _span_plan(replace(ctx, analyzer=ctx.index_analyzer()), typ, spec)
-        if plan is None:
-            return ctx.docs.sparkSession.createDataFrame(
-                [], "doc_id long, score double, rank int")
+def _function_factor(ctx: SearchContext, spec: dict, kind: str):
+    """One function_score function → its per-doc factor column."""
+    if kind != "field_value_factor":
+        fld, dparams = _one(spec[kind], kind)
+        fld = _field(fld, _schema(ctx.docs), kind, numeric=True)
+        _reject_unknown(dparams, {"origin", "scale", "offset", "decay"}, kind)
+        if "origin" not in dparams or "scale" not in dparams:
+            raise DslError(f"[{kind}] needs numeric origin and scale")
+        num = {kk: _float_param(v, f"{kind}.{kk}") for kk, v in dparams.items()}
         try:
-            # round_to=4 pre-rounds inside the kernel cut (round-then-
-            # rank, matching the exhaustive span branch)
-            return _ranked(span_topk_indexed(r, plan, k=k, round_to=4), ctx.id_col)
+            return F.expr(decay_factor_sql(kind, fld, **num))
         except ValueError as e:
-            raise DslError(f"[{typ}] {e}") from e
-    if typ == "intervals":
-        # minimal-interval enumeration over the SAME positional kernel
-        # (spans_indexed._enumerate_iv) — no corpus re-tokenize
-        from .spans_indexed import span_topk_indexed
-
-        _require_doc_key(ctx)
-        clauses, max_gaps, ordered = _intervals_plan(
-            ctx, spec, analyzer=ctx.index_analyzer())
-        plan = {"kind": "iv", "required": clauses, "max_gaps": max_gaps,
-                "ordered": ordered}
-        try:
-            return _ranked(span_topk_indexed(r, plan, k=k, round_to=4), ctx.id_col)
-        except ValueError as e:
-            raise DslError(f"[intervals] {e}") from e
-    if typ == "match":
-        from .wand import match_text_topk
-
-        _require_doc_key(ctx)
-        field, params = _one(spec, "match")
-        params = _params(params, "query")
-        _reject_unknown(params, {"query", "operator", "minimum_should_match",
-                                 "fuzziness"}, "match")
-        if field != ctx.text_col:
-            raise DslError(f"[match] field [{field}] is not [{ctx.text_col}]")
-        op = params.get("operator", "or")
-        if op not in ("or", "and"):
-            raise DslError(f"[match] operator must be or|and, got [{op}]")
-        if "fuzziness" in params:
-            # fuzzy match: the analyzed tokens' fuzzy expansions as ONE
-            # rewritten boolean with a global top-terms cap (documented
-            # convention — Lucene caps per FuzzyQuery clause)
-            from .multiterm import multiterm_topk_indexed
-
-            matcher = _fuzzy_match_matcher(ctx, params)
-            return _ranked(multiterm_topk_indexed(r, matcher=matcher, k=k),
-                           ctx.id_col)
-        msm = _msm_int(params.get("minimum_should_match", 0), "match")
-        if msm > 0 and op == "or":
-            # the kernel's msm mode gates on >= m distinct matched terms
-            return _ranked(match_text_topk(r, params["query"], k=k,
-                                           mode=f"msm:{msm}"), ctx.id_col)
-        return _ranked(match_text_topk(r, params["query"], k=k, mode=op), ctx.id_col)
-    if typ == "match_phrase":
-        from .phrase import bm25_phrase_indexed
-
-        _require_doc_key(ctx)
-        field, params = _one(spec, "match_phrase")
-        params = _params(params, "query")
-        _reject_unknown(params, {"query", "slop"}, "match_phrase")
-        if field != ctx.text_col:
-            raise DslError(f"[match_phrase] field [{field}] is not [{ctx.text_col}]")
-        terms = analyze_query(params["query"], ctx.index_analyzer())
-        if not terms:
-            raise DslError("[match_phrase] query analyzed to zero tokens")
-        top = bm25_phrase_indexed(r, terms, k=k, slop=int(params.get("slop", 0)))
-        return _ranked(top, ctx.id_col)
-    if typ == "match_phrase_prefix":
-        from .multiterm import phrase_prefix_topk_indexed
-
-        _require_doc_key(ctx)
-        field, params = _one(spec, "match_phrase_prefix")
-        params = _params(params, "query")
-        _reject_unknown(params, {"query", "max_expansions"}, "match_phrase_prefix")
-        if field != ctx.text_col:
-            raise DslError(f"[match_phrase_prefix] field [{field}] is not "
-                           f"[{ctx.text_col}]")
-        toks = analyze_query(params["query"], ctx.index_analyzer())
-        if not toks:
-            raise DslError("[match_phrase_prefix] query analyzed to zero tokens")
-        kw = {"max_expansions": int(params["max_expansions"])} if "max_expansions" in params else {}
-        return _ranked(phrase_prefix_topk_indexed(r, toks[:-1], toks[-1], k=k, **kw),
-                       ctx.id_col)
-    if typ in ("prefix", "wildcard", "fuzzy", "regexp"):
-        from .multiterm import (
-            like_escape,
-            multiterm_topk_indexed,
-            regexp_matcher,
-            wildcard_to_like,
-        )
-
-        _require_doc_key(ctx)
-        field, params = _one(spec, typ)
-        params = _params(params, "value")
-        allowed = {"value", "max_expansions"}
-        if typ == "fuzzy":
-            allowed.add("fuzziness")
-        _reject_unknown(params, allowed, typ)
-        kw = {"max_expansions": int(params["max_expansions"])} if "max_expansions" in params else {}
-        if typ == "prefix":
-            top = multiterm_topk_indexed(r, like=like_escape(params["value"]) + "%", k=k, **kw)
-        elif typ == "wildcard":
-            top = multiterm_topk_indexed(r, like=wildcard_to_like(params["value"]), k=k, **kw)
-        elif typ == "regexp":
-            try:
-                matcher = regexp_matcher(params["value"])
-            except ValueError as e:
-                raise DslError(f"[regexp] {e}") from e
-            top = multiterm_topk_indexed(r, matcher=matcher, k=k, **kw)
-        else:
-            top = multiterm_topk_indexed(
-                r, fuzzy=(params["value"], int(params.get("fuzziness", 1)), 0), k=k, **kw
-            )
-        return _ranked(top, ctx.id_col)
-    if typ == "bool":
-        from .booleans import bool_clauses_topk_indexed
-
-        _require_doc_key(ctx)
-        _reject_unknown(spec,
-                        {"must", "should", "must_not", "minimum_should_match",
-                         "filter"}, "bool")
-        if spec.get("filter"):
-            # indexed FILTER occur: predicate pushed into the docs scan,
-            # mapped to per-segment allow-lists through docmap, AND-ed
-            # into the kernel — non-scoring, stats global
-            from .wand import bm25_topk_indexed
-
-            scoring = {kk: vv for kk, vv in spec.items() if kk != "filter"}
-            if set(scoring) != {"must"} or len(scoring["must"]) != 1:
-                raise DslError("[bool] filter context supports a single must "
-                               "match clause (the FILTER-occur shape)")
-            preds = [_predicate_sql(c) for c in spec["filter"]]
-            pred = F.expr(" AND ".join(f"({p})" for p in preds))
-            f2, p2 = _one(scoring["must"][0], "bool.must")
-            if f2 != "match":
-                raise DslError("bool [must] clauses must be match queries")
-            terms, op = _match_clause(ctx, p2, "match",
-                                      analyzer=ctx.index_analyzer())
-            allowed = (
-                r.docmap().join(ctx.docs.where(pred), ctx.id_col).select("nss_doc_id")
-            )
-            return _ranked(bm25_topk_indexed(r, terms, k=k, mode=op, allowed=allowed),
-                           ctx.id_col)
-        # per-CLAUSE semantics (a multi-term must clause with the
-        # default operator=or requires ONE of its terms, and
-        # minimum_should_match counts clauses — BooleanQuery semantics,
-        # identical to the exhaustive bool path and the aggs path)
-        analyzer = ctx.index_analyzer()
-
-        def clause_list(key):
-            out = []
-            for c in spec.get(key) or []:
-                ct, cs = _one(c, f"bool.{key}")
-                if ct != "match":
-                    raise DslError(f"bool [{key}] clauses must be match queries")
-                out.append(_match_clause(ctx, cs, "match", analyzer=analyzer))
-            return out
-
-        try:
-            return bool_clauses_topk_indexed(
-                r, must=clause_list("must"), should=clause_list("should"),
-                must_not=clause_list("must_not"),
-                minimum_should_match=int(spec.get("minimum_should_match", 0)),
-                k=k,
-            )
-        except ValueError as e:
-            raise DslError(f"[bool] {e}") from e
-    return None
+            raise DslError(f"[{kind}] {e}") from e
+    fvf = spec["field_value_factor"]
+    _reject_unknown(fvf, {"field", "factor", "modifier", "missing"},
+                    "field_value_factor")
+    fld = _numeric_field(ctx, fvf, "field_value_factor")
+    factor = _float_param(fvf.get("factor", 1.0), "field_value_factor.factor")
+    modifier = fvf.get("modifier", "none")
+    if not isinstance(modifier, str) or modifier not in _FVF_MODIFIERS:
+        raise DslError(f"[field_value_factor] modifier must be one of "
+                       f"{sorted(_FVF_MODIFIERS)}, got [{modifier}]")
+    val = F.col(fld).cast("double")
+    if "missing" in fvf:
+        val = F.coalesce(val, F.lit(_float_param(fvf["missing"],
+                                                 "field_value_factor.missing")))
+    return _FVF_MODIFIERS[modifier](val * F.lit(factor))
 
 
-def _topk_frame(ctx: SearchContext, q: dict, k: int) -> DataFrame:
-    from .exhaustive import topk
-
-    typ, spec = _one(q, "query")
-    if typ not in _QUERY_TYPES:
-        raise DslError(f"unknown query type [{typ}]; supported: {_QUERY_TYPES}")
-    tc, ic = ctx.text_col, ctx.id_col
-    if typ == "multi_match":
-        mspec, boost = _multi_match_spec(ctx, spec)
-        if boost == 1.0:
-            # boost-free multi_match IS the match query (single mapped
-            # text field) — reuse every match path, indexed included
-            return _topk_frame(ctx, {"match": mspec}, k)
-        if ctx.reader is not None:
-            from .wand import match_text_topk
-
-            _require_doc_key(ctx)
-            _f, params = _one(mspec, "match")
-            params = _params(params, "query")
-            op = params.get("operator", "or")
-            if op not in ("or", "and"):
-                raise DslError(f"[multi_match] operator must be or|and, got [{op}]")
-            top = match_text_topk(ctx.reader, params["query"], k=k, mode=op)
-            return _ranked(_boosted(top, boost), ctx.id_col)
-        from .exhaustive import bm25_conjunctive, bm25_scores
-
-        terms, op = _match_clause(ctx, mspec, "multi_match")
-        fn = bm25_conjunctive if op == "and" else bm25_scores
-        s = fn(ctx.docs, terms, id_col=ic, text_col=tc, round_to=None,
-               tokenizer=ctx.analyzer)
-        return topk(_boosted(s, boost), k=k)
-
-    indexed = _indexed_topk(ctx, typ, spec, k)
-    if indexed is not None:
-        return indexed
-
-    if typ == "match":
-        from .exhaustive import bm25_conjunctive, bm25_scores
-
-        _f, mparams = _one(spec, "match")
-        mparams = _params(mparams, "query")
-        if "fuzziness" in mparams:
-            from .multiterm import expand_terms_corpus
-
-            matcher = _fuzzy_match_matcher(ctx, mparams)
-            exp = expand_terms_corpus(ctx.docs, matcher=matcher,
-                                      id_col=ic, text_col=tc,
-                                      tokenizer=ctx.analyzer)
-            if not exp:
-                spark = ctx.docs.sparkSession
-                return spark.createDataFrame(
-                    [], "doc_id long, score double, rank int")
-            return topk(bm25_scores(ctx.docs, exp, id_col=ic, text_col=tc,
-                                    round_to=4, tokenizer=ctx.analyzer),
-                        k=k, round_to=None)
-        if "minimum_should_match" in mparams:
-            from .exhaustive import bm25_msm
-
-            msm = _msm_int(mparams["minimum_should_match"], "match")
-            spec2 = {_f: {kk: vv for kk, vv in mparams.items()
-                          if kk != "minimum_should_match"}}
-            terms, op = _match_clause(ctx, spec2, "match")
-            if msm > 0 and op == "or":
-                if msm > len(terms):
-                    # a doc cannot match more distinct terms than queried
-                    spark = ctx.docs.sparkSession
-                    return spark.createDataFrame(
-                        [], "doc_id long, score double, rank int")
-                scored = bm25_msm(ctx.docs, terms, msm, id_col=ic, text_col=tc,
-                                  round_to=4, tokenizer=ctx.analyzer)
-                return topk(scored, k=k, round_to=None)
-            # operator=and makes every term required — msm is a no-op
-            # on required clauses (the Lucene rule)
-            fn = bm25_conjunctive if op == "and" else bm25_scores
-            return topk(fn(ctx.docs, terms, id_col=ic, text_col=tc,
-                           round_to=None, tokenizer=ctx.analyzer), k=k)
-        terms, op = _match_clause(ctx, spec, "match")
-        fn = bm25_conjunctive if op == "and" else bm25_scores
-        return topk(fn(ctx.docs, terms, id_col=ic, text_col=tc, round_to=None,
-                       tokenizer=ctx.analyzer), k=k)
-
-    if typ in ("term", "terms", "range", "exists", "ids", "match_all",
-               "constant_score", "rank_feature", "match_none",
-               "distance_feature"):
-        return topk(_leaf_scores(ctx, typ, spec), k=k)
-
-    if typ.startswith("span_"):
-        # round-then-rank (the dictionary-expansion convention)
-        return topk(_span_scores(ctx, typ, spec, round_to=4), k=k,
-                    round_to=None)
-
-    if typ == "intervals":
-        return topk(_intervals_scores(ctx, spec, round_to=4), k=k,
-                    round_to=None)
-
-    if typ == "script_score":
-        return topk(_script_scores(ctx, spec), k=k)
-
-    if typ == "wrapper":
-        # WrapperQueryBuilder: a base64-encoded JSON query body,
-        # decoded and dispatched through the SAME translator — the
-        # transport-embedding shape, not a new query semantics
-        import base64
-        import json as _json
-
-        _reject_unknown(spec, {"query"}, "wrapper")
-        raw = spec.get("query")
-        if not isinstance(raw, str) or not raw:
-            raise DslError("[wrapper] needs a base64 [query] string")
-        try:
-            inner = _json.loads(base64.b64decode(raw, validate=True))
-        except Exception as e:
-            raise DslError(f"[wrapper] query is not base64-encoded JSON: "
-                           f"{e}") from e
-        if not isinstance(inner, dict):
-            raise DslError("[wrapper] decoded query must be an object")
-        return _topk_frame(ctx, inner, k)
-
-    if typ == "pinned":
-        # PinnedQueryBuilder: the listed ids rank first IN LIST ORDER,
-        # organic hits follow by their own scores; a pinned doc never
-        # also appears organically. The reference pins with float
-        # scores just above Float.MAX_VALUE/2 — the absolute pinned
-        # score is an implementation detail there too; here the pinned
-        # band is PINNED_BASE + (n − position) with PINNED_BASE far
-        # above any BM25/cosine score, which preserves the contract
-        # (pinned order, then organic order) with exact doubles in
-        # both engines.
-        _reject_unknown(spec, {"ids", "organic"}, "pinned")
-        ids = spec.get("ids")
-        if (not isinstance(ids, list) or not ids
-                or not all(isinstance(v, int) and not isinstance(v, bool)
-                           for v in ids)
-                or len(set(ids)) != len(ids)):
-            raise DslError("[pinned] needs a non-empty duplicate-free "
-                           "integer [ids] list")
-        if "organic" not in spec:
-            raise DslError("[pinned] needs an [organic] query")
-        org = _scores_frame(ctx, spec["organic"], "pinned.organic")
-        base = 1.0e9
-        n = len(ids)
-        pin_score = F.create_map(*[
-            x for i, v in enumerate(ids)
-            for x in (F.lit(v), F.lit(base + (n - i)))
-        ])
-        pinned = (ctx.docs.where(F.col(ic).isin(ids))
-                  .select(F.col(ic).alias("doc_id"))
-                  .withColumn("score", pin_score[F.col("doc_id")]))
-        organic = org.where(~F.col("doc_id").isin(ids))
-        return topk(pinned.unionByName(organic), k=k)
-
-    if typ == "knn":
-        # same k/size interplay rule as neural: the pool is never
-        # smaller than the requested size
-        field, params = _one(spec, "knn")
-        if not isinstance(params, dict):
-            raise DslError("[knn] field spec must be an object")
-        if "k" not in params:
-            params = dict(params); params["k"] = max(k, 10)
-        elif _int_param(params["k"], "knn.k") < k:
-            params = dict(params); params["k"] = k
-        top = _knn_topk(ctx, {field: params})
-        w = F.row_number().over(Window.orderBy(F.col("cos").desc(),
-                                               F.col("vec_id").asc()))
-        out = top.select(F.col("vec_id").alias("doc_id"),
-                         F.round("cos", 4).alias("score"),
-                         w.cast("int").alias("rank"))
-        return out.where(F.col("rank") <= k)
-
-    if typ == "nested":
-        return topk(_nested_scores(ctx, spec), k=k)
-
-    if typ == "simple_query_string":
-        return topk(_simple_query_scores(ctx, spec), k=k)
-
-    if typ == "match_bool_prefix":
-        return topk(_match_bool_prefix_scores(ctx, spec), k=k)
-
-    if typ == "query_string":
-        return topk(_query_string_scores(ctx, spec), k=k)
-
-    if typ == "terms_set":
-        # TermsSetQueryBuilder (Lucene CoveringQuery): a boolean OR of
-        # term clauses, each doc gated on its own minimum — from a
-        # numeric corpus column (minimum_should_match_field) or a
-        # constant-integer script (the one script shape that is
-        # deterministic without a script engine; anything else rejects).
-        # On the analyzed text column the terms match tokens VERBATIM,
-        # the term-query convention (terms_set is never analyzed).
-        from .exhaustive import bm25_msm
-
-        field, params = _one(spec, "terms_set")
-        if field != tc:
-            raise DslError(f"[terms_set] field [{field}] is not [{tc}] "
-                           "(the analyzed text column)")
-        if not isinstance(params, dict):
-            raise DslError("[terms_set] field spec must be an object")
-        _reject_unknown(params, {"terms", "minimum_should_match_field",
-                                 "minimum_should_match_script"}, "terms_set")
-        tlist = params.get("terms")
-        if (not isinstance(tlist, list) or not tlist
-                or not all(isinstance(t, str) and t for t in tlist)):
-            raise DslError("[terms_set] needs a non-empty string [terms] list")
-        has_field = "minimum_should_match_field" in params
-        has_script = "minimum_should_match_script" in params
-        if has_field == has_script:
-            raise DslError("[terms_set] needs exactly one of "
-                           "minimum_should_match_field / "
-                           "minimum_should_match_script")
-        try:
-            if has_field:
-                out = bm25_msm(ctx.docs, tlist,
-                               msm_col=_col_name(
-                                   params["minimum_should_match_field"]),
-                               id_col=ic, text_col=tc, round_to=4,
-                               tokenizer=ctx.analyzer)
-            else:
-                script = params["minimum_should_match_script"]
-                if (not isinstance(script, dict)
-                        or set(script) != {"source"}
-                        or not str(script["source"]).strip().isdigit()):
-                    raise DslError(
-                        "[terms_set] minimum_should_match_script supports "
-                        "only a constant integer source (no script engine)")
-                m = int(str(script["source"]).strip())
-                if m > len(set(tlist)):
-                    # a doc cannot match more distinct terms than queried
-                    spark = ctx.docs.sparkSession
-                    return spark.createDataFrame(
-                        [], "doc_id long, score double, rank int")
-                out = bm25_msm(ctx.docs, tlist, max(m, 1),
-                               id_col=ic, text_col=tc, round_to=4,
-                               tokenizer=ctx.analyzer)
-        except ValueError as e:
-            raise DslError(f"[terms_set] {e}") from e
-        return topk(out, k=k, round_to=None)
-
-    if typ == "more_like_this":
-        # MoreLikeThisQueryBuilder with one like-document reference:
-        # interesting-term selection + boolean-OR rewrite in
-        # query/mlt.py; raw-text likes and multi-doc likes are rejected
-        # loudly, never approximated
-        from . import mlt
-
-        _reject_unknown(spec, {"fields", "like", "max_query_terms",
-                               "min_term_freq", "min_doc_freq",
-                               "minimum_should_match", "include"},
-                        "more_like_this")
-        fields = spec.get("fields", [tc])
-        if fields != [tc]:
-            raise DslError(f"[more_like_this] supports fields=[{tc!r}] "
-                           f"(the analyzed text column), got {fields!r}")
-        like = spec.get("like")
-        if isinstance(like, dict):
-            like = [like]
-        if (not isinstance(like, list) or len(like) != 1
-                or not isinstance(like[0], dict)):
-            raise DslError("[more_like_this] supports exactly one "
-                           "{'_id': N} like-document reference")
-        ref = like[0]
-        _reject_unknown(ref, {"_id"}, "more_like_this.like")
-        if ("_id" not in ref or isinstance(ref["_id"], bool)
-                or not isinstance(ref["_id"], int)):
-            raise DslError("[more_like_this] like._id must be an integer "
-                           "doc id")
-        try:
-            return mlt.more_like_this_topk(
-                ctx.docs, ref["_id"],
-                max_query_terms=int(spec.get("max_query_terms",
-                                             mlt.MAX_QUERY_TERMS)),
-                min_term_freq=int(spec.get("min_term_freq",
-                                           mlt.MIN_TERM_FREQ)),
-                min_doc_freq=int(spec.get("min_doc_freq",
-                                          mlt.MIN_DOC_FREQ)),
-                minimum_should_match=spec.get("minimum_should_match",
-                                              mlt.DEFAULT_MSM),
-                include=bool(spec.get("include", False)),
-                k=k, id_col=ic, text_col=tc,
-            )
-        except ValueError as e:
-            raise DslError(f"[more_like_this] {e}") from e
-
-    if typ == "boosting":
-        # BoostingQueryBuilder: hits = the positive query's match set;
-        # docs also matched by the negative query keep their positive
-        # score DEMOTED by negative_boost (the negative score itself is
-        # never used — Lucene FunctionScoreQuery.boostByQuery)
-        _reject_unknown(spec, {"positive", "negative", "negative_boost"},
-                        "boosting")
-        for req in ("positive", "negative", "negative_boost"):
-            if req not in spec:
-                raise DslError(f"[boosting] needs [{req}]")
-        nb = spec["negative_boost"]
-        if (not isinstance(nb, (int, float)) or isinstance(nb, bool)
-                or not 0.0 <= float(nb) <= 1.0):
-            raise DslError(f"[boosting] negative_boost must be a float in "
-                           f"[0, 1], got {nb!r}")
-        pos = _scores_frame(ctx, spec["positive"], "boosting.positive")
-        neg = (_scores_frame(ctx, spec["negative"], "boosting.negative")
-               .select("doc_id").distinct().withColumn("nss_neg", F.lit(True)))
-        demoted = pos.join(neg, "doc_id", "left").select(
-            "doc_id",
-            F.when(F.col("nss_neg"),
-                   F.col("score") * F.lit(float(nb)))
-            .otherwise(F.col("score")).alias("score"),
-        )
-        return topk(demoted, k=k)
-
-    if typ == "function_score":
-        # FunctionScoreQueryBuilder with ONE function — either
-        # field_value_factor or a decay function (gauss/exp/linear on a
-        # numeric field): match set = the wrapped query's (default
-        # match_all); per-doc factor combined by boost_mode. For
-        # field_value_factor without [missing], docs whose field is
-        # NULL drop from the result (the reference errors per-doc there
-        # — the translator's documented boundary keeps the pipeline
-        # total); decay functions score missing fields 1.0 (the
-        # documented OpenSearch rule).
-        _reject_unknown(spec, {"query", "field_value_factor", "boost_mode",
-                               "gauss", "exp", "linear"}, "function_score")
-        fn_keys = [kk for kk in ("field_value_factor", "gauss", "exp",
-                                 "linear") if kk in spec]
-        if len(fn_keys) != 1:
-            raise DslError("[function_score] supports exactly one function: "
-                           "field_value_factor | gauss | exp | linear")
-        boost_mode = spec.get("boost_mode", "multiply")
-        if boost_mode not in ("multiply", "sum", "replace"):
-            raise DslError(f"[function_score] boost_mode must be "
-                           f"multiply|sum|replace, got [{boost_mode}]")
-        if fn_keys[0] in ("gauss", "exp", "linear"):
-            kind = fn_keys[0]
-            fld, dparams = _one(spec[kind], kind)
-            fld = _col_name(fld)
-            if fld == tc:
-                raise DslError(f"[{kind}] field [{fld}] is the analyzed "
-                               "text column; decay needs a numeric field")
-            if not isinstance(dparams, dict):
-                raise DslError(f"[{kind}] field spec must be an object")
-            _reject_unknown(dparams, {"origin", "scale", "offset", "decay"},
-                            kind)
-            try:
-                fexpr = decay_factor_sql(
-                    kind, fld,
-                    origin=float(dparams["origin"]),
-                    scale=float(dparams["scale"]),
-                    offset=float(dparams.get("offset", 0.0)),
-                    decay=float(dparams.get("decay", 0.5)),
-                )
-            except (KeyError, TypeError) as e:
-                raise DslError(f"[{kind}] needs numeric origin and scale") from e
-            except ValueError as e:
-                raise DslError(f"[{kind}] {e}") from e
-            base = spec.get("query", {"match_all": {}})
-            s = _scores_frame(ctx, base, "function_score.query")
-            joined = s.join(
-                ctx.docs.select(F.col(ic).alias("doc_id"),
-                                F.expr(fexpr).alias("nss_f")),
-                "doc_id",
-            )
-            combined = {
-                "multiply": F.col("score") * F.col("nss_f"),
-                "sum": F.col("score") + F.col("nss_f"),
-                "replace": F.col("nss_f"),
-            }[boost_mode]
-            return topk(joined.select("doc_id", combined.alias("score")), k=k)
-        fvf = spec["field_value_factor"]
-        if not isinstance(fvf, dict) or "field" not in fvf:
-            raise DslError("[field_value_factor] needs a [field]")
-        _reject_unknown(fvf, {"field", "factor", "modifier", "missing"},
-                        "field_value_factor")
-        fld = _col_name(fvf["field"])
-        if fld == tc:
-            raise DslError(f"[field_value_factor] field [{fld}] is the "
-                           "analyzed text column; it needs a numeric field")
-        factor = float(fvf.get("factor", 1.0))
-        modifier = fvf.get("modifier", "none")
-        mods = {
-            "none": lambda c: c,
-            "log1p": lambda c: F.log10(c + F.lit(1.0)),
-            "log2p": lambda c: F.log10(c + F.lit(2.0)),
-            "ln1p": lambda c: F.log(c + F.lit(1.0)),
-            "ln2p": lambda c: F.log(c + F.lit(2.0)),
-            "sqrt": F.sqrt,
-            "square": lambda c: c * c,
-            "reciprocal": lambda c: F.lit(1.0) / c,
-        }
-        if modifier not in mods:
-            raise DslError(f"[field_value_factor] modifier must be one of "
-                           f"{sorted(mods)}, got [{modifier}]")
-        base = spec.get("query", {"match_all": {}})
-        s = _scores_frame(ctx, base, "function_score.query")
-        val = F.col(fld).cast("double")
-        if "missing" in fvf:
-            val = F.coalesce(val, F.lit(float(fvf["missing"])))
-        fval = mods[modifier](val * F.lit(factor))
-        joined = s.join(
-            ctx.docs.select(F.col(ic).alias("doc_id"), fval.alias("nss_f")),
-            "doc_id",
-        ).where(F.col("nss_f").isNotNull())
-        combined = {
-            "multiply": F.col("score") * F.col("nss_f"),
-            "sum": F.col("score") + F.col("nss_f"),
-            "replace": F.col("nss_f"),
-        }[boost_mode]
-        return topk(joined.select("doc_id", combined.alias("score")), k=k)
-
-    if typ == "match_phrase":
-        return topk(_phrase_scores(ctx, spec), k=k)
-
-    if typ == "match_phrase_prefix":
-        from .multiterm import phrase_prefix_topk
-
-        field, params = _one(spec, "match_phrase_prefix")
-        params = _params(params, "query")
-        _reject_unknown(params, {"query", "max_expansions"}, "match_phrase_prefix")
-        toks = analyze_query(params["query"], ctx.analyzer)
-        if not toks:
-            raise DslError("[match_phrase_prefix] query analyzed to zero tokens")
-        kw = {"max_expansions": int(params["max_expansions"])} if "max_expansions" in params else {}
-        return phrase_prefix_topk(ctx.docs, toks[:-1], toks[-1], k=k,
-                                  id_col=ic, text_col=tc, tokenizer=ctx.analyzer, **kw)
-
-    if typ in ("prefix", "wildcard", "fuzzy", "regexp"):
-        from . import multiterm
-
-        field, params = _one(spec, typ)
-        params = _params(params, "value")
-        allowed = {"value", "max_expansions"}
-        if typ == "fuzzy":
-            allowed.add("fuzziness")
-        _reject_unknown(params, allowed, typ)
-        kw = {"max_expansions": int(params["max_expansions"])} if "max_expansions" in params else {}
-        if typ == "fuzzy" and "fuzziness" in params:
-            kw["max_edits"] = int(params["fuzziness"])
-        fn = {"prefix": multiterm.prefix_topk, "wildcard": multiterm.wildcard_topk,
-              "fuzzy": multiterm.fuzzy_topk, "regexp": multiterm.regexp_topk}[typ]
-        try:
-            return fn(ctx.docs, params["value"], k=k, id_col=ic, text_col=tc,
-                      tokenizer=ctx.analyzer, **kw)
-        except ValueError as e:
-            raise DslError(f"[{typ}] {e}") from e
-
-    if typ == "bool":
-        from .booleans import bool_clauses_topk
-
-        _reject_unknown(spec,
-                        {"must", "should", "must_not", "minimum_should_match",
-                         "filter"}, "bool")
-        if spec.get("filter"):
-            # FILTER occur (HybridQuery.java:48-59 semantics): the
-            # predicate restricts the MATCH SET, scores and stats stay
-            # global — never re-scored, never affecting IDF
-            from .exhaustive import topk
-            from .filters import filtered_scores
-
-            scoring = {kk: vv for kk, vv in spec.items() if kk != "filter"}
-            preds = [_predicate_sql(c) for c in spec["filter"]]
-            pred = F.expr(" AND ".join(f"({p})" for p in preds))
-            if set(scoring) == {"must"} and len(scoring["must"]) == 1:
-                from .exhaustive import bm25_conjunctive, bm25_scores
-
-                terms, op = _match_clause(
-                    ctx, _one(scoring["must"][0], "bool.must")[1], "match")
-                fn = bm25_conjunctive if op == "and" else bm25_scores
-                scores = fn(ctx.docs, terms, id_col=ic, text_col=tc,
-                            round_to=None, tokenizer=ctx.analyzer)
-                return topk(filtered_scores(scores, ctx.docs, pred), k=k)
-            raise DslError("[bool] filter context supports a single must "
-                           "match clause (the FILTER-occur shape)")
-
-        # per-CLAUSE semantics: each match clause is its own scorer
-        # (OR over its terms by default, AND with operator=and);
-        # minimum_should_match counts clauses, not terms
-        def clause_list(key):
-            out = []
-            for c in spec.get(key) or []:
-                ct, cs = _one(c, f"bool.{key}")
-                if ct != "match":
-                    raise DslError(f"bool [{key}] clauses must be match queries")
-                out.append(_match_clause(ctx, cs, "match"))
-            return out
-
-        try:
-            return bool_clauses_topk(
-                ctx.docs, must=clause_list("must"), should=clause_list("should"),
-                must_not=clause_list("must_not"),
-                minimum_should_match=int(spec.get("minimum_should_match", 0)),
-                k=k, id_col=ic, text_col=tc, tokenizer=ctx.analyzer,
-            )
-        except ValueError as e:
-            raise DslError(f"[bool] {e}") from e
-
-    if typ == "dis_max":
-        from .booleans import dis_max_topk
-
-        _reject_unknown(spec, {"queries", "tie_breaker"}, "dis_max")
-        tb = float(spec.get("tie_breaker", 0.0))
-        if not 0.0 <= tb <= 1.0:
-            raise DslError(f"[dis_max] tie_breaker must be in [0, 1], got {tb}")
-        subs = spec.get("queries")
-        if not isinstance(subs, list) or not subs:
-            raise DslError("[dis_max] needs a non-empty [queries] list")
-        parsed = [_one(sq, "dis_max sub-query") for sq in subs]
-        if all(t == "match" for t, _ in parsed):
-            clauses = [_match_clause(ctx, s, "match") for _, s in parsed]
-            if all(op == "or" for _, op in clauses):
-                # all-OR fast path: every sub-query scores in ONE
-                # corpus traversal (bm25_scores_by_group)
-                groups = [terms for terms, _ in clauses]
-                return dis_max_topk(ctx.docs, groups, tie_breaker=tb,
-                                    k=k, id_col=ic, text_col=tc,
-                                    tokenizer=ctx.analyzer)
-            # all-match with an AND sub: per-sub frames straight from
-            # the already-parsed clauses (bm25_conjunctive for AND)
-            from .exhaustive import bm25_conjunctive, bm25_scores
-
-            tagged = None
-            for i, (terms, op) in enumerate(clauses):
-                fn = bm25_conjunctive if op == "and" else bm25_scores
-                s = fn(ctx.docs, terms, id_col=ic, text_col=tc,
-                       round_to=None, tokenizer=ctx.analyzer).select(
-                    F.lit(i).alias("subquery_idx"), "doc_id", "score")
-                tagged = s if tagged is None else tagged.unionByName(s)
-        else:
-            # heterogeneous sub-queries — the reference's own two-phase
-            # IT composes DisMax over neural_sparse + match_all
-            # (NeuralSparseTwoPhaseProcessorIT.java:427-430); per-sub
-            # score frames reduce by Lucene's DisjunctionMaxQuery rule:
-            # max + tie_breaker * (sum of the rest)
-            tagged = None
-            for i, sq in enumerate(subs):
-                s = _sub_scores(ctx, sq, i)
-                tagged = s if tagged is None else tagged.unionByName(s)
-        scored = tagged.groupBy("doc_id").agg(
-            (F.max("score")
-             + F.lit(tb) * (F.sum("score") - F.max("score"))).alias("score"))
-        return topk(scored, k=k)
-
-    if typ == "neural":
-        # the neural query's own k is the ANN candidate pool; the BODY
-        # size (the k passed here) bounds the returned hits. One rule
-        # for both cases: the pool is never smaller than the size —
-        # a missing k defaults to max(size, 10), an explicit k < size
-        # is widened to size (so size hits always come back)
-        field, params = _one(spec, "neural")
-        params = _params(params, "query_vector_id")
-        if "k" not in params:
-            params = dict(params); params["k"] = max(k, 10)
-        elif _int_param(params["k"], "neural.k") < k:
-            params = dict(params); params["k"] = k
-        top = _neural_topk(ctx, {field: params})
-        w = F.row_number().over(Window.orderBy(F.col("cos").desc(), F.col("vec_id").asc()))
-        out = top.select(F.col("vec_id").alias("doc_id"),
-                         F.round("cos", 4).alias("score"),
-                         w.cast("int").alias("rank"))
-        return out.where(F.col("rank") <= k)
-
-    if typ == "neural_sparse":
-        from .exhaustive import topk
-
-        scores = _sub_scores(ctx, {typ: spec}, 0).drop("subquery_idx")
-        return topk(scores, k=k)
-
-    raise DslError(f"[{typ}] is only valid inside a hybrid query")  # pragma: no cover
+def _function_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # FunctionScoreQueryBuilder with ONE function — either
+    # field_value_factor or a decay function (gauss/exp/linear on a
+    # numeric field): match set = the wrapped query's (default
+    # match_all); per-doc factor combined by boost_mode. For
+    # field_value_factor without [missing], docs whose field is NULL
+    # drop from the result (the reference errors per-doc there — the
+    # translator's documented boundary keeps the pipeline total); decay
+    # functions score missing fields 1.0 (the documented OpenSearch
+    # rule).
+    _reject_unknown(spec, {"query", "field_value_factor", "boost_mode",
+                           "gauss", "exp", "linear"}, "function_score")
+    fn_keys = [kk for kk in ("field_value_factor", "gauss", "exp", "linear")
+               if kk in spec]
+    if len(fn_keys) != 1:
+        raise DslError("[function_score] supports exactly one function: "
+                       "field_value_factor | gauss | exp | linear")
+    boost_mode = spec.get("boost_mode", "multiply")
+    if boost_mode not in ("multiply", "sum", "replace"):
+        raise DslError(f"[function_score] boost_mode must be "
+                       f"multiply|sum|replace, got [{boost_mode}]")
+    fval = _function_factor(ctx, spec, fn_keys[0])
+    s = _scores_frame(ctx, spec.get("query", {"match_all": {}}),
+                      "function_score.query")
+    joined = s.join(
+        ctx.docs.select(F.col(ctx.id_col).alias("doc_id"), fval.alias("nss_f")),
+        "doc_id",
+    )
+    if fn_keys[0] == "field_value_factor":
+        joined = joined.where(F.col("nss_f").isNotNull())
+    combined = {
+        "multiply": F.col("score") * F.col("nss_f"),
+        "sum": F.col("score") + F.col("nss_f"),
+        "replace": F.col("nss_f"),
+    }[boost_mode]
+    return joined.select("doc_id", combined.alias("score"))
 
 
-def _parse_sorts(body_sort: Any) -> list[tuple[str, str]]:
-    sorts = []
-    for s in body_sort:
-        if isinstance(s, str):
-            sorts.append((s, "asc"))
-        else:
-            col, o = _one(s, "sort")
-            sorts.append((col, o["order"] if isinstance(o, dict) else o))
-    return sorts
+def _terms_set_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    # TermsSetQueryBuilder (Lucene CoveringQuery): a boolean OR of term
+    # clauses, each doc gated on its own minimum — from a numeric
+    # corpus column (minimum_should_match_field) or a constant-integer
+    # script (the one script shape that is deterministic without a
+    # script engine; anything else rejects). On the analyzed text column
+    # the terms match tokens VERBATIM, the term-query convention
+    # (terms_set is never analyzed).
+    from .exhaustive import bm25_msm
 
-
-def _phrase_terms(ctx: SearchContext, spec: Any, analyzer: str) -> list[str]:
-    field, params = _one(spec, "match_phrase")
-    params = _params(params, "query")
-    _reject_unknown(params, {"query", "slop"}, "match_phrase")
+    field, params = _one(spec, "terms_set")
     if field != ctx.text_col:
-        raise DslError(f"[match_phrase] field [{field}] is not [{ctx.text_col}]")
-    toks = analyze_query(params["query"], analyzer)
-    if not toks:
-        raise DslError("[match_phrase] query analyzed to zero tokens")
-    return sorted(set(toks))
+        raise DslError(f"[terms_set] field [{field}] is not [{ctx.text_col}] "
+                       "(the analyzed text column)")
+    if not isinstance(params, dict):
+        raise DslError("[terms_set] field spec must be an object")
+    _reject_unknown(params, {"terms", "minimum_should_match_field",
+                             "minimum_should_match_script"}, "terms_set")
+    tlist = params.get("terms")
+    if (not isinstance(tlist, list) or not tlist
+            or not all(isinstance(t, str) and t for t in tlist)):
+        raise DslError("[terms_set] needs a non-empty string [terms] list")
+    has_field = "minimum_should_match_field" in params
+    if has_field == ("minimum_should_match_script" in params):
+        raise DslError("[terms_set] needs exactly one of "
+                       "minimum_should_match_field / "
+                       "minimum_should_match_script")
+    kw = dict(id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
+              tokenizer=_analyzer(ctx, False))
+    if has_field:
+        col = _field(params["minimum_should_match_field"], _schema(ctx.docs),
+                     "terms_set", numeric=True)
+        return bm25_msm(ctx.docs, tlist, msm_col=col, **kw)
+    script = params["minimum_should_match_script"]
+    if (not isinstance(script, dict)
+            or set(script) != {"source"}
+            or not str(script["source"]).strip().isdigit()):
+        raise DslError(
+            "[terms_set] minimum_should_match_script supports "
+            "only a constant integer source (no script engine)")
+    m = int(str(script["source"]).strip())
+    if m > len(set(tlist)):
+        # a doc cannot match more distinct terms than queried
+        return _const(ctx, ctx.docs.where(F.lit(False)))
+    return bm25_msm(ctx.docs, tlist, max(m, 1), **kw)
 
 
-def _explainable_terms(ctx: SearchContext, typ: str, spec: Any) -> list[str]:
-    """The scoring terms whose per-term contributions sum EXACTLY to
-    each hit's score — the invariant the factor table exposes.
-    Restricted to shapes where it holds: match, match_phrase (phrase
-    queries score by term statistics), and bool bodies whose scoring
-    clauses are all operator=or with no term repeated across clauses
-    (an AND clause can match partially without scoring; a repeated term
-    scores once per clause)."""
-    analyzer = ctx.index_analyzer() if ctx.reader else ctx.analyzer
-    if typ == "match":
-        terms, _ = _match_clause(ctx, spec, "match", analyzer=analyzer)
-        return terms
-    if typ == "match_phrase":
-        return _phrase_terms(ctx, spec, analyzer)
-    if typ == "bool":
-        # must_not/filter clauses are non-scoring — they shape the hit
-        # list (which comes from the dispatched bool kernel) but never
-        # enter the factor breakdown
-        seen: set[str] = set()
-        for key in ("must", "should"):
-            for c in spec.get(key) or []:
-                ct, cs = _one(c, f"bool.{key}")
-                if ct != "match":
-                    raise DslError(f"bool [{key}] clauses must be match queries")
-                terms, op = _match_clause(ctx, cs, "match", analyzer=analyzer)
-                if op != "or":
-                    raise DslError("[explain] bool clauses must be operator=or "
-                                   "(a partially-matched AND clause breaks the "
-                                   "contribution-sum invariant)")
-                if dup := seen & set(terms):
-                    raise DslError(f"[explain] terms repeated across clauses "
-                                   f"{sorted(dup)} would double-count")
-                seen |= set(terms)
-        if not seen:
-            raise DslError("bool query needs at least one scoring clause")
-        return sorted(seen)
-    raise DslError("[explain] supports match, match_phrase and bool bodies")
+def _mlt_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    # MoreLikeThisQueryBuilder with one like-document reference:
+    # interesting-term selection + boolean-OR rewrite in query/mlt.py;
+    # raw-text likes and multi-doc likes are rejected loudly, never
+    # approximated
+    from . import mlt
+
+    _reject_unknown(spec, {"fields", "like", "max_query_terms",
+                           "min_term_freq", "min_doc_freq",
+                           "minimum_should_match", "include"},
+                    "more_like_this")
+    tc = ctx.text_col
+    fields = spec.get("fields", [tc])
+    if fields != [tc]:
+        raise DslError(f"[more_like_this] supports fields=[{tc!r}] "
+                       f"(the analyzed text column), got {fields!r}")
+    like = spec.get("like")
+    if isinstance(like, dict):
+        like = [like]
+    if (not isinstance(like, list) or len(like) != 1
+            or not isinstance(like[0], dict)):
+        raise DslError("[more_like_this] supports exactly one "
+                       "{'_id': N} like-document reference")
+    ref = like[0]
+    _reject_unknown(ref, {"_id"}, "more_like_this.like")
+    doc = _int_param(ref.get("_id"), "more_like_this.like._id")
+    counts = {kk: _int_param(spec.get(kk, default), f"more_like_this.{kk}", lo=0)
+              for kk, default in (("max_query_terms", mlt.MAX_QUERY_TERMS),
+                                  ("min_term_freq", mlt.MIN_TERM_FREQ),
+                                  ("min_doc_freq", mlt.MIN_DOC_FREQ))}
+    return mlt.more_like_this_topk(
+        ctx.docs, doc, **counts,
+        minimum_should_match=spec.get("minimum_should_match", mlt.DEFAULT_MSM),
+        include=bool(spec.get("include", False)),
+        k=k, id_col=ctx.id_col, text_col=tc,
+    )
 
 
-def _highlightable_terms(ctx: SearchContext, typ: str, spec: Any) -> list[str]:
-    """All scoring terms of the body — the snippet window centers on
-    the first occurrence of any of them (no sum invariant needed)."""
-    analyzer = ctx.index_analyzer() if ctx.reader else ctx.analyzer
-    if typ == "match":
-        terms, _ = _match_clause(ctx, spec, "match", analyzer=analyzer)
-        return terms
-    if typ == "match_phrase":
-        return _phrase_terms(ctx, spec, analyzer)
-    if typ == "bool":
-        out: set[str] = set()
-        for key in ("must", "should"):
-            for c in spec.get(key) or []:
-                ct, cs = _one(c, f"bool.{key}")
-                if ct != "match":
-                    raise DslError(f"bool [{key}] clauses must be match queries")
-                terms, _ = _match_clause(ctx, cs, "match", analyzer=analyzer)
-                out |= set(terms)
-        if not out:
-            raise DslError("bool query needs at least one scoring clause")
-        return sorted(out)
-    raise DslError("[highlight] supports match, match_phrase and bool bodies")
+def _pinned_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    # PinnedQueryBuilder: the listed ids rank first IN LIST ORDER,
+    # whatever the organic scores; organic hits follow by their own
+    # scores; a pinned doc never also appears organically. The cut
+    # orders by (pinned position, score desc, doc_id asc); the pinned
+    # docs score PINNED_BASE + (n − position) — the reference pins with
+    # float scores just above Float.MAX_VALUE/2, an implementation
+    # detail there too — exact doubles in both engines.
+    _reject_unknown(spec, {"ids", "organic"}, "pinned")
+    ids = [_int_param(v, "pinned.ids") for v in _nonempty_list(spec, "ids", "pinned")]
+    if len(set(ids)) != len(ids):
+        raise DslError(f"[pinned] ids must be duplicate-free, got {ids}")
+    if "organic" not in spec:
+        raise DslError("[pinned] needs an [organic] query")
+    org = _scores_frame(ctx, spec["organic"], "pinned.organic")
+    n = len(ids)
+    pos = F.create_map(*[x for i, v in enumerate(ids) for x in (F.lit(v), F.lit(i))])
+    pinned = (ctx.docs.where(F.col(ctx.id_col).isin(ids))
+              .select(F.col(ctx.id_col).alias("doc_id"))
+              .withColumn("score", F.lit(1.0e9 + n) - pos[F.col("doc_id")]))
+    organic = org.where(~F.col("doc_id").isin(ids))
+    both = pinned.unionByName(organic).withColumn(
+        "nss_pin", F.coalesce(pos[F.col("doc_id")], F.lit(n)))
+    order = [F.col("nss_pin").asc(), F.col("score").desc(), F.col("doc_id").asc()]
+    return (both.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+            .select("doc_id", F.round("score", 4).alias("score"), "rank"))
+
+
+def _wrapper_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    # WrapperQueryBuilder: a base64-encoded JSON query body, decoded
+    # and dispatched through the SAME translator — the
+    # transport-embedding shape, not a new query semantics
+    import base64
+    import json
+
+    _reject_unknown(spec, {"query"}, "wrapper")
+    raw = spec.get("query")
+    if not isinstance(raw, str) or not raw:
+        raise DslError("[wrapper] needs a base64 [query] string")
+    try:
+        inner = json.loads(base64.b64decode(raw, validate=True))
+    except Exception as e:
+        raise DslError(f"[wrapper] query is not base64-encoded JSON: "
+                       f"{e}") from e
+    if not isinstance(inner, dict):
+        raise DslError("[wrapper] decoded query must be an object")
+    return _topk_frame(ctx, inner, k)
+
+
+# --- span family and intervals ---------------------------------------------------
+#
+# A span query parses into the normalized plan both executors consume
+# (query/spans.py exhaustively; query/spans_indexed.py over the
+# positional index). None = provably empty (a clause's dictionary
+# expansion matched no term). Semantics and scoring: query/spans.py
+# module docstring. ``analyzer`` is the path's analyzer: span_term
+# values must be one token under it.
+
+
+def _span_term_terms(ctx: SearchContext, spec: Any, analyzer: str) -> list[str]:
+    """SpanTermQuery takes the term VERBATIM (no query-time analysis,
+    like Lucene); a value that is not already one analyzed token would
+    silently match nothing, so it is rejected loudly instead."""
+    params = _field_params(ctx, spec, "span_term", "value", {"value"})
+    val = params.get("value")
+    if not isinstance(val, str) or not val:
+        raise DslError("[span_term] needs a non-empty string [value]")
+    if analyze_query(val, analyzer) != [val]:
+        raise DslError(f"[span_term] takes one already-analyzed term; "
+                       f"[{val}] is not a single normalized token under "
+                       f"the [{analyzer}] analyzer")
+    return [val]
+
+
+def _span_multi_terms(ctx: SearchContext, spec: Any, analyzer: str) -> list[str]:
+    """span_multi: a prefix / wildcard / fuzzy / regexp query wrapped
+    for position-level matching (SpanMultiTermQueryWrapper), expanded
+    against the corpus dictionary under the same max_expansions=50
+    top-terms cut as the standalone multi-term rewrites; the wrapped
+    query's own validation rules apply unchanged."""
+    from .multiterm import expand_terms_corpus, expand_terms_indexed
+
+    _reject_unknown(spec, {"match"}, "span_multi")
+    if "match" not in spec:
+        raise DslError("[span_multi] needs a [match] query")
+    kind, ispec = _one(spec["match"], "span_multi.match")
+    if kind not in _MULTITERM_KINDS:
+        raise DslError(f"[span_multi] match type [{kind}] unsupported; "
+                       f"supported: {', '.join(_MULTITERM_KINDS)}")
+    params, matcher = _multiterm_spec(ctx, kind, ispec, set())
+    if not params["value"]:
+        raise DslError(f"[span_multi.{kind}] needs a non-empty [value]")
+    if ctx.reader is not None:
+        # index-backed dictionary — identical term set by construction
+        # (same corpus, same df ordering)
+        return expand_terms_indexed(ctx.reader, matcher=matcher)
+    return expand_terms_corpus(ctx.docs, matcher=matcher, id_col=ctx.id_col,
+                               text_col=ctx.text_col, tokenizer=analyzer)
+
+
+def _span_or_terms(ctx: SearchContext, spec: Any, analyzer: str) -> list[str]:
+    _reject_unknown(spec, {"clauses"}, "span_or")
+    out: set[str] = set()
+    for c in _nonempty_list(spec, "clauses", "span_or"):
+        if _one(c, "span_or clause")[0] == "span_or":
+            raise DslError("[span_or] nested span_or is unsupported; "
+                           "flatten the clauses")
+        out.update(_span_clause_terms(ctx, c, "span_or clause", analyzer))
+    return sorted(out)
+
+
+# the single-position span clauses, each → its position SET: the
+# corpus terms whose occurrences the clause's iterator would enumerate
+# (an empty list means the clause matches nothing)
+_SPAN_CLAUSES = {"span_term": _span_term_terms, "span_or": _span_or_terms,
+                 "span_multi": _span_multi_terms}
+
+
+def _span_clause_terms(ctx: SearchContext, q: Any, what: str,
+                       analyzer: str) -> list[str]:
+    kind, spec = _one(q, what)
+    if kind not in _SPAN_CLAUSES:
+        raise DslError(f"[{what}] span clause type [{kind}] unsupported; "
+                       f"supported: {', '.join(_SPAN_CLAUSES)}")
+    return _SPAN_CLAUSES[kind](ctx, spec, analyzer)
+
+
+def _span_set_plan(kind: str, ctx: SearchContext, spec: Any,
+                   analyzer: str) -> dict | None:
+    terms = _SPAN_CLAUSES[kind](ctx, spec, analyzer)
+    return {"kind": "set", "required": [terms]} if terms else None
+
+
+def _near_plan(ctx: SearchContext, nspec: Any, analyzer: str,
+               max_end: int | None = None) -> dict | None:
+    from .spans import MAX_ORDERED_CLAUSES, _clause_map
+
+    _reject_unknown(nspec, {"clauses", "slop", "in_order"}, "span_near")
+    clauses = nspec.get("clauses")
+    if not isinstance(clauses, list) or len(clauses) < 2:
+        raise DslError("[span_near] needs a [clauses] list of >= 2 "
+                       "span queries")
+    in_order = nspec.get("in_order", True)
+    if not isinstance(in_order, bool):
+        raise DslError("[span_near] in_order must be a boolean")
+    if in_order and len(clauses) > MAX_ORDERED_CLAUSES:
+        raise DslError(f"[span_near] ordered span_near supports at most "
+                       f"{MAX_ORDERED_CLAUSES} clauses, got {len(clauses)}")
+    if not in_order and len(clauses) != 2:
+        raise DslError("[span_near] unordered span_near supports "
+                       "exactly 2 clauses")
+    slop = _int_param(nspec.get("slop", 0), "span_near.slop", lo=0)
+    sets = [_span_clause_terms(ctx, c, "span_near clause", analyzer)
+            for c in clauses]
+    try:
+        # disjointness; empty expansions get unique placeholders so the
+        # provably-empty case still returns None below instead of raising
+        _clause_map([s or [f"__missing_{i}__"] for i, s in enumerate(sets)])
+    except ValueError as e:
+        raise DslError(f"[span_near] {e}") from e
+    if any(not s for s in sets):
+        return None
+    return {"kind": "near", "required": sets, "slop": slop,
+            "in_order": in_order, "max_end": max_end}
+
+
+def _span_contain_plan(what: str, ctx: SearchContext, spec: Any,
+                       analyzer: str) -> dict | None:
+    # SpanContainingQuery / SpanWithinQuery: BIG spans that contain a
+    # little occurrence survive (containing scores the big spans,
+    # within the little ones). big = an ordered span_near; little = a
+    # single-token span clause
+    _reject_unknown(spec, {"big", "little"}, what)
+    if "big" not in spec or "little" not in spec:
+        raise DslError(f"[{what}] needs [big] and [little]")
+    btyp, bspec = _one(spec["big"], f"{what}.big")
+    if btyp != "span_near":
+        raise DslError(f"[{what}] big must be a span_near, got [{btyp}]")
+    # structural check BEFORE expansion — an empty dictionary expansion
+    # must not data-dependently accept an invalid shape
+    if isinstance(bspec, dict) and bspec.get("in_order", True) is not True:
+        raise DslError(f"[{what}] big span_near must be in_order")
+    bplan = _near_plan(ctx, bspec, analyzer)
+    little = _span_clause_terms(ctx, spec["little"], f"{what}.little", analyzer)
+    if bplan is None or not little:
+        return None
+    big_terms = {t for terms in bplan["required"] for t in terms}
+    if big_terms & set(little):
+        raise DslError(f"[{what}] big/little term sets overlap: "
+                       f"{sorted(big_terms & set(little))}")
+    return {"kind": "contain", "required": bplan["required"],
+            "little": little, "slop": bplan["slop"],
+            "within": what == "span_within"}
+
+
+def _span_first_plan(ctx: SearchContext, spec: Any, analyzer: str) -> dict | None:
+    _reject_unknown(spec, {"match", "end"}, "span_first")
+    if "match" not in spec or "end" not in spec:
+        raise DslError("[span_first] needs [match] and [end]")
+    end = _int_param(spec["end"], "span_first.end", lo=0)
+    kind, ispec = _one(spec["match"], "span_first.match")
+    if kind == "span_near":
+        return _near_plan(ctx, ispec, analyzer, max_end=end)
+    if kind not in _SPAN_CLAUSES:
+        raise DslError(f"[span_first] match type [{kind}] unsupported; "
+                       f"supported: {', '.join(_SPAN_CLAUSES)}, span_near")
+    terms = _span_clause_terms(ctx, spec["match"], "span_first.match", analyzer)
+    if not terms:
+        return None
+    return {"kind": "set", "required": [terms], "max_end": end}
+
+
+def _span_not_plan(ctx: SearchContext, spec: Any, analyzer: str) -> dict | None:
+    _reject_unknown(spec, {"include", "exclude", "pre", "post", "dist"},
+                    "span_not")
+    if "include" not in spec or "exclude" not in spec:
+        raise DslError("[span_not] needs [include] and [exclude]")
+    if "dist" in spec and ("pre" in spec or "post" in spec):
+        raise DslError("[span_not] dist is shorthand for pre+post; give "
+                       "one or the other")
+    dist = _int_param(spec.get("dist", 0), "span_not.dist", lo=0)
+    pre = _int_param(spec.get("pre", dist), "span_not.pre", lo=0)
+    post = _int_param(spec.get("post", dist), "span_not.post", lo=0)
+    include = _span_clause_terms(ctx, spec["include"], "span_not.include", analyzer)
+    exclude = _span_clause_terms(ctx, spec["exclude"], "span_not.exclude", analyzer)
+    if set(include) & set(exclude):
+        raise DslError("[span_not] include/exclude term sets overlap: "
+                       f"{sorted(set(include) & set(exclude))}")
+    if not include:
+        return None
+    if not exclude:
+        # nothing to exclude: plain span over the include set
+        return {"kind": "set", "required": [include]}
+    return {"kind": "not", "required": [include], "exclude": exclude,
+            "pre": pre, "post": post}
+
+
+_SPAN_PLANS = {
+    **{kind: partial(_span_set_plan, kind) for kind in _SPAN_CLAUSES},
+    "span_near": _near_plan,
+    "span_first": _span_first_plan,
+    "span_not": _span_not_plan,
+    "span_containing": partial(_span_contain_plan, "span_containing"),
+    "span_within": partial(_span_contain_plan, "span_within"),
+}
+
+
+def _span_plan(typ: str, ctx: SearchContext, spec: Any,
+               analyzer: str) -> dict | None:
+    if not isinstance(spec, dict):
+        raise DslError(f"[{typ}] must be an object")
+    return _SPAN_PLANS[typ](ctx, spec, analyzer)
+
+
+def _span_scores(typ: str, ctx: SearchContext, spec: Any) -> DataFrame:
+    """Full-frame (doc_id, score) for any span query — the raw shape
+    hybrid normalization consumes; the top-k rounds it first (the
+    handler's round-then-rank)."""
+    from .spans import span_contain_scores, span_near_scores, span_not_scores, span_set_scores
+
+    an = _analyzer(ctx, False)
+    plan = _span_plan(typ, ctx, spec, an)
+    if plan is None:
+        return _const(ctx, ctx.docs.where(F.lit(False)), 0.0)
+    kw = dict(analyzer=an, id_col=ctx.id_col, text_col=ctx.text_col, round_to=None)
+    if plan["kind"] == "set":
+        s = span_set_scores(ctx.docs, plan["required"][0],
+                            max_end=plan.get("max_end"), **kw)
+    elif plan["kind"] == "not":
+        s = span_not_scores(ctx.docs, plan["required"][0], plan["exclude"],
+                            pre=plan["pre"], post=plan["post"], **kw)
+    elif plan["kind"] == "contain":
+        s = span_contain_scores(ctx.docs, plan["required"], plan["little"],
+                                slop=plan["slop"], within=plan["within"], **kw)
+    else:
+        s = span_near_scores(ctx.docs, plan["required"], slop=plan["slop"],
+                             in_order=plan["in_order"],
+                             max_end=plan.get("max_end"), **kw)
+    return s.select("doc_id", "score")
+
+
+def _span_indexed(typ: str, ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    """Span queries serve from the POSITIONAL index: candidate-block
+    position decode + vectorized searchsorted span iterators — no
+    corpus re-tokenize (query/spans_indexed.py)."""
+    from .spans_indexed import span_topk_indexed
+
+    plan = _span_plan(typ, ctx, spec, _analyzer(ctx, True))
+    if plan is None:
+        return _no_hits(ctx)
+    # round_to=4 pre-rounds inside the kernel cut (round-then-rank,
+    # matching the exhaustive span branch)
+    return _ranked(span_topk_indexed(ctx.reader, plan, k=k, round_to=4), ctx.id_col)
+
+
+def _intervals_plan(ctx: SearchContext, spec: Any, analyzer: str) -> tuple:
+    """Parse an ``intervals`` body into (clause term sets, max_gaps,
+    ordered). Supported sources: ``match`` (one single-term clause per
+    analyzed token, position order preserved) and ``any_of`` over
+    single-term matches (one union clause — every occurrence is a
+    length-1 minimal interval). The filter algebra (all_of, prefix,
+    before/after/containing, ...) is rejected by name."""
+    if not isinstance(spec, dict):
+        raise DslError("[intervals] must be an object")
+    field, src = _one(spec, "intervals")
+    if field != ctx.text_col:
+        raise DslError(f"[intervals] field [{field}] is not the corpus "
+                       f"text column [{ctx.text_col}]")
+    styp, sspec = _one(src, "intervals source")
+    if styp == "match":
+        _reject_unknown(sspec, {"query", "max_gaps", "ordered"},
+                        "intervals.match")
+        toks = analyze_query(_query_text(sspec, "intervals.match"),
+                             analyzer)  # order matters
+        if not toks:
+            raise DslError("[intervals.match] query analyzed to zero tokens")
+        if len(set(toks)) != len(toks):
+            raise DslError("[intervals.match] repeated terms are "
+                           "unsupported (the position tagging would be "
+                           "ambiguous)")
+        ordered = sspec.get("ordered", False)
+        if not isinstance(ordered, bool):
+            raise DslError("[intervals.match] ordered must be a boolean")
+        from .spans import MAX_ORDERED_CLAUSES
+
+        if ordered and len(toks) > MAX_ORDERED_CLAUSES:
+            raise DslError(f"[intervals.match] ordered supports at most "
+                           f"{MAX_ORDERED_CLAUSES} terms, got {len(toks)}")
+        if not ordered and len(toks) > 2:
+            raise DslError("[intervals.match] unordered supports at most "
+                           f"2 terms, got {len(toks)}")
+        max_gaps = _int_param(sspec.get("max_gaps", -1),
+                              "intervals.match.max_gaps", lo=-1)
+        return [[t] for t in toks], max_gaps, ordered
+    if styp == "any_of":
+        _reject_unknown(sspec, {"intervals"}, "intervals.any_of")
+        terms: set[str] = set()
+        for sub in _nonempty_list(sspec, "intervals", "intervals.any_of"):
+            sub_typ, sub_spec = _one(sub, "intervals.any_of entry")
+            if sub_typ != "match":
+                raise DslError("[intervals.any_of] entries must be "
+                               "single-term [match] sources")
+            _reject_unknown(sub_spec, {"query"}, "intervals.any_of.match")
+            sub_q = sub_spec.get("query")
+            if not isinstance(sub_q, str) or not sub_q.strip():
+                raise DslError("[intervals.any_of.match] needs a non-empty "
+                               "string [query]")
+            sub_toks = analyze_query(sub_q, analyzer)
+            if len(sub_toks) != 1:
+                raise DslError("[intervals.any_of] entries must analyze "
+                               "to exactly one term")
+            terms.add(sub_toks[0])
+        return [sorted(terms)], -1, False
+    raise DslError(f"[intervals] source [{styp}] unsupported; supported: "
+                   "match, any_of")
+
+
+def _intervals_scores(ctx: SearchContext, spec: Any) -> DataFrame:
+    from .intervals import interval_scores
+
+    an = _analyzer(ctx, False)
+    clauses, max_gaps, ordered = _intervals_plan(ctx, spec, an)
+    return interval_scores(
+        ctx.docs, clauses, max_gaps=max_gaps, ordered=ordered,
+        analyzer=an, id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
+    ).select("doc_id", "score")
+
+
+def _intervals_indexed(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
+    # minimal-interval enumeration over the SAME positional kernel
+    # (spans_indexed._enumerate_iv) — no corpus re-tokenize
+    from .spans_indexed import span_topk_indexed
+
+    clauses, max_gaps, ordered = _intervals_plan(ctx, spec, _analyzer(ctx, True))
+    plan = {"kind": "iv", "required": clauses, "max_gaps": max_gaps,
+            "ordered": ordered}
+    return _ranked(span_topk_indexed(ctx.reader, plan, k=k, round_to=4), ctx.id_col)
+
+
+# --- the handler table ----------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Handler:
+    """One query type's translation. ``scores(ctx, spec)`` is the full
+    raw (doc_id, score) match set; ``subquery`` says whether the type may
+    stand where a scoring sub-query goes (hybrid, dis_max, the compound
+    wrappers). The rest are optional: ``topk(ctx, spec, k)`` where the
+    exhaustive top-k is not the ranked ``scores`` (``round_first``
+    selects round-then-rank for that ranking); ``indexed_topk(ctx, spec,
+    k)`` on the index kernels, used under a reader; ``matched(ctx,
+    spec)`` the aggs/sort hit set as one id column; ``terms(ctx, spec,
+    what)`` the scoring terms explain and highlight break down."""
+
+    scores: Callable[[SearchContext, Any], DataFrame] | None = None
+    topk: Callable[[SearchContext, Any, int], DataFrame] | None = None
+    indexed_topk: Callable[[SearchContext, Any, int], DataFrame] | None = None
+    matched: Callable[[SearchContext, Any], DataFrame] | None = None
+    terms: Callable[[SearchContext, Any, str], list[str]] | None = None
+    subquery: bool = True
+    round_first: bool = False
+
+
+def _leaf(scores: Callable[[SearchContext, Any], DataFrame]) -> _Handler:
+    """A type whose aggs/sort hit set is its scored match set."""
+    return _Handler(scores=scores,
+                    matched=lambda ctx, spec: _ids(ctx, scores(ctx, spec)))
+
+
+# containment probes have no kernel mode yet: with a reader they serve
+# exhaustively, like a reader-less context
+_SPAN_KERNEL_FREE = ("span_containing", "span_within")
+
+_HANDLERS: dict[str, _Handler] = {
+    "match": _Handler(scores=_match_scores, topk=_match_topk,
+                      indexed_topk=partial(_match_topk, indexed=True),
+                      matched=_match_matched,
+                      terms=_match_terms_of),
+    "match_phrase": _Handler(scores=_phrase_scores, indexed_topk=_phrase_indexed,
+                             terms=_phrase_terms),
+    "match_phrase_prefix": _Handler(
+        topk=_phrase_prefix_topk, indexed_topk=partial(_phrase_prefix_topk, indexed=True)),
+    **{kind: _Handler(topk=partial(_multiterm_topk, kind, _expansion_topk),
+                      indexed_topk=partial(_multiterm_topk, kind, _expansion_indexed))
+       for kind in _MULTITERM_KINDS},
+    "bool": _Handler(topk=_bool_topk, indexed_topk=partial(_bool_topk, indexed=True),
+                     matched=_bool_matched, terms=_bool_terms),
+    "dis_max": _Handler(topk=_dis_max_topk),
+    "hybrid": _Handler(topk=_hybrid_topk, matched=_hybrid_matched),
+    "neural": _vector_handler(_neural_hits),
+    "neural_sparse": _Handler(scores=_sparse_scores),
+    "nested": _leaf(_nested_scores),
+    "term": _leaf(_term_scores),
+    "terms": _leaf(_terms_scores),
+    "range": _leaf(lambda ctx, spec: _filter_frame(ctx, {"range": spec})),
+    "exists": _leaf(lambda ctx, spec: _filter_frame(ctx, {"exists": spec})),
+    "ids": _Handler(scores=_ids_scores),
+    "match_all": _leaf(_match_all_scores),
+    "constant_score": _leaf(_constant_score_scores),
+    "multi_match": _Handler(scores=_multi_match_scores, topk=_multi_match_topk),
+    "boosting": _Handler(scores=_boosting_scores, subquery=False),
+    "function_score": _Handler(scores=_function_scores, subquery=False),
+    "simple_query_string": _Handler(scores=_simple_query_scores),
+    "more_like_this": _Handler(topk=_mlt_topk),
+    "rank_feature": _Handler(scores=_rank_feature_scores),
+    "match_bool_prefix": _Handler(scores=_match_bool_prefix_scores),
+    "query_string": _Handler(scores=_query_string_scores),
+    "terms_set": _Handler(scores=_terms_set_scores, subquery=False,
+                          round_first=True),
+    "knn": _vector_handler(_knn_hits),
+    "script_score": _Handler(scores=_script_scores),
+    "pinned": _Handler(topk=_pinned_topk),
+    "wrapper": _Handler(topk=_wrapper_topk),
+    "match_none": _Handler(scores=_match_none_scores),
+    "distance_feature": _Handler(scores=_distance_feature_scores),
+    **{kind: _Handler(scores=partial(_span_scores, kind), round_first=True,
+                      indexed_topk=None if kind in _SPAN_KERNEL_FREE
+                      else partial(_span_indexed, kind))
+       for kind in _SPAN_PLANS},
+    "intervals": _Handler(scores=_intervals_scores, indexed_topk=_intervals_indexed,
+                          round_first=True),
+}
+_QUERY_TYPES = tuple(_HANDLERS)
+_SUBQUERY_TYPES = tuple(t for t, h in _HANDLERS.items()
+                        if h.scores is not None and h.subquery)
+
+
+def _supporting(hook: str) -> str:
+    return ", ".join(t for t, h in _HANDLERS.items() if getattr(h, hook) is not None)
+
+
+# --- dispatch ---------------------------------------------------------------------
+
+
+def _scores(ctx: SearchContext, q: Any, what: str = "hybrid sub-query") -> DataFrame:
+    """One scoring sub-query's full raw (doc_id, score) match set —
+    hybrid sub-queries, dis_max, and the compound wrappers (boosting,
+    function_score, script_score, pinned) compose over exactly this
+    family."""
+    typ, spec = _one(q, what)
+    h = _HANDLERS.get(typ)
+    if h is None or h.scores is None or not h.subquery:
+        raise DslError(f"{what} type [{typ}] unsupported; supported: "
+                       f"{', '.join(_SUBQUERY_TYPES)}")
+    return h.scores(ctx, spec)
+
+
+def _scores_frame(ctx: SearchContext, q: Any, what: str) -> DataFrame:
+    """``_scores`` in a compound wrapper's slot: errors name the slot."""
+    try:
+        return _scores(ctx, q)
+    except DslError as e:
+        raise DslError(f"[{what}] {e}") from e
+
+
+def _topk_frame(ctx: SearchContext, q: Any, k: int) -> DataFrame:
+    typ, spec = _one(q, "query")
+    h = _HANDLERS.get(typ)
+    if h is None:
+        raise DslError(f"unknown query type [{typ}]; supported: "
+                       f"{', '.join(_QUERY_TYPES)}")
+    if ctx.reader is not None and h.indexed_topk is not None:
+        _require_doc_key(ctx)
+        return h.indexed_topk(ctx, spec, k)
+    if h.topk is not None:
+        return h.topk(ctx, spec, k)
+    return _rank(h.scores(ctx, spec), k, h.round_first)
+
+
+def _matched_docs(ctx: SearchContext, q: Any) -> DataFrame:
+    """The FULL hit set (no top-k cut) joined back to the corpus —
+    aggregations run over every matching doc, as in the reference
+    (aggs see all hits, not the size window)."""
+    typ, spec = _one(q, "query")
+    h = _HANDLERS.get(typ)
+    if h is None or h.matched is None:
+        raise DslError(f"aggs/sort hit sets support {_supporting('matched')}; "
+                       f"got [{typ}]")
+    return h.matched(ctx, spec).join(ctx.docs, ctx.id_col)
+
+
+def _terms_of(ctx: SearchContext, typ: str, spec: Any, what: str) -> list[str]:
+    h = _HANDLERS.get(typ)
+    if h is None or h.terms is None:
+        raise DslError(f"[{what}] supports {_supporting('terms')} bodies")
+    return h.terms(ctx, spec, what)
 
 
 def _plain_or_match(ctx: SearchContext, typ: str, spec: Any) -> bool:
     return (typ == "match" and ctx.reader is None
-            and _match_clause(ctx, spec, "match")[1] == "or")
+            and _match_clause(ctx, spec, "match", _analyzer(ctx, False))[1] == "or")
+
+
+def _parse_sorts(body_sort: Any, schema: dict[str, str]) -> list[tuple[str, str]]:
+    if not isinstance(body_sort, list):
+        raise DslError("[sort] must be a list")
+    sorts = []
+    for s in body_sort:
+        if isinstance(s, str):
+            col, order = s, "asc"
+        else:
+            col, o = _one(s, "sort")
+            order = o.get("order") if isinstance(o, dict) else o
+        if not isinstance(order, str) or order.lower() not in ("asc", "desc"):
+            raise DslError(f"[sort] order must be asc|desc, got {order!r}")
+        sorts.append((_field(col, schema, "sort"), order))
+    return sorts
 
 
 def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> DataFrame:
     """Run one OpenSearch-style search body. ``pipeline`` carries the
     hybrid normalization/combination config (the plugin configures it
     on a search pipeline, not in the body)."""
+    if not isinstance(body, dict):
+        raise DslError(f"a search body must be an object, got {body!r}")
     if "aggs" in body:
-        if int(body.get("size", 0)) != 0:
+        if _int_param(body.get("size", 0), "size") != 0:
             raise DslError("search() returns one frame; a hits+aggs body "
                            "(size > 0 with aggs) goes through "
                            "search_with_aggs(), which returns both")
         return aggregate(ctx, body)
     if "suggest" in body:
-        # the suggest section (term suggester): a spell-correction
-        # frame, not a hit list — combining it with a query in one body
-        # is rejected (one frame per search() call, like aggs)
-        from .suggest import term_suggest
-
-        if set(body) - {"suggest", "size"} or int(body.get("size", 0)) != 0:
-            raise DslError("[suggest] bodies support the suggest section "
-                           "only (size: 0)")
-        name, sspec = _one(body["suggest"], "suggest")
-        if not isinstance(sspec, dict):
-            raise DslError(f"[suggest.{name}] must be an object")
-        if "completion" in sspec:
-            # completion suggester: prefix or regex against the term
-            # dictionary (the completion-field analog; df = weight)
-            from .multiterm import regexp_matcher
-            from .suggest import completion_suggest
-
-            _reject_unknown(sspec, {"prefix", "regex", "completion"},
-                            f"suggest.{name}")
-            if ("prefix" in sspec) == ("regex" in sspec):
-                raise DslError(f"[suggest.{name}] completion needs exactly "
-                               "one of [prefix] / [regex]")
-            cspec = sspec["completion"]
-            if not isinstance(cspec, dict):
-                raise DslError(f"[suggest.{name}.completion] must be an "
-                               "object")
-            _reject_unknown(cspec, {"field", "size"},
-                            f"suggest.{name}.completion")
-            if cspec.get("field", ctx.text_col) != ctx.text_col:
-                raise DslError(f"[suggest.{name}.completion] field must be "
-                               f"[{ctx.text_col}]")
-            size_v = _int_param(cspec.get("size"),
-                               f"suggest.{name}.completion.size", default=5)
-            try:
-                matcher = None
-                if "regex" in sspec:
-                    if not isinstance(sspec["regex"], str):
-                        raise ValueError("regex must be a string")
-                    matcher = regexp_matcher(sspec["regex"])
-                return completion_suggest(
-                    ctx.docs, prefix=sspec.get("prefix"), matcher=matcher,
-                    size=size_v, analyzer=ctx.analyzer,
-                    id_col=ctx.id_col, text_col=ctx.text_col,
-                )
-            except (TypeError, ValueError) as e:
-                raise DslError(f"[suggest.{name}] {e}") from e
-        _reject_unknown(sspec, {"text", "term"}, f"suggest.{name}")
-        if "text" not in sspec or "term" not in sspec:
-            raise DslError(f"[suggest.{name}] needs [text] and [term]")
-        tspec = sspec["term"]
-        if not isinstance(tspec, dict):
-            raise DslError(f"[suggest.{name}.term] must be an object")
-        _reject_unknown(tspec, {"field", "size", "max_edits",
-                                "suggest_mode"}, f"suggest.{name}.term")
-        if tspec.get("field", ctx.text_col) != ctx.text_col:
-            raise DslError(f"[suggest.{name}.term] field must be "
-                           f"[{ctx.text_col}]")
-        try:
-            return term_suggest(
-                ctx.docs, sspec["text"],
-                size=int(tspec.get("size", 5)),
-                max_edits=int(tspec.get("max_edits", 2)),
-                suggest_mode=tspec.get("suggest_mode", "missing"),
-                analyzer=ctx.analyzer,
-                id_col=ctx.id_col, text_col=ctx.text_col,
-            )
-        except (TypeError, ValueError) as e:
-            raise DslError(f"[suggest.{name}] {e}") from e
+        return _suggest(ctx, body)
     _reject_unknown(body, _BODY_KEYS, "search body")
     if "query" not in body:
         raise DslError("search body needs a [query]")
     q = body["query"]
     typ, spec = _one(q, "query")
-    size = int(body.get("size", 10))
-    from_ = int(body.get("from", 0))
+    size = _int_param(body.get("size", 10), "size", lo=0)
+    from_ = _int_param(body.get("from", 0), "from", lo=0)
+    with _rejects(typ):
+        return _search(ctx, body, pipeline, q, typ, spec, size, from_)
 
-    if body.get("explain"):
-        # per-hit scoring explanation (Lucene Explanation analog): the
-        # BM25 factor table, on match / match_phrase / bool bodies and
-        # on the indexed path (the hits come from the dispatched kernel,
-        # the breakdown joins to them — bounded by k × |terms| rows)
+
+def _search(ctx: SearchContext, body: dict, pipeline: dict | None, q: dict,
+            typ: str, spec: Any, size: int, from_: int) -> DataFrame:
+    view = "explain" if body.get("explain") else ("highlight" if "highlight" in body else None)
+    if view is not None:
+        # explain: the per-hit BM25 factor table (Lucene Explanation
+        # analog) on match / match_phrase / bool bodies and on the
+        # indexed path; highlight: a snippet window around the first
+        # query-term occurrence. The hits come from the dispatched
+        # kernel, the view joins to them (bounded by k × |terms| rows)
+        # — a plain OR match's own scorer top-k IS the hit list
         from .exhaustive import bm25_explain
-
-        if from_ != 0 or set(body) - {"query", "size", "explain"}:
-            raise DslError("[explain] bodies support query + size only")
-        if typ == "hybrid":
-            # hybrid bodies explain through the NORMALIZATION provenance
-            # processor (the plugin's explanation response processor
-            # documents raw/normalized/weight/combined per sub-query),
-            # not the per-term BM25 factor table
-            from .hybrid import explain_scores
-
-            if int(body.get("size", 0)) != 0:
-                raise DslError("[explain] hybrid provenance covers the "
-                               "FULL match set; use size: 0")
-            hs, tagged = _hybrid_tagged(ctx, spec, pipeline, 10, 0)
-            if hs.normalization == "rrf":
-                raise DslError("[explain] rrf is rank-based — it has no "
-                               "normalization provenance to explain")
-            out = explain_scores(tagged, hs.normalization, hs.combination,
-                                 hs.weights, hs.n_subqueries)
-            return out.select(
-                "doc_id",
-                F.col("subquery_idx").cast("int").alias("subquery_idx"),
-                F.round("raw_score", 4).alias("raw_score"),
-                F.round("norm_score", 4).alias("norm_score"),
-                "weight",
-                F.round("combined_score", 4).alias("combined_score"),
-            )
-        terms = _explainable_terms(ctx, typ, spec)
-        if _plain_or_match(ctx, typ, spec):
-            hits = None  # the scorer's own top-k IS the hit list
-        else:
-            hits = _topk_frame(ctx, q, size)
-        return bm25_explain(ctx.docs, terms, k=size,
-                            id_col=ctx.id_col, text_col=ctx.text_col, hits=hits,
-                            tokenizer=ctx.index_analyzer())
-
-    if "highlight" in body:
         from .highlight import highlight_topk
 
-        hl = body["highlight"]
-        _reject_unknown(hl, {"fields", "window"}, "highlight")
-        field, fspec = _one(hl["fields"], "highlight.fields")
-        if field != ctx.text_col:
-            raise DslError("[highlight] supports the corpus text field only")
-        if from_ != 0 or set(body) - {"query", "size", "highlight"}:
-            raise DslError("[highlight] bodies support query + size only")
-        kw = {"window": int(hl["window"])} if "window" in hl else {}
-        terms = _highlightable_terms(ctx, typ, spec)
-        if _plain_or_match(ctx, typ, spec):
-            hits = None
-        else:
-            # phrase/bool/indexed: the dispatched kernel produces the
-            # hits; the highlighter only windows their token streams
-            hits = _topk_frame(ctx, q, size)
-        return highlight_topk(ctx.docs, terms, k=size,
-                              id_col=ctx.id_col, text_col=ctx.text_col,
-                              hits=hits, tokenizer=ctx.index_analyzer(), **kw)
+        if from_ != 0 or set(body) - {"query", "size", view}:
+            raise DslError(f"[{view}] bodies support query + size only")
+        if view == "explain" and typ == "hybrid":
+            return _hybrid_explain(ctx, body, spec, pipeline)
+        kw = {}
+        if view == "highlight":
+            hl = body["highlight"]
+            _reject_unknown(hl, {"fields", "window"}, "highlight")
+            if "fields" not in hl:
+                raise DslError("[highlight] needs [fields]")
+            if _one(hl["fields"], "highlight.fields")[0] != ctx.text_col:
+                raise DslError("[highlight] supports the corpus text field only")
+            if "window" in hl:
+                kw["window"] = _int_param(hl["window"], "highlight.window", lo=0)
+        terms = _terms_of(ctx, typ, spec, view)
+        hits = None if _plain_or_match(ctx, typ, spec) else _topk_frame(ctx, q, size)
+        fn = bm25_explain if view == "explain" else highlight_topk
+        return fn(ctx.docs, terms, k=size, id_col=ctx.id_col, text_col=ctx.text_col,
+                  hits=hits, tokenizer=_analyzer(ctx, True), **kw)
 
     if "sort" in body and typ != "hybrid":
         # OpenSearch sort semantics: the sort REPLACES relevance
@@ -2697,30 +2495,30 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
 
         _reject_unknown(body, {"query", "size", "sort", "search_after",
                                "post_filter"}, "sort body")
-        sorts = _parse_sorts(body["sort"])
-        fields = [_col_name(c) for c, _ in sorts]
+        schema = _schema(ctx.docs)
+        sorts = _parse_sorts(body["sort"], schema)
         matched = _matched_docs(ctx, q)
         if "post_filter" in body:
-            matched = matched.where(F.expr(_predicate_sql(body["post_filter"])))
-        base = matched.select(F.col(ctx.id_col).alias("doc_id"), *fields)
+            matched = matched.where(F.expr(_predicate_sql(body["post_filter"], schema)))
+        fields = {c.lower(): c for c, _ in sorts if c.lower() != "doc_id"}
+        base = matched.select(F.col(ctx.id_col).alias("doc_id"), *fields.values())
         if "search_after" in body:
             sa = body["search_after"]
             if not isinstance(sa, (list, tuple)) or len(sa) != len(sorts) + 1:
                 raise DslError("[search_after] with sort expects "
                                "[*sort_values, doc_id] — the previous page's "
                                "last sort tuple plus its doc_id tiebreak")
-            return search_after_fields(base, sorts, list(sa[:-1]), int(sa[-1]),
-                                       k=size)
+            for (c, _), v in zip(sorts, sa):
+                _scalar_lit(v, schema[c.lower()], "search_after")
+            return search_after_fields(
+                base, sorts, list(sa[:-1]),
+                _int_param(sa[-1], "search_after.doc_id"), k=size)
         return sort_by_fields(base, sorts, k=size)
 
     if typ == "hybrid":
+        from .exhaustive import topk
         from .hybrid import combine, normalize, rrf_combine
 
-        # hybrid cannot contain hybrid: _sub_scores dispatches only
-        # match/neural/neural_sparse/nested + the constant-score leaf
-        # family, which enforces the top-level-only placement rule by
-        # construction (a `nested` sub-query is a leaf here — its inner
-        # query scores child docs, never another compound)
         _reject_unknown(body, {"query", "size", "from", "post_filter",
                                "sort", "collapse"}, "hybrid body")
         hs, tagged = _hybrid_tagged(ctx, spec, pipeline, size, from_)
@@ -2732,10 +2530,11 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
                           hs.weights or [1.0 / n] * n, n,
                           keep_negative=hs.normalization == "z_score")
         out = out.withColumn("score", F.round("score", 4))
-        from .exhaustive import topk
+        return _post_stages(ctx, topk(out, k=size), body, size)
 
-        return _post_stages(ctx, topk(out, k=size), body)
-
+    for key in ("search_after", "rescore"):
+        if key in body and (typ != "match" or set(body) - {"query", "size", key}):
+            raise DslError(f"[{key}] supports plain match bodies (query + size only)")
     if "search_after" in body:
         # keyset pagination: the client supplies the previous page's
         # last (score, doc_id) sort tuple — the page is O(size) work
@@ -2743,17 +2542,16 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
         from .exhaustive import bm25_scores
         from .paginate import search_after
 
-        if typ != "match" or set(body) - {"query", "size", "search_after"}:
-            raise DslError("[search_after] supports plain match bodies "
-                           "(query + size only)")
         sa = body["search_after"]
         if not isinstance(sa, (list, tuple)) or len(sa) != 2:
             raise DslError("[search_after] expects [score, doc_id] — the "
                            "previous page's last sort tuple")
+        after = (_float_param(sa[0], "search_after.score"),
+                 _int_param(sa[1], "search_after.doc_id"))
         scores = bm25_scores(ctx.docs, _match_terms(ctx, spec, "match"),
                              id_col=ctx.id_col, text_col=ctx.text_col, round_to=4,
-                             tokenizer=ctx.analyzer)
-        page = search_after(scores, float(sa[0]), int(sa[1]), k=size)
+                             tokenizer=_analyzer(ctx, False))
+        page = search_after(scores, *after, k=size)
         w = Window.orderBy(F.col("score").desc(), F.col(ctx.id_col).asc())
         return page.withColumn("rank", F.row_number().over(w).cast("int"))
 
@@ -2761,243 +2559,163 @@ def search(ctx: SearchContext, body: dict, pipeline: dict | None = None) -> Data
         # OpenSearch rescore: re-rank the top window_size hits of the
         # main query by a weighted combination with a rescore query's
         # scores — the window is re-ranked, the corpus never re-scored
-        from .exhaustive import bm25_scores
         from .rerank import rescore as _rescore
 
-        if typ != "match" or set(body) - {"query", "size", "rescore"}:
-            raise DslError("[rescore] supports plain match bodies "
-                           "(query + size only)")
         rs = body["rescore"]
         _reject_unknown(rs, {"window_size", "query"}, "rescore")
+        if "query" not in rs:
+            raise DslError("[rescore] needs a [query]")
         rq = rs["query"]
         _reject_unknown(rq, {"rescore_query", "query_weight",
                              "rescore_query_weight"}, "rescore.query")
+        if "rescore_query" not in rq:
+            raise DslError("[rescore.query] needs a [rescore_query]")
         rtyp, rspec = _one(rq["rescore_query"], "rescore_query")
         if rtyp != "match":
             raise DslError("[rescore_query] must be a match query")
-        window = int(rs.get("window_size", 10))
-        main = bm25_scores(ctx.docs, _match_terms(ctx, spec, "match"),
-                           id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
-                           tokenizer=ctx.analyzer)
+        window = _int_param(rs.get("window_size", 10), "rescore.window_size", lo=0)
+        an = _analyzer(ctx, False)
+        main = _bm25(ctx, _match_terms(ctx, spec, "match"), "or", an)
         win = main.orderBy(F.col("score").desc(), F.col(ctx.id_col).asc()).limit(window)
-        rsc = bm25_scores(ctx.docs, _match_terms(ctx, rspec, "match"),
-                          id_col=ctx.id_col, text_col=ctx.text_col, round_to=None,
-                          tokenizer=ctx.analyzer)
-        out = _rescore(win, rsc,
-                       weight_original=float(rq.get("query_weight", 1.0)),
-                       weight_rescore=float(rq.get("rescore_query_weight", 1.0)),
-                       k=size)
+        rsc = _bm25(ctx, _match_terms(ctx, rspec, "match"), "or", an)
+        out = _rescore(
+            win, rsc,
+            weight_original=_float_param(rq.get("query_weight", 1.0),
+                                         "rescore.query_weight"),
+            weight_rescore=_float_param(rq.get("rescore_query_weight", 1.0),
+                                        "rescore.rescore_query_weight"),
+            k=size)
         return out.withColumn("score", F.round("score", 4))
 
-    if from_ != 0:
-        # supported for non-hybrid: fetch from+size, drop leading ranks
-        top = _topk_frame(ctx, q, from_ + size)
+    # non-hybrid from: fetch from+size, drop the leading ranks
+    top = _topk_frame(ctx, q, from_ + size)
+    if from_:
         top = top.where(F.col("rank") > from_)
-        return _post_stages(ctx, top, body)
-    return _post_stages(ctx, _topk_frame(ctx, q, size), body)
+    return _post_stages(ctx, top, body, size)
 
 
-def _post_stages(ctx: SearchContext, out: DataFrame, body: dict) -> DataFrame:
+def _hybrid_explain(ctx: SearchContext, body: dict, spec: Any,
+                    pipeline: dict | None) -> DataFrame:
+    """Hybrid bodies explain through the NORMALIZATION provenance
+    processor (the plugin's explanation response processor documents
+    raw/normalized/weight/combined per sub-query), not the per-term
+    BM25 factor table."""
+    from .hybrid import explain_scores
+
+    if _int_param(body.get("size", 0), "size") != 0:
+        raise DslError("[explain] hybrid provenance covers the "
+                       "FULL match set; use size: 0")
+    hs, tagged = _hybrid_tagged(ctx, spec, pipeline, 10, 0)
+    if hs.normalization == "rrf":
+        raise DslError("[explain] rrf is rank-based — it has no "
+                       "normalization provenance to explain")
+    out = explain_scores(tagged, hs.normalization, hs.combination,
+                         hs.weights, hs.n_subqueries)
+    return out.select(
+        "doc_id",
+        F.col("subquery_idx").cast("int").alias("subquery_idx"),
+        F.round("raw_score", 4).alias("raw_score"),
+        F.round("norm_score", 4).alias("norm_score"),
+        "weight",
+        F.round("combined_score", 4).alias("combined_score"),
+    )
+
+
+def _post_stages(ctx: SearchContext, out: DataFrame, body: dict,
+                 size: int) -> DataFrame:
     if "post_filter" in body:
         from .filters import post_filter
 
-        out = post_filter(out, ctx.docs, F.expr(_predicate_sql(body["post_filter"])))
+        pred = _predicate_sql(body["post_filter"], _schema(ctx.docs))
+        out = post_filter(out, ctx.docs, F.expr(pred))
     if "sort" in body:
         from .paginate import sort_by_fields
 
-        sorts = _parse_sorts(body["sort"])
         joined = out.join(ctx.docs.drop(ctx.text_col), ctx.id_col)
-        out = sort_by_fields(joined, sorts, k=int(body.get("size", 10)))
+        out = sort_by_fields(joined, _parse_sorts(body["sort"], _schema(joined)),
+                             k=size)
     if "collapse" in body:
         from .paginate import field_collapse
 
-        out = field_collapse(out, ctx.docs, body["collapse"]["field"],
-                             k=int(body.get("size", 10)), id_col=ctx.id_col)
+        c = body["collapse"]
+        if not isinstance(c, dict) or "field" not in c:
+            raise DslError("[collapse] needs a [field]")
+        field = _field(c["field"], _schema(ctx.docs), "collapse")
+        out = field_collapse(out, ctx.docs, field, k=size, id_col=ctx.id_col)
     return out
+
+
+def _suggest(ctx: SearchContext, body: dict) -> DataFrame:
+    """The suggest section: a spell-correction frame, not a hit list —
+    combining it with a query in one body is rejected (one frame per
+    search() call, like aggs). The term suggester corrects [text]; the
+    completion suggester matches a prefix or regex against the term
+    dictionary (the completion-field analog; df = weight)."""
+    from .multiterm import regexp_matcher
+    from .suggest import completion_suggest, term_suggest
+
+    if set(body) - {"suggest", "size"} or _int_param(body.get("size", 0), "size") != 0:
+        raise DslError("[suggest] bodies support the suggest section "
+                       "only (size: 0)")
+    name, sspec = _one(body["suggest"], "suggest")
+    what = f"suggest.{name}"
+    kind = "completion" if isinstance(sspec, dict) and "completion" in sspec else "term"
+    _reject_unknown(sspec, {kind, *(("prefix", "regex") if kind == "completion"
+                                    else ("text",))}, what)
+    if kind == "completion" and ("prefix" in sspec) == ("regex" in sspec):
+        raise DslError(f"[{what}] completion needs exactly one of [prefix] / [regex]")
+    if kind == "term" and (not isinstance(sspec.get("text"), str) or "term" not in sspec):
+        raise DslError(f"[{what}] needs a string [text] and [term]")
+    opts = sspec[kind]
+    _reject_unknown(opts, {"field", "size", *(("max_edits", "suggest_mode")
+                                              if kind == "term" else ())},
+                    f"{what}.{kind}")
+    if opts.get("field", ctx.text_col) != ctx.text_col:
+        raise DslError(f"[{what}.{kind}] field must be [{ctx.text_col}]")
+    kw = dict(size=_int_param(opts.get("size", 5), f"{what}.{kind}.size", lo=0),
+              analyzer=_analyzer(ctx, False), id_col=ctx.id_col,
+              text_col=ctx.text_col)
+    try:
+        if kind == "term":
+            return term_suggest(
+                ctx.docs, sspec["text"], **kw,
+                max_edits=_int_param(opts.get("max_edits", 2), f"{what}.term.max_edits"),
+                suggest_mode=opts.get("suggest_mode", "missing"))
+        matcher = None
+        if not isinstance(sspec.get("regex", sspec.get("prefix")), str):
+            raise ValueError("prefix / regex must be a string")
+        if "regex" in sspec:
+            matcher = regexp_matcher(sspec["regex"])
+        return completion_suggest(ctx.docs, prefix=sspec.get("prefix"),
+                                  matcher=matcher, **kw)
+    except (TypeError, ValueError) as e:
+        raise DslError(f"[{what}] {e}") from e
 
 
 # --- aggregations (size=0 analytics bodies) -------------------------------
 
-_METRICS = ("avg", "sum", "min", "max", "value_count", "cardinality")
+# metric agg → (needs a numeric field, aggregate expression)
+_METRICS = {
+    "avg": (True, lambda c: F.round(F.avg(c), 4)),
+    "sum": (True, lambda c: F.round(F.sum(c).cast("double"), 4)),
+    "min": (False, F.min),
+    "max": (False, F.max),
+    "value_count": (False, F.count),
+    # exact distinct count (the plugin's cardinality is an HLL
+    # approximation at scale — the engine's HLL variant is
+    # query/aggs.cardinality_hll, gated by hybrid_cardinality_hll)
+    "cardinality": (False, F.count_distinct),
+}
 
 
-def _metric_expr(name: str, typ: str, spec: dict):
-    _reject_unknown(spec, {"field"}, typ)
-    c = F.col(spec["field"])
-    if typ == "avg":
-        return F.round(F.avg(c), 4).alias(name)
-    if typ == "sum":
-        return F.round(F.sum(c).cast("double"), 4).alias(name)
-    if typ == "min":
-        return F.min(c).alias(name)
-    if typ == "max":
-        return F.max(c).alias(name)
-    if typ == "value_count":
-        return F.count(c).alias(name)
-    if typ == "cardinality":
-        # exact distinct count (the plugin's cardinality is an HLL
-        # approximation at scale — the engine's HLL variant is
-        # query/aggs.cardinality_hll, gated by hybrid_cardinality_hll)
-        return F.count_distinct(c).alias(name)
-    raise DslError(f"unknown metric agg [{typ}]; supported: {sorted(_METRICS)}")
-
-
-def _clause_matched(ctx: SearchContext, tok, clause: dict) -> DataFrame:
-    """Doc-id set matching one match clause (OR over its terms by
-    default, all-terms with operator=and — same per-clause semantics
-    as the search() bool path, so hits and aggs agree on one body)."""
-    ct, cs = _one(clause, "bool clause")
-    if ct != "match":
-        raise DslError("aggs bool clauses must be match queries")
-    # index analyzer: search() dispatches this body to the indexed bool
-    # kernel, so the aggs hit set must analyze the same way or the two
-    # disagree on one body (no reader -> ctx.analyzer, unchanged)
-    terms, op = _match_clause(ctx, cs, "match", analyzer=ctx.index_analyzer())
-    m = (
-        tok.select(ctx.id_col, F.explode("toks").alias("term"))
-        .where(F.col("term").isin(terms))
-    )
-    if op == "and":
-        return (
-            m.groupBy(ctx.id_col)
-            .agg(F.count_distinct("term").alias("_nt"))
-            .where(F.col("_nt") == len(terms))
-            .select(ctx.id_col)
-        )
-    return m.select(ctx.id_col).distinct()
-
-
-def _matched_docs(ctx: SearchContext, q: dict) -> DataFrame:
-    """The FULL hit set (no top-k cut) joined back to the corpus —
-    aggregations run over every matching doc, as in the reference
-    (aggs see all hits, not the size window)."""
-    from .exhaustive import tokenized
-
-    typ, spec = _one(q, "query")
-    if typ == "match" and ctx.reader is not None:
-        # indexed hit set: the kernel's match stream through docmap —
-        # no corpus re-tokenize for an aggs/sort body when an index
-        # exists (same dispatch rule as the top-k path)
-        from .wand import matched_ids_indexed
-
-        _require_doc_key(ctx)
-        terms, op = _match_clause(ctx, spec, "match",
-                                  analyzer=ctx.index_analyzer())
-        ids = matched_ids_indexed(ctx.reader, terms, mode=op)
-        m = (
-            ctx.reader.docmap()
-            .join(ids.select("nss_doc_id"), "nss_doc_id")
-            .select(ctx.id_col)
-        )
-        return m.join(ctx.docs, ctx.id_col)
-    if typ == "bool" and ctx.reader is not None:
-        # indexed bool hit set: per-clause kernel match streams through
-        # the SHARED gate builder (booleans.bool_gate_indexed — the same
-        # gate the indexed bool top-k uses, so search() and aggregate()
-        # match sets cannot drift), then docmap — no corpus re-tokenize
-        from .booleans import bool_gate_indexed
-
-        _require_doc_key(ctx)
-        _reject_unknown(spec, {"must", "should", "must_not",
-                               "minimum_should_match"}, "bool")
-
-        def _clause(clause):
-            ct, cs = _one(clause, "bool clause")
-            if ct != "match":
-                raise DslError("aggs bool clauses must be match queries")
-            return _match_clause(ctx, cs, "match",
-                                 analyzer=ctx.index_analyzer())
-
-        must = [_clause(c) for c in spec.get("must") or []]
-        should = [_clause(c) for c in spec.get("should") or []]
-        must_not = [_clause(c) for c in spec.get("must_not") or []]
-        if not must and not should:
-            raise DslError("bool query needs at least one scoring clause")
-        gate = bool_gate_indexed(
-            ctx.reader, must, should, must_not,
-            minimum_should_match=int(spec.get("minimum_should_match", 0)),
-        )
-        ids = (
-            ctx.reader.docmap()
-            .join(gate.select("nss_doc_id"), "nss_doc_id")
-            .select(ctx.id_col)
-        )
-        return ids.join(ctx.docs, ctx.id_col)
-    # corpus tokens: the index's own analyzer when a reader is set,
-    # the context analyzer otherwise — the analyzer the search()
-    # dispatch scores these bodies with. Built lazily: only the
-    # match/bool fallthroughs consume the token stream.
-    def tok_frame():
-        return tokenized(ctx.docs, ctx.id_col, ctx.text_col,
-                         tokenizer=ctx.index_analyzer())
-
-    if typ == "match":
-        tok = tok_frame()
-        terms, op = _match_clause(ctx, spec, "match",
-                                  analyzer=ctx.index_analyzer())
-        m = (
-            tok.select(ctx.id_col, F.explode("toks").alias("term"))
-            .where(F.col("term").isin(terms))
-        )
-        if op == "and":
-            m = (
-                m.groupBy(ctx.id_col)
-                .agg(F.count_distinct("term").alias("_nt"))
-                .where(F.col("_nt") == len(terms))
-                .select(ctx.id_col)
-            )
-        else:
-            m = m.select(ctx.id_col).distinct()
-    elif typ == "bool":
-        tok = tok_frame()
-        _reject_unknown(spec, {"must", "should", "must_not", "minimum_should_match"},
-                        "bool")
-        must = [_clause_matched(ctx, tok, c) for c in spec.get("must") or []]
-        should = [_clause_matched(ctx, tok, c) for c in spec.get("should") or []]
-        msm = int(spec.get("minimum_should_match", 0))
-        if not must and not should:
-            raise DslError("bool query needs at least one scoring clause")
-        m = None
-        for f in must:
-            m = f if m is None else m.join(f, ctx.id_col)
-        if should:
-            # count how many should clauses each doc matches
-            tagged = None
-            for i, f in enumerate(should):
-                t = f.select(ctx.id_col, F.lit(i).alias("_c"))
-                tagged = t if tagged is None else tagged.unionByName(t)
-            counts = tagged.groupBy(ctx.id_col).agg(F.count(F.lit(1)).alias("_ns"))
-            need = msm if msm > 0 else (0 if must else 1)
-            ok = counts.where(F.col("_ns") >= need).select(ctx.id_col)
-            m = ok if m is None else (m.join(ok, ctx.id_col) if msm > 0 else m)
-            if must and msm == 0:
-                pass  # should is purely optional when must exists and msm=0
-        for c in spec.get("must_not") or []:
-            m = m.join(_clause_matched(ctx, tok, c), ctx.id_col, "left_anti")
-        m = m.select(ctx.id_col)
-    elif typ in ("term", "terms", "range", "exists", "match_all", "constant_score"):
-        m = _leaf_scores(ctx, typ, spec).select(
-            F.col("doc_id").alias(ctx.id_col)).distinct()
-    elif typ == "nested":
-        m = _nested_scores(ctx, spec).select(
-            F.col("doc_id").alias(ctx.id_col)).distinct()
-    elif typ == "hybrid":
-        # a hybrid's hit set is the UNION of its sub-queries' matches
-        # (HybridQueryScorer iterates all sub-scorers; totalHits counts
-        # any-match docs) — aggs then run over every matched doc
-        _reject_unknown(spec, {"queries"}, "hybrid")
-        hsubs = spec.get("queries")
-        if not isinstance(hsubs, list) or not hsubs:
-            raise DslError("[hybrid] needs a non-empty [queries] list")
-        m = None
-        for i, sq in enumerate(hsubs):
-            ids = _sub_scores(ctx, sq, i).select("doc_id")
-            m = ids if m is None else m.unionByName(ids)
-        m = m.distinct().select(F.col("doc_id").alias(ctx.id_col))
-    else:
-        raise DslError("aggs/sort hit sets support match, bool, hybrid and "
-                       f"the constant-score leaf family, got [{typ}]")
-    return m.join(ctx.docs, ctx.id_col)
+def _metric_expr(name: str, metric: str, spec: Any, schema: dict[str, str]):
+    if metric not in _METRICS:
+        raise DslError(f"unknown metric agg [{metric}]; supported: {sorted(_METRICS)}")
+    _reject_unknown(spec, {"field"}, metric)
+    if "field" not in spec:
+        raise DslError(f"[{metric}] needs a [field]")
+    numeric, fn = _METRICS[metric]
+    return fn(F.col(_field(spec["field"], schema, metric, numeric=numeric))).alias(name)
 
 
 def aggregate(ctx: SearchContext, body: dict) -> DataFrame:
@@ -3006,32 +2724,44 @@ def aggregate(ctx: SearchContext, body: dict) -> DataFrame:
     full hit set. Scale shape: the hit-set join + ONE groupBy on the
     bucket field — identical to the gated hybrid_aggs family."""
     _reject_unknown(body, {"query", "size", "aggs"}, "aggs body")
-    if int(body.get("size", 0)) != 0:
+    if _int_param(body.get("size", 0), "size") != 0:
         raise DslError("aggs bodies must set size: 0 (hits+aggs in one "
                        "response is not supported; issue two searches)")
-    matched = _matched_docs(ctx, body["query"])
-    aggs = body["aggs"]
+    if "query" not in body:
+        raise DslError("aggs body needs a [query]")
+    aggs = body.get("aggs")
+    if not isinstance(aggs, dict) or not aggs:
+        raise DslError("[aggs] needs a non-empty object of named aggregations")
+    schema = _schema(ctx.docs)
+    with _rejects(_one(body["query"], "query")[0]):
+        matched = _matched_docs(ctx, body["query"])
     if len(aggs) == 1:
         name, spec = _one(aggs, "aggs")
-        if "terms" in spec:
+        if isinstance(spec, dict) and "terms" in spec:
             _reject_unknown(spec, {"terms", "aggs"}, name)
             t = spec["terms"]
             _reject_unknown(t, {"field", "size"}, "terms")
+            if "field" not in t:
+                raise DslError("[terms] agg needs a [field]")
+            fld = _field(t["field"], schema, "terms")
             subs = [F.count(F.lit(1)).alias("doc_count")]
-            for sub_name, sub_spec in (spec.get("aggs") or {}).items():
+            sub_aggs = spec.get("aggs") or {}
+            if not isinstance(sub_aggs, dict):
+                raise DslError(f"[{name}.aggs] must be an object")
+            for sub_name, sub_spec in sub_aggs.items():
                 st, ss = _one(sub_spec, sub_name)
-                subs.append(_metric_expr(sub_name, st, ss))
-            out = matched.groupBy(t["field"]).agg(*subs)
+                subs.append(_metric_expr(sub_name, st, ss, schema))
+            out = matched.groupBy(fld).agg(*subs)
             if "size" in t:
-                out = out.orderBy(F.col("doc_count").desc(),
-                                  F.col(t["field"]).asc()).limit(int(t["size"]))
+                out = out.orderBy(F.col("doc_count").desc(), F.col(fld).asc()).limit(
+                    _int_param(t["size"], "terms.size", lo=0))
             return out
     exprs = []
     for name, spec in aggs.items():
         st, ss = _one(spec, name)
         if st == "terms":
             raise DslError("terms must be the single top-level agg")
-        exprs.append(_metric_expr(name, st, ss))
+        exprs.append(_metric_expr(name, st, ss, schema))
     return matched.agg(*exprs)
 
 
@@ -3051,13 +2781,14 @@ def search_with_aggs(
     TakeOrderedAndProject cut, the aggs path its single groupBy; no
     corpus pass is added over issuing the two bodies separately, and
     callers that cache ``ctx.docs`` pay the scan once."""
-    if "aggs" not in body:
+    if not isinstance(body, dict) or "aggs" not in body:
         raise DslError("search_with_aggs needs an [aggs] block — use "
                        "search() for hits-only bodies")
-    size = int(body.get("size", 10))
-    if size <= 0:
+    if _int_param(body.get("size", 10), "size") <= 0:
         raise DslError("search_with_aggs needs size > 0 — use search() "
                        "for size: 0 aggs-only bodies")
+    if "query" not in body:
+        raise DslError("search body needs a [query]")
     hits_body = {kk: vv for kk, vv in body.items() if kk != "aggs"}
     aggs_body = {"query": body["query"], "size": 0, "aggs": body["aggs"]}
     return search(ctx, hits_body, pipeline), aggregate(ctx, aggs_body)
@@ -3087,15 +2818,17 @@ def msearch(ctx: SearchContext, bodies: list[dict]) -> DataFrame:
     _require_doc_key(ctx)
     from .wand import bm25_topk_indexed_multi
 
-    analyzer = ctx.index_analyzer()
+    if not isinstance(bodies, list):
+        raise DslError(f"msearch needs a list of bodies, got {bodies!r}")
+    analyzer = _analyzer(ctx, True)
     match_bodies: list[tuple[int, tuple[list[str], str], int]] = []
     other_bodies: list[tuple[int, dict]] = []
     for i, body in enumerate(bodies):
         _reject_unknown(body, {"query", "size"}, "msearch body")
         typ, spec = _one(body.get("query"), "query")
         if typ == "match":
-            q = _match_clause(ctx, spec, "match", analyzer=analyzer)
-            match_bodies.append((i, q, int(body.get("size", 10))))
+            q = _match_clause(ctx, spec, "match", analyzer)
+            match_bodies.append((i, q, _int_param(body.get("size", 10), "size", lo=0)))
         else:
             other_bodies.append((i, body))
     if not match_bodies and not other_bodies:
@@ -3106,7 +2839,8 @@ def msearch(ctx: SearchContext, bodies: list[dict]) -> DataFrame:
     for i, q, s in match_bodies:
         by_size.setdefault(s, []).append((i, q))
     for s, grp in sorted(by_size.items()):
-        out = bm25_topk_indexed_multi(ctx.reader, [q for _, q in grp], k=s)
+        with _rejects("msearch"):
+            out = bm25_topk_indexed_multi(ctx.reader, [q for _, q in grp], k=s)
         # kernel query_idx is the group-local position — map it back to
         # the body's position in the batch (bounded literal map)
         remap = F.create_map(

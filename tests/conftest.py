@@ -116,3 +116,16 @@ def assert_stats_match_spark(spark, index_dir: str) -> None:
     reader = IndexReader(spark, index_dir)
     assert reader.global_stats() == (man["n"], man["tok"] / man["n"])
     assert reader.term_dfs(sorted(exp)) == exp
+
+
+# Generative tests (tests/test_dsl_fuzz.py) run in tier-1: derandomized
+# draws make every run see the same bodies, no example database is
+# written into the repo, and the example count stays bounded.
+from hypothesis import HealthCheck, settings  # noqa: E402
+
+settings.register_profile(
+    "tier1", derandomize=True, database=None, deadline=None, max_examples=30,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large,
+                           HealthCheck.function_scoped_fixture],
+)
+settings.load_profile("tier1")

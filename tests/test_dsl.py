@@ -1810,3 +1810,73 @@ def test_indexed_span_term_uses_index_analyzer(code_docs, code_reader):
         iv = {"query": {"intervals": {"text": {"match": {"query": v}}}}, "size": 10}
         got = {r["doc_id"] for r in search(ctx, span).collect()}
         assert got and got == {r["doc_id"] for r in search(ctx, iv).collect()}, v
+
+
+# --- malformed parameters surface as DslError ---------------------------
+
+_MATCH = {"match": {"text": "spark window"}}
+
+
+@pytest.mark.parametrize("body", [
+    {"query": _MATCH, "size": "x"},
+    {"query": _MATCH, "size": [1]},
+    {"query": _MATCH, "size": True},
+    {"query": _MATCH, "from": None},
+    {"query": _MATCH, "from": "2"},
+    {"query": {"match_phrase": {"text": {"query": "spark window", "slop": "x"}}}},
+    {"query": {"match_phrase_prefix": {"text": {"query": "spark win",
+                                                "max_expansions": "x"}}}},
+    {"query": {"fuzzy": {"text": {"value": "spark", "fuzziness": "x"}}}},
+    {"query": {"bool": {"should": [_MATCH], "minimum_should_match": "x"}}},
+    {"query": {"dis_max": {"queries": [_MATCH], "tie_breaker": "x"}}},
+    {"query": {"neural": {"embedding": {"query_vector_id": "x"}}}},
+    {"query": {"neural": {"embedding": {"query_vector_id": 0, "ef": "x"}}}},
+    {"query": _MATCH, "highlight": {"fields": {"text": {}}, "window": "x"}},
+    {"query": _MATCH, "rescore": {"window_size": "x", "query": {
+        "rescore_query": _MATCH}}},
+    {"query": _MATCH, "rescore": {"query": {"rescore_query": _MATCH,
+                                            "query_weight": "x"}}},
+    {"query": {"more_like_this": {"like": {"_id": 1}, "max_query_terms": "x"}}},
+    {"query": {"constant_score": {"filter": {"range": {"n_chars": {"gte": 1}}},
+                                  "boost": "x"}}},
+    {"query": {"boosting": {"positive": _MATCH, "negative": _MATCH,
+                            "negative_boost": "x"}}},
+    {"query": {"function_score": {"field_value_factor": {"field": "n_chars",
+                                                         "factor": "x"}}}},
+    {"suggest": {"s": {"text": "sprk", "term": {"size": "x"}}}, "size": 0},
+    {"suggest": {"s": {"text": "sprk", "term": {"max_edits": "x"}}}, "size": 0},
+], ids=lambda b: repr(b)[:60])
+def test_malformed_numbers_raise_dsl_error(ctx, body):
+    with pytest.raises(DslError):
+        search(ctx, body)
+
+
+@pytest.mark.parametrize("body", [
+    {"query": {"match": {"text": {"operator": "or"}}}},
+    {"query": {"match_phrase": {"text": {"slop": 1}}}},
+    {"query": _MATCH, "highlight": {"window": 2}},
+    {"query": _MATCH, "rescore": {"window_size": 5}},
+    {"query": _MATCH, "collapse": {}},
+    {"query": _MATCH, "size": 0, "aggs": {"m": {"avg": {}}}},
+], ids=lambda b: repr(b)[:60])
+def test_missing_required_keys_raise_dsl_error(ctx, body):
+    with pytest.raises(DslError):
+        search(ctx, body)
+
+
+def test_pinned_ranks_first_above_any_organic_score(ctx):
+    """Pinned ids lead in list order even when the organic scores
+    exceed the pinned band (script_score × 1e10 lifts BM25 past 1e9);
+    pinned scores keep their band, organic hits keep their order."""
+    organic = {"script_score": {"query": {"match": {"text": "spark window merge"}},
+                                "script": {"source": "_score * params.f",
+                                           "params": {"f": 1.0e10}}}}
+    hits = search(ctx, {"query": {"pinned": {"ids": [9, 2], "organic": organic}},
+                        "size": 6}).collect()
+    assert [(r["doc_id"], r["rank"]) for r in hits[:2]] == [(9, 1), (2, 2)]
+    assert [r["score"] for r in hits[:2]] == [1.0e9 + 2, 1.0e9 + 1]
+    assert min(r["score"] for r in hits[2:]) > 1.0e9 + 2
+    org = [r["doc_id"] for r in search(ctx, {"query": organic, "size": 8}).collect()
+           if r["doc_id"] not in (9, 2)]
+    assert [r["doc_id"] for r in hits[2:]] == org[:4]
+    assert [r["rank"] for r in hits] == list(range(1, 7))
