@@ -365,7 +365,7 @@ def _q_dsl_aggs_indexed(spark, sf_dir):
 
 def _q_dsl_explain_indexed(spark, sf_dir):
     """DSL explain body on the INDEXED path: hits come from the
-    block-max kernel, the BM25 factor table joins to them using the
+    bulk BM25 kernel, the BM25 factor table joins to them using the
     index's OWN analyzer (query/dsl.py search() -> bm25_explain
     tokenizer=ctx.index_analyzer()). Shares bm25_explain's oracle —
     the kernel's top-k is rank-exact vs exhaustive, so the factor
@@ -673,7 +673,7 @@ def _q_dsl_regexp_indexed(spark, sf_dir):
     whole-term match, top-terms scoring-boolean rewrite): the pattern
     expands against the postings dictionary with the SAME shared-SQL
     matcher the DuckDB oracle embeds (regexp_replace full-match trick —
-    see query/multiterm.regexp_matcher), then rides the block-max OR
+    see query/multiterm.regexp_matcher), then rides the bulk BM25 OR
     kernel like prefix/wildcard/fuzzy."""
     from neural_search_spark.query.dsl import search
 
@@ -697,7 +697,7 @@ def _q_dsl_ids(spark, sf_dir):
 
 def _q_dsl_query_string_indexed(spark, sf_dir):
     """query_string over the INDEX: every clause dispatches onto the
-    kernels (term clauses the block-max scorer, the sloppy phrase the
+    kernels (term clauses the bulk BM25 scorer, the sloppy phrase the
     positional kernel, prefix/fuzzy the postings-dictionary expansion)
     — the corpus text is never re-tokenized. Shares the exhaustive
     dsl_query_string oracle (stats are global either way)."""
@@ -999,7 +999,7 @@ def _q_dsl_wrapper_match(spark, sf_dir):
 
 def _q_dsl_match_msm(spark, sf_dir):
     """match with minimum_should_match over the INDEX via the DSL:
-    dispatches the kernel's msm mode (block-max OR + nt >= m gate) —
+    dispatches the kernel's msm mode (bulk BM25 OR + nt >= m gate) —
     shares bm25_msm's oracle."""
     from neural_search_spark.query.dsl import search
 
@@ -1935,7 +1935,7 @@ SUBQ_K = 50  # per-sub-query retained hits (CompoundTopDocs window)
 
 def _q_indexed_hybrid_topk(spark, sf_dir):
     """Hybrid over the segmented index: per-sub-query top-SUBQ_K via the
-    block-max/bulk kernel, then normalize/combine over the RETAINED hits
+    bulk BM25 kernel, then normalize/combine over the RETAINED hits
     only — the reference's actual shape (CompoundTopDocs holds per-shard
     top-k, normalization sees only retained hits:
     NormalizationProcessorWorkflow.java:54-86)."""
@@ -2545,7 +2545,7 @@ def _q_hybrid_neural_bm25(spark, sf_dir):
 
 def _q_indexed_hybrid_neural(spark, sf_dir):
     """The PRODUCTION shape of the reference's headline hybrid: the
-    match sub-query scores over the inverted index (block-max kernel,
+    match sub-query scores over the inverted index (bulk BM25 kernel,
     no tokenization at query time) and the neural sub-query serves from
     the persisted per-segment graphs (no per-query construction), then
     min_max + weighted combine — match+neural exactly as HybridQueryIT

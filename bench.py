@@ -29,7 +29,7 @@ import time
 HEADLINE = [
     "bm25_or_scores",        # exhaustive DataFrame BM25 (Catalyst path)
     "bm25_topk",             # TakeOrderedAndProject top-k
-    "indexed_bm25_topk",     # segmented index + block-max WAND kernel
+    "indexed_bm25_topk",     # segmented index + bulk BM25 kernel
     "indexed_bm25_and_topk",
     "indexed_bm25_filtered", # FILTER-occur via cogrouped allow-list
     "indexed_msearch",       # 3-query batch in one kernel pass

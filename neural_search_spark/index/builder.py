@@ -16,12 +16,12 @@ reference's per-node shards — SURVEY.md §1.4 "Shard → partition"):
   segment's doc count — this IS the salting strategy, structurally.
 * Postings are stored in **doc-range blocks** (all terms share block
   boundaries: ``local_id // range_block``), delta+varint encoded
-  (functions/codecs.py) with per-block max-score metadata
-  (``max_tf``, ``min_dl_q``) — the role Lucene's 128-posting blocks +
-  ``advanceShallow`` play for HybridScoreBlockBoundaryPropagator
-  (reference: query/HybridScoreBlockBoundaryPropagator.java:25-99).
-  Aligned doc ranges let the WAND kernel prune *across* terms with pure
-  numpy (query/wand.py).
+  (functions/codecs.py), with per-block doc and position byte offsets.
+  The BM25 kernel (query/wand.py) decodes whole terms; the phrase and
+  span kernels use the aligned ranges to decode positions only for
+  blocks that hold candidate docs. No per-block score bounds are
+  stored: block-max pruning lost to the bulk decode
+  (BENCH/block_max.json).
 * Output layout (all parquet, partitioned by segment_id so query-time
   term filters prune row groups within a segment file):
 
@@ -64,7 +64,10 @@ SEG_SHIFT = 40  # doc_id = (segment_id << 40) | local_id
 # v6: one varint position stream — the v5 per-term PFor position codec
 #     and its four columns are gone: it could save only 9.3% of position
 #     bytes on the code corpus for +43% encode CPU (BENCH/r5_pos_bytes.json)
-FORMAT_VERSION = 6
+# v7: the five block-max bound columns (per-block max tf, min quantized
+#     length and tf offsets; per-term max tf and min length) are gone with
+#     the WAND kernel, their only reader (BENCH/block_max.json)
+FORMAT_VERSION = 7
 
 # One row per (segment, term): per-block metadata travels as parallel
 # arrays and the three payload streams are single blobs with per-block
@@ -78,15 +81,10 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("term_bucket", T.IntegerType(), False),
         T.StructField("term", T.StringType(), False),
         T.StructField("n", T.IntegerType(), False),         # segment df
-        T.StructField("max_tf", T.IntegerType(), False),     # segment-level
-        T.StructField("min_dl_q", T.IntegerType(), False),   # segment-level
         T.StructField("sum_tf", T.LongType(), False),
         T.StructField("block_ids", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("block_ns", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("block_max_tf", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("block_min_dl_q", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("block_doc_off", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("block_tf_off", T.ArrayType(T.IntegerType(), False), False),
         # doc-delta codec per term: pack_bits < 0 -> LEB128 varint;
         # pack_bits >= 0 -> PFor (b-bit packed low parts, byte-aligned
         # per block, exceptions patched from exc_pos/exc_high)
@@ -108,9 +106,8 @@ POSTINGS_SCHEMA = T.StructType(
 
 _EMPTY_POSTINGS = {
     "segment_id": np.int32, "term_bucket": np.int32, "term": object,
-    "n": np.int32, "max_tf": np.int32, "min_dl_q": np.int32, "sum_tf": np.int64,
-    "block_ids": object, "block_ns": object, "block_max_tf": object,
-    "block_min_dl_q": object, "block_doc_off": object, "block_tf_off": object,
+    "n": np.int32, "sum_tf": np.int64,
+    "block_ids": object, "block_ns": object, "block_doc_off": object,
     "pack_bits": np.int32, "exc_pos": object, "exc_high": object,
     "docs": object, "tfs": object, "norms": object,
     "block_pos_off": object, "positions": object,
@@ -156,38 +153,6 @@ def decode_term_ids(r, range_block: int) -> np.ndarray:
     return np.repeat(base, ns) + chains_absolute(deltas, ns)
 
 
-def decode_block_deltas(
-    docs_blob: bytes,
-    pack_bits: int,
-    block_idx: int,
-    block_ns,
-    block_doc_off,
-    exc_pos,
-    exc_high,
-    blob_end: int,
-) -> np.ndarray:
-    """One block's doc-delta chain for any codec (exceptions patched)."""
-    from ..functions.codecs import pfor_decode_group, varint_decode
-
-    ns = np.asarray(block_ns, dtype=np.int64)
-    offs = np.asarray(block_doc_off, dtype=np.int64)
-    s = int(offs[block_idx])
-    if pack_bits < 0:
-        e = int(offs[block_idx + 1]) if block_idx + 1 < len(offs) else blob_end
-        return varint_decode(docs_blob[s:e]).astype(np.int64)
-    n = int(ns[block_idx])
-    low = pfor_decode_group(docs_blob[s:s + (n * pack_bits + 7) // 8], n, pack_bits)
-    ep = np.asarray(exc_pos, dtype=np.int64)
-    if len(ep):
-        p0 = int(ns[:block_idx].sum())
-        sel = (ep >= p0) & (ep < p0 + n)
-        if sel.any():
-            low[ep[sel] - p0] |= (
-                np.asarray(exc_high, dtype=np.uint64)[sel] << np.uint64(pack_bits)
-            )
-    return low.astype(np.int64)
-
-
 def chains_absolute(deltas: np.ndarray, chain_lens: np.ndarray) -> np.ndarray:
     """Segmented cumsum: per-chain (first-absolute, then deltas) stream
     -> absolute values. Shared by doc-id and position decode."""
@@ -230,13 +195,12 @@ def postings_rows_from_flat(
     doc: np.ndarray,
     tfv: np.ndarray,
     norm: np.ndarray,
-    dl_q: np.ndarray,
     range_block: int,
     term_buckets: int,
     codec: str = "varint",
     pos_flat: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Flat (term, doc_id, tf, norm_byte, dl_q) posting streams (any
+    """Flat (term, doc_id, tf, norm_byte) posting streams (any
     order) -> one POSTINGS_SCHEMA row per term. Shared by the build and
     merge kernels so the two stay byte-compatible by construction.
 
@@ -269,8 +233,8 @@ def postings_rows_from_flat(
             - np.repeat(chain_off_new, lens_new)
         )
         pos_flat = np.asarray(pos_flat, dtype=np.int64)[gather]
-    codes, doc, tfv, norm, dl_q, block = (
-        codes[order], doc[order], tfv[order], norm[order], dl_q[order], block[order]
+    codes, doc, tfv, norm, block = (
+        codes[order], doc[order], tfv[order], norm[order], block[order]
     )
     new = np.r_[True, (codes[1:] != codes[:-1]) | (block[1:] != block[:-1])]
     starts = np.flatnonzero(new)
@@ -299,11 +263,7 @@ def postings_rows_from_flat(
 
     g_code = codes[starts]
     g_block = block[starts].astype(np.int32)
-    g_maxtf = np.maximum.reduceat(tfv, starts).astype(np.int32)
-    g_mindl = np.minimum.reduceat(dl_q, starts).astype(np.int32)
-    g_sumtf = np.add.reduceat(tfv, starts).astype(np.int64)
     g_doc_start = doc_off[bounds[:-1]]
-    g_tf_start = tf_off[bounds[:-1]]
 
     t_new = np.r_[True, g_code[1:] != g_code[:-1]]
     t_starts = np.flatnonzero(t_new)
@@ -316,8 +276,8 @@ def postings_rows_from_flat(
     use_pfor = codec == "pfor"
     empty_i = np.empty(0, dtype=np.int32)
     empty_l = np.empty(0, dtype=np.int64)
-    block_ids, block_ns, block_maxtf, block_mindl = [], [], [], []
-    bdoc_off, btf_off, docs_col, tfs_col, norms_col = [], [], [], [], []
+    block_ids, block_ns = [], []
+    bdoc_off, docs_col, tfs_col, norms_col = [], [], [], []
     bpos_off, pos_col = [], []
     pack_col = np.full(n_terms, -1, dtype=np.int32)
     excp_col, exch_col = [], []
@@ -336,9 +296,6 @@ def postings_rows_from_flat(
         block_ids.append(g_block[a:b])
         ns_t = n_per[a:b].astype(np.int32)
         block_ns.append(ns_t)
-        block_maxtf.append(g_maxtf[a:b])
-        block_mindl.append(g_mindl[a:b])
-        btf_off.append((g_tf_start[a:b] - g_tf_start[a]).astype(np.int32))
         if use_pfor:
             d_t = deltas[p0:p1].astype(np.uint64)
             bt = choose_pfor_width(d_t)
@@ -355,7 +312,7 @@ def postings_rows_from_flat(
             bdoc_off.append((g_doc_start[a:b] - g_doc_start[a]).astype(np.int32))
             excp_col.append(empty_i)
             exch_col.append(empty_l)
-        tfs_col.append(tf_b[g_tf_start[a]:tf_off[p1]])
+        tfs_col.append(tf_b[tf_off[p0]:tf_off[p1]])
         norms_col.append(norm_b[p0:p1])
         n_col[j] = p1 - p0
     return pd.DataFrame(
@@ -364,15 +321,10 @@ def postings_rows_from_flat(
             "term_bucket": _term_buckets_of(terms_out, term_buckets),
             "term": terms_out,
             "n": n_col,
-            "max_tf": np.maximum.reduceat(g_maxtf, t_starts).astype(np.int32),
-            "min_dl_q": np.minimum.reduceat(g_mindl, t_starts).astype(np.int32),
-            "sum_tf": np.add.reduceat(g_sumtf, t_starts).astype(np.int64),
+            "sum_tf": np.add.reduceat(tfv, bounds[t_starts]).astype(np.int64),
             "block_ids": block_ids,
             "block_ns": block_ns,
-            "block_max_tf": block_maxtf,
-            "block_min_dl_q": block_mindl,
             "block_doc_off": bdoc_off,
-            "block_tf_off": btf_off,
             "pack_bits": pack_col,
             "exc_pos": excp_col,
             "exc_high": exch_col,
@@ -443,7 +395,6 @@ def _build_segment_kernel(
         re.compile(tokenizer_name)  # fail fast on an invalid custom regex
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions.norms import quantize_length
         from ..functions.tokenize import term_freq_frame_positions
 
         seg = int(pdf["segment_id"].iloc[0])
@@ -459,14 +410,12 @@ def _build_segment_kernel(
         )
         if len(tf) == 0:
             return empty_postings_frame()
-        dl = tf["dl"].to_numpy()
         return postings_rows_from_flat(
             seg,
             tf["term"].to_numpy(),
             tf["doc_id"].to_numpy(dtype=np.int64),
             tf["tf"].to_numpy(dtype=np.int64),
-            int_to_byte4(dl),
-            quantize_length(dl).astype(np.int64),
+            int_to_byte4(tf["dl"].to_numpy()),
             range_block,
             term_buckets,
             codec,

@@ -41,7 +41,6 @@ def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_
     rebasing never alters in-doc token positions."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions.norms import byte4_to_int
         from .builder import empty_postings_frame, postings_rows_from_flat
 
         if len(pdf) == 0:
@@ -60,15 +59,12 @@ def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_
             norms_l.append(norms)
             if store_positions:
                 pos_l.append(decode_term_positions(r.positions, tfs))
-        term = np.concatenate(terms_l)
-        norm = np.concatenate(norms_l)
         return postings_rows_from_flat(
             new_seg,
-            term,
+            np.concatenate(terms_l),
             np.concatenate(docs_l),
             np.concatenate(tfs_l),
-            norm,
-            byte4_to_int(norm).astype(np.int64),
+            np.concatenate(norms_l),
             range_block,
             term_buckets,
             codec,

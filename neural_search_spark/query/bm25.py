@@ -49,8 +49,7 @@ def tf_norm(
     dtype=np.float64,
 ) -> np.ndarray:
     """The tf part, ``tf / (tf + k1 * (1 - b + b * dl_q / avgdl))``, in
-    ``dtype`` arithmetic — THE expression of every index kernel (and of
-    the block-max upper bound, with tf = max tf, dl_q = min dl_q)."""
+    ``dtype`` arithmetic — THE expression of every index kernel."""
     tf = np.asarray(tf, dtype=dtype)
     dl = np.asarray(dl_quantized, dtype=dtype)
     denom = tf + dtype(k1) * (dtype(1.0) - dtype(b) + dtype(b) * dl / dtype(avgdl))

@@ -22,7 +22,7 @@ must_not gate is an aggregate-side count of excluded terms == 0, so
 exclusion costs no extra join or scan.
 
 Indexed ``bool``: gate × score composition — the allow-list channel of
-the block-max kernel (FILTER-occur, stats unfiltered) carries the
+the bulk BM25 kernel (FILTER-occur, stats unfiltered) carries the
 (must AND) ∖ (must_not OR) doc set computed by ``matched_ids_indexed``,
 while the kernel scores the must+should OR in one pass.
 
@@ -123,7 +123,7 @@ def bool_topk_indexed(
     — both from ``matched_ids_indexed`` (per-segment kernel match
     streams, no scoring); the exclusion is a broadcast-able left-anti
     join at query-result cardinality, not corpus cardinality. Scoring
-    runs the block-max kernel over must+should with global stats
+    runs the bulk BM25 kernel over must+should with global stats
     (FILTER-occur: gates never alter index statistics)."""
     from .wand import bm25_topk_indexed, matched_ids_indexed
 
@@ -326,7 +326,7 @@ def bool_clauses_topk_indexed(
     operator), intersected with the ≥msm should-clause count set, minus
     any matched must_not clause — all from per-clause
     ``matched_ids_indexed`` streams at match-set (not corpus)
-    cardinality. Scoring runs the block-max kernel ONCE over the union
+    cardinality. Scoring runs the bulk BM25 kernel ONCE over the union
     of scoring terms with the gate as the FILTER-occur allow-list
     (stats stay global, as everywhere else).
 

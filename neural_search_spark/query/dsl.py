@@ -1240,6 +1240,20 @@ def _vector_param(val: Any, what: str) -> list[float]:
     return [_float_param(x, what) for x in val]
 
 
+def _query_vector(ctx: SearchContext, field: str, val: Any, what: str) -> list[float]:
+    """A query vector for the embedding column ``field``: its dimension
+    must be the column's, read with one ``limit(1)`` scan of the
+    column's size. Spark's ``zip_with`` pads the shorter array with
+    nulls, so a mismatch would otherwise score every doc NULL."""
+    vec = _vector_param(val, what)
+    rows = ctx.embeddings.select(F.size(field).alias("d")).limit(1).collect()
+    dim = rows[0]["d"] if rows else None
+    if dim is not None and dim >= 0 and dim != len(vec):
+        raise DslError(f"[{what}] has dimension {len(vec)}, but the "
+                       f"[{field}] vectors have dimension {dim}")
+    return vec
+
+
 def _knn_hits(ctx: SearchContext, spec: Any, size: int | None) -> DataFrame:
     """Raw ``knn`` query — the builder NeuralQueryBuilder.doRewrite
     actually produces (KNNQueryBuilder: field + literal vector + k +
@@ -1257,7 +1271,7 @@ def _knn_hits(ctx: SearchContext, spec: Any, size: int | None) -> DataFrame:
     if field not in ctx.embeddings.columns or field == "vec_id":
         raise DslError(f"[knn] field [{field}] is not a vector column of "
                        "the embedding table")
-    vec = _vector_param(params.get("vector"), "knn.vector")
+    vec = _query_vector(ctx, field, params.get("vector"), "knn.vector")
     k = _pool(params, "knn", size)
     pred = None
     if "filter" in params:
@@ -1663,7 +1677,7 @@ def _script_scores(ctx: SearchContext, spec: Any) -> DataFrame:
         if fld not in ctx.embeddings.columns or fld == "vec_id":
             raise DslError(f"[script_score] doc['{fld}'] is not a vector "
                            "column of the embedding table")
-        qv = _vector_param(sparams.get(pname), f"script_score.params.{pname}")
+        qv = _query_vector(ctx, fld, sparams.get(pname), f"script_score.params.{pname}")
         vecs = _as_double(ctx.embeddings, "vec_id", fld, "doc_id", "v")
         qlit = F.array(*[F.lit(x).cast("double") for x in qv])
         dot = F.expr(DOT.format(a="v", b="qv"))
@@ -1869,11 +1883,14 @@ def _mlt_topk(ctx: SearchContext, spec: Any, k: int) -> DataFrame:
               for kk, default in (("max_query_terms", mlt.MAX_QUERY_TERMS),
                                   ("min_term_freq", mlt.MIN_TERM_FREQ),
                                   ("min_doc_freq", mlt.MIN_DOC_FREQ))}
+    include = spec.get("include", False)
+    if not isinstance(include, bool):
+        raise DslError(f"[more_like_this] include must be a boolean, got {include!r}")
     return mlt.more_like_this_topk(
         ctx.docs, doc, **counts,
         minimum_should_match=spec.get("minimum_should_match", mlt.DEFAULT_MSM),
-        include=bool(spec.get("include", False)),
-        k=k, id_col=ctx.id_col, text_col=tc,
+        include=include, k=k, id_col=ctx.id_col, text_col=tc,
+        tokenizer=_analyzer(ctx, False),
     )
 
 

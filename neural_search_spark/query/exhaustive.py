@@ -4,7 +4,7 @@ This is Milestone 0 of SURVEY.md §7.1: tokenize → explode → TF →
 term-stats join → per-doc score. It is fully Catalyst-visible (filter
 pushdown into the parquet scan, broadcast joins for the tiny term-stats
 side, partial aggregation for TF) and serves as the semantic reference
-for the block-max WAND path (query/wand.py must be rank-identical).
+for the indexed bulk BM25 kernel (query/wand.py must be rank-identical).
 
 Scores are computed in float64 (Spark doubles) and optionally rounded so
 the DuckDB oracle hash-matches (see neural_search_spark/oracle.py).

@@ -73,12 +73,14 @@ def interesting_terms(
     min_doc_freq: int = MIN_DOC_FREQ,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> list[str]:
     """The like-doc's top terms by (round(tf·idf, 6) DESC, term ASC),
     with idf = ln(1 + (N - df + 0.5)/(df + 0.5)) — the engine's BM25
     idf (query/bm25.py), so selection and scoring agree on what makes
-    a term informative."""
-    tok = tokenized(docs, id_col, text_col)
+    a term informative. ``tokenizer`` analyzes the corpus, as it does
+    for the scoring."""
+    tok = tokenized(docs, id_col, text_col, tokenizer)
     allt = tok.select("doc_id", F.explode("toks").alias("term"))
     dictionary = allt.groupBy("term").agg(
         F.countDistinct("doc_id").alias("df"))
@@ -119,22 +121,24 @@ def more_like_this_topk(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
+    tokenizer: str = "simple",
 ) -> DataFrame:
     """``more_like_this`` over a corpus doc: interesting-term selection
     → BM25 boolean OR with minimum_should_match → top-k, the like doc
     excluded from the hits unless ``include`` (its tokens still feed
-    N/avgdl/df — only the hit list drops it, like Lucene)."""
+    N/avgdl/df — only the hit list drops it, like Lucene). Selection
+    and scoring both analyze the corpus with ``tokenizer``."""
     parse_msm(minimum_should_match, 1)  # fail fast on a malformed spec
     terms = interesting_terms(
         docs, like_id, max_query_terms, min_term_freq, min_doc_freq,
-        id_col=id_col, text_col=text_col,
+        id_col=id_col, text_col=text_col, tokenizer=tokenizer,
     )
     if not terms:
         spark = docs.sparkSession
         return spark.createDataFrame([], "doc_id long, score double, rank int")
     msm = parse_msm(minimum_should_match, len(terms))
     scored = bm25_msm(docs, terms, msm, id_col=id_col, text_col=text_col,
-                      round_to=4)
+                      round_to=4, tokenizer=tokenizer)
     if not include:
         scored = scored.where(F.col("doc_id") != like_id)
     return topk(scored, k=k, round_to=None)

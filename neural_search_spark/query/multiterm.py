@@ -29,7 +29,7 @@ Scale posture
   metadata, exactly like Lucene's rewritten BooleanQuery — not a
   driver-side data loop.
 * Scoring reuses the existing OR machinery unchanged: the exhaustive
-  one-traversal scorer or the block-max kernel path
+  one-traversal scorer or the indexed bulk BM25 kernel
   (`wand.bm25_topk_indexed`), both rank-identical by construction.
 """
 
@@ -407,7 +407,7 @@ def multiterm_topk_indexed(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     """Indexed path: dictionary expansion over postings metadata, then
-    the block-max OR kernel (`wand.bm25_topk_indexed`) — prefix,
+    the bulk BM25 OR kernel (`wand.bm25_topk_indexed`) — prefix,
     wildcard, fuzzy and regexp all ride this after their pattern is
     rewritten to a matcher."""
     from .wand import bm25_topk_indexed
@@ -491,7 +491,7 @@ def phrase_prefix_topk_indexed(
     postings metadata, one positional phrase-kernel probe per expanded
     term for the gate (each probe prunes its scan to that phrase's
     terms/buckets — per-query I/O ∝ candidate postings, not corpus),
-    then ONE scoring pass: the block-max OR kernel over fixed+expanded
+    then ONE scoring pass: the bulk BM25 OR kernel over fixed+expanded
     terms restricted to the gated docs via the FILTER-occur ``allowed``
     channel (stats stay global/unfiltered — Lucene semantics, same as
     filtered hybrid). A production refinement would accept a term-SET

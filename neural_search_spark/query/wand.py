@@ -28,23 +28,21 @@ over the reader's pyarrow snapshot, the kernel runs per segment, the
 keys come from the docmap snapshot filtered to the hits, the cut and
 ``rank`` are pandas, and the answer is a local Spark frame (a
 LocalRelation: collecting it, or a projection, filter or limit over
-it, runs 0 Spark jobs). Above either bound — and whenever the call carries an ``allowed`` frame or
-``strategy="wand"`` — the Spark executor runs: ``IndexReader.scan_terms``
-→ (co)grouped ``applyInPandas`` kernel → broadcast docmap join →
-orderBy(score desc, key asc).limit(k), TakeOrderedAndProject, no wide
-shuffle (``_per_segment_scores``). It is the path that scales; both
-return the same rows, columns and types. Keyed top-k answers carry
-their 1-based ``rank`` under both, so callers never re-rank.
+it, runs 0 Spark jobs). Above either bound — and whenever the call
+carries an ``allowed`` frame — the Spark executor runs:
+``IndexReader.scan_terms`` → (co)grouped ``applyInPandas`` kernel →
+broadcast docmap join → orderBy(score desc, key asc).limit(k),
+TakeOrderedAndProject, no wide shuffle (``_per_segment_scores``). It
+is the path that scales; both return the same rows, columns and
+types. Keyed top-k answers carry their 1-based ``rank`` under both,
+so callers never re-rank.
 
-Production runs the bulk decode. ``strategy="wand"`` selects the
-block-max kernel (``_wand_kernel``), the role of the reference's
-HybridScoreBlockBoundaryPropagator.java:25-99: postings blocks are
-doc-range aligned across terms (index/builder), so a range's upper
-bound is the sum of the query terms' per-block bounds; ranges are
-scored in bound order and the tail below the current k-th score θ is
-skipped — exact top-k, as Block-Max WAND (Ding & Suel 2011). It is
-reached from tests only, until the vectorised block-max experiment of
-ROADMAP direction 3 either folds it into the bulk kernel or retires it.
+The kernel decodes every posting of the query terms; there is no
+block-max pruning. A per-block Python WAND kernel and a vectorised
+two-pass block-max (exact, Ding & Suel 2011) both lost to this bulk
+decode on every query class measured at the scaling index's
+per-segment shape (BENCH/block_max.json), so neither is kept, and the
+postings carry no per-block score bounds.
 
 Float discipline: ``dtype="float32"`` gives Lucene-parity arithmetic
 (scores within DELTA_FOR_SCORE_ASSERTION=0.001 of the reference's,
@@ -92,12 +90,10 @@ DRIVER_MAX_READ_BYTES = 179_339_520
 
 # column sets per kernel — pruning the applyInPandas input to what the
 # kernel touches shrinks the JVM→python Arrow transfer (ReadSchema
-# minimality: the block-max metadata only feeds the WAND kernel; the
-# match-only kernel needs neither tf nor norm blobs)
+# minimality: the match-only kernel needs neither tf nor norm blobs)
 DECODE_COLS = ["segment_id", "term", "block_ids", "block_ns", "block_doc_off",
                "pack_bits", "exc_pos", "exc_high", "docs"]
 BULK_COLS = [*DECODE_COLS, "tfs", "norms"]
-WAND_COLS = [*BULK_COLS, "block_max_tf", "block_min_dl_q", "block_tf_off"]
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -303,141 +299,14 @@ _NO_IDS = np.empty(0, dtype=np.int64)
 
 
 def _result_frame(seg: int, local: np.ndarray, scores: np.ndarray, counts: np.ndarray,
-                  query_idx: np.ndarray | None = None) -> pd.DataFrame:
-    """Kernel output rows of one segment: RESULT_SCHEMA, or MULTI_SCHEMA
-    when ``query_idx`` is given. Empty arrays give the typed empty frame."""
-    out = {} if query_idx is None else {"query_idx": query_idx.astype(np.int32, copy=False)}
-    out.update(segment_id=np.full(len(local), seg, dtype=np.int32),
-               nss_doc_id=(np.int64(seg) << SEG_SHIFT) + local,
-               score=scores.astype(np.float64, copy=False),
-               matched_terms=counts.astype(np.int32, copy=False))
-    return pd.DataFrame(out)
-
-
-def _wand_kernel(
-    terms: list[str],
-    idf_by_term: dict[str, float],
-    avgdl: float,
-    k: int,
-    range_block: int,
-    mode: str,
-    dtype: str,
-    k1: float = K1,
-    b: float = B,
-):
-    """Per-segment kernel: exact top-k with block-max range pruning.
-
-    ``kernel(pdf, allow)``: ``allow`` is an optional int64 array of
-    LOCAL doc ids allowed by a filter (reference ANDs filters into every
-    sub-query as FILTER occur — HybridQuery.java:48-59; a filter never
-    contributes to the score, so block upper bounds stay valid and the
-    pruning stays exact)."""
-    ft = np.float32 if dtype == "float32" else np.float64
-    n_terms = len(terms)
-
-    def kernel(pdf: pd.DataFrame, allow: np.ndarray | None = None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS)
-        # one row per (segment, term): <= |query terms| rows here. Rows
-        # are processed in sorted-term order so per-doc float sums are
-        # deterministic regardless of storage order.
-        pdf = pdf.sort_values("term", kind="mergesort").reset_index(drop=True)
-        seg = int(pdf["segment_id"].iloc[0])
-        idf = np.array([idf_by_term[t] for t in pdf["term"]], dtype=ft)
-
-        # flatten per-term block arrays → per-(term, block) upper bounds
-        r_bids = [np.asarray(x, dtype=np.int64) for x in pdf["block_ids"]]
-        r_bns = [np.asarray(x, dtype=np.int64) for x in pdf["block_ns"]]
-        r_bmax = [np.asarray(x, dtype=np.float64) for x in pdf["block_max_tf"]]
-        r_bmin = [np.asarray(x, dtype=np.float64) for x in pdf["block_min_dl_q"]]
-        r_doff = [np.asarray(x, dtype=np.int64) for x in pdf["block_doc_off"]]
-        r_toff = [np.asarray(x, dtype=np.int64) for x in pdf["block_tf_off"]]
-        r_noff = [np.r_[0, np.cumsum(ns)] for ns in r_bns]
-        row_of = np.concatenate([np.full(len(x), i, dtype=np.int64) for i, x in enumerate(r_bids)])
-        pos_of = np.concatenate([np.arange(len(x), dtype=np.int64) for x in r_bids])
-        flat_bid = np.concatenate(r_bids)
-        flat_max = np.concatenate(r_bmax).astype(ft)
-        flat_min = np.concatenate(r_bmin).astype(ft)
-        ub_entry = idf[row_of] * tf_norm(flat_max, flat_min, avgdl, k1, b, ft)
-
-        uniq_blocks, inv = np.unique(flat_bid, return_inverse=True)
-        block_ub = np.zeros(len(uniq_blocks), dtype=np.float64)
-        np.add.at(block_ub, inv, ub_entry.astype(np.float64))
-        if mode == "and":
-            # a range missing any term can't produce a conjunctive match
-            tcount = np.zeros(len(uniq_blocks), dtype=np.int64)
-            np.add.at(tcount, inv, 1)
-            block_ub[tcount < n_terms] = -np.inf
-        order = np.argsort(-block_ub, kind="mergesort")
-        # entries grouped by block: sort entry index by (block, row) —
-        # row order is term order, keeping float sums deterministic
-        egrp = np.lexsort((row_of, inv))
-        ebounds = np.r_[0, np.cumsum(np.bincount(inv, minlength=len(uniq_blocks)))]
-        docs_blobs = pdf["docs"].to_numpy()
-        tfs_blobs = pdf["tfs"].to_numpy()
-        norm_blobs = pdf["norms"].to_numpy()
-        pack_bits = pdf["pack_bits"].to_numpy()
-        r_ep = pdf["exc_pos"].to_numpy()
-        r_eh = pdf["exc_high"].to_numpy()
-        doc_ends = [len(x) for x in docs_blobs]
-        tf_ends = [len(x) for x in tfs_blobs]
-        from ..index.builder import decode_block_deltas
-
-        top_docs = _NO_IDS
-        top_scores = np.empty(0, dtype=np.float64)
-        top_counts = _NO_IDS
-        theta = -np.inf
-
-        for bi in order:
-            ub = block_ub[bi]
-            if ub == -np.inf:
-                break
-            if len(top_docs) >= k and ub < theta:
-                break  # ranges sorted by ub desc — tail is non-competitive
-            base = int(uniq_blocks[bi]) * range_block
-            acc = np.zeros(range_block, dtype=ft)
-            cnt = np.zeros(range_block, dtype=np.int32)
-            for e in egrp[ebounds[bi]:ebounds[bi + 1]]:
-                r, p = int(row_of[e]), int(pos_of[e])
-                local = np.cumsum(
-                    decode_block_deltas(
-                        docs_blobs[r], int(pack_bits[r]), p, r_bns[r], r_doff[r],
-                        r_ep[r], r_eh[r], doc_ends[r],
-                    )
-                )
-                ts = int(r_toff[r][p])
-                te = int(r_toff[r][p + 1]) if p + 1 < len(r_toff[r]) else tf_ends[r]
-                tfv = varint_decode(tfs_blobs[r][ts:te]).astype(np.float64).astype(ft)
-                ns, ne = int(r_noff[r][p]), int(r_noff[r][p + 1])
-                dlq = byte4_to_int(
-                    np.frombuffer(norm_blobs[r][ns:ne], dtype=np.uint8)
-                ).astype(ft)
-                acc[local] += idf[r] * tf_norm(tfv, dlq, avgdl, k1, b, ft)
-                cnt[local] += 1
-            hit = np.flatnonzero(cnt > 0) if mode != "and" else np.flatnonzero(cnt == n_terms)
-            if len(hit) == 0:
-                continue
-            docs = base + hit
-            if allow is not None:
-                keep = np.isin(docs, allow)
-                if not keep.any():
-                    continue
-                docs, hit = docs[keep], hit[keep]
-            scores = acc[hit].astype(np.float64)
-            counts = cnt[hit].astype(np.int64)
-            top_docs = np.concatenate([top_docs, docs])
-            top_scores = np.concatenate([top_scores, scores])
-            top_counts = np.concatenate([top_counts, counts])
-            if len(top_docs) > k:
-                # keep exactly k best under (score desc, doc_id asc)
-                sel = np.lexsort((top_docs, -top_scores))[:k]
-                top_docs, top_scores, top_counts = top_docs[sel], top_scores[sel], top_counts[sel]
-            if len(top_docs) >= k:
-                theta = top_scores.min()
-
-        return _result_frame(seg, top_docs, top_scores, top_counts)
-
-    return kernel
+                  query_idx: np.ndarray) -> pd.DataFrame:
+    """Kernel output rows of one segment (MULTI_SCHEMA). Empty arrays
+    give the typed empty frame."""
+    return pd.DataFrame({"query_idx": query_idx.astype(np.int32, copy=False),
+                         "segment_id": np.full(len(local), seg, dtype=np.int32),
+                         "nss_doc_id": (np.int64(seg) << SEG_SHIFT) + local,
+                         "score": scores.astype(np.float64, copy=False),
+                         "matched_terms": counts.astype(np.int32, copy=False)})
 
 
 def _bulk_kernel_multi(
@@ -574,17 +443,14 @@ def _per_segment_scores(
     reader: IndexReader,
     queries: list[tuple[list[str], str, int]],
     dtype: str = "float64",
-    strategy: str = "bulk",
     allowed: DataFrame | None = None,
     segment_groups: int | None = None,
 ) -> DataFrame:
     """The Spark executor's kernel rows of a batch: query statistics on
     the driver → one term scan → per-segment (co)grouped kernel.
     ``queries`` are (sorted unique terms, mode, k); rows come out as
-    MULTI_SCHEMA (RESULT_SCHEMA under the single-query WAND kernel —
-    callers drop ``query_idx`` either way). When no query can match,
-    the frame is one the optimizer proves empty, so it costs no Spark
-    job.
+    MULTI_SCHEMA. When no query can match, the frame is one the
+    optimizer proves empty, so it costs no Spark job.
 
     ``allowed`` (a frame with an ``nss_doc_id`` column) is delivered per
     segment through a cogrouped applyInPandas, so each task sees only
@@ -594,15 +460,8 @@ def _per_segment_scores(
     if plan is None:
         return reader.spark.createDataFrame([], MULTI_SCHEMA).limit(0)
     live, specs, idf, avgdl, _ = plan
-    range_block = int(reader.meta["range_block"])
-    if strategy == "bulk":
-        kernel = _bulk_kernel_multi(specs, idf, avgdl, range_block, dtype)
-        schema, cols = MULTI_SCHEMA, BULK_COLS
-    else:
-        [(_, mode, k)] = queries
-        kernel = _wand_kernel(live, idf, avgdl, k, range_block, mode, dtype)
-        schema, cols = RESULT_SCHEMA, WAND_COLS
-    scan = reader.scan_terms(live, cols)
+    kernel = _bulk_kernel_multi(specs, idf, avgdl, int(reader.meta["range_block"]), dtype)
+    scan = reader.scan_terms(live, BULK_COLS)
     if allowed is not None:
         local_mask = (1 << SEG_SHIFT) - 1
         allow_df = allowed.select(
@@ -616,15 +475,15 @@ def _per_segment_scores(
         return (
             scan.groupby("segment_id")
             .cogroup(allow_df.groupby("segment_id"))
-            .applyInPandas(cokernel, schema=schema)
+            .applyInPandas(cokernel, schema=MULTI_SCHEMA)
         )
     if segment_groups and segment_groups > 0:
         return scan.groupBy(F.pmod("segment_id", F.lit(segment_groups)).alias("_sg")).applyInPandas(
-            lambda pdf: kernel(pdf.drop(columns=["_sg"], errors="ignore")), schema=schema
+            lambda pdf: kernel(pdf.drop(columns=["_sg"], errors="ignore")), schema=MULTI_SCHEMA
         )
     # NB: single-arg wrapper — applyInPandas dispatches 2-arg callables
     # as (key, pdf), which would swallow the allow param
-    return scan.groupBy("segment_id").applyInPandas(lambda pdf: kernel(pdf), schema=schema)
+    return scan.groupBy("segment_id").applyInPandas(lambda pdf: kernel(pdf), schema=MULTI_SCHEMA)
 
 
 def _with_keys(reader: IndexReader, hits: pd.DataFrame) -> pd.DataFrame:
@@ -695,7 +554,6 @@ def bm25_topk_indexed(
     mode: str = "or",
     dtype: str = "float64",
     with_keys: bool = True,
-    strategy: str = "bulk",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 via the index: the bulk kernel as a batch of one →
@@ -710,20 +568,13 @@ def bm25_topk_indexed(
     FILTER-occur semantics (HybridQuery.java:48-59: filters AND-ed into
     every sub-query, non-scoring). Global stats (N, avgdl, df) stay
     UNfiltered, matching Lucene (filters don't alter index statistics)."""
-    terms = sorted(set(terms))
-    if mode.startswith("msm:") and strategy != "bulk":
-        # WAND's block-max pruning bounds the OR top-k; under an msm
-        # cut a pruned range could hide a qualifying lower-scored doc,
-        # so minimum_should_match requires the exact bulk decode.
-        raise ValueError("minimum_should_match requires strategy='bulk'")
-    queries = [(terms, mode, k)]
-    hits = (_driver_scores(reader, queries, dtype)
-            if strategy == "bulk" and allowed is None else None)
+    queries = [(sorted(set(terms)), mode, k)]
+    hits = _driver_scores(reader, queries, dtype) if allowed is None else None
     if hits is not None:
         cols = (["nss_doc_id", *reader.meta["key_cols"], "segment_id", "score",
                  "matched_terms", "rank"] if with_keys else RESULT_SCHEMA.names)
         return _driver_answer(reader, hits, cols, k)
-    per_seg = _per_segment_scores(reader, queries, dtype, strategy, allowed).drop("query_idx")
+    per_seg = _per_segment_scores(reader, queries, dtype, allowed).drop("query_idx")
     if not with_keys:
         return per_seg.orderBy(F.col("score").desc(), F.col("nss_doc_id").asc()).limit(k)
     # keys must be attached BEFORE the final cut: score ties at the k

@@ -135,7 +135,7 @@ scripts/scaling_worker.py` — one fresh JVM per level, same input
 | index build wall (s) | {results[lo]['build_sec']} | {results[hi]['build_sec']} | — |
 | **index build files/sec** | {results[lo]['files_per_sec']} | {results[hi]['files_per_sec']} | **{build_eff:.3f}** |
 | query set wall (s, {results[lo]['n_queries']} queries) | {results[lo]['query_sec']} | {results[hi]['query_sec']} | — |
-| **queries/sec (BM25 top-10 WAND)** | {results[lo]['queries_per_sec']} | {results[hi]['queries_per_sec']} | **{query_eff:.3f}** |
+| **queries/sec (BM25 top-10, indexed)** | {results[lo]['queries_per_sec']} | {results[hi]['queries_per_sec']} | **{query_eff:.3f}** |
 | per-row sha256 mismatches | {results[lo]['sha256_mismatches']} | {results[hi]['sha256_mismatches']} | target 0 |
 | postings emitted | {results[lo]['postings']:,} | {results[hi]['postings']:,} | equal ⇒ deterministic |
 | postings bytes (delta+varint) | {results[lo]['bytes_compressed']:,} | {results[hi]['bytes_compressed']:,} | equal ⇒ deterministic |

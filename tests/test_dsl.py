@@ -1525,6 +1525,26 @@ def test_knn_rejections(ctx, documents):
                {"query": {"knn": {"embedding": {"vector": QV}}}, "size": 3})
 
 
+def test_query_vector_dimension_must_match_column(ctx):
+    """A knn or script_score vector of another dimension than the
+    embedding column is a DslError naming both dimensions — never k
+    NULL-scored hits from a null-padded zip_with."""
+    short, long_ = QV[:10], QV + [0.5]
+    bodies = [
+        ({"knn": {"embedding": {"vector": short, "k": 3}}}, 10),
+        ({"knn": {"embedding": {"vector": long_, "k": 3}}}, 65),
+        ({"script_score": {"query": {"match_all": {}}, "script": {
+            "source": "cosineSimilarity(params.qv, doc['embedding'])",
+            "params": {"qv": short}}}}, 10),
+        ({"script_score": {"query": {"match_all": {}}, "script": {
+            "source": "dotProduct(params.qv, doc['embedding'])",
+            "params": {"qv": long_}}}}, 65),
+    ]
+    for q, dim in bodies:
+        with pytest.raises(DslError, match=rf"dimension {dim}\b.*dimension {len(QV)}\b"):
+            search(ctx, {"query": q, "size": 3})
+
+
 def test_script_score_vector_functions(ctx, embeddings):
     base = {r["doc_id"]: r["score"] for r in search(
         ctx, {"query": {"knn": {"embedding": {"vector": QV, "k": 10}}},
@@ -1697,6 +1717,20 @@ def test_exhaustive_phrase_uses_context_analyzer(code_docs, code_reader):
         assert got and got == _rows(search(indexed, body)), phrase
 
 
+def test_more_like_this_uses_context_analyzer(code_docs):
+    """A `code` context selects and scores more_like_this terms with
+    `code` tokens: liking doc 2 ("emit_v3 parse_json2 ...") is the OR of
+    its two identifiers, i.e. the code-context match minus doc 2."""
+    ctx = SearchContext(docs=code_docs, analyzer="code")
+    mlt = {"more_like_this": {"like": {"_id": 2}, "min_term_freq": 1,
+                              "min_doc_freq": 1}}
+    got = [(r["doc_id"], r["score"]) for r in
+           search(ctx, {"query": mlt, "size": 10}).collect()]
+    match = [(r["doc_id"], r["score"]) for r in search(ctx, {
+        "query": {"match": {"text": "parse_json2 emit_v3"}}, "size": 10}).collect()]
+    assert got and got == [h for h in match if h[0] != 2]
+
+
 def test_indexed_dsl_with_non_doc_id_key(spark, code_docs, code_reader,
                                          tmp_path_factory):
     """An index keyed by a column not named `doc_id` serves the indexed
@@ -1837,6 +1871,7 @@ _MATCH = {"match": {"text": "spark window"}}
     {"query": _MATCH, "rescore": {"query": {"rescore_query": _MATCH,
                                             "query_weight": "x"}}},
     {"query": {"more_like_this": {"like": {"_id": 1}, "max_query_terms": "x"}}},
+    {"query": {"more_like_this": {"like": {"_id": 1}, "include": "false"}}},
     {"query": {"constant_score": {"filter": {"range": {"n_chars": {"gte": 1}}},
                                   "boost": "x"}}},
     {"query": {"boosting": {"positive": _MATCH, "negative": _MATCH,

@@ -186,17 +186,6 @@ def test_manifest_metrics(spark, code_index):
     assert man["docs_tokenized"].sum() == 600
 
 
-def test_bulk_strategy_identical_to_wand(spark, code_index):
-    """Bulk decode and block-max WAND must agree bit-for-bit (same
-    per-doc float add order) — the strategy switch is purely physical."""
-    from neural_search_spark.query.wand import bm25_topk_indexed
-
-    for terms, mode in [(["def", "return"], "or"), (["def", "import"], "and")]:
-        a = bm25_topk_indexed(code_index, terms, k=10, mode=mode, strategy="wand").collect()
-        b = bm25_topk_indexed(code_index, terms, k=10, mode=mode, strategy="bulk").collect()
-        assert [(r.nss_doc_id, r.score) for r in a] == [(r.nss_doc_id, r.score) for r in b]
-
-
 def test_indexed_sparse_two_phase_equals_single(spark, doc_index):
     """Index-backed two-phase sparse == single-phase (the reference's
     NeuralSparseTwoPhaseProcessorIT invariant, over our segment files)."""

@@ -172,8 +172,6 @@ def test_msm_validation(doc_index, documents):
     with pytest.raises(ValueError):
         bm25_topk_indexed(doc_index, MSM_TERMS, mode="msm:0")
     with pytest.raises(ValueError):
-        bm25_topk_indexed(doc_index, MSM_TERMS, mode="msm:2", strategy="wand")
-    with pytest.raises(ValueError):
         bm25_msm(documents, MSM_TERMS, 0)
     with pytest.raises(ValueError):
         bm25_msm(documents, MSM_TERMS, 5)

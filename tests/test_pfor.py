@@ -64,10 +64,6 @@ def test_pfor_results_identical_to_varint(spark, codec_pair):
         a = bm25_topk_indexed(rv, terms, k=10, mode=mode).collect()
         b = bm25_topk_indexed(rp, terms, k=10, mode=mode).collect()
         assert [(r.repo, r.path, r.score) for r in a] == [(r.repo, r.path, r.score) for r in b]
-    # WAND (block) strategy also decodes pfor correctly
-    a = bm25_topk_indexed(rp, ["def", "return"], k=10, strategy="wand").collect()
-    b = bm25_topk_indexed(rp, ["def", "return"], k=10, strategy="bulk").collect()
-    assert [(r.repo, r.score) for r in a] == [(r.repo, r.score) for r in b]
 
 
 def test_pfor_compresses_doc_stream(spark, codec_pair):

@@ -62,14 +62,13 @@ def test_bm25_hand_fixture_indexed(tiny_docs, tmp_path):
     build_index(spark, tiny_docs, idx, key_cols=["doc_id"], text_col="text",
                 tokenizer="simple", num_segments=2, range_block=4)
     reader = IndexReader(spark, idx)
-    for strategy in ("bulk", "wand"):
-        got = under_both(lambda: _scores(
-            bm25_topk_indexed(reader, ["apple", "cherry"], k=3, strategy=strategy)
-            .select("doc_id", "score")
-        ))
-        assert got[3] == pytest.approx(APPLE_CHERRY_D3, abs=1e-12)
-        assert got[2] == pytest.approx(CHERRY_D2, abs=1e-12)
-        assert got[1] == pytest.approx(APPLE_D1, abs=1e-12)
+    got = under_both(lambda: _scores(
+        bm25_topk_indexed(reader, ["apple", "cherry"], k=3)
+        .select("doc_id", "score")
+    ))
+    assert got[3] == pytest.approx(APPLE_CHERRY_D3, abs=1e-12)
+    assert got[2] == pytest.approx(CHERRY_D2, abs=1e-12)
+    assert got[1] == pytest.approx(APPLE_D1, abs=1e-12)
 
 
 def test_indexed_filter_matches_post_filter(tiny_docs, tmp_path):
@@ -83,15 +82,13 @@ def test_indexed_filter_matches_post_filter(tiny_docs, tmp_path):
                 tokenizer="simple", num_segments=2, range_block=4)
     reader = IndexReader(spark, idx)
     allowed = reader.docmap().where(F.col("doc_id") != 1).select("nss_doc_id")
-    for strategy in ("bulk", "wand"):
-        got = _scores(
-            bm25_topk_indexed(reader, ["apple", "cherry"], k=3,
-                              strategy=strategy, allowed=allowed)
-            .select("doc_id", "score")
-        )
-        assert set(got) == {2, 3}
-        # scores unchanged by the filter (FILTER occur is non-scoring)
-        assert got[3] == pytest.approx(APPLE_CHERRY_D3, abs=1e-12)
+    got = _scores(
+        bm25_topk_indexed(reader, ["apple", "cherry"], k=3, allowed=allowed)
+        .select("doc_id", "score")
+    )
+    assert set(got) == {2, 3}
+    # scores unchanged by the filter (FILTER occur is non-scoring)
+    assert got[3] == pytest.approx(APPLE_CHERRY_D3, abs=1e-12)
 
 
 def test_matched_ids_indexed_modes(tiny_docs, tmp_path):

@@ -324,8 +324,11 @@ def test_format_version_guard(spark, tmp_path):
     """index_meta.json carries format_version and every open/append
     path rejects a mismatch (SegmentInfos version check analog) — an
     older version and a meta without the key alike: every v5+ writer
-    persisted the version, so a version-less meta predates v6."""
+    persisted the version, so a version-less meta predates v6. A v7
+    index's postings hold none of the five block-max bound columns."""
     import json
+
+    import pyarrow.parquet as pq
 
     from neural_search_spark.index.builder import (
         FORMAT_VERSION, build_index, paths,
@@ -342,12 +345,19 @@ def test_format_version_guard(spark, tmp_path):
     mpath = paths(idx)["meta"]
     with open(mpath) as fh:
         meta = json.load(fh)
-    assert meta["format_version"] == FORMAT_VERSION == 6
+    assert meta["format_version"] == FORMAT_VERSION == 7
     assert "pos_codec" not in meta
+    cols = set(pq.read_schema(next(
+        os.path.join(root, f) for root, _, files in os.walk(paths(idx)["postings"])
+        for f in files if f.endswith(".parquet"))).names)
+    assert {"docs", "tfs", "norms", "block_doc_off", "block_pos_off"} <= cols
+    assert not cols & {"block_max_tf", "block_min_dl_q", "block_tf_off",
+                       "max_tf", "min_dl_q"}
 
     v5 = {**meta, "format_version": 5}
+    v6 = {**meta, "format_version": 6}
     unversioned = {k: v for k, v in meta.items() if k != "format_version"}
-    for bad in (v5, unversioned):
+    for bad in (v5, v6, unversioned):
         with open(mpath, "w") as fh:
             json.dump(bad, fh)
         with pytest.raises(ValueError, match="format"):
