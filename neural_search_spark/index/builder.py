@@ -44,6 +44,7 @@ import json
 import os
 import re
 import time
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -141,18 +142,6 @@ def decode_term_deltas(
     return low.astype(np.int64)
 
 
-def decode_term_ids(r, range_block: int) -> np.ndarray:
-    """One postings row (``docs``, ``block_ids``, ``block_ns`` and the
-    codec columns) -> its absolute LOCAL doc ids: each block's delta
-    chain starts from the block's range base. THE doc-id decode of
-    every query kernel and of the merge."""
-    ns = np.asarray(r.block_ns, dtype=np.int64)
-    deltas = decode_term_deltas(r.docs, ns, r.block_doc_off, int(r.pack_bits),
-                                r.exc_pos, r.exc_high)
-    base = np.asarray(r.block_ids, dtype=np.int64) * range_block
-    return np.repeat(base, ns) + chains_absolute(deltas, ns)
-
-
 def chains_absolute(deltas: np.ndarray, chain_lens: np.ndarray) -> np.ndarray:
     """Segmented cumsum: per-chain (first-absolute, then deltas) stream
     -> absolute values. Shared by doc-id and position decode."""
@@ -163,6 +152,67 @@ def chains_absolute(deltas: np.ndarray, chain_lens: np.ndarray) -> np.ndarray:
     cs = np.cumsum(deltas.astype(np.int64))
     carry = np.repeat(cs[starts] - deltas[starts], lens)
     return cs - carry
+
+
+class Decoded(NamedTuple):
+    """The postings of a frame's rows as flat arrays, in row order: row
+    i's postings are ``[offsets[i], offsets[i + 1])`` and ``row`` is
+    each posting's row index. ``tfs``/``norms`` are None when the frame
+    has no such column, ``positions`` unless asked for."""
+
+    offsets: np.ndarray
+    row: np.ndarray
+    ids: np.ndarray
+    tfs: np.ndarray | None
+    norms: np.ndarray | None
+    positions: np.ndarray | None
+
+
+def _flat_i64(col) -> np.ndarray:
+    return np.concatenate([np.empty(0, dtype=np.int64), *col]).astype(np.int64, copy=False)
+
+
+def decode_rows(pdf: pd.DataFrame, range_block: int, positions: bool = False) -> Decoded:
+    """Every postings row of ``pdf`` decoded in one vectorized pass: the
+    LOCAL doc ids, tfs, norm bytes and (``positions=True``) absolute
+    token positions of all rows at once. THE postings decode of the
+    merge and of the BM25, match-set, sparse, phrase and span kernels.
+
+    Complete LEB128 streams concatenate losslessly, so each varint blob
+    column is one ``varint_decode`` over the joined blobs; one
+    ``chains_absolute`` then rebuilds the doc ids from the block bases
+    and another the positions from the tfs. PFor rows (the opt-in doc
+    codec) decode row by row."""
+    from ..functions.codecs import varint_decode
+
+    ns_col = pdf["block_ns"].to_numpy()
+    n_blocks = np.fromiter(map(len, ns_col), dtype=np.int64, count=len(ns_col))
+    ns = _flat_i64(ns_col)
+    offsets = np.r_[0, np.cumsum(ns)][np.r_[0, np.cumsum(n_blocks)]]
+    counts = np.diff(offsets)
+    row = np.repeat(np.arange(len(pdf), dtype=np.int64), counts)
+
+    docs = pdf["docs"].to_numpy()
+    pack = pdf["pack_bits"].to_numpy()
+    var = pack < 0
+    deltas = np.empty(int(offsets[-1]), dtype=np.int64)
+    deltas[np.repeat(var, counts)] = varint_decode(b"".join(docs[var])).astype(np.int64)
+    if not var.all():
+        doc_off, exc_pos, exc_high = (pdf[c].to_numpy() for c in ("block_doc_off", "exc_pos", "exc_high"))
+        for i in np.flatnonzero(~var):
+            deltas[offsets[i]:offsets[i + 1]] = decode_term_deltas(
+                docs[i], ns_col[i], doc_off[i], int(pack[i]), exc_pos[i], exc_high[i])
+    base = _flat_i64(pdf["block_ids"].to_numpy()) * range_block
+    ids = np.repeat(base, ns) + chains_absolute(deltas, ns)
+
+    tfs = norms = pos = None
+    if "tfs" in pdf:
+        tfs = varint_decode(b"".join(pdf["tfs"].to_numpy())).astype(np.int64)
+    if "norms" in pdf:
+        norms = np.frombuffer(b"".join(pdf["norms"].to_numpy()), dtype=np.uint8)
+    if positions:
+        pos = chains_absolute(varint_decode(b"".join(pdf["positions"].to_numpy())).astype(np.int64), tfs)
+    return Decoded(offsets, row, ids, tfs, norms, pos)
 
 
 def decode_block_positions(
@@ -202,7 +252,7 @@ def postings_rows_from_flat(
 ) -> pd.DataFrame:
     """Flat (term, doc_id, tf, norm_byte) posting streams (any
     order) -> one POSTINGS_SCHEMA row per term. Shared by the build and
-    merge kernels so the two stay byte-compatible by construction.
+    merge kernels: both encode postings through this one function.
 
     ``pos_flat`` (optional) is the flat token-position stream whose
     chains align with the input rows — row i's positions are the next

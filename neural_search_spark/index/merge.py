@@ -7,9 +7,13 @@ per-query segment fan-out bounded; our equivalent folds groups of
     new_segment_id = segment_id // factor
     new_local_id   = local_id + Σ doc counts of preceding old segments
 
-Postings rows of the constituent segments are re-based, re-blocked and
-re-encoded in one Arrow kernel per new segment (same shuffle shape as
-the build: the only key is the uniform new_segment_id). Doc-id rebasing
+Postings rows of the constituent segments are decoded, re-based,
+re-blocked and re-encoded in one Arrow kernel per new segment (same
+shuffle shape as the build: the only key is the uniform
+new_segment_id). The kernel decodes all of its rows in one vectorized
+pass (``builder.decode_rows``) and re-encodes them with the build's own
+``postings_rows_from_flat``, so a merge with ``factor=1`` writes the
+input's postings rows back unchanged. Doc-id rebasing
 preserves the (repo, path, commit) sort order *within* each old segment
 and concatenates old segments in id order, so BM25 stats (N, avgdl, df,
 norms) are untouched — merged-index queries are rank- and score-
@@ -27,48 +31,37 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codecs import varint_decode
 from .builder import POSTINGS_SCHEMA, SEG_SHIFT, paths
 
 
 def _merge_kernel(range_block: int, shift_of: dict[int, int], factor: int, term_buckets: int,
                   codec: str = "varint", store_positions: bool = False):
     """Kernel over one NEW segment's postings rows (one row per old
-    (segment, term)): decode each term's blob, re-base doc ids, then
-    re-group through the same helper the builder uses — the merged
-    segment is byte-compatible with a fresh build by construction.
+    (segment, term)): ONE batch decode of every row (``decode_rows``:
+    a varint decode per blob column over the joined blobs, not a numpy
+    chain per row), each posting re-based by its old segment's shift,
+    then re-encoded by the build's own ``postings_rows_from_flat``.
     Positions (when the index stores them) ride along unchanged: doc-id
     rebasing never alters in-doc token positions."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .builder import empty_postings_frame, postings_rows_from_flat
+        from .builder import decode_rows, empty_postings_frame, postings_rows_from_flat
 
         if len(pdf) == 0:
             return empty_postings_frame()
-        new_seg = int(pdf["segment_id"].iloc[0]) // factor
-        from .builder import decode_term_ids, decode_term_positions
-
-        terms_l, docs_l, tfs_l, norms_l, pos_l = [], [], [], [], []
-        for r in pdf.itertuples():
-            tfs = varint_decode(r.tfs).astype(np.int64)
-            norms = np.frombuffer(r.norms, dtype=np.uint8)
-            rebased = decode_term_ids(r, range_block) + shift_of[int(r.segment_id)]
-            terms_l.append(np.full(len(rebased), r.term, dtype=object))
-            docs_l.append(rebased)
-            tfs_l.append(tfs)
-            norms_l.append(norms)
-            if store_positions:
-                pos_l.append(decode_term_positions(r.positions, tfs))
+        segs = pdf["segment_id"].to_numpy()
+        shift = np.array([shift_of[s] for s in segs.tolist()], dtype=np.int64)
+        d = decode_rows(pdf, range_block, positions=store_positions)
         return postings_rows_from_flat(
-            new_seg,
-            np.concatenate(terms_l),
-            np.concatenate(docs_l),
-            np.concatenate(tfs_l),
-            np.concatenate(norms_l),
+            int(segs[0]) // factor,
+            pdf["term"].to_numpy(dtype=object)[d.row],
+            d.ids + shift[d.row],
+            d.tfs,
+            d.norms,
             range_block,
             term_buckets,
             codec,
-            np.concatenate(pos_l) if store_positions else None,
+            d.positions,
         )
 
     return merge
@@ -78,7 +71,17 @@ def merge_segments(
     spark: SparkSession, index_dir: str, out_dir: str, factor: int = 2
 ) -> dict:
     """Fold groups of ``factor`` adjacent segments into one; returns
-    merge metrics. The merged index is a fully valid index dir."""
+    merge metrics. The merged index is a fully valid index dir.
+
+    Raises ``ValueError`` before any read or write when ``factor`` is not
+    an int >= 1, or when ``out_dir`` is ``index_dir``, lies inside it or
+    contains it: the overwriting writes would delete the input while
+    the merge still reads it."""
+    if isinstance(factor, bool) or not isinstance(factor, int) or factor < 1:
+        raise ValueError(f"merge factor must be an int >= 1, got {factor!r}")
+    src, dst = os.path.realpath(index_dir), os.path.realpath(out_dir)
+    if os.path.commonpath([src, dst]) in (src, dst):
+        raise ValueError(f"merge output {out_dir!r} overlaps its input {index_dir!r}")
     p_in, p_out = paths(index_dir), paths(out_dir)
     from .builder import read_meta
     meta = read_meta(index_dir)  # raises on format mismatch

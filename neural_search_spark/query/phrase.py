@@ -46,9 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codecs import varint_decode
 from ..functions.norms import byte4_to_int
-from ..index.builder import SEG_SHIFT, decode_term_ids
+from ..index.builder import SEG_SHIFT, decode_rows
 from .bm25 import B, K1, idf_by_term, tf_norm
 from .wand import BULK_COLS, IndexReader, _driver_answer, _spark_cut, on_driver
 
@@ -67,15 +66,18 @@ _RESULT_SCHEMA = T.StructType(
 )
 
 
-def decode_doc_stream(r, range_block: int):
-    """One positional-postings row -> (doc ids, tfs, quantized dls as
-    int64, per-block posting counts), for every positional kernel
-    (phrase and span)."""
-    ids = decode_term_ids(r, range_block)
-    ns = np.asarray(r.block_ns, dtype=np.int64)
-    tfv = varint_decode(r.tfs).astype(np.int64)
-    dlq = byte4_to_int(np.frombuffer(r.norms, dtype=np.uint8))
-    return ids, tfv, dlq, ns
+def term_streams(pdf: pd.DataFrame, range_block: int) -> dict[str, tuple]:
+    """Positional-postings rows of one segment -> {term: (row, doc ids,
+    tfs, quantized dls as int64, per-block posting counts)}: one batch
+    decode (``decode_rows``) of every row, sliced per term. The row is
+    kept for :func:`candidate_position_keys`. For every positional
+    kernel (phrase and span)."""
+    d = decode_rows(pdf, range_block)
+    dlq = byte4_to_int(d.norms)
+    o = d.offsets
+    return {r.term: (r, d.ids[o[i]:o[i + 1]], d.tfs[o[i]:o[i + 1]], dlq[o[i]:o[i + 1]],
+                     np.asarray(r.block_ns, dtype=np.int64))
+            for i, r in enumerate(pdf.itertuples())}
 
 
 def candidate_position_keys(r, ids, tfv, ns, cand: np.ndarray) -> np.ndarray:
@@ -139,14 +141,13 @@ def _phrase_kernel(
         pdf = pdf.sort_values("term", kind="mergesort").reset_index(drop=True)
         seg = int(pdf["segment_id"].iloc[0])
 
-        # --- bulk decode doc/tf streams + conjunctive candidate set ----
+        # --- batch decode doc/tf streams + conjunctive candidate set ---
         per_term: dict[str, tuple] = {}
         size = 0
-        for r in pdf.itertuples():
-            ids, tfv, dlq_int, ns = decode_doc_stream(r, range_block)
+        for t, (r, ids, tfv, dlq_int, ns) in term_streams(pdf, range_block).items():
             tff = tfv.astype(np.float64).astype(ft)
-            contrib = ft(idf_by_term[r.term]) * tf_norm(tff, dlq_int.astype(ft), avgdl, k1, b, ft)
-            per_term[r.term] = (ids, tfv, contrib, ns, r)
+            contrib = ft(idf_by_term[t]) * tf_norm(tff, dlq_int.astype(ft), avgdl, k1, b, ft)
+            per_term[t] = (ids, tfv, contrib, ns, r)
             if len(ids):
                 size = max(size, int(ids[-1]) + 1)
         if size == 0:

@@ -49,7 +49,7 @@ from .phrase import (
     PHRASE_COLS,
     POS_SHIFT,
     candidate_position_keys,
-    decode_doc_stream,
+    term_streams,
 )
 from .wand import IndexReader
 
@@ -197,10 +197,9 @@ def _span_kernel(plan: dict, idf_total: float, avgdl: float,
         seg = int(pdf["segment_id"].iloc[0])
         decoded = {}
         rows = {}
-        for r in pdf.itertuples():
-            ids, tfv, dlq_int, ns = decode_doc_stream(r, range_block)
-            decoded[r.term] = (ids, tfv, dlq_int.astype(np.float64), ns)
-            rows[r.term] = r
+        for t, (r, ids, tfv, dlq_int, ns) in term_streams(pdf, range_block).items():
+            decoded[t] = (ids, tfv, dlq_int.astype(np.float64), ns)
+            rows[t] = r
         # candidate docs: >= 1 occurrence of every required clause
         cand = None
         for terms in required:

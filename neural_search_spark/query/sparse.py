@@ -95,19 +95,18 @@ def sparse_topk_single_phase(
 
 def _sparse_seg_scores(reader, query: dict[str, float], restrict_df: DataFrame | None = None) -> DataFrame:
     """Per-doc linear scores from the segmented index: the stored tf IS
-    the feature value (rank_features analog); decode each query token's
-    posting blob in one pass (bulk strategy). ``restrict_df`` (a frame
-    with an ``nss_doc_id`` column) limits output to a candidate window
-    (phase-2 rescore) — delivered to each segment's kernel via a
-    cogrouped applyInPandas, so the window never round-trips through the
-    driver and the restriction list a task sees is only that segment's
-    slice of the window."""
+    the feature value (rank_features analog); one batch decode
+    (``decode_rows``) of the query tokens' postings rows per segment.
+    ``restrict_df`` (a frame with an ``nss_doc_id`` column) limits
+    output to a candidate window (phase-2 rescore) — delivered to each
+    segment's kernel via a cogrouped applyInPandas, so the window never
+    round-trips through the driver and the restriction list a task sees
+    is only that segment's slice of the window."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..functions.codecs import varint_decode
-    from ..index.builder import SEG_SHIFT
+    from ..index.builder import SEG_SHIFT, decode_rows
 
     schema = T.StructType(
         [
@@ -126,22 +125,15 @@ def _sparse_seg_scores(reader, query: dict[str, float], restrict_df: DataFrame |
             return empty
         pdf = pdf.sort_values("term", kind="mergesort")
         seg = int(pdf["segment_id"].iloc[0])
-        base = np.int64(seg) << SEG_SHIFT
-        from ..index.builder import decode_term_ids
-
-        id_parts, c_parts = [], []
-        for r in pdf.itertuples():
-            ids = base + decode_term_ids(r, range_block)
-            contrib = qw[r.term] * varint_decode(r.tfs).astype(np.float64)
-            if allow_arr is not None:
-                keep = np.isin(ids, allow_arr)
-                ids, contrib = ids[keep], contrib[keep]
-            id_parts.append(ids)
-            c_parts.append(contrib)
-        if not id_parts or not sum(len(x) for x in id_parts):
+        d = decode_rows(pdf, range_block)
+        all_ids = (np.int64(seg) << SEG_SHIFT) + d.ids
+        weight = np.array([qw[t] for t in pdf["term"].tolist()], dtype=np.float64)
+        all_c = weight[d.row] * d.tfs.astype(np.float64)
+        if allow_arr is not None:
+            keep = np.isin(all_ids, allow_arr)
+            all_ids, all_c = all_ids[keep], all_c[keep]
+        if not len(all_ids):
             return empty
-        all_ids = np.concatenate(id_parts)
-        all_c = np.concatenate(c_parts)
         uniq, inv = np.unique(all_ids, return_inverse=True)
         acc = np.zeros(len(uniq), dtype=np.float64)
         np.add.at(acc, inv, all_c)  # array order = sorted-term order → deterministic

@@ -59,9 +59,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codecs import varint_decode
 from ..functions.norms import byte4_to_int
-from ..index.builder import SEG_SHIFT, _term_buckets_of, decode_term_ids, paths
+from ..index.builder import SEG_SHIFT, _term_buckets_of, decode_rows, paths
 from .bm25 import B, K1, idf_by_term, tf_norm
 
 # The executor rule's two bounds (``on_driver``), both measured on a
@@ -324,14 +323,16 @@ def _bulk_kernel_multi(
     terms occur in it (1 = OR, |terms| = AND, m = minimum_should_match).
     A single search is a batch of one.
 
-    Each term's postings row decodes ONCE (``decode_term_ids`` + one
-    varint pass over tfs) and its per-doc BM25 contribution (idf ·
-    tf-part — identical whichever query references the term) is kept;
-    each query then accumulates its own terms' contributions into a
-    dense local array in sorted-term order, so per-doc float sums are
-    deterministic. The DataFrame analog of the reference's multi-search
-    + HybridQueryScorer sub-query iteration
-    (query/HybridQueryScorer.java:190-208).
+    A segment's postings rows decode ONCE, all in one batch
+    (``decode_rows``: one varint pass per blob column, not one per
+    row), and every posting's BM25 contribution (its term's idf ·
+    tf-part — identical whichever query references the term) is
+    computed in one element-wise pass; each term's ids and contributions
+    are then slices at its row offsets. Each query accumulates its own
+    terms' contributions into a dense local array in sorted-term order,
+    so per-doc float sums are deterministic. The DataFrame analog of
+    the reference's multi-search + HybridQueryScorer sub-query
+    iteration (query/HybridQueryScorer.java:190-208).
 
     ``kernel(pdf, allow)``: ``pdf`` holds BULK_COLS rows of one or more
     segments (rows grouped by pmod(segment_id, G) arrive together; each
@@ -352,15 +353,14 @@ def _bulk_kernel_multi(
             outs = [o for o in outs if len(o)]
             return (pd.concat(outs, ignore_index=True) if outs
                     else _result_frame(0, _NO_IDS, _NO_IDS, _NO_IDS, _NO_IDS))
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        size = 0
-        for r in pdf.sort_values("term", kind="mergesort").itertuples():
-            ids = decode_term_ids(r, range_block)
-            tfv = varint_decode(r.tfs).astype(np.float64).astype(ft)
-            dlq = byte4_to_int(np.frombuffer(r.norms, dtype=np.uint8)).astype(ft)
-            decoded[r.term] = (ids, ft(idf_by_term[r.term]) * tf_norm(tfv, dlq, avgdl, k1, b, ft))
-            if len(ids):
-                size = max(size, int(ids[-1]) + 1)
+        d = decode_rows(pdf, range_block)
+        row_terms = pdf["term"].tolist()
+        idf = np.array([idf_by_term[t] for t in row_terms], dtype=ft)
+        contrib = idf[d.row] * tf_norm(d.tfs.astype(np.float64).astype(ft),
+                                       byte4_to_int(d.norms).astype(ft), avgdl, k1, b, ft)
+        o = d.offsets
+        decoded = {t: (d.ids[o[i]:o[i + 1]], contrib[o[i]:o[i + 1]]) for i, t in enumerate(row_terms)}
+        size = int(d.ids.max()) + 1 if len(d.ids) else 0
         allowed = None
         if allow is not None:
             allowed = np.zeros(size, dtype=bool)
@@ -647,8 +647,7 @@ def matched_ids_indexed(reader: IndexReader, terms: list[str], mode: str = "or")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(pdf["segment_id"].iloc[0]) if len(pdf) else 0
-        all_ids = np.concatenate(
-            [_NO_IDS, *(decode_term_ids(r, range_block) for r in pdf.itertuples())])
+        all_ids = decode_rows(pdf, range_block).ids
         if mode == "and":
             uniq, counts = np.unique(all_ids, return_counts=True)
             ids = uniq[counts == n_terms]

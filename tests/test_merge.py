@@ -122,3 +122,36 @@ def test_merge_docmap_consistent(spark, corpus, merged_pair):
         .count()
     )
     assert bad == 0
+
+
+def test_merge_rejects_output_overlapping_input(spark, merged_pair, tmp_path):
+    """An output that is the input, lies inside it, contains it or
+    resolves to it through a symlink is refused before anything is
+    read or written: the input's files keep their bytes."""
+    import shutil
+
+    src = str(tmp_path / "idx")
+    shutil.copytree(merged_pair[0], src)
+    before = _table_digests(src)
+    os.symlink(src, str(tmp_path / "link"))
+    for out in (src, os.path.join(src, "merged"), str(tmp_path), str(tmp_path / "link")):
+        with pytest.raises(ValueError, match="overlaps"):
+            merge_segments(spark, src, out, factor=2)
+        assert _table_digests(src) == before
+    assert not os.path.exists(os.path.join(src, "merged"))
+
+
+@pytest.mark.parametrize("factor", [0, -1, 2.5, True, "2"])
+def test_merge_rejects_invalid_factor(spark, merged_pair, tmp_path, factor):
+    """``factor`` must be an int >= 1; anything else raises ValueError
+    before any Spark job or write."""
+    from tests.conftest import spark_job_count
+
+    out = str(tmp_path / "out")
+
+    def call():
+        with pytest.raises(ValueError, match="factor"):
+            merge_segments(spark, merged_pair[0], out, factor=factor)
+
+    assert spark_job_count(spark, call) == 0
+    assert not os.path.exists(out)
